@@ -64,21 +64,15 @@ def build_fact_sales(
     )
 
 
-def write_fact_sales(fact: DataFrame, path: str, files_per_partition: int = 1) -> None:
+def write_fact_sales(fact: DataFrame, path: str) -> None:
     """P1: monthly-partitioned parquet, full-refresh overwrite (S5/M5).
 
     Without the repartition, every upstream task writes its own file into
     every month directory (tasks x months small files). Clustering by the
-    partition column first gives exactly ``files_per_partition`` files per
-    month; raise it at scale so each file stays near the 128 MB-1 GB sweet
-    spot and the write parallelism matches the cluster.
+    partition column first gives exactly one file per month.
     """
-    # pmod is already non-negative for a positive divisor; abs(hash(..))
-    # would ARITHMETIC_OVERFLOW under ANSI mode when hash() returns
-    # Int.MinValue — a ~2^-32-per-row landmine at billions of rows.
-    salt = F.pmod(F.hash("invoice_no"), F.lit(files_per_partition))
     (
-        fact.repartition(F.col("sale_month"), salt)
+        fact.repartition(F.col("sale_month"))
         .write.mode("overwrite")
         .partitionBy("sale_month")
         .parquet(path)

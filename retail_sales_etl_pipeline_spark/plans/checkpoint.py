@@ -1,0 +1,52 @@
+"""Materialize-once checkpoints for the session-scoped near-dup family.
+
+One rule for every materialization that is built once and then reused by
+several registry queries (verified text pairs, the bucketed prefix index,
+verified embedding pairs):
+
+- key: (SparkContext applicationId, normalized corpus path, kind) — a new
+  session or a different corpus always rebuilds; within a session the
+  corpus snapshot under a given path is immutable by the engine's own
+  conventions (every registry query already assumes this);
+- location: a fresh ``tempfile.mkdtemp`` directory per build, so no two
+  builds (concurrent processes included) ever share a location and
+  nothing is written under ``spark.sql.warehouse.dir``;
+- lifetime: a cached entry is reused only while its checkpoint still
+  exists (by default: the returned path, checked through the Hadoop
+  FileSystem); otherwise it is rebuilt.
+"""
+
+from __future__ import annotations
+
+import os
+import tempfile
+from collections.abc import Callable
+from typing import TypeVar
+
+from pyspark.sql import SparkSession
+
+from ..sources import fs
+
+T = TypeVar("T")
+
+_CHECKPOINTS: dict[tuple[str, str, str], object] = {}
+
+
+def materialize_once(
+    spark: SparkSession,
+    sf_dir: str,
+    kind: str,
+    build: Callable[[str], T],
+    exists: Callable[[T], bool] | None = None,
+) -> T:
+    """Return the cached checkpoint of ``kind`` for this (session, corpus)
+    while ``exists`` holds for it (default: it is a path that exists);
+    otherwise run ``build`` on a fresh checkpoint directory and cache
+    what it returns."""
+    exists = exists or (lambda path: fs.exists(spark, path))
+    key = (spark.sparkContext.applicationId, os.path.normpath(sf_dir), kind)
+    hit = _CHECKPOINTS.get(key)
+    if hit is not None and exists(hit):
+        return hit
+    hit = _CHECKPOINTS[key] = build(tempfile.mkdtemp(prefix=f"{kind}_"))
+    return hit

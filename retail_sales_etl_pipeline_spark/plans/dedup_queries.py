@@ -37,6 +37,7 @@ from ..operators.text import (
     token_ngrams_expr,
 )
 from ..sources import load_table
+from .checkpoint import materialize_once
 from .registry import register
 
 NEARDUP_JACCARD = 0.3
@@ -2686,43 +2687,32 @@ def chain_depth_from_pairs(spark: SparkSession, pairs: DataFrame) -> DataFrame:
 # proves materialize/read-back loses nothing — twin == self-contained.
 # ---------------------------------------------------------------------------
 
-_PAIRS_CACHE: dict[tuple[str, str], str] = {}
-
-
 def materialize_verified_pairs(spark: SparkSession, sf_dir: str) -> str:
     """Run the LSH->verify ladder ONCE per (session, corpus) and write
     the canonical verified near-dup pair list as parquet; later calls in
-    the same session return the existing checkpoint path. Keyed by
-    (applicationId, corpus dir) so a new session — or a different corpus
-    — always recomputes; within a session the corpus snapshot under a
-    given path is immutable by the engine's own conventions (the same
-    assumption every registry query already makes twice per run)."""
-    import os as _os
-    import tempfile as _tempfile
-
+    the same session return the existing checkpoint path while it still
+    exists (the checkpoint.materialize_once rule)."""
     from ..sources import fs
 
-    key = (spark.sparkContext.applicationId, _os.path.normpath(sf_dir))
-    cached = _PAIRS_CACHE.get(key)
-    if cached is not None and _os.path.isdir(cached):
-        return cached
-    path = fs.join(_tempfile.mkdtemp(prefix="neardup_pairs_"), "verified_pairs")
-    (
-        q21_ngram_jaccard_pairs(spark, sf_dir)
-        .select("doc_a", "doc_b")
-        # REBALANCE before the write: the ladder's fan-out leaves the
-        # pair frame in per-core partitions, and without this the tiny
-        # checkpoint lands as 32 near-empty files whose per-file open
-        # cost every iterative consumer then pays PER ROUND (measured:
-        # q199/q201/q208 2-3x slower reading the splintered checkpoint).
-        # AQE sizes the rebalance from runtime stats, so at scale the
-        # same hint yields properly sized multi-file output (guide §6).
-        .hint("rebalance")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-    _PAIRS_CACHE[key] = path
-    return path
+    def build(ckpt: str) -> str:
+        path = fs.join(ckpt, "verified_pairs")
+        (
+            q21_ngram_jaccard_pairs(spark, sf_dir)
+            .select("doc_a", "doc_b")
+            # REBALANCE before the write: the ladder's fan-out leaves the
+            # pair frame in per-core partitions, and without this the tiny
+            # checkpoint lands as 32 near-empty files whose per-file open
+            # cost every iterative consumer then pays PER ROUND (measured:
+            # q199/q201/q208 2-3x slower reading the splintered checkpoint).
+            # AQE sizes the rebalance from runtime stats, so at scale the
+            # same hint yields properly sized multi-file output (guide §6).
+            .hint("rebalance")
+            .write.mode("overwrite")
+            .parquet(path)
+        )
+        return path
+
+    return materialize_once(spark, sf_dir, "neardup_pairs", build)
 
 
 def _materialized_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3046,7 +3036,11 @@ PF_JACCARD_NUM, PF_JACCARD_DEN = 3, 10
     "bench path, still oracle-checked by the correctness gate; "
     "q259_prefix_pairs_capped (identical schema, posting-capped index) "
     "is the registered default, with the cap's loss observable in "
-    "q260's posting report and reconciled exactly in the wave test.",
+    "q260's posting report and reconciled exactly in the wave test. "
+    "Execution: the index is built (or reused) as the session's "
+    "checkpointed bucketed tables (materialize_prefix_index) and the "
+    "candidate + verify plan reads them — one plan at every scale, "
+    "shared with q259/q263 (_pf_pairs_plan).",
     tags=("dedup", "join", "exact-judge"),
 )
 def q205_prefix_filter_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3056,39 +3050,19 @@ def q205_prefix_filter_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _pf_pairs_plan(spark: SparkSession, sf_dir: str, cap: int | None) -> DataFrame:
     """Shared Bayardo/PPJoin all-pairs plan: exact (cap=None, the q205
     judge) or with hot prefix-posting lists dropped (cap=N, the q259
-    default — dropped tokens are observable in q260's report).
+    default and its q263 twin — dropped tokens are observable in q260's
+    report).
 
-    Above PF_SINGLE_DAG_MAX_DOCS the index is CHECKPOINTED to parquet
-    before candidate generation instead of staying in one DAG: the
-    round-11 1000x run measured the single-DAG form dying on DISK (the
-    index-build shuffles and the candidate x trigram-array verify
-    shuffle spill concurrently — 'No space left on device' at 5.21M
-    docs/62 min), while the checkpointed form finished the same decade
-    in 1603 s because lineage truncation keeps only one large shuffle
-    live (BENCH_SCALE_R11D.json). Output is identical either way —
-    q263's spliced-oracle hash match proves the round trip lossless."""
-    pfx, tgs, docs = _pf_index_frames(spark, sf_dir)
-    n_docs = docs.count()
-    if n_docs > PF_SINGLE_DAG_MAX_DOCS:
-        # drop the superseded in-DAG frames' corpus persist before the
-        # checkpointed rebuild — at exactly this scale the plan is
-        # disk/memory constrained (round-11 ADVICE: the discarded frame
-        # used to stay persisted through the whole materialized run)
-        docs.unpersist()
-        pfx, tgs, n_docs = _materialized_pf_index(spark, sf_dir)
-    else:
-        # The in-DAG index fans out to THREE consumers (hot-token
-        # aggregate + both sides of the candidate self-join) and the
-        # trigram arrays to two (both verify sides); without
-        # materialization each consumer re-runs the whole
-        # tokenize -> df -> rank-window subtree — the round-12 before
-        # plan shows the Window+Exchange replicated per branch (guide
-        # §2.4: share one computation instead of re-running it).
-        # MEMORY_AND_DISK: both frames are O(corpus tokens), same order
-        # as the docs persist above; above the in-DAG cutover the
-        # bucketed checkpoint plays this role instead.
-        pfx = pfx.persist(StorageLevel.MEMORY_AND_DISK)
-        tgs = tgs.persist(StorageLevel.MEMORY_AND_DISK)
+    Candidate generation always reads the prefix index CHECKPOINTED by
+    materialize_prefix_index, never an in-DAG build: the round-11 1000x
+    run measured the single-DAG form dying on DISK (the index-build
+    shuffles and the candidate x trigram-array verify shuffle spill
+    concurrently — 'No space left on device' at 5.21M docs/62 min),
+    while the checkpointed form finished the same decade in 1603 s
+    because lineage truncation keeps only one large shuffle live
+    (BENCH_SCALE_R11D.json). One plan at every scale; the index build is
+    shared with every other prefix-family consumer in the session."""
+    pfx, tgs, n_docs = _materialized_pf_index(spark, sf_dir)
     return _pf_pairs_from(pfx, tgs, n_docs <= PF_BROADCAST_MAX_DOCS, cap)
 
 
@@ -3098,10 +3072,9 @@ def _pf_index_frames(
     """Build the UNCAPPED Bayardo prefix index (doc_id, tok, r, m) and the
     per-doc trigram arrays (doc_id, tg) from raw documents. The filtered
     two-column doc frame is persisted so both tokenizations read ONE
-    corpus scan instead of two, and returned as the third element: a
-    caller that needs the eligible-doc count runs it itself, ones that
-    don't (q260's report — round-11 ADVICE) pay NO eager action, and a
-    caller done with the corpus scan can unpersist the frame."""
+    corpus scan instead of two, and returned as the third element so a
+    caller done with the corpus scan can unpersist the frame; nothing
+    here runs an eager action (q260's report — round-11 ADVICE)."""
     docs = (
         load_table(spark, sf_dir, "documents", fan_out=True)
         .filter(F.expr("size(split(text, ' ')) >= 3"))
@@ -3144,9 +3117,8 @@ def _pf_index_frames(
 def _pf_pairs_from(
     pfx: DataFrame, tgs: DataFrame, small: bool, cap: int | None
 ) -> DataFrame:
-    """Candidate generation + exact verify over a prefix index — shared by
-    the self-contained plans (q205/q259) and the from-materialized twins,
-    which read the index from parquet instead of rebuilding it.
+    """Candidate generation + exact verify over the checkpointed prefix
+    index (see _pf_pairs_plan).
 
     ``small`` gates BOTH broadcasts in the plan (the verify arrays and
     the cap's hot-token set) on the measured corpus-size cutover."""
@@ -4430,11 +4402,7 @@ def q247_lsh_param_tuner(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 PF_MAX_POSTING = 64
-PF_BROADCAST_MAX_DOCS = 100_000  # verify-array broadcast cutover (see _pf_pairs_plan)
-# Above this, the self-contained q205/q259 plan checkpoints the prefix
-# index to parquet before candidate generation (the measured round-11
-# 1000x disk failure of the single-DAG form; see _pf_pairs_plan).
-PF_SINGLE_DAG_MAX_DOCS = 1_000_000
+PF_BROADCAST_MAX_DOCS = 100_000  # verify-array broadcast cutover (see _pf_pairs_from)
 
 _PF_DUCK_CTES = f"""dtok AS (
       SELECT doc_id, unnest({token_ngrams_expr("text", 3)[1]}) AS tok
@@ -4507,7 +4475,8 @@ _PF_DUCK_CTES = f"""dtok AS (
     f"O(corpus x {PF_MAX_POSTING}) — linear where the exact join's "
     "10x-measured 75M-pair core grows super-linearly; everything else "
     "is the q205 plan (equi-joins, broadcast verify arrays, PPJoin "
-    "length+positional pruning).",
+    "length+positional pruning) over the same checkpointed prefix index "
+    "(materialize_prefix_index) — q259 and its q263 twin run one plan.",
     tags=("dedup", "join", "capped"),
 )
 def q259_prefix_pairs_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4583,18 +4552,16 @@ def _pf_report_from(pfx: DataFrame) -> DataFrame:
 # From-materialized prefix-index twins (q263/q264) + incremental-CC twin
 # (q262) — round-11 closures of the last two ladder-recomputing entries.
 #
-# q259 and q260 both rebuild the same Bayardo prefix index (the dominant
-# cost: tokenize -> df -> rank -> prefix cut); q157 re-runs the LSH ->
-# verify ladder TWICE (old-old and touches-new candidate sets). The
-# production shape is the q199-q201 convention: build the index / verify
-# the pairs ONCE per corpus snapshot, write parquet, and derive every
-# consumer from the checkpoint. Oracles are the self-contained entries'
-# oracles spliced VERBATIM, so a hash match proves materialize/read-back
-# loses nothing — twin == self-contained.
+# q260 rebuilds the Bayardo prefix index (the dominant cost: tokenize ->
+# df -> rank -> prefix cut); q157 re-runs the LSH -> verify ladder TWICE
+# (old-old and touches-new candidate sets). The production shape is the
+# q199-q201 convention: build the index / verify the pairs ONCE per
+# corpus snapshot (checkpoint.materialize_once) and derive every
+# consumer from the checkpoint — q205/q259 read the same index. Oracles
+# are the self-contained entries' oracles spliced VERBATIM, so a hash
+# match proves materialize/read-back loses nothing — twin ==
+# self-contained.
 # ---------------------------------------------------------------------------
-
-_PF_INDEX_CACHE: dict[tuple[str, str], tuple[str, str]] = {}
-
 
 # Bucket count for the materialized index layout: ADAPTIVE to corpus
 # size (round-12 verdict item 1 — a fixed 64 made five bucketed scans
@@ -4610,13 +4577,9 @@ _PF_INDEX_CACHE: dict[tuple[str, str], tuple[str, str]] = {}
 # skewed key), and the first 1000x attempt at 256 buckets spent ~35
 # min in that one stage. Unknown corpus size (remote URI — _dir_bytes
 # returns None) falls back to the conservative production default
-# below, and SPARK_GRAFT_PF_BUCKETS overrides everything for cluster
-# deployments where the operator knows better (at real cluster core
-# counts a larger bucket count is justified — the cap encodes this
-# sandbox's measured optimum, the env knob the production one). The
-# bucketed write repartitions on the bucket column first so each table
-# lands as one file per bucket.
-PF_INDEX_BUCKETS = 64  # unknown-size fallback / env-overridable default
+# below. The bucketed write repartitions on the bucket column first so
+# each table lands as one file per bucket.
+PF_INDEX_BUCKETS = 64  # unknown-size fallback
 PF_BUCKET_TARGET_BYTES = 4 * 1024 * 1024
 PF_BUCKET_MAX = 64
 
@@ -4624,9 +4587,6 @@ PF_BUCKET_MAX = 64
 def _pf_index_buckets(sf_dir: str) -> int:
     import os as _os
 
-    env = _os.environ.get("SPARK_GRAFT_PF_BUCKETS")
-    if env:
-        return max(1, int(env))
     from ..sources.testdata import _dir_bytes
 
     nbytes = _dir_bytes(_os.path.join(sf_dir, "documents.parquet"))
@@ -4638,66 +4598,15 @@ def _pf_index_buckets(sf_dir: str) -> int:
     return b
 
 
-def _drop_stale_table_locations(spark: SparkSession, tables: tuple[str, ...]) -> None:
-    """Make the bucketed-table write idempotent ACROSS PROCESSES: the
-    table names are deterministic per corpus dir, so a FRESH session
-    (in-memory catalog, no table entry) whose warehouse dir still holds
-    a previous process's table location dies in ``saveAsTable`` with
-    LOCATION_ALREADY_EXISTS — ``mode("overwrite")`` only overwrites
-    tables the catalog knows about. Measured: the first post-build
-    fresh-session run of q263 crashed exactly this way. DROP TABLE
-    covers the same-session/metastore case; the rmtree covers the
-    local-warehouse orphan-directory case (file: scheme only — on a
-    real metastore + durable warehouse the DROP is the whole story)."""
-    import os as _os
-    import re as _re
-    import shutil as _shutil
-
-    for t in tables:
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-    wh = spark.conf.get("spark.sql.warehouse.dir", "")
-    m = _re.match(r"^file:/{0,2}(/.*)$", wh)
-    local = m.group(1) if m else (wh if wh.startswith("/") else None)
-    if local:
-        for t in tables:
-            _shutil.rmtree(_os.path.join(local, t), ignore_errors=True)
-
-
-def _sweep_aged_index_dirs(spark: SparkSession, ctag: str, ptag: str) -> None:
-    """Bound the per-session table leak that per-process naming creates:
-    dead sessions leave pf_idx_*_{ctag}_* directories behind in a shared
-    local warehouse. Remove same-corpus dirs from OTHER processes only
-    when they are demonstrably old (mtime > 1 h) — a live concurrent
-    builder's fresh table is never touched, which is the race the
-    deterministic-name scheme had. file:-scheme warehouses only; a real
-    metastore deployment owns retention there."""
-    import os as _os
-    import re as _re
-    import shutil as _shutil
-    import time as _time
-
-    wh = spark.conf.get("spark.sql.warehouse.dir", "")
-    m = _re.match(r"^file:/{0,2}(/.*)$", wh)
-    local = m.group(1) if m else (wh if wh.startswith("/") else None)
-    if not local or not _os.path.isdir(local):
-        return
-    pat = _re.compile(rf"^pf_idx_(?:pfx|tg)_{ctag}_(?!{ptag}$)[0-9a-f]+$")
-    cutoff = _time.time() - 3600
-    for d in _os.listdir(local):
-        full = _os.path.join(local, d)
-        try:
-            if pat.match(d) and _os.path.getmtime(full) < cutoff:
-                _shutil.rmtree(full, ignore_errors=True)
-        except OSError:
-            continue
-
-
 def materialize_prefix_index(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Build the UNCAPPED prefix index once per (session, corpus) and
-    write it as two BUCKETED catalog tables: ``pfx`` (doc_id, tok, r, m
-    — the ranked Bayardo prefix entries) bucketed+sorted by ``tok``,
-    and ``tg`` (doc_id, tg — the verify trigram arrays) bucketed+sorted
-    by ``doc_id``. Returns the two table names.
+    write it as two BUCKETED external catalog tables under the
+    checkpoint directory: ``pfx`` (doc_id, tok, r, m — the ranked
+    Bayardo prefix entries) bucketed+sorted by ``tok``, and ``tg``
+    (doc_id, tg — the verify trigram arrays) bucketed+sorted by
+    ``doc_id``. Returns the two table names; later calls in the same
+    session return them while both tables exist (the
+    checkpoint.materialize_once rule).
 
     Layout rationale (round-11 verdict item 6 — the prefix family's
     super-linear tail): the downstream plan joins pfx WITH ITSELF on
@@ -4709,53 +4618,44 @@ def materialize_prefix_index(spark: SparkSession, sf_dir: str) -> tuple[str, str
     per table): the self-join reads co-bucketed sorted runs
     (shuffle-free sort-merge), the per-tok hot-token aggregate needs no
     exchange, and the verify join's tg side arrives pre-partitioned —
-    only the cap-bounded candidate list still moves. Later calls in
-    the same session return the existing tables (the
-    materialize_verified_pairs convention: keyed by applicationId +
-    corpus dir, and the corpus snapshot under a path is immutable)."""
+    only the cap-bounded candidate list still moves. An external table
+    reports the same bucket spec as a managed one; its data lives in
+    the fresh checkpoint directory, never in the shared warehouse, so
+    no leftover location from another process can collide with it."""
     import hashlib as _hashlib
     import os as _os
 
-    key = (spark.sparkContext.applicationId, _os.path.normpath(sf_dir))
-    cached = _PF_INDEX_CACHE.get(key)
-    if cached is not None:
-        return cached
-    # The table tag carries a PER-PROCESS component (round-12 ADVICE):
-    # with corpus-only deterministic names, two concurrent sessions
-    # building the index for the same corpus raced — one's DROP+rmtree
-    # could delete the other's live table mid-read. Per-session names
-    # cannot collide across processes; within a session the module
-    # cache makes the name stable, so same-session consumers still
-    # share one build. The drop below stays as same-name insurance
-    # (tests clear the cache and rebuild in one session).
-    ctag = _hashlib.md5(key[1].encode()).hexdigest()[:10]
-    ptag = _hashlib.md5(key[0].encode()).hexdigest()[:6]
-    t_pfx, t_tg = f"pf_idx_pfx_{ctag}_{ptag}", f"pf_idx_tg_{ctag}_{ptag}"
-    _drop_stale_table_locations(spark, (t_pfx, t_tg))
-    _sweep_aged_index_dirs(spark, ctag, ptag)
-    pfx, tgs, docs = _pf_index_frames(spark, sf_dir)
-    n_buckets = _pf_index_buckets(sf_dir)
-    (
-        pfx.repartition(n_buckets, "tok")
-        .write.mode("overwrite")
-        .format("parquet")
-        .bucketBy(n_buckets, "tok")
-        .sortBy("tok")
-        .saveAsTable(t_pfx)
+    from ..sources import fs
+
+    # Names are stable per (session, corpus), so a rebuild in the same
+    # session overwrites the catalog entries instead of adding new ones.
+    tag = _hashlib.md5(
+        f"{spark.sparkContext.applicationId}|{_os.path.normpath(sf_dir)}".encode()
+    ).hexdigest()[:16]
+    names = (f"pf_idx_pfx_{tag}", f"pf_idx_tg_{tag}")
+
+    def build(ckpt: str) -> tuple[str, str]:
+        pfx, tgs, docs = _pf_index_frames(spark, sf_dir)
+        n_buckets = _pf_index_buckets(sf_dir)
+        for df, col, name in ((pfx, "tok", names[0]), (tgs, "doc_id", names[1])):
+            (
+                df.repartition(n_buckets, col)
+                .write.mode("overwrite")
+                .format("parquet")
+                .option("path", fs.join(ckpt, name))
+                .bucketBy(n_buckets, col)
+                .sortBy(col)
+                .saveAsTable(name)
+            )
+        # both writes are done with the corpus scan — everything downstream
+        # reads the bucketed checkpoint, so the persist would only hold memory
+        docs.unpersist()
+        return names
+
+    return materialize_once(
+        spark, sf_dir, "pf_idx", build,
+        lambda ts: all(spark.catalog.tableExists(t) for t in ts),
     )
-    (
-        tgs.repartition(n_buckets, "doc_id")
-        .write.mode("overwrite")
-        .format("parquet")
-        .bucketBy(n_buckets, "doc_id")
-        .sortBy("doc_id")
-        .saveAsTable(t_tg)
-    )
-    # both writes are done with the corpus scan — everything downstream
-    # reads the bucketed checkpoint, so the persist would only hold memory
-    docs.unpersist()
-    _PF_INDEX_CACHE[key] = (t_pfx, t_tg)
-    return t_pfx, t_tg
 
 
 def _materialized_pf_index(
@@ -4763,8 +4663,7 @@ def _materialized_pf_index(
 ) -> tuple[DataFrame, DataFrame, int]:
     """(pfx, tg, n_docs) read back from the bucketed checkpoint tables;
     n_docs is one row-count over the one-row-per-doc tg table (columnar
-    count, no corpus re-scan) and drives the same broadcast cutovers as
-    the self-contained plan."""
+    count, no corpus re-scan) and drives the broadcast cutovers."""
     t_pfx, t_tg = materialize_prefix_index(spark, sf_dir)
     pfx = spark.table(t_pfx)
     tgs = spark.table(t_tg)
@@ -4811,14 +4710,14 @@ def q262_incremental_components_materialized(
     oracle=_registered_oracle("q259_prefix_pairs_capped"),
     doc="q259's capped prefix-filter all-pairs join computed FROM THE "
     "MATERIALIZED prefix index (materialize_prefix_index): the "
-    "tokenize -> df -> rank -> prefix-cut build — the dominant cost "
-    "q259 and q260 each repeat — is paid once per corpus snapshot and "
-    "written as parquet (pfx entries + verify trigram arrays); this "
-    "twin reads the checkpoint, applies the PF_MAX_POSTING hot-token "
-    "cap, and runs the same PPJoin candidate + exact-verify plan "
-    "(_pf_pairs_from, shared code). n_docs for the broadcast cutovers "
-    "is a columnar count of the one-row-per-doc tg parquet, not a "
-    "corpus re-scan. Oracle: q259's spliced verbatim — hash match == "
+    "tokenize -> df -> rank -> prefix-cut build is paid once per "
+    "corpus snapshot and written as two bucketed tables (pfx entries + "
+    "verify trigram arrays); this entry reads the checkpoint, applies "
+    "the PF_MAX_POSTING hot-token cap, and runs the PPJoin candidate + "
+    "exact-verify plan. q205, q259 and q263 all run this one plan "
+    "(_pf_pairs_plan) over the one checkpoint; n_docs for the broadcast "
+    "cutovers is a columnar count of the one-row-per-doc tg table, not "
+    "a corpus re-scan. Oracle: q259's spliced verbatim — hash match == "
     "twin identity. Scale shape: index build amortized across the "
     "prefix family; consume cost is the cap-bounded candidate join "
     "only.",
@@ -4827,10 +4726,7 @@ def q262_incremental_components_materialized(
 def q263_prefix_pairs_materialized(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    pfx, tgs, n_docs = _materialized_pf_index(spark, sf_dir)
-    return _pf_pairs_from(
-        pfx, tgs, n_docs <= PF_BROADCAST_MAX_DOCS, PF_MAX_POSTING
-    )
+    return _pf_pairs_plan(spark, sf_dir, cap=PF_MAX_POSTING)
 
 
 @register(

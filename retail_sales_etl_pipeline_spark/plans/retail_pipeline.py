@@ -96,7 +96,7 @@ def run(
     # -- clean (dag2): functional filter chain + metrics + gate -------------
     cleaned_res = clean_staging(staging)
     cleaned = cleaned_res.df
-    cleaned_rows = cleaned_res.rows_after if cleaned_res.metrics else cleaned.count()
+    cleaned_rows = cleaned_res.rows_after
     quality.validate_row_gate(cleaned_rows, min_rows)
 
     # -- transform (dag3): three dim upserts, then the fact star join -------

@@ -20,6 +20,7 @@ from ..operators.similarity import (
     rp_buckets_pandas,
 )
 from ..sources import load_table
+from .checkpoint import materialize_once
 from .registry import register
 
 N_QUERIES = 5  # query set = vec_id < 5
@@ -3065,34 +3066,26 @@ def q258_mrr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q199-q201/q262-q264 convention applied to the EMBEDDING near-dup graph.
 # ---------------------------------------------------------------------------
 
-_EMB_PAIRS_CACHE: dict[tuple[str, str], str] = {}
-
-
 def materialize_embedding_pairs(spark: SparkSession, sf_dir: str) -> str:
     """Run the capped RP-LSH -> cosine-verify ladder (q32's plan) ONCE
     per (session, corpus) and write the verified embedding near-dup pair
     list as parquet; later calls in the same session return the existing
-    checkpoint path (the materialize_verified_pairs convention: keyed by
-    applicationId + corpus dir, corpus snapshots immutable per path)."""
-    import os as _os
-    import tempfile as _tempfile
-
+    checkpoint path while it still exists (the
+    checkpoint.materialize_once rule)."""
     from ..sources import fs
 
-    key = (spark.sparkContext.applicationId, _os.path.normpath(sf_dir))
-    cached = _EMB_PAIRS_CACHE.get(key)
-    if cached is not None and _os.path.isdir(cached):
-        return cached
-    path = fs.join(_tempfile.mkdtemp(prefix="emb_pairs_"), "verified_pairs")
-    emb = load_table(spark, sf_dir, "embeddings")
-    (
-        rp_neardup_pairs(emb)
-        .select("vec_a", "vec_b")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-    _EMB_PAIRS_CACHE[key] = path
-    return path
+    def build(ckpt: str) -> str:
+        path = fs.join(ckpt, "verified_pairs")
+        emb = load_table(spark, sf_dir, "embeddings")
+        (
+            rp_neardup_pairs(emb)
+            .select("vec_a", "vec_b")
+            .write.mode("overwrite")
+            .parquet(path)
+        )
+        return path
+
+    return materialize_once(spark, sf_dir, "emb_pairs", build)
 
 
 @register(

@@ -4,6 +4,7 @@ checkpoint must be paid once per (session, corpus)."""
 
 from __future__ import annotations
 
+from retail_sales_etl_pipeline_spark.plans import checkpoint
 from retail_sales_etl_pipeline_spark.plans import dedup_queries as dq
 
 SF = "/root/testdata/sf0.001"
@@ -14,7 +15,7 @@ def _rows(df):
 
 
 def test_materialize_once_per_session(spark):
-    dq._PAIRS_CACHE.clear()
+    checkpoint._CHECKPOINTS.clear()
     p1 = dq.materialize_verified_pairs(spark, SF)
     p2 = dq.materialize_verified_pairs(spark, SF)
     assert p1 == p2  # second call reuses the checkpoint path
@@ -48,7 +49,7 @@ def test_chain_depth_twin_identity(spark):
 
 
 def test_prefix_index_materialize_once_per_session(spark):
-    dq._PF_INDEX_CACHE.clear()
+    checkpoint._CHECKPOINTS.clear()
     t1 = dq.materialize_prefix_index(spark, SF)
     t2 = dq.materialize_prefix_index(spark, SF)
     assert t1 == t2
@@ -98,7 +99,7 @@ def test_incremental_cc_twin_identity(spark):
 def test_embedding_cc_twin_identity(spark):
     from retail_sales_etl_pipeline_spark.plans import similarity_queries as sq
 
-    sq._EMB_PAIRS_CACHE.clear()
+    checkpoint._CHECKPOINTS.clear()
     p1 = sq.materialize_embedding_pairs(spark, SF)
     p2 = sq.materialize_embedding_pairs(spark, SF)
     assert p1 == p2  # once per (session, corpus)
@@ -107,32 +108,10 @@ def test_embedding_cc_twin_identity(spark):
     ) == _rows(sq.q66_embedding_neardup_components(spark, SF))
 
 
-def test_single_dag_cutover_is_lossless(spark, monkeypatch):
-    """Force the checkpoint cutover (PF_SINGLE_DAG_MAX_DOCS below the test
-    corpus) and pin that the self-contained plan's output is row-identical
-    to the in-DAG form — the at-scale path is exercised at test scale."""
-    dq._PF_INDEX_CACHE.clear()
-    want = _rows(dq.q259_prefix_pairs_capped(spark, SF))
-    monkeypatch.setattr(dq, "PF_SINGLE_DAG_MAX_DOCS", 1)
-    dq._PF_INDEX_CACHE.clear()
-    got = _rows(dq.q259_prefix_pairs_capped(spark, SF))
-    assert got == want
-    # and the exact judge takes the same cutover losslessly
-    want_exact = None
-    monkeypatch.setattr(dq, "PF_SINGLE_DAG_MAX_DOCS", 10**9)
-    dq._PF_INDEX_CACHE.clear()
-    want_exact = _rows(dq.q205_prefix_filter_pairs(spark, SF))
-    monkeypatch.setattr(dq, "PF_SINGLE_DAG_MAX_DOCS", 1)
-    dq._PF_INDEX_CACHE.clear()
-    assert _rows(dq.q205_prefix_filter_pairs(spark, SF)) == want_exact
-
-
-def test_pf_index_buckets_adaptive(monkeypatch, tmp_path):
+def test_pf_index_buckets_adaptive(tmp_path):
     """Round-13: the bucket count follows corpus bytes (8 at test scale,
-    power-of-two growth, 1024 cap), falls back to the conservative
-    default when the size is unknowable (remote URI), and honors the
-    operator override env."""
-    monkeypatch.delenv("SPARK_GRAFT_PF_BUCKETS", raising=False)
+    power-of-two growth, PF_BUCKET_MAX cap of 64) and falls back to the
+    conservative default when the size is unknowable (remote URI)."""
     assert dq._pf_index_buckets("/root/testdata/sf0.001") == 8
     assert dq._pf_index_buckets("s3://bucket/corpus") == dq.PF_INDEX_BUCKETS
     # synthetic size ladder: 8 doubles per PF_BUCKET_TARGET_BYTES step
@@ -141,8 +120,6 @@ def test_pf_index_buckets_adaptive(monkeypatch, tmp_path):
     big = tmp_path / "documents.parquet"
     big.write_bytes(b"x")  # 1 byte -> floor
     assert dq._pf_index_buckets(str(tmp_path)) == 8
-    monkeypatch.setenv("SPARK_GRAFT_PF_BUCKETS", "128")
-    assert dq._pf_index_buckets(str(tmp_path)) == 128
 
 
 def test_prefix_index_survives_stale_warehouse_location(spark):
@@ -154,7 +131,7 @@ def test_prefix_index_survives_stale_warehouse_location(spark):
     import os
     import re
 
-    dq._PF_INDEX_CACHE.clear()
+    checkpoint._CHECKPOINTS.clear()
     t_pfx, t_tg = dq.materialize_prefix_index(spark, SF)
     want = _rows(spark.table(t_pfx))
 
@@ -167,8 +144,39 @@ def test_prefix_index_survives_stale_warehouse_location(spark):
         os.makedirs(os.path.join(local, t), exist_ok=True)
         with open(os.path.join(local, t, "stale-part"), "w") as f:
             f.write("leftover from a previous process")
-    dq._PF_INDEX_CACHE.clear()
+    checkpoint._CHECKPOINTS.clear()
 
     got_t = dq.materialize_prefix_index(spark, SF)
     assert got_t == (t_pfx, t_tg)
     assert _rows(spark.table(t_pfx)) == want
+
+
+def test_prefix_report_survives_dropped_tables(spark):
+    """A cached prefix index is reused only while its tables exist: after
+    every catalog table is dropped in the same session, q264 rebuilds the
+    checkpoint instead of handing back the dropped names."""
+    want = _rows(dq.q264_prefix_report_materialized(spark, SF))
+    for t in spark.catalog.listTables():
+        spark.sql(f"DROP TABLE IF EXISTS {t.name}")
+    assert _rows(dq.q264_prefix_report_materialized(spark, SF)) == want
+
+
+def test_prefix_index_writes_nothing_to_warehouse(spark):
+    """The index tables are external, under the checkpoint directory: the
+    shared warehouse gains no pf_idx_* location."""
+    import os
+    import re
+
+    wh = spark.conf.get("spark.sql.warehouse.dir")
+    local = re.match(r"^file:/{0,2}(/.*)$", wh).group(1)
+
+    def pf_dirs():
+        if not os.path.isdir(local):
+            return set()
+        return {d for d in os.listdir(local) if d.startswith("pf_idx_")}
+
+    before = pf_dirs()
+    checkpoint._CHECKPOINTS.clear()
+    for t in dq.materialize_prefix_index(spark, SF):
+        assert spark.catalog.getTable(t).tableType == "EXTERNAL", t
+    assert pf_dirs() == before

@@ -35,10 +35,10 @@ SCALE_DIRS = {
     "1x": os.path.join(ROOT, "bigdata", "gen1x"),
     "10x": os.path.join(ROOT, "bigdata", "gen10x"),
     "100x": os.path.join(ROOT, "bigdata", "gen100x"),
-    # round 12: the auto-checkpoint cutover boundary — just above
-    # PF_SINGLE_DAG_MAX_DOCS = 1M docs (tools/gen_scale_corpus.py
-    # --mults=200), proving the self-contained q259 survives where the
-    # round-11 single-DAG form died on disk
+    # round 12: ~1M docs (tools/gen_scale_corpus.py --mults=200), the
+    # decade between 100x and 1000x for the prefix family, which reads
+    # its checkpointed index at every scale (the round-11 single-DAG
+    # form died on disk at 1000x)
     "200x": os.path.join(ROOT, "bigdata", "gen200x"),
     # round 6: a further decade for the cheapest-per-row dedup family
     # (documents + embeddings only — tools/gen_scale_corpus.py --mults=1000)
