@@ -240,7 +240,8 @@ def main() -> None:
     # mistake a partial map for a complete one; a full-stdout consumer
     # reassembles the map from part=i/parts=n. Timing methodology is
     # untouched — this changes only how already-measured numbers print.
-    for line in per_query_chunk_lines(short):
+    chunks = per_query_chunk_lines(short)
+    for line in chunks:
         print(line)
     # The LAST stdout line stays a ~300-byte self-contained summary with
     # the per-query map INTENTIONALLY absent ("queries": {}) — totals +
@@ -251,7 +252,7 @@ def main() -> None:
     print(
         final_summary_line(
             total, len(timings), len(errors), sf, cal_start, cal_end,
-            parts=len(per_query_chunk_lines(short)),
+            parts=len(chunks),
         )
     )
 

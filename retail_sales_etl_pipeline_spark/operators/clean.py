@@ -1,23 +1,26 @@
 """Cleaning stage (reference dag2_clean_validate.py, Spark-first).
 
-The reference cleans by four destructive DELETEs against the staging table,
-each a full table rewrite in Postgres. Functionally each stage is just
-``df -> df.filter(...)`` (SURVEY §2.11 M4), so the whole chain composes into
-ONE logical plan: Catalyst collapses the three predicate stages into a
-single pushed-down scan filter, and the dedup window is the only shuffle.
-Stage order is preserved from the reference task chain
+The reference cleans by four destructive DELETEs against the staging table
+and reads each stage's removed-row count from ``cur.rowcount``
+(dag2_clean_validate.py:36,65,82,99). Here each staging row is tagged once
+with four cumulative keep-flags in the reference task order
 (dag2_clean_validate.py:216): nulls → duplicates → zero-qty → invalid-price.
-Order matters: F2's ``quantity != 0`` silently drops NULL quantities too,
-which only matches DELETE semantics because F1 removed them first.
+Flag k means "survives the first k DELETEs", so one aggregate of
+conditional counts gives every stage's before/after count, and the cleaned
+table is the rows whose last flag holds. The dedup window is the only
+shuffle.
 
-Per-stage removed-row counts (the reference reads cur.rowcount,
-dag2_clean_validate.py:36,65,82,99) are computed with one aggregate pass per
-stage boundary — counts, not extra table rewrites.
+Order matters: F2's ``quantity != 0`` drops NULL quantities too, which
+matches DELETE semantics only because F1 removed them first. The dedup
+window also sees rows that fail F1, but such a row has a NULL in a
+dedup-key column, so it never shares a window partition with a row that
+passes F1.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -39,36 +42,24 @@ DEDUP_KEY = (
 )
 
 
-def remove_nulls(df: DataFrame) -> DataFrame:
-    """F1: drop rows where any required column is NULL."""
-    return df.dropna(subset=list(REQUIRED_COLUMNS))
+def _stage_predicates():
+    """(stage name, keep predicate) in reference order.
 
-
-def remove_duplicates(df: DataFrame, order_col: str = "load_seq") -> DataFrame:
-    """W1: keep the first row (by ingest order) of each dedup-key group.
-
+    W1 keeps the first row (by ingest order) of each dedup-key group;
     ``dropDuplicates`` would give the same row *set* only when
-    description/country never differ within a group; the window form is
-    exact (SURVEY §7.4.2).
+    description/country never differ within a group, the window form is
+    exact (SURVEY §7.4.2). F2 keeps negative quantities: they are returns
+    (reference dag2_clean_validate.py:72-86).
     """
     key = [F.col(c) for c in DEDUP_KEY] + [F.coalesce(F.col("customer_id"), F.lit(""))]
-    w = Window.partitionBy(*key).orderBy(F.col(order_col))
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-
-
-def remove_zero_quantities(df: DataFrame) -> DataFrame:
-    """F2: drop quantity == 0; negatives are returns and are KEPT
-    (reference dag2_clean_validate.py:72-86)."""
-    return df.filter(F.col("quantity") != 0)
-
-
-def remove_invalid_prices(df: DataFrame) -> DataFrame:
-    """F3: drop unit_price <= 0 (reference dag2_clean_validate.py:89-103)."""
-    return df.filter(F.col("unit_price") > 0)
+    w = Window.partitionBy(*key).orderBy(F.col("load_seq"))
+    not_null = reduce(lambda a, b: a & b, [F.col(c).isNotNull() for c in REQUIRED_COLUMNS])
+    return [
+        ("remove_nulls", not_null),
+        ("remove_duplicates", F.row_number().over(w) == 1),
+        ("remove_zero_quantities", F.col("quantity") != 0),
+        ("remove_invalid_prices", F.col("unit_price") > 0),
+    ]
 
 
 @dataclass(frozen=True)
@@ -86,47 +77,35 @@ class StageMetric:
 class CleanResult:
     df: DataFrame
     metrics: list[StageMetric]
+    tagged: DataFrame  # the cached flagged frame ``df`` filters
 
     @property
     def rows_after(self) -> int:
         return self.metrics[-1].rows_after
 
     def unpersist(self) -> None:
-        """Release the cached final stage. With collect_metrics=True the
-        returned ``df`` stays cached (each intermediate was already
-        unpersisted); callers must release it after their downstream
-        writes, or repeated runs on one session accumulate cached
-        partitions."""
-        self.df.unpersist()
+        """Release the cached flagged frame. Callers must call this after
+        their downstream writes, or repeated runs on one session
+        accumulate cached partitions."""
+        self.tagged.unpersist()
 
 
-def clean_staging(df: DataFrame, collect_metrics: bool = True) -> CleanResult:
-    """Full cleaning chain in reference order, with per-stage metrics.
+def clean_staging(df: DataFrame) -> CleanResult:
+    """All four cleaning stages, in reference order, in one Spark action.
 
-    When ``collect_metrics`` is False this is one lazy plan with zero
-    actions — the scale path. With metrics on, each boundary costs one
-    count() over a cached intermediate (still no table rewrites).
+    Caches the flagged frame and reads every ``StageMetric`` from one
+    aggregate; the result's ``df`` is the rows that keep their last flag.
     """
-    stages = [
-        ("remove_nulls", remove_nulls),
-        ("remove_duplicates", remove_duplicates),
-        ("remove_zero_quantities", remove_zero_quantities),
-        ("remove_invalid_prices", remove_invalid_prices),
-    ]
-    metrics: list[StageMetric] = []
-    if not collect_metrics:
-        out = df
-        for _, fn in stages:
-            out = fn(out)
-        return CleanResult(out, metrics)
-
-    cur = df
-    cur.cache()
-    before = cur.count()
-    for name, fn in stages:
-        nxt = fn(cur).cache()
-        after = nxt.count()
-        metrics.append(StageMetric(name, before, after))
-        cur.unpersist()
-        cur, before = nxt, after
-    return CleanResult(cur, metrics)
+    stages = _stage_predicates()
+    flags = [f"_keep{i}" for i in range(len(stages))]
+    tagged, keep = df, F.lit(True)
+    for flag, (_, pred) in zip(flags, stages):
+        tagged = tagged.withColumn(flag, keep & pred)
+        keep = F.col(flag)
+    tagged = tagged.cache()
+    row = tagged.agg(
+        F.count(F.lit(1)).alias("rows"), *[F.count_if(F.col(f)).alias(f) for f in flags]
+    ).collect()[0]
+    counts = [row["rows"], *(row[f] for f in flags)]
+    metrics = [StageMetric(name, b, a) for (name, _), b, a in zip(stages, counts, counts[1:])]
+    return CleanResult(tagged.filter(F.col(flags[-1])).drop(*flags), metrics, tagged)

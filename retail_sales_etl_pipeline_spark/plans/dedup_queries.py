@@ -3266,6 +3266,8 @@ KCORE_ROUNDS = 4
 
 
 def _kcore_duck_rounds() -> str:
+    # Each round reads the previous edge CTE twice (degrees and edges), so
+    # the edge CTEs are MATERIALIZED: inlined, DuckDB plans 3^rounds copies.
     steps = []
     prev = "e0"
     for r in range(1, KCORE_ROUNDS + 1):
@@ -3273,7 +3275,7 @@ def _kcore_duck_rounds() -> str:
     deg{r} AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS deg
                FROM {prev} GROUP BY src),
     keep{r} AS (SELECT src AS node FROM deg{r} WHERE deg >= {KCORE_K}),
-    e{r} AS (
+    e{r} AS MATERIALIZED (
       SELECT e.src, e.dst FROM {prev} e
       JOIN keep{r} ka ON ka.node = e.src
       JOIN keep{r} kb ON kb.node = e.dst
@@ -3286,7 +3288,7 @@ def _kcore_duck_rounds() -> str:
     "q208_kcore_decomposition",
     oracle=f"""
     WITH {_DUCK_VERIFIED_PRELUDE},
-    e0 AS (
+    e0 AS MATERIALIZED (
       SELECT doc_a AS src, doc_b AS dst FROM verified
       UNION ALL
       SELECT doc_b AS src, doc_a AS dst FROM verified

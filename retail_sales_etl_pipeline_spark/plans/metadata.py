@@ -11,11 +11,31 @@ from __future__ import annotations
 import time
 from decimal import Decimal
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DateType, StructType, TimestampType
 
-from ..schemas import PIPELINE_RUNS_SCHEMA, STAGE_METRICS_SCHEMA
+from ..schemas import PIPELINE_RUNS_SCHEMA, STAGE_ATTEMPTS_SCHEMA, STAGE_METRICS_SCHEMA
 from ..sources import fs
+
+
+def append_log(spark: SparkSession, path: str, rows: list[dict], schema: StructType) -> None:
+    """The one append rule for every log table (M6): ``rows`` become one
+    parquet file under ``path``. A log's date and timestamp columns are its
+    write time (the reference's CURRENT_DATE/CURRENT_TIMESTAMP defaults, C7).
+
+    The frame is built from an Arrow table, so it reaches the JVM with no
+    Python-worker round trip, whatever the session's Arrow conf says.
+    """
+    if not rows:
+        return
+    now = {DateType: F.current_date(), TimestampType: F.current_timestamp()}
+    stamps = {f.name: now[type(f.dataType)] for f in schema if type(f.dataType) in now}
+    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
+    df = spark.createDataFrame(table, schema=schema).withColumns(stamps)
+    df.coalesce(1).write.mode("append").parquet(path)
 
 
 def log_pipeline_run(
@@ -33,27 +53,16 @@ def log_pipeline_run(
     run_id: epoch-millis stamp — unique per run without a serial sequence.
     """
     run_id = int(time.time() * 1000)
-    df = (
-        spark.createDataFrame(
-            [
-                {
-                    "run_id": run_id,
-                    "run_date": None,
-                    "run_timestamp": None,
-                    "pipeline_name": pipeline_name,
-                    "status": status,
-                    "total_rows_processed": total_rows_processed,
-                    "total_rows_loaded": total_rows_loaded,
-                    "duration_minutes": Decimal(f"{duration_minutes:.2f}"),
-                    "notes": notes,
-                }
-            ],
-            schema=PIPELINE_RUNS_SCHEMA,
-        )
-        .withColumn("run_date", F.current_date())
-        .withColumn("run_timestamp", F.current_timestamp())
-    )
-    df.coalesce(1).write.mode("append").parquet(path)
+    row = {
+        "run_id": run_id,
+        "pipeline_name": pipeline_name,
+        "status": status,
+        "total_rows_processed": total_rows_processed,
+        "total_rows_loaded": total_rows_loaded,
+        "duration_minutes": Decimal(f"{duration_minutes:.2f}"),
+        "notes": notes,
+    }
+    append_log(spark, path, [row], PIPELINE_RUNS_SCHEMA)
     return run_id
 
 
@@ -62,8 +71,6 @@ def log_stage_metrics(
 ) -> None:
     """Append stage_metrics rows (reference metadata_tracker.py:92-135);
     accepts operators.clean.StageMetric instances."""
-    if not metrics:
-        return
     rows = [
         {
             "run_id": run_id,
@@ -71,14 +78,10 @@ def log_stage_metrics(
             "rows_before": m.rows_before,
             "rows_after": m.rows_after,
             "rows_removed": m.rows_removed,
-            "execution_timestamp": None,
         }
         for m in metrics
     ]
-    df = spark.createDataFrame(rows, schema=STAGE_METRICS_SCHEMA).withColumn(
-        "execution_timestamp", F.current_timestamp()
-    )
-    df.coalesce(1).write.mode("append").parquet(path)
+    append_log(spark, path, rows, STAGE_METRICS_SCHEMA)
 
 
 def recent_pipeline_runs(spark: SparkSession, path: str, n: int = 10) -> DataFrame:
@@ -100,8 +103,6 @@ def log_stage_attempts(
     """Append stage-attempt rows (the timeout/retry policy's audit trail —
     reference dag1_ingest_csv.py:20-22 execution_timeout/retries made
     observable). Accepts plans.stage_policy.StageAttempt instances."""
-    if not attempts:
-        return
     rows = [
         {
             "run_id": run_id,
@@ -110,15 +111,7 @@ def log_stage_attempts(
             "status": a.status,
             "seconds": float(a.seconds),
             "error": a.error,
-            "execution_timestamp": None,
         }
         for a in attempts
     ]
-    df = spark.createDataFrame(
-        rows,
-        schema=(
-            "run_id long, stage_name string, attempt int, status string, "
-            "seconds double, error string, execution_timestamp timestamp"
-        ),
-    ).withColumn("execution_timestamp", F.current_timestamp())
-    df.coalesce(1).write.mode("append").parquet(path)
+    append_log(spark, path, rows, STAGE_ATTEMPTS_SCHEMA)

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..schemas import DATA_QUALITY_LOG_SCHEMA
+from .metadata import append_log
 
 DEFAULT_MIN_ROWS = 400_000
 
@@ -53,11 +54,10 @@ def quality_log_rows(
     min_rows: int = DEFAULT_MIN_ROWS,
 ) -> list[dict]:
     """One data_quality_log record (reference dag2_clean_validate.py:139-174);
-    append with write_log (M6)."""
+    append with ``write_quality_log`` (M6)."""
     status = "PASS" if total_rows >= min_rows else "WARNING"
     return [
         {
-            "check_timestamp": None,  # stamped at write time (C7)
             "dag_run_id": run_id,
             "table_name": table_name,
             "total_rows": total_rows,
@@ -70,9 +70,5 @@ def quality_log_rows(
 
 
 def write_quality_log(spark, rows: list[dict], path: str) -> None:
-    """M6 append-only log write; CURRENT_TIMESTAMP default (C7) becomes an
-    explicit current_timestamp() column."""
-    df = spark.createDataFrame(rows, schema=DATA_QUALITY_LOG_SCHEMA).withColumn(
-        "check_timestamp", F.current_timestamp()
-    )
-    df.coalesce(1).write.mode("append").parquet(path)
+    """M6 append-only log write; check_timestamp is the write time (C7)."""
+    append_log(spark, path, rows, DATA_QUALITY_LOG_SCHEMA)

@@ -16,10 +16,15 @@ reference dag3_transform_warehouse.py:117).
 from __future__ import annotations
 
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from functools import reduce
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
+from .. import schemas
 from ..operators.clean import StageMetric, clean_staging
 from ..operators.dims import load_dim_customer, load_dim_date, load_dim_product
 from ..operators.fact import build_fact_sales, write_fact_sales
@@ -44,8 +49,12 @@ class PipelineResult:
     run_id: int = 0
 
 
-def _read_dim(spark: SparkSession, path: str) -> DataFrame | None:
-    return spark.read.parquet(path) if fs.exists(spark, path) else None
+# The three dims in build order, each with the schema it is read back with.
+DIM_SCHEMAS = {
+    "dim_product": schemas.DIM_PRODUCT_SCHEMA,
+    "dim_customer": schemas.DIM_CUSTOMER_SCHEMA,
+    "dim_date": schemas.DIM_DATE_SCHEMA,
+}
 
 
 def run(
@@ -79,6 +88,11 @@ def run(
     }
     attempts: list[StageAttempt] = []
 
+    def _read(name: str, schema) -> DataFrame:
+        # with its schema: a bare ``spark.read.parquet`` launches a Spark
+        # job to infer the schema from the parquet footers
+        return spark.read.schema(schema).parquet(p[name])
+
     # -- ingest (dag1): guard → distributed CSV scan → staging parquet ------
     check_csv_exists(spark, csv_path)
     staged = read_retail_csv(spark, csv_path, timestamp_format)
@@ -90,12 +104,12 @@ def run(
         policy,
         attempts_out=attempts,
     )
-    staging = spark.read.parquet(p["staging_online_retail"])
-    raw_rows = staging.count()
+    staging = _read("staging_online_retail", schemas.STAGING_SCHEMA)
 
-    # -- clean (dag2): functional filter chain + metrics + gate -------------
+    # -- clean (dag2): one flagged pass gives the rows and every count ------
     cleaned_res = clean_staging(staging)
     cleaned = cleaned_res.df
+    raw_rows = cleaned_res.metrics[0].rows_before
     cleaned_rows = cleaned_res.rows_after
     quality.validate_row_gate(cleaned_rows, min_rows)
 
@@ -105,21 +119,19 @@ def run(
     # the three build+write actions from a thread pool reproduces that:
     # SparkSession is thread-safe for concurrent actions, so the scheduler
     # interleaves the three jobs instead of running them back-to-back.
-    from concurrent.futures import ThreadPoolExecutor
-
     def _build_and_write(name: str, loader) -> None:
-        df = loader(cleaned, _read_dim(spark, p[name]))
-        df.write.mode("overwrite").parquet(p[name] + "_new")
+        old = _read(name, DIM_SCHEMAS[name]) if fs.exists(spark, p[name]) else None
+        loader(cleaned, old).write.mode("overwrite").parquet(p[name] + "_new")
 
     def _dims_stage() -> None:
+        # Pool threads do not inherit the stage's job group; wrapping here,
+        # inside the stage, hands it over so a timeout cancels their jobs.
+        build_and_write = inheritable_thread_target(spark)(_build_and_write)
         with ThreadPoolExecutor(max_workers=3) as pool:
+            loaders = (load_dim_product, load_dim_customer, load_dim_date)
             futures = [
-                pool.submit(_build_and_write, name, loader)
-                for name, loader in (
-                    ("dim_product", load_dim_product),
-                    ("dim_customer", load_dim_customer),
-                    ("dim_date", load_dim_date),
-                )
+                pool.submit(build_and_write, name, loader)
+                for name, loader in zip(DIM_SCHEMAS, loaders)
             ]
             for f in futures:
                 f.result()  # re-raise the first failure; never swallow
@@ -134,25 +146,31 @@ def run(
     # path in one job (Spark reads lazily; an in-place overwrite of an input
     # is undefined behavior). Routed through the Hadoop FS API so the same
     # swap works on hdfs:/s3a: warehouses, not just driver-local disk.
-    for name in ("dim_product", "dim_customer", "dim_date"):
+    for name in DIM_SCHEMAS:
         fs.replace(spark, p[name] + "_new", p[name])
 
-    dim_product = spark.read.parquet(p["dim_product"])
-    dim_customer = spark.read.parquet(p["dim_customer"])
-    dim_date = spark.read.parquet(p["dim_date"])
+    dims = {name: _read(name, schema) for name, schema in DIM_SCHEMAS.items()}
 
-    fact = build_fact_sales(cleaned, dim_product, dim_customer, dim_date)
+    fact = build_fact_sales(cleaned, dims["dim_product"], dims["dim_customer"], dims["dim_date"])
     run_stage(spark, "fact_full_refresh",
               lambda: write_fact_sales(fact, p["fact_sales"]), policy,
               attempts_out=attempts)
-    fact = spark.read.parquet(p["fact_sales"])
-    fact_rows = fact.count()
+    fact = _read("fact_sales", schemas.FACT_SALES_SCHEMA)
     # every consumer of the cleaned DF has executed — release its cache so
     # repeated runs on one session don't accumulate cached partitions
     cleaned_res.unpersist()
 
     # -- validate + report (dag2 logging + master-DAG summary) --------------
-    from pyspark.sql import functions as F
+    # One action reads back the fact rows, the revenue and the dim sizes.
+    tables = {"fact_sales": fact, **dims}
+    no_amount = F.lit(None).cast("decimal(10,2)").alias("total_amount")
+    totals = reduce(DataFrame.union, [
+        df.select(F.lit(name).alias("t"), "total_amount" if df is fact else no_amount)
+        for name, df in tables.items()
+    ]).agg(
+        *[F.count_if(F.col("t") == name).alias(name) for name in tables],
+        F.sum("total_amount").cast("decimal(38,2)").cast("string").alias("revenue"),
+    ).collect()[0]
 
     nulls = quality.null_counts(staging, ["customer_id", "description", "country"])
     quality.write_quality_log(
@@ -168,24 +186,15 @@ def run(
         p["data_quality_log"],
     )
 
-    revenue = (
-        fact.agg(F.sum("total_amount").cast("decimal(38,2)").cast("string")).collect()[0][0]
-    )
-    counts = {
-        "dim_product": dim_product.count(),
-        "dim_customer": dim_customer.count(),
-        "dim_date": dim_date.count(),
-    }
-
     run_id = metadata.log_pipeline_run(
         spark,
         p["pipeline_runs"],
         pipeline_name="retail_sales_etl",
         status="SUCCESS",
         total_rows_processed=raw_rows,
-        total_rows_loaded=fact_rows,
+        total_rows_loaded=totals["fact_sales"],
         duration_minutes=(time.time() - t_start) / 60.0,
-        notes=f"revenue={revenue}",
+        notes=f"revenue={totals['revenue']}",
     )
     metadata.log_stage_metrics(spark, p["stage_metrics"], run_id, cleaned_res.metrics)
     metadata.log_stage_attempts(spark, p["stage_attempts"], run_id, attempts)
@@ -193,11 +202,11 @@ def run(
     return PipelineResult(
         raw_rows=raw_rows,
         cleaned_rows=cleaned_rows,
-        fact_rows=fact_rows,
-        dim_product_rows=counts["dim_product"],
-        dim_customer_rows=counts["dim_customer"],
-        dim_date_rows=counts["dim_date"],
-        total_revenue=revenue,
+        fact_rows=totals["fact_sales"],
+        dim_product_rows=totals["dim_product"],
+        dim_customer_rows=totals["dim_customer"],
+        dim_date_rows=totals["dim_date"],
+        total_revenue=totals["revenue"],
         stage_metrics=cleaned_res.metrics,
         stage_attempts=attempts,
         run_id=run_id,

@@ -1278,7 +1278,9 @@ def _bpe_oracle_ctes() -> list[str]:
     no pairs left its winner CTE is empty, the CROSS JOIN empties every
     later seg, and all later rounds emit zero rows — exactly the Spark
     driver loop's early break. Shared by q256 (publishes the winners)
-    and q261 (encodes the corpus with the final segmentation)."""
+    and q261 (encodes the corpus with the final segmentation). Every seg
+    CTE is MATERIALIZED: round k reads seg_{k-1} twice (pair counts and
+    fold), so inlined CTEs would plan 2^k copies of the chain."""
     s = BPE_SEP
     _, duck_fold = _bpe_fold_pair("", "")
     ctes = [
@@ -1288,7 +1290,7 @@ def _bpe_oracle_ctes() -> list[str]:
         FROM documents WHERE text IS NOT NULL
       ) WHERE length(w) >= 1 AND NOT contains(w, '{s}') GROUP BY w
     )""",
-        f"""seg0 AS (
+        f"""seg0 AS MATERIALIZED (
       SELECT list_aggregate(string_split(w, ''), 'string_agg', '{s}')
                  AS seg,
              freq
@@ -1308,7 +1310,7 @@ def _bpe_oracle_ctes() -> list[str]:
       FROM p{k} GROUP BY left_sym, right_sym
       ORDER BY cnt DESC, left_sym, right_sym LIMIT 1
     )""")
-        ctes.append(f"""seg{k} AS (
+        ctes.append(f"""seg{k} AS MATERIALIZED (
       SELECT {duck_fold} AS seg, s.freq
       FROM seg{k - 1} s CROSS JOIN w{k} w
     )""")

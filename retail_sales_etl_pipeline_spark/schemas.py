@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql.types import (
     DateType,
     DecimalType,
+    DoubleType,
     IntegerType,
     LongType,
     StringType,
@@ -146,6 +147,20 @@ STAGE_METRICS_SCHEMA = StructType(
         _f("rows_before", LongType()),
         _f("rows_after", LongType()),
         _f("rows_removed", LongType()),
+        _f("execution_timestamp", TimestampType()),
+    ]
+)
+
+# stage_attempts (the stage timeout/retry policy's audit trail,
+# plans.stage_policy; no reference table)
+STAGE_ATTEMPTS_SCHEMA = StructType(
+    [
+        _f("run_id", LongType()),
+        _f("stage_name", StringType()),
+        _f("attempt", IntegerType()),
+        _f("status", StringType()),
+        _f("seconds", DoubleType()),
+        _f("error", StringType()),
         _f("execution_timestamp", TimestampType()),
     ]
 )

@@ -21,14 +21,9 @@ def spark():
 
 
 @pytest.fixture(scope="session")
-def duck():
-    import duckdb
+def duck(tmp_path_factory):
+    from tools.check_correctness import oracle_connection
 
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events documents embeddings"
-    ).split():
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SMOKE_SF_DIR}/{t}.parquet')"
-        )
-    return con
+    con = oracle_connection(SMOKE_SF_DIR, str(tmp_path_factory.mktemp("duckdb_spill")))
+    yield con
+    con.close()

@@ -4,11 +4,12 @@ fixture."""
 
 from __future__ import annotations
 
+from collections import Counter
 from datetime import datetime
 from decimal import Decimal
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -26,17 +27,20 @@ _ts = st.sampled_from([datetime(2011, 3, 1, 10, 0), datetime(2011, 3, 2, 11, 30)
 _price = st.sampled_from([None, Decimal("-1.00"), Decimal("0.00"), Decimal("2.50")])
 _cust = st.sampled_from(["17850.0", None])
 
+# Rows with a NULL in a required column appear twice, so NULL-key rows that
+# share a dedup-window partition are always exercised.
 _staging_rows = st.lists(
     st.tuples(_invoice, _stock, st.just("D"), _qty, _ts, _price, _cust, st.just("UK")),
     min_size=0,
     max_size=25,
-)
+).map(lambda rows: rows + [r for r in rows if None in (r[0], r[1], r[3], r[4], r[5])])
 
 _SCHEMA = (
     "invoice_no string, stock_code string, description string, quantity int, "
     "invoice_date timestamp, unit_price decimal(10,2), customer_id string, "
     "country string"
 )
+_COLUMNS = [c.split()[0] for c in _SCHEMA.split(", ")]
 
 
 def _mk(spark, rows):
@@ -44,12 +48,45 @@ def _mk(spark, rows):
     return df.withColumn("load_seq", F.monotonically_increasing_id())
 
 
+def _sequential_clean(rows):
+    """The reference definition: four DELETEs in task order, each counted
+    on what the one before left; dedup keeps the first row in input order.
+    Returns ([(stage, rows_before, rows_after)], survivors)."""
+    counts = []
+
+    def stage(name, before, after):
+        counts.append((name, len(before), len(after)))
+        return after
+
+    cur = stage("remove_nulls", rows,
+                [r for r in rows if None not in (r[0], r[1], r[3], r[4], r[5])])
+    first: dict = {}
+    for r in cur:
+        first.setdefault((r[0], r[1], r[3], r[4], r[5], r[6] or ""), r)
+    cur = stage("remove_duplicates", cur, list(first.values()))
+    cur = stage("remove_zero_quantities", cur, [r for r in cur if r[3] != 0])
+    cur = stage("remove_invalid_prices", cur, [r for r in cur if r[5] > 0])
+    return counts, cur
+
+
 @pytest.mark.parametrize("dummy", [0])  # keep pytest collection flat
 @settings(max_examples=12, deadline=None, suppress_health_check=list(HealthCheck))
 @given(rows=_staging_rows)
+@example(rows=[
+    (None, "P1", "D", 1, datetime(2011, 3, 1, 10, 0), Decimal("2.50"), None, "UK"),
+    (None, "P1", "D", 1, datetime(2011, 3, 1, 10, 0), Decimal("2.50"), None, "UK"),
+    ("A1", "P1", "D", 1, datetime(2011, 3, 1, 10, 0), Decimal("2.50"), None, "UK"),
+    ("A1", None, "D", 7, None, Decimal("2.50"), "17850.0", "UK"),
+    ("A1", None, "D", 7, None, Decimal("2.50"), "17850.0", "UK"),
+    ("A1", "P1", "D", 1, datetime(2011, 3, 1, 10, 0), Decimal("2.50"), None, "UK"),
+])
 def test_clean_invariants(spark, dummy, rows):
-    cleaned = clean_staging(_mk(spark, rows), collect_metrics=False).df.cache()
-    out = cleaned.collect()
+    res = clean_staging(_mk(spark, rows))
+    out = res.df.collect()
+    # the one-pass metrics and survivors equal the sequential DELETEs'
+    want_metrics, want_rows = _sequential_clean(rows)
+    assert [(m.stage_name, m.rows_before, m.rows_after) for m in res.metrics] == want_metrics
+    assert Counter(tuple(r[c] for c in _COLUMNS) for r in out) == Counter(want_rows)
     # no NULLs in required columns, no zero qty, no non-positive price
     for r in out:
         assert r["invoice_no"] is not None and r["stock_code"] is not None
@@ -57,8 +94,8 @@ def test_clean_invariants(spark, dummy, rows):
         assert r["invoice_date"] is not None
         assert r["unit_price"] is not None and r["unit_price"] > 0
     # idempotence: cleaning cleaned data removes nothing
-    again = clean_staging(cleaned, collect_metrics=False).df
-    assert again.count() == len(out)
+    again = clean_staging(res.df)
+    assert again.df.count() == len(out)
     # dedup key uniqueness (6-col key with coalesced customer)
     keys = [
         (r["invoice_no"], r["stock_code"], r["quantity"], r["invoice_date"],
@@ -66,7 +103,8 @@ def test_clean_invariants(spark, dummy, rows):
         for r in out
     ]
     assert len(keys) == len(set(keys))
-    cleaned.unpersist()
+    again.unpersist()
+    res.unpersist()
 
 
 _dim_rows = st.lists(

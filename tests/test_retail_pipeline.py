@@ -9,10 +9,7 @@ from decimal import Decimal
 import pytest
 from pyspark.sql import functions as F
 
-from retail_sales_etl_pipeline_spark.operators.clean import (
-    clean_staging,
-    remove_duplicates,
-)
+from retail_sales_etl_pipeline_spark.operators.clean import clean_staging
 from retail_sales_etl_pipeline_spark.operators.fact import ri_violations
 from retail_sales_etl_pipeline_spark.plans import retail_pipeline
 from retail_sales_etl_pipeline_spark.plans.quality import DataQualityError
@@ -74,10 +71,11 @@ def test_negative_quantity_kept_and_ri(pipeline_run):
 def test_dedup_survivor_carries_first_description(pipeline_run):
     spark, csv_path, _, exp, _ = pipeline_run
     staged = read_retail_csv(spark, csv_path)
-    deduped = remove_duplicates(staged.dropna(subset=["invoice_no"]))
+    cleaned = clean_staging(staged)
     for inv, want in exp.survivor_descriptions.items():
-        got = deduped.filter(F.col("invoice_no") == inv).select("description").collect()
+        got = cleaned.df.filter(F.col("invoice_no") == inv).select("description").collect()
         assert [r[0] for r in got] == [want], inv
+    cleaned.unpersist()
 
 
 def test_nan_customer_becomes_null_and_float_str(pipeline_run):
@@ -131,10 +129,12 @@ def test_missing_csv_raises(spark, tmp_path):
 def test_clean_idempotent(spark, tmp_path):
     csv_path, _ = fixture_path(str(tmp_path))
     staged = read_retail_csv(spark, csv_path)
-    once = clean_staging(staged, collect_metrics=False).df
-    twice = clean_staging(once, collect_metrics=False).df
-    assert once.count() == twice.count()
-    assert once.exceptAll(twice).count() == 0
+    once = clean_staging(staged)
+    twice = clean_staging(once.df)
+    assert once.df.count() == twice.df.count()
+    assert once.df.exceptAll(twice.df).count() == 0
+    twice.unpersist()
+    once.unpersist()
 
 
 def test_retail_driver_records_stage_attempts(pipeline_run):

@@ -82,6 +82,35 @@ def test_timeout_cancels_real_spark_job(spark):
     assert wall < 45
 
 
+def test_timeout_cancels_pool_thread_spark_job(spark, tmp_path, monkeypatch):
+    """The retail driver writes its three dims from pool threads. Their
+    jobs must run in the dim_upserts stage's job group, so the deadline
+    cancels them instead of waiting out a 60s task."""
+    from retail_sales_etl_pipeline_spark.plans import retail_pipeline
+
+    from .retail_fixture import fixture_path
+
+    def slow_dim(staging, existing):
+        def slow(batches):
+            import time as _t
+
+            for pdf in batches:
+                _t.sleep(60)
+                yield pdf
+
+        return spark.range(0, 4, 1, 4).mapInPandas(slow, "id long")
+
+    monkeypatch.setattr(retail_pipeline, "load_dim_date", slow_dim)
+    csv_path, _ = fixture_path(str(tmp_path))
+    with pytest.raises(StageFailure) as ei:
+        retail_pipeline.run(spark, csv_path, str(tmp_path / "wh"), min_rows=10,
+                            policy=StagePolicy(timeout_s=10, retries=0))
+    dims = [a for a in ei.value.attempts if a.stage_name == "dim_upserts"]
+    assert [a.status for a in dims] == ["timeout"]
+    # the pool thread's 60s sleep was cancelled, not waited out
+    assert dims[0].seconds < 45
+
+
 def test_curation_driver_logs_attempts(spark, tmp_path):
     from retail_sales_etl_pipeline_spark.plans import curation_pipeline
 

@@ -25,6 +25,7 @@ import hashlib
 import json
 import os
 import sys
+import tempfile
 import time
 
 import duckdb
@@ -33,6 +34,27 @@ import pandas as pd
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
+
+ORACLE_TABLES = (
+    "region nation customer supplier part orders lineitem events documents embeddings"
+).split()
+# DuckDB's defaults (80 % of RAM, every core) let one oracle query take the
+# memory the Spark JVM beside it needs; bounded, a large query spills.
+ORACLE_MEMORY_LIMIT = "4GB"
+ORACLE_THREADS = 4
+
+
+def oracle_connection(sf_dir: str, spill_dir: str) -> duckdb.DuckDBPyConnection:
+    """A bounded DuckDB connection with one view per table under ``sf_dir``,
+    spilling to ``spill_dir`` past its memory limit."""
+    con = duckdb.connect(config={
+        "memory_limit": ORACLE_MEMORY_LIMIT,
+        "threads": ORACLE_THREADS,
+        "temp_directory": spill_dir,
+    })
+    for t in ORACLE_TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
+    return con
 
 
 def canon(df: pd.DataFrame) -> tuple[str, int]:
@@ -114,13 +136,8 @@ def main() -> int:
     registry = load_all()
     spark = get_spark("correctness-check")
 
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events documents embeddings"
-    ).split():
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
+    spill = tempfile.TemporaryDirectory(prefix="oracle_spill_")
+    con = oracle_connection(SF_DIR, spill.name)
 
     n_pass = n_fail = n_noorcl = 0
     seen: set[str] = set()
@@ -199,6 +216,8 @@ def main() -> int:
         print(f"wrote {emit_path} ({len(emitted) - 1} rows)")
     print(f"\n{n_pass} pass / {n_fail} fail / {n_noorcl} rows-only "
           f"({len(seen)}/{len(registry)} registered queries checked)")
+    con.close()
+    spill.cleanup()
     return 1 if n_fail else 0
 
 
