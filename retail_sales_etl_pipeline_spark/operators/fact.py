@@ -79,31 +79,6 @@ def write_fact_sales(fact: DataFrame, path: str) -> None:
     )
 
 
-def write_fact_sales_incremental(fact_delta: DataFrame, path: str) -> None:
-    """Incremental refresh: overwrite ONLY the month partitions present in
-    the delta, leaving all other months untouched.
-
-    The reference full-refreshes the entire fact table every run
-    (TRUNCATE + reload) — fine at 541K rows, ruinous at 100 TB where a
-    daily load touches one or two month partitions. Dynamic partition
-    overwrite rewrites exactly the partitions the delta contains: the
-    idempotent re-runnable daily load (re-running the same day's load
-    converges to the same state).
-    """
-    spark = fact_delta.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            fact_delta.repartition(F.col("sale_month"))
-            .write.mode("overwrite")
-            .partitionBy("sale_month")
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-
-
 def ri_violations(fact: DataFrame, dim: DataFrame, key: str) -> int:
     """J2: referential-integrity check — fact keys missing from a dim.
 

@@ -127,19 +127,15 @@ def connected_components(
     raise ValueError(f"unknown algorithm: {algorithm!r}")
 
 
-def _cc_driver_small(
-    nodes: DataFrame, e: DataFrame, id_col: str, n_edges: int,
-    stats: dict | None,
-) -> DataFrame:
-    """Union-find over a COLLECTED edge list (bounded by the small-graph
-    cutover) with union-by-min roots, so every root IS its component's
-    minimum id — identical labels to the star fixpoint. Singletons never
-    leave the cluster: only edge-endpoint labels are broadcast back and
-    everything else coalesces to its own id, exactly like the star
-    path's left join against the parents frame."""
-    parent: dict[int, int] = {}
+def union_find_by_min(edges) -> dict:
+    """Driver-side union-find over an iterable of (a, b) edges with
+    union-by-min roots, so every root IS its component's minimum node —
+    the star fixpoint's labels. Returns {node: component minimum} for
+    every node whose minimum is not itself; any other node (a root, or
+    a node on no edge) is its own component."""
+    parent: dict = {}
 
-    def find(x: int) -> int:
+    def find(x):
         r = x
         while parent.get(r, r) != r:
             r = parent[r]
@@ -147,35 +143,52 @@ def _cc_driver_small(
             parent[x], x = r, parent[x]
         return r
 
-    for row in e.collect():
-        ra, rb = find(row[0]), find(row[1])
+    for a, b in edges:
+        ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
-    labels = [(x, find(x)) for x in parent]
-    if stats is not None:
-        stats["rounds"] = 0
-        stats["algorithm"] = "star+driver-small-graph"
-        stats["n_edges"] = n_edges
-    spark = nodes.sparkSession
-    # schema derived from the caller's node frame, not hardcoded long —
-    # the generic contract admits any orderable id type (string ids
-    # crashed here before, and only below the cutover: size-dependent)
+    return {x: find(x) for x in parent}
+
+
+def driver_labels_frame(nodes: DataFrame, id_col: str, labels: dict) -> DataFrame:
+    """(id_col, component_id) for every row of ``nodes``: the driver's
+    label map broadcast back, every unlabeled node its own component —
+    exactly the star path's left join against its parents frame. The
+    label schema takes the caller's id type (any orderable id type, not
+    only long)."""
     from pyspark.sql.types import StructField, StructType
 
     id_type = nodes.schema[id_col].dataType
-    lab = spark.createDataFrame(
-        labels,
+    lab = nodes.sparkSession.createDataFrame(
+        list(labels.items()),
         StructType(
             [
-                StructField("id", id_type),
+                StructField(id_col, id_type),
                 StructField("component_id", id_type),
             ]
         ),
     )
     return (
-        nodes.select(F.col(id_col).alias("id"))
-        .join(F.broadcast(lab), "id", "left")
-        .select("id", F.coalesce("component_id", "id").alias("component_id"))
+        nodes.select(id_col)
+        .join(F.broadcast(lab), id_col, "left")
+        .select(id_col, F.coalesce("component_id", id_col).alias("component_id"))
+    )
+
+
+def _cc_driver_small(
+    nodes: DataFrame, e: DataFrame, id_col: str, n_edges: int,
+    stats: dict | None,
+) -> DataFrame:
+    """Union-find over a COLLECTED edge list (bounded by the small-graph
+    cutover). Singletons never leave the cluster: only edge-endpoint
+    labels are broadcast back."""
+    labels = union_find_by_min(e.collect())
+    if stats is not None:
+        stats["rounds"] = 0
+        stats["algorithm"] = "star+driver-small-graph"
+        stats["n_edges"] = n_edges
+    return driver_labels_frame(
+        nodes.select(F.col(id_col).alias("id")), "id", labels
     )
 
 

@@ -449,152 +449,165 @@ def encode_jpeg_baseline(
     return bytes(hdr) + bytes(out) + b"\xff\xd9"  # EOI
 
 
-def decode_jpeg(payload: bytes) -> tuple[int, int, int, bytes]:
-    """REAL baseline JPEG decode, pure stdlib: marker walk (SOI/APP/
-    DQT/SOF0/DHT/SOS), Huffman tables and quant tables read FROM THE
-    STREAM, entropy decode with byte-unstuffing, DC prediction + EXTEND,
-    dequantize, inverse zigzag, float IDCT, level shift + clamp, and for
-    3-component scans the JFIF YCbCr->RGB transform. Returns (width,
-    height, n_components, pixels) — gray bytes or interleaved RGB,
-    top-down row-major, edge-padded MCUs cropped to the declared size.
+def _jpeg_parser():
+    """Build the one baseline JPEG header + entropy parser: payload ->
+    (width, height, qts, comp_zz) with qts[c] component c's quant table
+    in natural order and comp_zz[c] its blocks' zigzag coefficient
+    vectors (DC prediction applied) in block raster order. Marker walk
+    (SOI/APP/DQT/SOF0/DHT/DRI/SOS), Huffman and quant tables read FROM
+    THE STREAM, entropy decode with byte-unstuffing + EXTEND.
 
     Supported profile: SOF0 baseline sequential, 8-bit, 1 or 3
     components with 1x1 sampling (4:4:4), 8-bit quant tables, no
-    restart intervals. Anything else raises ValueError."""
-    import struct
+    restart intervals, one scan covering every component. Anything else
+    raises ValueError.
 
-    if payload[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG payload (missing SOI)")
-    pos = 2
-    qtabs: dict[int, list[int]] = {}
-    htabs: dict[tuple[int, int], dict] = {}
-    width = height = None
-    comps: list[tuple[int, int, int]] = []  # (id, sampling, qtab id)
-    scan_comps: list[tuple[int, int, int]] = []  # (comp idx, dc id, ac id)
-    data_start = None
-    while pos + 4 <= len(payload):
-        if payload[pos] != 0xFF:
-            raise ValueError("bad marker alignment")
-        marker = payload[pos + 1]
-        (seglen,) = struct.unpack_from(">H", payload, pos + 2)
-        if pos + 2 + seglen > len(payload):
-            raise ValueError("truncated JPEG segment")
-        seg = payload[pos + 4 : pos + 2 + seglen]
-        if marker == 0xDB:  # DQT
-            p = 0
-            while p < len(seg):
-                pq, tq = seg[p] >> 4, seg[p] & 0x0F
-                if pq != 0:
-                    raise ValueError("16-bit quant tables unsupported")
-                zz = seg[p + 1 : p + 65]
-                tab = [0] * 64
-                for i in range(64):
-                    tab[JPEG_ZIGZAG[i]] = zz[i]
-                qtabs[tq] = tab
-                p += 65
-        elif marker == 0xC4:  # DHT
-            p = 0
-            while p < len(seg):
-                cls, tid = seg[p] >> 4, seg[p] & 0x0F
-                bits = list(seg[p + 1 : p + 17])
-                n = sum(bits)
-                vals = list(seg[p + 17 : p + 17 + n])
-                dec, code, k = {}, 0, 0
-                for ln in range(1, 17):
-                    for _ in range(bits[ln - 1]):
-                        dec[(ln, code)] = vals[k]
-                        code += 1
-                        k += 1
-                    code <<= 1
-                htabs[(cls, tid)] = dec
-                p += 17 + n
-        elif marker == 0xC0:  # SOF0 baseline
-            if seg[0] != 8:
-                raise ValueError("only 8-bit precision supported")
-            height, width = struct.unpack_from(">HH", seg, 1)
-            nc = seg[5]
-            if nc not in (1, 3):
-                raise ValueError("only 1- or 3-component JPEG supported")
-            for c in range(nc):
-                cid, samp, tq = seg[6 + 3 * c : 9 + 3 * c]
-                if samp != 0x11:
-                    raise ValueError(
-                        "chroma subsampling unsupported (4:4:4 only)"
+    A factory so the Arrow UDF can ship the parser by value: a nested
+    function pickles with its closure, a module-level one is re-imported
+    by the worker, which may not be able to import this package."""
+    zigzag = list(JPEG_ZIGZAG)
+
+    def parse(payload: bytes):
+        import struct
+
+        if payload[:2] != b"\xff\xd8":
+            raise ValueError("not a JPEG payload (missing SOI)")
+        pos = 2
+        qtabs: dict[int, list[int]] = {}
+        htabs: dict[tuple[int, int], dict] = {}
+        width = height = None
+        comps: list[tuple[int, int, int]] = []  # (id, sampling, qtab id)
+        scan_comps: list[tuple[int, int, int]] = []  # (comp idx, dc, ac)
+        data_start = None
+        while pos + 4 <= len(payload):
+            if payload[pos] != 0xFF:
+                raise ValueError("bad marker alignment")
+            marker = payload[pos + 1]
+            (seglen,) = struct.unpack_from(">H", payload, pos + 2)
+            if pos + 2 + seglen > len(payload):
+                raise ValueError("truncated JPEG segment")
+            seg = payload[pos + 4 : pos + 2 + seglen]
+            if marker == 0xDB:  # DQT
+                p = 0
+                while p < len(seg):
+                    pq, tq = seg[p] >> 4, seg[p] & 0x0F
+                    if pq != 0:
+                        raise ValueError("16-bit quant tables unsupported")
+                    zz = seg[p + 1 : p + 65]
+                    tab = [0] * 64
+                    for i in range(64):
+                        tab[zigzag[i]] = zz[i]
+                    qtabs[tq] = tab
+                    p += 65
+            elif marker == 0xC4:  # DHT
+                p = 0
+                while p < len(seg):
+                    cls, tid = seg[p] >> 4, seg[p] & 0x0F
+                    bits = list(seg[p + 1 : p + 17])
+                    n = sum(bits)
+                    vals = list(seg[p + 17 : p + 17 + n])
+                    dec, code, k = {}, 0, 0
+                    for ln in range(1, 17):
+                        for _ in range(bits[ln - 1]):
+                            dec[(ln, code)] = vals[k]
+                            code += 1
+                            k += 1
+                        code <<= 1
+                    htabs[(cls, tid)] = dec
+                    p += 17 + n
+            elif marker == 0xC0:  # SOF0 baseline
+                if seg[0] != 8:
+                    raise ValueError("only 8-bit precision supported")
+                height, width = struct.unpack_from(">HH", seg, 1)
+                nc = seg[5]
+                if nc not in (1, 3):
+                    raise ValueError("only 1- or 3-component JPEG supported")
+                for c in range(nc):
+                    cid, samp, tq = seg[6 + 3 * c : 9 + 3 * c]
+                    if samp != 0x11:
+                        raise ValueError(
+                            "chroma subsampling unsupported (4:4:4 only)"
+                        )
+                    comps.append((cid, samp, tq))
+            elif marker in (0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA,
+                            0xCB, 0xCD, 0xCE, 0xCF):
+                raise ValueError("only baseline sequential (SOF0) supported")
+            elif marker == 0xDD:  # DRI
+                (ri,) = struct.unpack_from(">H", seg, 0)
+                if ri != 0:
+                    raise ValueError("restart intervals unsupported")
+            elif marker == 0xDA:  # SOS
+                ns = seg[0]
+                for c in range(ns):
+                    cs, tt = seg[1 + 2 * c], seg[2 + 2 * c]
+                    idx = next(
+                        (i for i, (cid, _, _) in enumerate(comps) if cid == cs),
+                        None,
                     )
-                comps.append((cid, samp, tq))
-        elif marker in (0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA,
-                        0xCB, 0xCD, 0xCE, 0xCF):
-            raise ValueError("only baseline sequential (SOF0) supported")
-        elif marker == 0xDD:  # DRI
-            (ri,) = struct.unpack_from(">H", seg, 0)
-            if ri != 0:
-                raise ValueError("restart intervals unsupported")
-        elif marker == 0xDA:  # SOS
-            ns = seg[0]
-            for c in range(ns):
-                cs, tt = seg[1 + 2 * c], seg[2 + 2 * c]
-                idx = next(
-                    i for i, (cid, _, _) in enumerate(comps) if cid == cs
-                )
-                scan_comps.append((idx, tt >> 4, tt & 0x0F))
-            data_start = pos + 2 + seglen
-            break
-        pos += 2 + seglen
-    if width is None or data_start is None:
-        raise ValueError("JPEG missing SOF0/SOS")
+                    if idx is None:
+                        raise ValueError("SOS names an undeclared component")
+                    scan_comps.append((idx, tt >> 4, tt & 0x0F))
+                data_start = pos + 2 + seglen
+                break
+            pos += 2 + seglen
+        if width is None or data_start is None:
+            raise ValueError("JPEG missing SOF0/SOS")
+        nc = len(comps)
+        # a legal multi-scan file codes some components in later scans;
+        # only a single scan over every component is decoded
+        if sorted(ci for ci, _, _ in scan_comps) != list(range(nc)):
+            raise ValueError("multi-scan JPEG unsupported")
+        tables = []
+        for ci, dc_id, ac_id in scan_comps:
+            dct = htabs.get((0, dc_id))
+            act = htabs.get((1, ac_id))
+            if dct is None or act is None or qtabs.get(comps[ci][2]) is None:
+                raise ValueError("JPEG missing Huffman/quant table")
+            tables.append((ci, dct, act))
 
-    cos, cu = _jpeg_cos_tables()
-    # bit reader over entropy-coded data with 0xFF00 unstuffing
-    bpos, bitcnt, bitbuf = data_start, 0, 0
+        # bit reader over entropy-coded data with 0xFF00 unstuffing
+        bpos, bitcnt, bitbuf = data_start, 0, 0
 
-    def read_bit() -> int:
-        nonlocal bpos, bitcnt, bitbuf
-        if bitcnt == 0:
-            if bpos >= len(payload):
-                raise ValueError("truncated entropy data")
-            byte = payload[bpos]
-            bpos += 1
-            if byte == 0xFF:
+        def read_bit() -> int:
+            nonlocal bpos, bitcnt, bitbuf
+            if bitcnt == 0:
                 if bpos >= len(payload):
                     raise ValueError("truncated entropy data")
-                nxt = payload[bpos]
-                if nxt == 0x00:
-                    bpos += 1
-                else:
-                    raise ValueError("unexpected marker in entropy data")
-            bitbuf, bitcnt = byte, 8
-        bitcnt -= 1
-        return (bitbuf >> bitcnt) & 1
+                byte = payload[bpos]
+                bpos += 1
+                if byte == 0xFF:
+                    if bpos >= len(payload):
+                        raise ValueError("truncated entropy data")
+                    if payload[bpos] == 0x00:
+                        bpos += 1
+                    else:
+                        raise ValueError("unexpected marker in entropy data")
+                bitbuf, bitcnt = byte, 8
+            bitcnt -= 1
+            return (bitbuf >> bitcnt) & 1
 
-    def huff_decode(tab: dict) -> int:
-        code = 0
-        for ln in range(1, 17):
-            code = (code << 1) | read_bit()
-            sym = tab.get((ln, code))
-            if sym is not None:
-                return sym
-        raise ValueError("invalid Huffman code")
+        def huff_decode(tab: dict) -> int:
+            code = 0
+            for ln in range(1, 17):
+                code = (code << 1) | read_bit()
+                sym = tab.get((ln, code))
+                if sym is not None:
+                    return sym
+            raise ValueError("invalid Huffman code")
 
-    def receive_extend(s: int) -> int:
-        if s == 0:
-            return 0
-        v = 0
-        for _ in range(s):
-            v = (v << 1) | read_bit()
-        return v if v >= (1 << (s - 1)) else v - (1 << s) + 1
+        def receive_extend(s: int) -> int:
+            if s == 0:
+                return 0
+            v = 0
+            for _ in range(s):
+                v = (v << 1) | read_bit()
+            return v if v >= (1 << (s - 1)) else v - (1 << s) + 1
 
-    nc = len(comps)
-    bw, bh = (width + 7) // 8, (height + 7) // 8
-    planes = [bytearray(bw * 8 * bh * 8) for _ in range(nc)]
-    pred = [0] * nc
-    for by in range(bh):
-        for bx in range(bw):
-            for ci, dc_id, ac_id in scan_comps:
-                dct = htabs.get((0, dc_id))
-                act = htabs.get((1, ac_id))
-                qt = qtabs.get(comps[ci][2])
-                if dct is None or act is None or qt is None:
-                    raise ValueError("JPEG missing Huffman/quant table")
+        n_blocks = ((width + 7) // 8) * ((height + 7) // 8)
+        comp_zz: list[list[list[int]]] = [[] for _ in range(nc)]
+        pred = [0] * nc
+        for _ in range(n_blocks):
+            for ci, dct, act in tables:
                 zz = [0] * 64
                 s = huff_decode(dct)
                 pred[ci] += receive_extend(s)
@@ -613,28 +626,49 @@ def decode_jpeg(payload: bytes) -> tuple[int, int, int, bytes]:
                         raise ValueError("AC coefficient index overflow")
                     zz[i] = receive_extend(size)
                     i += 1
-                coefs = [0] * 64
-                for i in range(64):
-                    coefs[JPEG_ZIGZAG[i]] = zz[i] * qt[JPEG_ZIGZAG[i]]
-                # IDCT
-                plane = planes[ci]
-                stride = bw * 8
-                for y in range(8):
-                    for x in range(8):
-                        s2 = 0.0
-                        for v in range(8):
-                            for u in range(8):
-                                cuv = coefs[v * 8 + u]
-                                if cuv:
-                                    s2 += cu[u] * cu[v] * cuv \
-                                        * cos[u][x] * cos[v][y]
-                        # floor(x+0.5): deterministic half-up, pinned
-                        # identical in the inline Arrow copy
-                        val = int((0.25 * s2) + 0.5 + 1024) - 1024 + 128
-                        plane[(by * 8 + y) * stride + bx * 8 + x] = (
-                            0 if val < 0 else 255 if val > 255 else val
-                        )
+                comp_zz[ci].append(zz)
+        qts = [qtabs[tq] for _, _, tq in comps]
+        return width, height, qts, comp_zz
+
+    return parse
+
+
+def decode_jpeg(payload: bytes) -> tuple[int, int, int, bytes]:
+    """REAL baseline JPEG decode, pure stdlib: the shared parser
+    (``_jpeg_parser``), then dequantize, inverse zigzag, scalar float
+    IDCT, level shift + clamp, and for 3-component scans the JFIF
+    YCbCr->RGB transform. Returns (width, height, n_components,
+    pixels) — gray bytes or interleaved RGB, top-down row-major,
+    edge-padded MCUs cropped to the declared size. Unsupported or
+    corrupt input raises ValueError."""
+    width, height, qts, comp_zz = _jpeg_parser()(payload)
+    cos, cu = _jpeg_cos_tables()
+    nc = len(qts)
+    bw, bh = (width + 7) // 8, (height + 7) // 8
     stride = bw * 8
+    planes = [bytearray(bw * 8 * bh * 8) for _ in range(nc)]
+    for ci in range(nc):
+        qt, plane = qts[ci], planes[ci]
+        for blk, zz in enumerate(comp_zz[ci]):
+            by, bx = divmod(blk, bw)
+            coefs = [0] * 64
+            for i in range(64):
+                coefs[JPEG_ZIGZAG[i]] = zz[i] * qt[JPEG_ZIGZAG[i]]
+            for y in range(8):
+                for x in range(8):
+                    s2 = 0.0
+                    for v in range(8):
+                        for u in range(8):
+                            cuv = coefs[v * 8 + u]
+                            if cuv:
+                                s2 += cu[u] * cu[v] * cuv \
+                                    * cos[u][x] * cos[v][y]
+                    # floor(x+0.5): deterministic half-up, pinned
+                    # identical in the Arrow UDF's numpy IDCT
+                    val = int((0.25 * s2) + 0.5 + 1024) - 1024 + 128
+                    plane[(by * 8 + y) * stride + bx * 8 + x] = (
+                        0 if val < 0 else 255 if val > 255 else val
+                    )
     if nc == 1:
         out = bytearray(width * height)
         for y in range(height):
@@ -1528,193 +1562,38 @@ def synth_jpeg_payloads(docs: DataFrame) -> DataFrame:
 
 
 def jpeg_decode_features(with_payload: DataFrame) -> DataFrame:
-    """REAL baseline JPEG decode inside the Arrow UDF — marker walk,
-    DQT/DHT parsing, Huffman entropy decode with unstuffing, DC
-    prediction, dequantize, inverse zigzag, IDCT, YCbCr->RGB for color —
-    then integer-exact features over the decoded pixel stream. The IDCT
-    skips zero coefficients, so the DC-dominant corpus decodes in
-    O(pixels); self-contained batch fn (inline decoder copy; tests pin
-    it equal to decode_jpeg)."""
+    """REAL baseline JPEG decode inside the Arrow UDF — the shared
+    parser (``_jpeg_parser``: marker walk, DQT/DHT parsing, Huffman
+    entropy decode with unstuffing, DC prediction), then dequantize,
+    inverse zigzag, IDCT and YCbCr->RGB vectorized over all blocks of a
+    component in numpy — then integer-exact features over the decoded
+    pixel stream. The numpy IDCT is bit-identical to ``decode_jpeg``'s
+    scalar one (tests pin the two equal)."""
+    parse = _jpeg_parser()
+    zigzag = list(JPEG_ZIGZAG)
+    cos, cu = _jpeg_cos_tables()
 
     def per_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import math
-        import struct
-
         import numpy as np
 
-        ZZ = [
-            0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
-            12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13, 6, 7, 14, 21, 28,
-            35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
-            58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63,
-        ]
-        cos = [
-            [math.cos((2 * x + 1) * u * math.pi / 16) for x in range(8)]
-            for u in range(8)
-        ]
-        cu = [1 / math.sqrt(2)] + [1.0] * 7
-
         def dec(payload):
-            if payload[:2] != b"\xff\xd8":
-                raise ValueError("not a JPEG payload (missing SOI)")
-            pos = 2
-            qtabs, htabs = {}, {}
-            width = height = None
-            comps, scan_comps = [], []
-            data_start = None
-            while pos + 4 <= len(payload):
-                if payload[pos] != 0xFF:
-                    raise ValueError("bad marker alignment")
-                marker = payload[pos + 1]
-                (seglen,) = struct.unpack_from(">H", payload, pos + 2)
-                if pos + 2 + seglen > len(payload):
-                    raise ValueError("truncated JPEG segment")
-                seg = payload[pos + 4 : pos + 2 + seglen]
-                if marker == 0xDB:
-                    p = 0
-                    while p < len(seg):
-                        pq, tq = seg[p] >> 4, seg[p] & 0x0F
-                        if pq != 0:
-                            raise ValueError("16-bit quant unsupported")
-                        zzq = seg[p + 1 : p + 65]
-                        tab = [0] * 64
-                        for i in range(64):
-                            tab[ZZ[i]] = zzq[i]
-                        qtabs[tq] = tab
-                        p += 65
-                elif marker == 0xC4:
-                    p = 0
-                    while p < len(seg):
-                        cls, tid = seg[p] >> 4, seg[p] & 0x0F
-                        bits = list(seg[p + 1 : p + 17])
-                        n = sum(bits)
-                        vals = list(seg[p + 17 : p + 17 + n])
-                        dmap, code, k = {}, 0, 0
-                        for ln in range(1, 17):
-                            for _ in range(bits[ln - 1]):
-                                dmap[(ln, code)] = vals[k]
-                                code += 1
-                                k += 1
-                            code <<= 1
-                        htabs[(cls, tid)] = dmap
-                        p += 17 + n
-                elif marker == 0xC0:
-                    if seg[0] != 8:
-                        raise ValueError("only 8-bit precision supported")
-                    height, width = struct.unpack_from(">HH", seg, 1)
-                    nc = seg[5]
-                    if nc not in (1, 3):
-                        raise ValueError("only 1/3-component supported")
-                    for c in range(nc):
-                        cid, samp, tq = seg[6 + 3 * c : 9 + 3 * c]
-                        if samp != 0x11:
-                            raise ValueError("subsampling unsupported")
-                        comps.append((cid, samp, tq))
-                elif marker in (0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9,
-                                0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
-                    raise ValueError("only baseline (SOF0) supported")
-                elif marker == 0xDD:
-                    (ri,) = struct.unpack_from(">H", seg, 0)
-                    if ri != 0:
-                        raise ValueError("restart intervals unsupported")
-                elif marker == 0xDA:
-                    ns = seg[0]
-                    for c in range(ns):
-                        cs, tt = seg[1 + 2 * c], seg[2 + 2 * c]
-                        idx = next(
-                            i for i, (cid, _, _) in enumerate(comps)
-                            if cid == cs
-                        )
-                        scan_comps.append((idx, tt >> 4, tt & 0x0F))
-                    data_start = pos + 2 + seglen
-                    break
-                pos += 2 + seglen
-            if width is None or data_start is None:
-                raise ValueError("JPEG missing SOF0/SOS")
-
-            st = {"pos": data_start, "cnt": 0, "buf": 0}
-
-            def read_bit():
-                if st["cnt"] == 0:
-                    if st["pos"] >= len(payload):
-                        raise ValueError("truncated entropy data")
-                    byte = payload[st["pos"]]
-                    st["pos"] += 1
-                    if byte == 0xFF:
-                        if st["pos"] >= len(payload):
-                            raise ValueError("truncated entropy data")
-                        if payload[st["pos"]] == 0x00:
-                            st["pos"] += 1
-                        else:
-                            raise ValueError("marker in entropy data")
-                    st["buf"], st["cnt"] = byte, 8
-                st["cnt"] -= 1
-                return (st["buf"] >> st["cnt"]) & 1
-
-            def huff_decode(tab):
-                code = 0
-                for ln in range(1, 17):
-                    code = (code << 1) | read_bit()
-                    sym = tab.get((ln, code))
-                    if sym is not None:
-                        return sym
-                raise ValueError("invalid Huffman code")
-
-            def receive_extend(s):
-                if s == 0:
-                    return 0
-                v = 0
-                for _ in range(s):
-                    v = (v << 1) | read_bit()
-                return v if v >= (1 << (s - 1)) else v - (1 << s) + 1
-
-            nc = len(comps)
-            bw, bh = (width + 7) // 8, (height + 7) // 8
             # Entropy decode stays sequential Python (a Huffman bitstream
-            # has no batch form), but it now only COLLECTS the zigzag
-            # coefficient vectors; dequant + inverse zigzag + IDCT +
-            # level shift run vectorized over ALL blocks of a component
-            # below (round-12 verdict item 3: the per-pixel Python
-            # quadruple loop was 4096 truthiness checks per block and
-            # the dominant decode cost). Bit-exactness: every numpy step
-            # mirrors the scalar code's operation order — see the IDCT
-            # comment below.
-            comp_zz: list[list[list[int]]] = [[] for _ in range(nc)]
-            pred = [0] * nc
-            for _by in range(bh):
-                for _bx in range(bw):
-                    for ci, dc_id, ac_id in scan_comps:
-                        dct = htabs.get((0, dc_id))
-                        act = htabs.get((1, ac_id))
-                        if dct is None or act is None \
-                                or qtabs.get(comps[ci][2]) is None:
-                            raise ValueError("missing Huffman/quant table")
-                        zz = [0] * 64
-                        s = huff_decode(dct)
-                        pred[ci] += receive_extend(s)
-                        zz[0] = pred[ci]
-                        i = 1
-                        while i < 64:
-                            rs = huff_decode(act)
-                            run, size = rs >> 4, rs & 0x0F
-                            if size == 0:
-                                if run == 15:
-                                    i += 16
-                                    continue
-                                break
-                            i += run
-                            if i > 63:
-                                raise ValueError("AC index overflow")
-                            zz[i] = receive_extend(size)
-                            i += 1
-                        comp_zz[ci].append(zz)
-
-            zz_nat = np.array(ZZ, dtype=np.int64)  # zigzag -> natural
+            # has no batch form) and only COLLECTS the zigzag coefficient
+            # vectors; dequant + inverse zigzag + IDCT + level shift run
+            # vectorized over ALL blocks of a component below (round-12
+            # verdict item 3: the per-pixel Python quadruple loop was
+            # 4096 truthiness checks per block and the dominant decode
+            # cost). Bit-exactness: every numpy step mirrors the scalar
+            # code's operation order — see the IDCT comment below.
+            width, height, qts, comp_zz = parse(payload)
+            nc = len(qts)
+            bw, bh = (width + 7) // 8, (height + 7) // 8
+            zz_nat = np.array(zigzag, dtype=np.int64)  # zigzag -> natural
             cu_np = np.array(cu)
             cos_np = np.array(cos)  # cos_np[u, x], doubles identical
             planes = []
             for ci in range(nc):
-                qt = qtabs[comps[ci][2]]
+                qt = qts[ci]
                 zz_arr = np.array(comp_zz[ci], dtype=np.int64).reshape(-1, 64)
                 n_blk = zz_arr.shape[0]
                 # coefs[ZZ[i]] = zz[i] * qt[ZZ[i]] — integer, exact

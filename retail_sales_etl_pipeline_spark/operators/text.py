@@ -132,6 +132,32 @@ def simhash_expr(col: str = "text", bits: int = 16) -> tuple[str, str]:
 # parity verified per-row by the correctness gate itself.
 
 
+def _minhash_minima_kernel():
+    """Build the per-document kernel: text -> the 16 MinHash minima (one
+    per affine permutation over the char-5-shingle polynomial hashes),
+    identical integers to ``minhash_sig_expr``'s SQL list.
+
+    A factory, not a module-level function: a Python worker may not be
+    able to import this package (it inherits the driver's cwd), and
+    cloudpickle ships a nested function by value with its closure, while
+    a module-level one is shipped by reference and re-imported."""
+    perms = list(MINHASH_PERMS)
+    mod, base, k = POLY_MOD, POLY_BASE, 5
+
+    def minima(text: str) -> list[int]:
+        import numpy as np
+
+        codes = np.fromiter(map(ord, text), dtype=np.int64, count=len(text))
+        n = len(codes)
+        m = max(n - (k - 1), 1)
+        h = np.zeros(m, dtype=np.int64)
+        for j in range(min(k, n)):
+            h = (h * base + codes[j : j + m]) % mod
+        return [int(((a * h + b) % mod).min()) for a, b in perms]
+
+    return minima
+
+
 def minhash_bands_pandas(df, text_col: str = "text", id_col: str = "doc_id", row_counter=None):
     """(id, band0..bandN) MinHash band signatures, numpy-vectorized.
 
@@ -142,26 +168,13 @@ def minhash_bands_pandas(df, text_col: str = "text", id_col: str = "doc_id", row
     input row — an execution probe, used by tests to PROVE this stage runs
     once (not once per lazy consumer) under stage materialization.
     """
-    perms = list(MINHASH_PERMS)
-    bands, mod, base = MINHASH_BANDS, POLY_MOD, POLY_BASE
-    rows_per_band = len(perms) // bands
+    minima = _minhash_minima_kernel()
+    bands = MINHASH_BANDS
+    rows_per_band = len(MINHASH_PERMS) // bands
     schema = f"{id_col} long, " + ", ".join(f"band{b} string" for b in range(bands))
 
     def per_batch(batches):
-        import numpy as np
         import pandas as pd
-
-        k = 5
-
-        def shingle_hashes(text: str) -> "np.ndarray":
-            codes = np.fromiter(map(ord, text), dtype=np.int64, count=len(text))
-            n = len(codes)
-            m = max(n - (k - 1), 1)
-            width = min(k, n)
-            h = np.zeros(m, dtype=np.int64)
-            for j in range(width):
-                h = (h * base + codes[j : j + m]) % mod
-            return h
 
         for pdf in batches:
             if pdf.empty:
@@ -170,8 +183,7 @@ def minhash_bands_pandas(df, text_col: str = "text", id_col: str = "doc_id", row
                 row_counter.add(len(pdf))
             out_rows = []
             for did, text in zip(pdf[id_col], pdf[text_col]):
-                sh = shingle_hashes(text)
-                sigs = [int(((a * sh + b) % mod).min()) for a, b in perms]
+                sigs = minima(text)
                 row = {id_col: did}
                 for b in range(bands):
                     chunk = sigs[b * rows_per_band : (b + 1) * rows_per_band]
@@ -187,38 +199,23 @@ def minhash_components_pandas(df, text_col: str = "text", id_col: str = "doc_id"
     the component form minhash_bands_pandas concatenates into band
     strings. Needed when the CONSUMER is the Broder estimator
     (est_jaccard = matching-component fraction), which compares
-    permutations one by one rather than banded groups. Same shingle
-    hashes, same affine permutations, identical integers to
-    ``minhash_sig_expr``'s SQL list."""
-    perms = list(MINHASH_PERMS)
-    mod, base = POLY_MOD, POLY_BASE
-    schema = f"{id_col} long, " + ", ".join(f"m{i} long" for i in range(len(perms)))
+    permutations one by one rather than banded groups. Same kernel,
+    identical integers to ``minhash_sig_expr``'s SQL list."""
+    minima = _minhash_minima_kernel()
+    n_perms = len(MINHASH_PERMS)
+    schema = f"{id_col} long, " + ", ".join(f"m{i} long" for i in range(n_perms))
 
     def per_batch(batches):
-        import numpy as np
         import pandas as pd
-
-        k = 5
-
-        def shingle_hashes(text: str) -> "np.ndarray":
-            codes = np.fromiter(map(ord, text), dtype=np.int64, count=len(text))
-            n = len(codes)
-            m = max(n - (k - 1), 1)
-            width = min(k, n)
-            h = np.zeros(m, dtype=np.int64)
-            for j in range(width):
-                h = (h * base + codes[j : j + m]) % mod
-            return h
 
         for pdf in batches:
             if pdf.empty:
                 continue
             out_rows = []
             for did, text in zip(pdf[id_col], pdf[text_col]):
-                sh = shingle_hashes(text)
                 row = {id_col: did}
-                for i, (a, b) in enumerate(perms):
-                    row[f"m{i}"] = int(((a * sh + b) % mod).min())
+                for i, v in enumerate(minima(text)):
+                    row[f"m{i}"] = v
                 out_rows.append(row)
             yield pd.DataFrame(out_rows)
 

@@ -14,6 +14,10 @@ verified embedding pairs):
 - lifetime: a cached entry is reused only while its checkpoint still
   exists (by default: the returned path, checked through the Hadoop
   FileSystem); otherwise it is rebuilt.
+
+``materialize_parquet`` is the rule for the common case, one frame
+written as parquet (verified text pairs, verified embedding pairs, q155's
+components).
 """
 
 from __future__ import annotations
@@ -23,7 +27,7 @@ import tempfile
 from collections.abc import Callable
 from typing import TypeVar
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from ..sources import fs
 
@@ -50,3 +54,17 @@ def materialize_once(
         return hit
     hit = _CHECKPOINTS[key] = build(tempfile.mkdtemp(prefix=f"{kind}_"))
     return hit
+
+
+def materialize_parquet(
+    spark: SparkSession, sf_dir: str, kind: str, frame: Callable[[], DataFrame]
+) -> str:
+    """``materialize_once`` for one parquet frame: a build writes
+    ``frame()`` to ``<checkpoint dir>/<kind>``; returns that path."""
+
+    def build(ckpt: str) -> str:
+        path = fs.join(ckpt, kind)
+        frame().write.mode("overwrite").parquet(path)
+        return path
+
+    return materialize_once(spark, sf_dir, kind, build)

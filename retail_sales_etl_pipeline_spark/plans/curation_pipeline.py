@@ -112,10 +112,12 @@ def run(
     # leakage audit, drop lists — reads this parquet instead of re-running
     # the LSH -> verify -> CC ladder. The split frame is written next to
     # the corpus so trainers consume it directly.
-    from .dedup_queries import component_rollup, materialize_components
+    from .dedup_queries import component_rollup, q60_neardup_components
 
     def _components_stage() -> str:
-        return materialize_components(spark, sf_dir, stages_dir)
+        path = fs.join(stages_dir, "components")
+        q60_neardup_components(spark, sf_dir).write.mode("overwrite").parquet(path)
+        return path
 
     try:
         comp_path = run_stage(spark, "neardup_components",

@@ -37,7 +37,7 @@ from ..operators.text import (
     token_ngrams_expr,
 )
 from ..sources import load_table
-from .checkpoint import materialize_once
+from .checkpoint import materialize_once, materialize_parquet
 from .registry import register
 
 NEARDUP_JACCARD = 0.3
@@ -1610,20 +1610,6 @@ def q153_component_keyed_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def materialize_components(
-    spark: SparkSession, sf_dir: str, out_dir: str
-) -> str:
-    """Run q60's verified-near-dup connected components ONCE and write the
-    (doc_id, component_id) frame as parquet under ``out_dir``; returns the
-    path. The write is the lineage checkpoint: every downstream consumer
-    replays a columnar scan, not the MinHash/Jaccard/iteration ladder."""
-    from ..sources import fs
-
-    path = fs.join(out_dir, "components")
-    q60_neardup_components(spark, sf_dir).write.mode("overwrite").parquet(path)
-    return path
-
-
 def component_rollup(comp: DataFrame) -> DataFrame:
     """Derive the whole CC consumer family from one scan of a materialized
     component frame: member-level cluster sizes (q117's histogram is one
@@ -1662,9 +1648,12 @@ def component_rollup(comp: DataFrame) -> DataFrame:
     """,
     doc="Materialize-once component reuse — the PRODUCTION composition "
     "for the connected-components family: q60's clustering is computed "
-    "ONCE, written as parquet, and the consumer family derives from "
-    "that one scan (member-level cluster sizes = q117's histogram one "
-    "aggregate away; the component-keyed split = q153's rule, same "
+    "ONCE per (session, corpus) and written as a parquet checkpoint "
+    "(checkpoint.materialize_parquet, the rule behind the verified-pair "
+    "checkpoints), so a second call reads it back instead of rerunning "
+    "the ladder; the consumer family derives from that one scan "
+    "(member-level cluster sizes = q117's histogram one aggregate away; "
+    "the component-keyed split = q153's rule, same "
     "salts). The self-contained entries q60/q117/q139/q153 each rerun "
     "the LSH->verify->CC ladder — correct, but at corpus scale the "
     "ladder runs once per snapshot and everything downstream reads the "
@@ -1672,16 +1661,17 @@ def component_rollup(comp: DataFrame) -> DataFrame:
     "recursive twin + window + split case) proves the materialize/"
     "read-back round trip loses nothing. tests/test_component_reuse.py "
     "additionally pins derived == self-contained for all three "
-    "consumers, and the curation driver materializes the same frame as "
-    "a numbered stage. Scale shape: the CC cost is paid once; the "
-    "rollup is one component_id window over a two-column parquet.",
+    "consumers and one build per session, and the curation driver "
+    "materializes the same frame as a numbered stage. Scale shape: the "
+    "CC cost is paid once; the rollup is one component_id window over a "
+    "two-column parquet.",
     tags=("dedup", "graph", "iterative", "composition"),
 )
 def q155_component_reuse_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    out_dir = tempfile.mkdtemp(prefix="cc_reuse_")
-    path = materialize_components(spark, sf_dir, out_dir)
+    path = materialize_parquet(
+        spark, sf_dir, "components",
+        lambda: q60_neardup_components(spark, sf_dir),
+    )
     return component_rollup(spark.read.parquet(path))
 
 
@@ -1705,11 +1695,13 @@ INCR_CC_MOD, INCR_CC_REM = 7, 3
     "new batch (every 7th doc); the prior component state (q155's "
     "materialized frame — recomputed here only because registry "
     "entries are self-contained) is CONTRACTED to one node per "
-    "component, the only fresh verification work is candidate pairs "
-    "TOUCHING the batch (a map-side filter on the banded candidates — "
-    "the q80 probe shape: O(batch x bucket), never O(corpus^2)), and "
-    "min-label CC runs on the contracted graph, whose edge set is "
-    "batch-sized and whose old components are already collapsed (1-2 "
+    "component, the batch's fresh edges are the verified pairs "
+    "TOUCHING the batch (a map-side filter — the q80 probe shape: "
+    "O(batch x bucket), never O(corpus^2); verification is per-pair, "
+    "so q21's verified set split by the batch predicate equals the two "
+    "sets verified separately), and min-label CC runs on the "
+    "contracted graph, whose edge set is batch-sized and whose old "
+    "components are already collapsed (1-2 "
     "rounds, vs log(n) from scratch). Because every old component id "
     "is the min doc_id of its members, min-label over the contracted "
     "graph reproduces the full-recompute labels EXACTLY — the oracle "
@@ -1717,54 +1709,27 @@ INCR_CC_MOD, INCR_CC_REM = 7, 3
     "incremental == from-scratch. Bucket caps are computed over the "
     "FULL population (exactly the production form: the materialized "
     "band index already reflects global bucket sizes), so equality "
-    "holds even where caps bite. Scale shape: one batch-filtered "
-    "verify pass + CC over a component-count node set with "
-    "batch-bounded edges.",
+    "holds even where caps bite. q157 and its checkpoint twin q262 run "
+    "one contract-and-merge plan (_incremental_components), which "
+    "below the graph operator's small-graph bound runs the whole "
+    "algebra on the driver over one collect. Scale shape: one verify "
+    "pass + CC over a component-count node set with batch-bounded "
+    "edges.",
     tags=("dedup", "graph", "iterative", "incremental"),
 )
 def q157_incremental_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.text import jaccard_pairs_pandas
-
-    docs = load_table(spark, sf_dir, "documents", fan_out=True).select("doc_id", "text")
-
-    # full banded candidates once (band index); bucket caps see the full
-    # population, as the production materialized index would
-    cand = _spark_candidates(spark, sf_dir).select("doc_a", "doc_b")
-    touches_new = _incr_touches_new()
-
-    def verified(pairs: DataFrame) -> DataFrame:
-        eligible = docs.filter(F.size(F.split("text", " ")) >= 3)
-        a = eligible.select(
-            F.col("doc_id").alias("doc_a"), F.col("text").alias("text_a")
-        )
-        b = eligible.select(
-            F.col("doc_id").alias("doc_b"), F.col("text").alias("text_b")
-        )
-        return (
-            jaccard_pairs_pandas(pairs.join(a, "doc_a").join(b, "doc_b"))
-            .filter(F.col("jaccard") >= NEARDUP_JACCARD)
-            .select("doc_a", "doc_b")
-        )
-
-    # prior state: components of the OLD corpus only (old-old pairs);
-    # fresh work: only pairs touching the batch. Verification is
-    # per-pair, so verify the WHOLE candidate set once and split the
-    # verified output by the batch predicate — identical pair sets to
-    # verifying each filtered subset separately (filter and verify
-    # commute), at half the ladder cost; the persist stops the two
-    # filter branches re-running the verify subtree (guide §2.4).
-    ver = verified(cand).persist(StorageLevel.MEMORY_AND_DISK)
-    return _incremental_components_from(
-        docs,
-        ver.filter(~touches_new),
-        ver.filter(touches_new),
+    # bucket caps see the full population, as the production materialized
+    # band index would; verification is per-pair, so q21's verified set
+    # split by the batch predicate is exactly the old-old and
+    # touches-new sets verified separately (filter and verify commute).
+    # The persist stops the distributed path's two filter branches
+    # re-running the ladder (guide §2.4).
+    pairs = (
+        q21_ngram_jaccard_pairs(spark, sf_dir)
+        .select("doc_a", "doc_b")
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-
-
-def _incr_touches_new():
-    return (F.col("doc_a") % INCR_CC_MOD == INCR_CC_REM) | (
-        F.col("doc_b") % INCR_CC_MOD == INCR_CC_REM
-    )
+    return _incremental_components(spark, sf_dir, pairs)
 
 
 def _py_rem(d: int, mod: int) -> int:
@@ -1775,119 +1740,69 @@ def _py_rem(d: int, mod: int) -> int:
     return -r if d < 0 else r
 
 
-def _incremental_components_driver_small(
-    docs: DataFrame, old_pairs: DataFrame, new_pairs: DataFrame
-) -> DataFrame:
+def _incremental_labels(pairs) -> dict:
     """The collected contract-and-merge algebra: union-find-by-min over
     the old-old edges (== base CC labels: min old doc id per component),
     contract each new-batch edge through those labels (old endpoint ->
     base label, batch endpoint -> itself), union-find-by-min again over
     the contracted edges (== merge CC labels). Every doc whose label can
-    differ from its own id appears as an edge endpoint (a non-endpoint
-    doc is a singleton in base and its rep is touched by no contracted
-    edge), so one broadcast label map over the endpoint set + coalesce
-    to own id reproduces the distributed pipeline's output exactly."""
-    from pyspark.sql.types import StructField, StructType
+    differ from its own id is an edge endpoint (a non-endpoint doc is a
+    singleton in base and its rep is touched by no contracted edge), so
+    the endpoint labels are the whole map."""
+    from ..operators.graph import union_find_by_min
 
-    parent: dict[int, int] = {}
+    def is_new(d: int) -> bool:
+        return _py_rem(d, INCR_CC_MOD) == INCR_CC_REM
 
-    def find(x: int) -> int:
-        r = x
-        while parent.get(r, r) != r:
-            r = parent[r]
-        while parent.get(x, x) != r:
-            parent[x], x = r, parent[x]
-        return r
-
-    def union(a: int, b: int) -> None:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-
-    old_e = [(row[0], row[1]) for row in old_pairs.select("doc_a", "doc_b").collect()]
-    new_e = [(row[0], row[1]) for row in new_pairs.select("doc_a", "doc_b").collect()]
-    for a, b in old_e:
-        union(a, b)
-    base = {x: find(x) for x in list(parent)}
+    old = [(a, b) for a, b in pairs if not (is_new(a) or is_new(b))]
+    new = [(a, b) for a, b in pairs if is_new(a) or is_new(b)]
+    base = union_find_by_min(old)
 
     def rep(d: int) -> int:
-        if _py_rem(d, INCR_CC_MOD) == INCR_CC_REM:  # batch docs: themselves
-            return d
-        return base.get(d, d)
+        return d if is_new(d) else base.get(d, d)
 
-    parent2: dict[int, int] = {}
-
-    def find2(x: int) -> int:
-        r = x
-        while parent2.get(r, r) != r:
-            r = parent2[r]
-        while parent2.get(x, x) != r:
-            parent2[x], x = r, parent2[x]
-        return r
-
-    for a, b in new_e:
-        ra, rb = find2(rep(a)), find2(rep(b))
-        if ra != rb:
-            parent2[max(ra, rb)] = min(ra, rb)
-
-    endpoints = {d for e in (old_e, new_e) for ab in e for d in ab}
-    labels = [(d, find2(rep(d))) for d in sorted(endpoints)]
-
-    spark = docs.sparkSession
-    id_type = docs.schema["doc_id"].dataType
-    lab = spark.createDataFrame(
-        labels,
-        StructType(
-            [
-                StructField("doc_id", id_type),
-                StructField("component_id", id_type),
-            ]
-        ),
-    )
-    return (
-        docs.select("doc_id")
-        .join(F.broadcast(lab), "doc_id", "left")
-        .select(
-            "doc_id", F.coalesce("component_id", "doc_id").alias("component_id")
-        )
-    )
+    merged = union_find_by_min((rep(a), rep(b)) for a, b in new)
+    return {d: merged.get(rep(d), rep(d)) for ab in pairs for d in ab}
 
 
-def _incremental_components_from(
-    docs: DataFrame, old_pairs: DataFrame, new_pairs: DataFrame
+def _incremental_components(
+    spark: SparkSession, sf_dir: str, pairs: DataFrame
 ) -> DataFrame:
-    """Contract-and-merge incremental CC given the already-verified pair
-    sets — shared by the self-contained q157 (which verifies the two sets
-    itself) and its from-materialized twin (which splits the verified-pair
-    checkpoint by the batch predicate).
+    """Contract-and-merge incremental CC over the verified (doc_a, doc_b)
+    pairs, split into old-old and touches-new by the batch predicate —
+    the one plan of q157 (q21's verified pairs) and q262 (the
+    verified-pair checkpoint).
 
     Below the graph operator's small-graph bound (round-12 verdict item
     5) BOTH CC invocations would collect their edge lists to the driver
-    anyway — so the whole contract-and-merge algebra (base union-find
-    over old-old edges, contraction of new-batch edges through the base
-    labels, merge union-find) is computed ONCE on the driver and the
-    distributed plan collapses to one docs scan + one broadcast label
-    join, replacing base-CC -> two contraction joins -> corpus-sized
-    distinct -> merge-CC -> final join. Union-by-min roots make every
-    label the component's min id, exactly the star fixpoint's labels
-    (the operator's proven cutover property), so the result is
-    row-identical — pinned by test. Above the bound the distributed
-    path below runs UNCHANGED."""
-    from ..operators.graph import CC_SMALL_GRAPH_MAX_EDGES, connected_components
+    anyway — so the whole algebra (_incremental_labels) runs ONCE on the
+    driver over one collect, and the distributed plan collapses to one
+    docs scan + one broadcast label join, replacing base-CC -> two
+    contraction joins -> corpus-sized distinct -> merge-CC -> final
+    join. Union-by-min roots make every label the component's min id,
+    exactly the star fixpoint's labels, so the result is row-identical
+    — pinned by test. Above the bound the distributed path below runs,
+    with the same bound passed to both CC calls."""
+    from ..operators import graph
 
+    bound = graph.CC_SMALL_GRAPH_MAX_EDGES
+    docs = load_table(spark, sf_dir, "documents").select("doc_id")
+    if 0 < bound >= pairs.count():  # 0 disables the cutover
+        return graph.driver_labels_frame(
+            docs, "doc_id", _incremental_labels(pairs.collect())
+        )
+    touches_new = (F.col("doc_a") % INCR_CC_MOD == INCR_CC_REM) | (
+        F.col("doc_b") % INCR_CC_MOD == INCR_CC_REM
+    )
+    old_pairs, new_pairs = pairs.filter(~touches_new), pairs.filter(touches_new)
     is_new = (F.col("doc_id") % INCR_CC_MOD) == INCR_CC_REM
-    n_old = old_pairs.count()
-    n_new = new_pairs.count()
-    if CC_SMALL_GRAPH_MAX_EDGES > 0 and (
-        n_old + n_new <= CC_SMALL_GRAPH_MAX_EDGES
-    ):
-        return _incremental_components_driver_small(docs, old_pairs, new_pairs)
     old_docs = docs.filter(~is_new)
     new_docs = docs.filter(is_new)
 
-    base = connected_components(
-        old_docs.select("doc_id"), old_pairs,
+    base = graph.connected_components(
+        old_docs, old_pairs,
         id_col="doc_id", src_col="doc_a", dst_col="doc_b",
+        small_graph_max_edges=bound,
     ).select(F.col("id").alias("doc_id"), F.col("component_id").alias("label"))
 
     # contract: old docs are represented by their component id (the min
@@ -1905,9 +1820,10 @@ def _incremental_components_from(
         .distinct()
     )
     contracted_nodes = rep.select(F.col("rep").alias("doc_id")).distinct()
-    merged = connected_components(
+    merged = graph.connected_components(
         contracted_nodes, contracted_edges,
         id_col="doc_id", src_col="doc_a", dst_col="doc_b",
+        small_graph_max_edges=bound,
     ).select(F.col("id").alias("rep"), "component_id")
 
     return rep.join(merged, "rep").select("doc_id", "component_id")
@@ -2691,28 +2607,20 @@ def materialize_verified_pairs(spark: SparkSession, sf_dir: str) -> str:
     """Run the LSH->verify ladder ONCE per (session, corpus) and write
     the canonical verified near-dup pair list as parquet; later calls in
     the same session return the existing checkpoint path while it still
-    exists (the checkpoint.materialize_once rule)."""
-    from ..sources import fs
-
-    def build(ckpt: str) -> str:
-        path = fs.join(ckpt, "verified_pairs")
-        (
-            q21_ngram_jaccard_pairs(spark, sf_dir)
-            .select("doc_a", "doc_b")
-            # REBALANCE before the write: the ladder's fan-out leaves the
-            # pair frame in per-core partitions, and without this the tiny
-            # checkpoint lands as 32 near-empty files whose per-file open
-            # cost every iterative consumer then pays PER ROUND (measured:
-            # q199/q201/q208 2-3x slower reading the splintered checkpoint).
-            # AQE sizes the rebalance from runtime stats, so at scale the
-            # same hint yields properly sized multi-file output (guide §6).
-            .hint("rebalance")
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-        return path
-
-    return materialize_once(spark, sf_dir, "neardup_pairs", build)
+    exists (the checkpoint.materialize_parquet rule)."""
+    return materialize_parquet(
+        spark, sf_dir, "neardup_pairs",
+        lambda: q21_ngram_jaccard_pairs(spark, sf_dir)
+        .select("doc_a", "doc_b")
+        # REBALANCE before the write: the ladder's fan-out leaves the
+        # pair frame in per-core partitions, and without this the tiny
+        # checkpoint lands as 32 near-empty files whose per-file open
+        # cost every iterative consumer then pays PER ROUND (measured:
+        # q199/q201/q208 2-3x slower reading the splintered checkpoint).
+        # AQE sizes the rebalance from runtime stats, so at scale the
+        # same hint yields properly sized multi-file output (guide §6).
+        .hint("rebalance"),
+    )
 
 
 def _materialized_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4555,11 +4463,10 @@ def _pf_report_from(pfx: DataFrame) -> DataFrame:
 # (q262) — round-11 closures of the last two ladder-recomputing entries.
 #
 # q260 rebuilds the Bayardo prefix index (the dominant cost: tokenize ->
-# df -> rank -> prefix cut); q157 re-runs the LSH -> verify ladder TWICE
-# (old-old and touches-new candidate sets). The production shape is the
-# q199-q201 convention: build the index / verify the pairs ONCE per
-# corpus snapshot (checkpoint.materialize_once) and derive every
-# consumer from the checkpoint — q205/q259 read the same index. Oracles
+# df -> rank -> prefix cut); q157 re-runs the LSH -> verify ladder. The
+# production shape is the q199-q201 convention: build the index /
+# verify the pairs ONCE per corpus snapshot (checkpoint.materialize_once)
+# and derive every consumer from the checkpoint — q205/q259 read the same index. Oracles
 # are the self-contained entries' oracles spliced VERBATIM, so a hash
 # match proves materialize/read-back loses nothing — twin ==
 # self-contained.
@@ -4686,9 +4593,10 @@ def _materialized_pf_index(
     "per-pair, splitting the checkpoint by the batch predicate "
     "(either endpoint in the new batch) yields exactly q157's old-old "
     "and touches-new verified sets without re-running the LSH->verify "
-    "ladder twice — the round-10 verdict measured the ladder at ~99% "
-    "of q157's self-contained cost. Contract-and-merge CC is the "
-    "shared _incremental_components_from. Oracle: q157's (q60's "
+    "ladder — the round-10 verdict measured the ladder at ~99% "
+    "of q157's self-contained cost. Contract-and-merge CC is q157's "
+    "own plan, _incremental_components, given the checkpoint instead "
+    "of q21's in-plan pairs. Oracle: q157's (q60's "
     "full-recompute recursive twin) spliced verbatim — the hash match "
     "proves checkpoint-split == verify-twice == full recompute. Scale "
     "shape: one parquet scan + a filter in place of two ladder "
@@ -4699,11 +4607,8 @@ def _materialized_pf_index(
 def q262_incremental_components_materialized(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    pairs = _materialized_pairs(spark, sf_dir)
-    touches_new = _incr_touches_new()
-    return _incremental_components_from(
-        docs, pairs.filter(~touches_new), pairs.filter(touches_new)
+    return _incremental_components(
+        spark, sf_dir, _materialized_pairs(spark, sf_dir)
     )
 
 

@@ -81,7 +81,7 @@ def load_all() -> dict[str, Query]:
 
     CACHE CONTRACT (round-12 ADVICE): several queries persist()
     multi-consumer frames INSIDE their own DAG (q29/q140 survivors,
-    q165 items/supp, q86 cand, q157 ver, q204 fp, q260's prefix-index
+    q165 items/supp, q86 cand, q157 pairs, q204 fp, q260's prefix-index
     doc frame) and deliberately do not unpersist them — the DataFrame is
     still lazy when the query function returns, so the query cannot
     know when its consumer is done. A long-lived session running many

@@ -20,7 +20,7 @@ from ..operators.similarity import (
     rp_buckets_pandas,
 )
 from ..sources import load_table
-from .checkpoint import materialize_once
+from .checkpoint import materialize_parquet
 from .registry import register
 
 N_QUERIES = 5  # query set = vec_id < 5
@@ -848,10 +848,16 @@ def rp_neardup_pairs(
     tags=("similarity", "dedup", "graph", "iterative"),
 )
 def q66_embedding_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = load_table(spark, sf_dir, "embeddings")
+    return embedding_components(emb, rp_neardup_pairs(emb).select("vec_a", "vec_b"))
+
+
+def embedding_components(emb: DataFrame, pairs: DataFrame) -> DataFrame:
+    """(vec_id, component_id) over verified (vec_a, vec_b) pairs — the
+    one CC call of q66 (pairs verified in-plan) and q271 (pairs read
+    from the checkpoint)."""
     from ..operators.graph import connected_components
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    pairs = rp_neardup_pairs(emb).select("vec_a", "vec_b")
     return connected_components(
         emb.select("vec_id"),
         pairs,
@@ -3071,21 +3077,12 @@ def materialize_embedding_pairs(spark: SparkSession, sf_dir: str) -> str:
     per (session, corpus) and write the verified embedding near-dup pair
     list as parquet; later calls in the same session return the existing
     checkpoint path while it still exists (the
-    checkpoint.materialize_once rule)."""
-    from ..sources import fs
-
-    def build(ckpt: str) -> str:
-        path = fs.join(ckpt, "verified_pairs")
-        emb = load_table(spark, sf_dir, "embeddings")
-        (
-            rp_neardup_pairs(emb)
-            .select("vec_a", "vec_b")
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-        return path
-
-    return materialize_once(spark, sf_dir, "emb_pairs", build)
+    checkpoint.materialize_parquet rule)."""
+    return materialize_parquet(
+        spark, sf_dir, "emb_pairs",
+        lambda: rp_neardup_pairs(load_table(spark, sf_dir, "embeddings"))
+        .select("vec_a", "vec_b"),
+    )
 
 
 @register(
@@ -3096,8 +3093,8 @@ def materialize_embedding_pairs(spark: SparkSession, sf_dir: str) -> str:
     "(materialize_embedding_pairs): the capped RP-LSH bucket self-join "
     "+ cosine verification — the dominant cost q66 re-runs on every "
     "execution — is paid once per corpus snapshot and written as a "
-    "two-column parquet; this twin reads the checkpoint and runs the "
-    "same large-star/small-star min-label propagation. Oracle: q66's "
+    "two-column parquet; this twin reads the checkpoint and makes "
+    "q66's one CC call (embedding_components). Oracle: q66's "
     "WITH RECURSIVE form spliced verbatim — the hash match proves "
     "checkpoint/read-back loses nothing (twin == self-contained). "
     "Scale shape: one parquet scan + O(log n) CC rounds in place of "
@@ -3110,14 +3107,7 @@ def materialize_embedding_pairs(spark: SparkSession, sf_dir: str) -> str:
 def q271_embedding_components_materialized(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from ..operators.graph import connected_components
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    pairs = spark.read.parquet(materialize_embedding_pairs(spark, sf_dir))
-    return connected_components(
-        emb.select("vec_id"),
-        pairs,
-        id_col="vec_id",
-        src_col="vec_a",
-        dst_col="vec_b",
-    ).select(F.col("id").alias("vec_id"), "component_id")
+    return embedding_components(
+        load_table(spark, sf_dir, "embeddings"),
+        spark.read.parquet(materialize_embedding_pairs(spark, sf_dir)),
+    )

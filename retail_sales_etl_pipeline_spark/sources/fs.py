@@ -49,12 +49,6 @@ def file_size(spark: SparkSession, path: str) -> int:
     return fs.getContentSummary(jp).getLength()
 
 
-def mod_time_ms(spark: SparkSession, path: str) -> int:
-    """Modification time in epoch millis."""
-    fs, jp = _fs_path(spark, path)
-    return fs.getFileStatus(jp).getModificationTime()
-
-
 def mkdirs(spark: SparkSession, path: str) -> None:
     fs, jp = _fs_path(spark, path)
     fs.mkdirs(jp)

@@ -47,6 +47,28 @@ def test_rollup_matches_selfcontained_consumers(spark):
     assert {(r.doc_id, r.component_id, r.split) for r in rollup} == split
 
 
+def test_q155_builds_components_once_per_session(spark, monkeypatch):
+    """q155 runs under the checkpoint rule: a second call in the same
+    session reads the first call's component checkpoint instead of
+    re-running the LSH -> verify -> CC ladder into a fresh directory."""
+    from retail_sales_etl_pipeline_spark.plans import checkpoint
+    from retail_sales_etl_pipeline_spark.plans import dedup_queries as dq
+
+    checkpoint._CHECKPOINTS.clear()
+    builds = []
+
+    def counting_q60(spark, sf_dir):
+        builds.append(sf_dir)
+        return q60_neardup_components(spark, sf_dir)
+
+    monkeypatch.setattr(dq, "q60_neardup_components", counting_q60)
+    first = q155_component_reuse_rollup(spark, SF)
+    second = q155_component_reuse_rollup(spark, SF)
+    assert builds == [SF]
+    assert first.inputFiles() == second.inputFiles()
+    assert sorted(first.collect()) == sorted(second.collect())
+
+
 def test_curation_driver_materializes_component_stage(spark, tmp_path):
     from retail_sales_etl_pipeline_spark.plans import curation_pipeline
 

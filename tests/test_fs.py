@@ -26,7 +26,6 @@ def test_file_size_and_mtime(spark, tmp_path):
     f.write_bytes(b"abcde")
     assert fs.is_file(spark, str(f))
     assert fs.file_size(spark, str(f)) == 5
-    assert fs.mod_time_ms(spark, str(f)) > 0
     assert not fs.is_file(spark, str(tmp_path))
 
 

@@ -1,45 +1,13 @@
-"""Incremental fact refresh (dynamic partition overwrite) + sketch
-aggregates (the approximate scale path next to the exact operators)."""
+"""Sketch aggregates: the approximate scale path next to the exact
+operators."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from retail_sales_etl_pipeline_spark.operators.fact import (
-    write_fact_sales_incremental,
-)
 from retail_sales_etl_pipeline_spark.sources import load_table
 
 from .conftest import SMOKE_SF_DIR
-
-
-def _fact_like(spark, month: str, n: int, tag: str):
-    return spark.range(n).select(
-        F.col("id").alias("sale_key"),
-        F.concat(F.lit(tag), F.col("id").cast("string")).alias("invoice_no"),
-        F.lit(month).alias("sale_month"),
-    )
-
-
-def test_incremental_overwrite_touches_only_delta_partitions(spark, tmp_path):
-    path = str(tmp_path / "fact")
-    jan = _fact_like(spark, "2011-01", 10, "jan")
-    feb = _fact_like(spark, "2011-02", 20, "feb")
-    jan.unionByName(feb).write.mode("overwrite").partitionBy("sale_month").parquet(path)
-
-    # incremental load: a CORRECTED February (5 rows) + a new March
-    feb_fixed = _fact_like(spark, "2011-02", 5, "febfix")
-    mar = _fact_like(spark, "2011-03", 7, "mar")
-    write_fact_sales_incremental(feb_fixed.unionByName(mar), path)
-
-    out = spark.read.parquet(path)
-    counts = {r["sale_month"]: r["n"] for r in out.groupBy("sale_month").agg(F.count(F.lit(1)).alias("n")).collect()}
-    # January untouched, February replaced (not appended), March added
-    assert counts == {"2011-01": 10, "2011-02": 5, "2011-03": 7}
-    # idempotence: re-running the same delta converges to the same state
-    write_fact_sales_incremental(feb_fixed.unionByName(mar), path)
-    out2 = spark.read.parquet(path)
-    assert out2.count() == 22
 
 
 def test_sketch_aggregates_close_to_exact(spark):

@@ -50,7 +50,9 @@ def test_driver_cutover_equals_distributed_path(spark, monkeypatch):
     algebra runs once on the driver (one docs scan + broadcast label
     join). Forcing the distributed path (bound = 0 disables BOTH the
     incremental cutover and the CC operator's own one) must yield
-    row-identical output — the two paths implement one semantics."""
+    row-identical output — the two paths implement one semantics. The
+    forced run must never reach a driver-side union-find: the bound is
+    passed to both CC calls, not read from a def-time default."""
     from retail_sales_etl_pipeline_spark.operators import graph
     from retail_sales_etl_pipeline_spark.plans import dedup_queries as dq
 
@@ -58,7 +60,15 @@ def test_driver_cutover_equals_distributed_path(spark, monkeypatch):
         (r.doc_id, r.component_id)
         for r in q157_incremental_components(spark, SF_SMALL).collect()
     }
+
+    def driver_path_reached(*args, **kwargs):
+        raise AssertionError("driver-small union-find reached")
+
     monkeypatch.setattr(graph, "CC_SMALL_GRAPH_MAX_EDGES", 0)
+    monkeypatch.setattr(graph, "_cc_driver_small", driver_path_reached)
+    monkeypatch.setattr(
+        graph, "union_find_by_min", driver_path_reached, raising=False
+    )
     slow = {
         (r.doc_id, r.component_id)
         for r in q157_incremental_components(spark, SF_SMALL).collect()

@@ -353,6 +353,16 @@ def test_jpeg_rejects_unsupported_and_corrupt():
     sub[sof + 11] = 0x21  # component 1 sampling byte
     with pytest.raises(ValueError):
         decode_jpeg(bytes(sub))
+    # legal multi-scan baseline: the first SOS codes only component 1 of
+    # the 3 that SOF0 declares (the rest would follow in later scans)
+    gray = bytes(range(64))
+    color = encode_jpeg_baseline(w, h, [gray, gray, gray])
+    sos = color.index(b"\xff\xda")
+    (seglen,) = struct.unpack_from(">H", color, sos + 2)
+    one_comp = b"\xff\xda" + struct.pack(">HB", 8, 1) + b"\x01\x00\x00\x3f\x00"
+    multi = color[:sos] + one_comp + color[sos + 2 + seglen :]
+    with pytest.raises(ValueError, match="multi-scan JPEG unsupported"):
+        decode_jpeg(multi)
 
 
 def test_jpeg_zigzag_is_the_standard_order():

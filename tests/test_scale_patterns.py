@@ -1,73 +1,20 @@
-"""Scale-pattern semantics: salting must not change results; bucketed
-tables must join without an exchange on the bucket key."""
+"""Scale-pattern plan shapes: AQE must split a skewed join partition;
+bucketed tables must join without an exchange on the bucket key."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from retail_sales_etl_pipeline_spark.operators.skew import (
-    salted_aggregate,
-    salted_join,
-)
 from retail_sales_etl_pipeline_spark.sources import load_table
 
 from .conftest import SMOKE_SF_DIR
-
-
-def _rows(df):
-    return sorted(tuple(r) for r in df.collect())
-
-
-def test_salted_aggregate_equals_plain(spark):
-    li = load_table(spark, SMOKE_SF_DIR, "lineitem")
-    plain = li.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("l_quantity").cast("decimal(18,2)")).alias("qty"),
-    )
-    salted = salted_aggregate(
-        li,
-        ["l_returnflag"],
-        {
-            "n": (F.count(F.lit(1)), F.sum("n")),
-            "qty": (
-                F.sum(F.col("l_quantity").cast("decimal(18,2)")),
-                F.sum("qty"),
-            ),
-        },
-    )
-    assert _rows(plain) == _rows(salted)
-
-
-def test_salted_join_equals_plain(spark):
-    li = load_table(spark, SMOKE_SF_DIR, "lineitem").select("l_orderkey", "l_quantity")
-    orders = load_table(spark, SMOKE_SF_DIR, "orders").select(
-        F.col("o_orderkey").alias("l_orderkey"), "o_custkey"
-    )
-    plain = li.join(orders, "l_orderkey")
-    salted = salted_join(li, orders, "l_orderkey")
-    assert plain.count() == salted.count()
-    assert _rows(plain) == _rows(salted)
-
-
-def test_salted_join_rejects_outer_small_side(spark):
-    """right/full outer would emit one null-extended row per salt replica
-    for each unmatched small-side row — must be rejected up front."""
-    import pytest
-
-    li = load_table(spark, SMOKE_SF_DIR, "lineitem").select("l_orderkey")
-    orders = load_table(spark, SMOKE_SF_DIR, "orders").select(
-        F.col("o_orderkey").alias("l_orderkey")
-    )
-    for how in ("right", "full", "full_outer", "right_outer"):
-        with pytest.raises(ValueError, match="salted_join"):
-            salted_join(li, orders, "l_orderkey", how=how)
 
 
 def test_aqe_splits_skewed_join_partition(spark):
     """AQE's runtime skew-join handling (on in the session factory): with
     one hot key dominating the build of a sort-merge join, the final
     adaptive plan must mark the join skew-handled (skew=true) — the
-    runtime complement to the explicit salting utilities above."""
+    runtime complement to explicit salting (q108)."""
     import pytest
 
     confs = {
