@@ -2969,44 +2969,72 @@ def _pf_pairs_plan(spark: SparkSession, sf_dir: str, cap: int | None) -> DataFra
     while the checkpointed form finished the same decade in 1603 s
     because lineage truncation keeps only one large shuffle live
     (BENCH_SCALE_R11D.json). One plan at every scale; the index build is
-    shared with every other prefix-family consumer in the session."""
-    pfx, tgs, n_docs = _materialized_pf_index(spark, sf_dir)
-    return _pf_pairs_from(pfx, tgs, n_docs <= PF_BROADCAST_MAX_DOCS, cap)
+    shared with every other prefix-family consumer in the session.
+    n_docs for the broadcast cutovers is one row-count over the
+    one-row-per-doc tg table (columnar count, no corpus re-scan)."""
+    pfx, tgs = _materialized_pf_index(spark, sf_dir)
+    return _pf_pairs_from(pfx, tgs, tgs.count() <= PF_BROADCAST_MAX_DOCS, cap)
 
 
-def _pf_index_frames(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Build the UNCAPPED Bayardo prefix index (doc_id, tok, r, m) and the
-    per-doc trigram arrays (doc_id, tg) from raw documents. The filtered
-    two-column doc frame is persisted so both tokenizations read ONE
-    corpus scan instead of two, and returned as the third element so a
-    caller done with the corpus scan can unpersist the frame; nothing
-    here runs an eager action (q260's report — round-11 ADVICE)."""
-    docs = (
+# Trigram ids in the prefix index: a trigram's id is its first-occurrence
+# slot, min(doc_id * 2^32 + pos) over the docs that contain it, with pos
+# its position in that doc's distinct-trigram array. Each (doc, pos) slot
+# holds one distinct trigram, so two trigrams never share an id; the
+# encoding needs doc_id in [-2^31, 2^31), which the build checks per row.
+_PF_SLOT = (
+    "CASE WHEN doc_id >= -2147483648 AND doc_id < 2147483648"
+    " THEN doc_id * 4294967296 + pos"
+    " ELSE raise_error(concat('prefix index: doc_id ', CAST(doc_id AS STRING),"
+    " ' is outside [-2^31, 2^31); trigram ids are doc_id * 2^32 + pos'))"
+    " END"
+)
+
+
+def _pf_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, tok, r, m): every distinct trigram of every document with
+    >= 3 words, as its 64-bit id (see _PF_SLOT), ranked per doc by the
+    global (df, trigram string) order; m is the doc's distinct-trigram
+    count. Lazy: materialize_prefix_index persists it for its two writes."""
+    ws = (
         load_table(spark, sf_dir, "documents", fan_out=True)
         .filter(F.expr("size(split(text, ' ')) >= 3"))
-        .select("doc_id", "text")
-        .persist()
+        .select("doc_id", F.split("text", " ").alias("ws"))
     )
-    tgs = _tg_docs(docs)
-    # m (the doc's distinct-trigram count) IS size(tg) — carrying it
-    # through the explode replaces a full-stream groupBy(doc_id) + join
-    # with a constant-per-doc column (guide §2.3/§2.4: one fewer
-    # aggregate pass and one fewer join over the token stream).
     # The explode runs over the INLINE trigram expression, not the tg
     # column of a prior projection: exploding a lambda-built array
     # column re-evaluates the lambda per output row (measured 3.3 s vs
     # 0.7 s for this subtree at sf0.1 — the q204 Generate lesson).
-    dtok = docs.select("doc_id", F.split("text", " ").alias("ws")).select(
-        "doc_id",
-        F.expr(f"CAST(size({_TG_SPARK_WS}) AS LONG)").alias("m"),
-        F.expr(f"explode({_TG_SPARK_WS})").alias("tok"),
+    dtok = ws.select(
+        "doc_id", F.expr(f"posexplode({_TG_SPARK_WS})").alias("pos", "tok")
     )
-    dfr = dtok.groupBy("tok").agg(F.count(F.lit(1)).cast("long").alias("df"))
+    # the id rides in the df aggregate that already groups by trigram:
+    # no extra job, no extra exchange
+    dfr = dtok.groupBy("tok").agg(
+        F.count(F.lit(1)).cast("long").alias("df"),
+        F.min(F.expr(_PF_SLOT)).alias("id"),
+    )
+    # m (the doc's distinct-trigram count) is its row count, taken over
+    # the rank window's own doc_id partitioning: no exchange and no
+    # join. A size(trigram array) column beside the generator would be
+    # evaluated once per exploded row, rebuilding the doc's array per
+    # trigram (~80 % of the build's executor CPU at 530 docs).
     rw = Window.partitionBy("doc_id").orderBy("df", "tok")
-    ranked = dtok.join(dfr, "tok").withColumn("r", F.row_number().over(rw))
-    pfx = (
+    return (
+        dtok.select("doc_id", "tok")
+        .join(dfr, "tok")
+        .select(
+            "doc_id",
+            F.col("id").alias("tok"),
+            F.row_number().over(rw).alias("r"),
+            F.count(F.lit(1)).over(Window.partitionBy("doc_id")).alias("m"),
+        )
+    )
+
+
+def _pf_prefix(ranked: DataFrame) -> DataFrame:
+    """The UNCAPPED Bayardo prefix index (doc_id, tok, r, m): each doc's
+    first m - ceil(0.3m) + 1 entries of _pf_ranked's stream."""
+    return (
         ranked
         .filter(
             F.col("r")
@@ -3019,7 +3047,16 @@ def _pf_index_frames(
         )
         .select("doc_id", "tok", "r", "m")
     )
-    return pfx, tgs, docs
+
+
+def _pf_tg(ranked: DataFrame) -> DataFrame:
+    """The per-doc verify arrays (doc_id, tg: sorted array<bigint>) of
+    _pf_ranked's stream. Over a stream already hash-partitioned by
+    doc_id (the build's bucket repartition) the grouping adds no
+    exchange."""
+    return ranked.groupBy("doc_id").agg(
+        F.sort_array(F.collect_list("tok")).alias("tg")
+    )
 
 
 def _pf_pairs_from(
@@ -3091,7 +3128,8 @@ def _pf_pairs_from(
         .select("doc_a", "doc_b")
         .distinct()
     )
-    # trigram arrays are doc-count x ~50 short strings (~36 MB at 10x) —
+    # trigram arrays are doc-count x ~50 ids (64-bit; their string form
+    # measured ~36 MB at 10x) —
     # above the 10 MB auto-broadcast threshold but in-memory up to
     # ~100K docs, where the explicit broadcast avoids shuffling
     # candidate x array rows (the q88 lesson). Beyond that the
@@ -4424,8 +4462,7 @@ def q259_prefix_pairs_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q260_prefix_posting_report(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    pfx, _, _ = _pf_index_frames(spark, sf_dir)
-    return _pf_report_from(pfx)
+    return _pf_report_from(_pf_prefix(_pf_ranked(spark, sf_dir)))
 
 
 def _pf_report_from(pfx: DataFrame) -> DataFrame:
@@ -4512,10 +4549,19 @@ def materialize_prefix_index(spark: SparkSession, sf_dir: str) -> tuple[str, str
     write it as two BUCKETED external catalog tables under the
     checkpoint directory: ``pfx`` (doc_id, tok, r, m — the ranked
     Bayardo prefix entries) bucketed+sorted by ``tok``, and ``tg``
-    (doc_id, tg — the verify trigram arrays) bucketed+sorted by
+    (doc_id, tg — the sorted verify arrays) bucketed+sorted by
     ``doc_id``. Returns the two table names; later calls in the same
     session return them while both tables exist (the
     checkpoint.materialize_once rule).
+
+    Every trigram is stored as its 64-bit id, doc_id * 2^32 + pos of
+    its first occurrence (_PF_SLOT), not as its string: the strings
+    were most of the index bytes. Precondition: every doc_id
+    lies in [-2^31, 2^31), or the ids would overflow and collide; the
+    build fails with an error naming that bound before any table is
+    written. The build persists _pf_ranked's id stream, so both writes
+    share one tokenize -> df -> rank pass, and releases it when the
+    writes end, failed or not.
 
     Layout rationale (round-11 verdict item 6 — the prefix family's
     super-linear tail): the downstream plan joins pfx WITH ITSELF on
@@ -4544,21 +4590,28 @@ def materialize_prefix_index(spark: SparkSession, sf_dir: str) -> tuple[str, str
     names = (f"pf_idx_pfx_{tag}", f"pf_idx_tg_{tag}")
 
     def build(ckpt: str) -> tuple[str, str]:
-        pfx, tgs, docs = _pf_index_frames(spark, sf_dir)
-        n_buckets = _pf_index_buckets(sf_dir)
-        for df, col, name in ((pfx, "tok", names[0]), (tgs, "doc_id", names[1])):
-            (
-                df.repartition(n_buckets, col)
-                .write.mode("overwrite")
-                .format("parquet")
-                .option("path", fs.join(ckpt, name))
-                .bucketBy(n_buckets, col)
-                .sortBy(col)
-                .saveAsTable(name)
+        # one tokenize -> df -> rank pass feeds both bucketed writes
+        ranked = _pf_ranked(spark, sf_dir).persist()
+        try:
+            n_buckets = _pf_index_buckets(sf_dir)
+            # a cached frame reports no partitioning, so tg groups AFTER
+            # its bucket repartition: one exchange per table
+            frames = (
+                _pf_prefix(ranked).repartition(n_buckets, "tok"),
+                _pf_tg(ranked.repartition(n_buckets, "doc_id")),
             )
-        # both writes are done with the corpus scan — everything downstream
-        # reads the bucketed checkpoint, so the persist would only hold memory
-        docs.unpersist()
+            for df, col, name in zip(frames, ("tok", "doc_id"), names):
+                (
+                    df.write.mode("overwrite")
+                    .format("parquet")
+                    .option("path", fs.join(ckpt, name))
+                    .bucketBy(n_buckets, col)
+                    .sortBy(col)
+                    .saveAsTable(name)
+                )
+        finally:
+            # everything downstream reads the bucketed checkpoint
+            ranked.unpersist()
         return names
 
     return materialize_once(
@@ -4569,10 +4622,9 @@ def materialize_prefix_index(spark: SparkSession, sf_dir: str) -> tuple[str, str
 
 def _materialized_pf_index(
     spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame, int]:
-    """(pfx, tg, n_docs) read back from the bucketed checkpoint tables;
-    n_docs is one row-count over the one-row-per-doc tg table (columnar
-    count, no corpus re-scan) and drives the broadcast cutovers."""
+) -> tuple[DataFrame, DataFrame]:
+    """(pfx, tg) read back from the bucketed checkpoint tables; a reuse
+    runs no Spark job."""
     t_pfx, t_tg = materialize_prefix_index(spark, sf_dir)
     pfx = spark.table(t_pfx)
     tgs = spark.table(t_tg)
@@ -4581,7 +4633,7 @@ def _materialized_pf_index(
     # SLOWER (q263 read-side 4.5 -> 6.3 s) because the in-memory
     # relation loses the bucketed scan's exchange-free sort-merge
     # layout — the whole point of the checkpoint's bucketBy.
-    return pfx, tgs, tgs.count()
+    return pfx, tgs
 
 
 @register(
@@ -4619,7 +4671,8 @@ def q262_incremental_components_materialized(
     "MATERIALIZED prefix index (materialize_prefix_index): the "
     "tokenize -> df -> rank -> prefix-cut build is paid once per "
     "corpus snapshot and written as two bucketed tables (pfx entries + "
-    "verify trigram arrays); this entry reads the checkpoint, applies "
+    "verify trigram arrays, each trigram a 64-bit id); this entry reads "
+    "the checkpoint, applies "
     "the PF_MAX_POSTING hot-token cap, and runs the PPJoin candidate + "
     "exact-verify plan. q205, q259 and q263 all run this one plan "
     "(_pf_pairs_plan) over the one checkpoint; n_docs for the broadcast "
@@ -4649,5 +4702,5 @@ def q263_prefix_pairs_materialized(
 def q264_prefix_report_materialized(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    pfx, _, _ = _materialized_pf_index(spark, sf_dir)
+    pfx, _ = _materialized_pf_index(spark, sf_dir)
     return _pf_report_from(pfx)

@@ -49,23 +49,41 @@ def test_chain_depth_twin_identity(spark):
 
 
 def test_prefix_index_materialize_once_per_session(spark):
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import LongType
+
     checkpoint._CHECKPOINTS.clear()
     t1 = dq.materialize_prefix_index(spark, SF)
     t2 = dq.materialize_prefix_index(spark, SF)
     assert t1 == t2
     t_pfx, t_tg = t1
     # the checkpoint holds exactly the self-contained index frames
-    pfx_df, tg_df, docs_df = dq._pf_index_frames(spark, SF)
-    n_docs = docs_df.count()
-
-    assert _rows(spark.table(t_pfx)) == _rows(pfx_df)
+    ranked = dq._pf_ranked(spark, SF)
+    assert _rows(spark.table(t_pfx)) == _rows(dq._pf_prefix(ranked))
     got_tg = sorted(
         (r.doc_id, tuple(r.tg)) for r in spark.table(t_tg).collect()
     )
-    want_tg = sorted((r.doc_id, tuple(r.tg)) for r in tg_df.collect())
+    want_tg = sorted(
+        (r.doc_id, tuple(r.tg)) for r in dq._pf_tg(ranked).collect()
+    )
     assert got_tg == want_tg
-    # n_docs from the tg table equals the self-contained count
-    assert spark.table(t_tg).count() == n_docs
+    # every trigram is a 64-bit id, in both tables
+    assert spark.table(t_pfx).schema["tok"].dataType == LongType()
+    assert spark.table(t_tg).schema["tg"].dataType.elementType == LongType()
+    # ids are exact: one id per distinct trigram string, one tg row per
+    # doc, and each id decodes (doc_id * 2^32 + pos) to a trigram its doc
+    # holds
+    docs = spark.read.parquet(f"{SF}/documents.parquet").filter(
+        F.expr("size(split(text, ' ')) >= 3")
+    )
+    strs = {r.doc_id: r.tg for r in dq._tg_docs(docs).collect()}
+    n_strings = len({t for tg in strs.values() for t in tg})
+    tg_tbl = spark.table(t_tg)
+    assert tg_tbl.select(F.explode("tg")).distinct().count() == n_strings
+    assert tg_tbl.count() == len(strs)
+    for doc_id, ids in got_tg:
+        decoded = [strs[i >> 32][i & 0xFFFFFFFF] for i in ids]
+        assert sorted(decoded) == sorted(strs[doc_id]), doc_id
     # the layout IS bucketed (the round-12 shuffle-free claim rests on
     # it): both tables report the declared bucket spec
     for tbl, col in ((t_pfx, "tok"), (t_tg, "doc_id")):
@@ -73,6 +91,47 @@ def test_prefix_index_materialize_once_per_session(spark):
         info = {r.col_name: r.data_type for r in ddl}
         assert info.get("Num Buckets") == str(dq._pf_index_buckets(SF)), tbl
         assert col in info.get("Bucket Columns", ""), tbl
+
+
+def test_prefix_index_rejects_doc_ids_past_the_id_range(spark, tmp_path):
+    """Trigram ids are doc_id * 2^32 + pos, exact only for doc_id in
+    [-2^31, 2^31): a corpus outside that range fails the build with an
+    error naming the bound, and no index table is left behind."""
+    import pandas as pd
+    import pytest
+
+    pd.DataFrame({
+        "doc_id": [0, 1, 2**31],
+        "text": ["a b c d", "a b c e", "b c d e"],
+    }).to_parquet(tmp_path / "documents.parquet")
+    spark.catalog.clearCache()
+    before = {t.name for t in spark.catalog.listTables()}
+    with pytest.raises(Exception, match=r"\[-2\^31, 2\^31\)"):
+        dq.materialize_prefix_index(spark, str(tmp_path))
+    assert {t.name for t in spark.catalog.listTables()} == before
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_reused_prefix_report_plans_without_jobs(spark):
+    """q264 reads only pfx: planning it over a reused index launches no
+    Spark job (the tg row count belongs to the pair plan alone)."""
+    dq.materialize_prefix_index(spark, SF)
+    sc = spark.sparkContext
+    group = "reused-q264-plan"
+    sc.setJobGroup(group, "plan q264 over a reused prefix index")
+    try:
+        dq.q264_prefix_report_materialized(spark, SF)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_prefix_report_leaves_no_cached_frame(spark):
+    """The self-contained q260 persists nothing: after it runs, the
+    session's cache manager is empty."""
+    spark.catalog.clearCache()
+    dq.q260_prefix_posting_report(spark, SF).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_prefix_pairs_twin_identity(spark):
