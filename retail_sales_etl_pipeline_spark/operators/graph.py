@@ -38,6 +38,9 @@ from __future__ import annotations
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
+
+from ..schemas import rows_frame
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -155,19 +158,11 @@ def driver_labels_frame(nodes: DataFrame, id_col: str, labels: dict) -> DataFram
     label map broadcast back, every unlabeled node its own component —
     exactly the star path's left join against its parents frame. The
     label schema takes the caller's id type (any orderable id type, not
-    only long)."""
-    from pyspark.sql.types import StructField, StructType
-
+    only long), and the label frame is a LocalTableScan (rows_frame)."""
     id_type = nodes.schema[id_col].dataType
-    lab = nodes.sparkSession.createDataFrame(
-        list(labels.items()),
-        StructType(
-            [
-                StructField(id_col, id_type),
-                StructField("component_id", id_type),
-            ]
-        ),
-    )
+    schema = StructType([StructField(id_col, id_type), StructField("component_id", id_type)])
+    rows = [{id_col: k, "component_id": v} for k, v in labels.items()]
+    lab = rows_frame(nodes.sparkSession, rows, schema)
     return (
         nodes.select(id_col)
         .join(F.broadcast(lab), id_col, "left")

@@ -14,12 +14,14 @@ Operators:
   pipeline; band-equality join replaces the O(n²) pair scan at scale.
 - SimHash: sign-aggregated token-hash bits (`simhash_expr`)
 - n-gram Jaccard: exact token-trigram set similarity for verification of
-  LSH candidates (`token_ngrams_expr`)
+  LSH candidates (`jaccard_pairs`, `token_ngrams_duck`)
 - language ID: stopword-hit scoring (`LANG_STOPWORDS`)
 - quality scoring, token counting, rolling-hash fingerprinting
 """
 
 from __future__ import annotations
+
+from pyspark.sql import functions as F
 
 from ..functions.scalar import POLY_BASE, POLY_MOD
 
@@ -307,66 +309,73 @@ def simhash_pandas(df, text_col: str = "text", id_col: str = "doc_id", bits: int
     return df.select(id_col, text_col).mapInPandas(per_batch, schema)
 
 
-def jaccard_pairs_pandas(pairs, n: int = 3):
-    """Arrow-batched token-trigram Jaccard over candidate pairs.
+def token_ngrams_ws_expr(ws: str, n: int = 3) -> str:
+    """Distinct word n-grams (joined with spaces) of a projected
+    ``split(text, ' ')`` array column ``ws`` — the Spark twin of
+    ``token_ngrams_duck``. Project the split first: inlined, the split
+    would re-run per array subscript (the q121/q126 lesson). Callers
+    guard ``size(ws) >= n``: Spark's ANSI array indexing errors on
+    out-of-range, and sequence(0, negative) descends."""
+    return (
+        f"array_distinct(transform(sequence(0, size({ws}) - {n}), "
+        f"i -> concat_ws(' ', " + ", ".join(f"{ws}[i+{d}]" for d in range(n)) + ")))"
+    )
+
+
+def jaccard_pairs(pairs, n: int = 3):
+    """Token-n-gram Jaccard over candidate pairs, in native expressions.
 
     Input columns: (doc_a, doc_b, text_a, text_b); output (doc_a, doc_b,
-    jaccard). Set sizes are ints and the division is one IEEE op, so the
-    scores are bit-identical to the SQL list_intersect/list_distinct form
-    the oracles use. Quadratic work runs ONLY on the supplied candidate
-    pairs — callers are expected to have produced them from an LSH
-    band join, never an all-pairs scan.
+    jaccard). Set sizes are ints (|a | b| = |a| + |b| - |a & b| over the
+    distinct n-gram arrays) and the division is one IEEE op, so the scores
+    are bit-identical to the SQL list_intersect/list_distinct form the
+    oracles use; a text under n tokens has no n-grams and scores 0.0.
+    Quadratic work runs ONLY on the supplied (LSH candidate) pairs.
     """
 
-    def per_batch(batches):
-        import pandas as pd
+    def grams(ws: str):
+        return F.expr(
+            f"IF(size({ws}) >= {n}, {token_ngrams_ws_expr(ws, n)},"
+            " CAST(array() AS ARRAY<STRING>))"
+        )
 
-        def ngrams(text: str) -> set:
-            toks = text.split(" ")
-            return {
-                " ".join(toks[i : i + n]) for i in range(len(toks) - (n - 1))
-            }
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            rows = []
-            for da, db, ta, tb in zip(
-                pdf["doc_a"], pdf["doc_b"], pdf["text_a"], pdf["text_b"]
-            ):
-                sa, sb = ngrams(ta), ngrams(tb)
-                union = len(sa | sb)
-                # both texts shorter than n tokens -> empty sets; define
-                # similarity as 0.0 rather than dividing by zero
-                j = len(sa & sb) / union if union else 0.0
-                rows.append({"doc_a": da, "doc_b": db, "jaccard": j})
-            yield pd.DataFrame(rows)
-
-    return pairs.mapInPandas(per_batch, "doc_a long, doc_b long, jaccard double")
-
-
-def token_ngrams_expr(col: str, n: int = 3) -> tuple[str, str]:
-    """Distinct word n-grams (joined with spaces) — the exact-similarity
-    side used to verify LSH candidates.
-
-    Callers must filter to rows with >= n tokens first: Spark's ANSI array
-    indexing errors on out-of-range, and sequence(0, negative) descends.
-    """
-    spark = (
-        f"array_distinct(transform(sequence(0, size(split({col},' ')) - {n}), "
-        f"i -> concat_ws(' ', " +
-        ", ".join(f"split({col},' ')[i+{d}]" for d in range(n)) + ")))"
+    score = F.when(F.col("n_sum") == 0, F.lit(0.0)).otherwise(
+        F.col("n_inter").cast("double")
+        / (F.col("n_sum") - F.col("n_inter")).cast("double")
     )
-    duck = (
+    # One Project per step, each reading its inputs more than once, so the
+    # split and the arrays are computed once per row. The score leaves
+    # through a one-row explode: a caller's filter on jaccard stops at that
+    # Generate, where through Projects Catalyst would push it into the join
+    # condition with the arrays inlined once per reference.
+    return (
+        pairs.select(
+            "doc_a", "doc_b",
+            F.split("text_a", " ").alias("ws_a"),
+            F.split("text_b", " ").alias("ws_b"),
+        )
+        .select("doc_a", "doc_b", grams("ws_a").alias("g_a"), grams("ws_b").alias("g_b"))
+        .select(
+            "doc_a", "doc_b",
+            F.size(F.array_intersect("g_a", "g_b")).alias("n_inter"),
+            (F.size("g_a") + F.size("g_b")).alias("n_sum"),
+        )
+        .select("doc_a", "doc_b", F.explode(F.array(score)).alias("jaccard"))
+    )
+
+
+def token_ngrams_duck(col: str, n: int = 3) -> str:
+    """DuckDB: distinct word n-grams (joined with spaces) of text column
+    ``col`` — the oracle side of LSH-candidate verification."""
+    return (
         f"list_distinct(list_transform(range(1, len(string_split({col},' ')) - {n - 2}), "
         f"i -> " + " || ' ' || ".join(f"string_split({col},' ')[i+{d}]" for d in range(n)) + "))"
     )
-    return spark, duck
 
 
 def token_shingles_pandas(df, n: int, text_col: str = "text", id_col: str = "doc_id"):
     """(id, g) DISTINCT word n-gram rows per document — the Arrow twin of
-    exploding ``token_ngrams_expr(col, n)``. Python ``str.split(' ')``
+    exploding ``token_ngrams_ws_expr``. Python ``str.split(' ')``
     matches Spark ``split(text, ' ')`` (both keep empty fields, including
     trailing ones), so shingle strings are byte-identical to the SQL form.
     Docs with < n tokens emit nothing (callers filter anyway)."""

@@ -20,9 +20,9 @@ from pyspark.sql import functions as F
 
 from ..operators.text import (
     fingerprint_pandas,
-    jaccard_pairs_pandas,
+    jaccard_pairs,
     poly_hash_pair,
-    token_ngrams_expr,
+    token_ngrams_duck,
 )
 from ..sources import load_table
 from .dedup_queries import _DUCK_CAND_CTE, minhash_candidates
@@ -32,7 +32,7 @@ from .text_queries import _DUCK_SCORES, _predict_expr, _SPARK_SCORES
 CURATION_JACCARD = 0.3
 
 _FP_DUCK = poly_hash_pair("text", "text")[1]
-_TG_DUCK = token_ngrams_expr("text", 3)[1]
+_TG_DUCK = token_ngrams_duck("text", 3)
 
 _DUCK_QUALITY_OK = (
     "len(string_split(text, ' ')) >= 5 AND "
@@ -148,7 +148,7 @@ def _verified_pairs(cand: DataFrame, docs: DataFrame) -> DataFrame:
         "doc_b",
     )
     return (
-        jaccard_pairs_pandas(pairs)
+        jaccard_pairs(pairs)
         .filter(F.col("jaccard") >= CURATION_JACCARD)
         .select("doc_a", "doc_b")
     )

@@ -24,8 +24,10 @@ hash match is itself the proof the two paths agree.
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.text import (
@@ -34,7 +36,8 @@ from ..operators.text import (
     minhash_bands_pandas,
     minhash_sig_expr,
     simhash_expr,
-    token_ngrams_expr,
+    token_ngrams_duck,
+    token_ngrams_ws_expr,
 )
 from ..sources import load_table
 from .checkpoint import materialize_once, materialize_parquet
@@ -243,16 +246,13 @@ def q22_minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _spark_candidates(spark, sf_dir)
 
 
-_TG_SPARK, _TG_DUCK = token_ngrams_expr("text", 3)
+_TG_DUCK = token_ngrams_duck("text", 3)
 
-# Projected twin of _TG_SPARK: split(text) materialized ONCE as an array
-# column, then shingled — token_ngrams_expr's inline form re-splits the
-# text per array subscript (3 splits x positions; the q121/q126 lesson),
-# measured 5.5 s -> 0.7 s for the bare explode at gen1x (round 10).
-_TG_SPARK_WS = (
-    "array_distinct(transform(sequence(0, size(ws) - 3), "
-    "i -> concat_ws(' ', ws[i+0], ws[i+1], ws[i+2])))"
-)
+# split(text) materialized ONCE as an array column ws, then shingled — an
+# inline split re-runs per array subscript (3 splits x positions; the
+# q121/q126 lesson), measured 5.5 s -> 0.7 s for the bare explode at gen1x
+# (round 10).
+_TG_SPARK_WS = token_ngrams_ws_expr("ws", 3)
 
 
 def _tg_docs(docs: DataFrame) -> DataFrame:
@@ -284,14 +284,27 @@ def _tg_docs(docs: DataFrame) -> DataFrame:
     "the quadratic similarity computation touches only pairs that already "
     "share a MinHash band, never N^2. Jaccard = |intersect|/|union| of "
     "distinct trigram sets — int sizes, so the double division is "
-    "bit-deterministic across engines.",
+    "bit-deterministic across engines. The verify is native expressions "
+    "(operators.text.jaccard_pairs): no Python-worker hop.",
     tags=("dedup", "join"),
 )
 def q21_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _scored_candidates(spark, sf_dir).filter(
+        F.col("jaccard") >= NEARDUP_JACCARD
+    )
+
+
+def _scored_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_a, doc_b, jaccard): the exact trigram Jaccard of every LSH
+    candidate pair whose docs both have >= 3 words — native expressions
+    (operators.text.jaccard_pairs): identical integers to the oracle's
+    list_intersect/list_distinct sizes, identical IEEE division."""
+    from ..operators.text import jaccard_pairs
+
     cand = _spark_candidates(spark, sf_dir).select("doc_a", "doc_b")
     # fan_out on the verify side: without it the joined pair stream
-    # inherits AQE's coalesced (often single) partition and the Arrow
-    # Jaccard runs one-core
+    # inherits AQE's coalesced (often single) partition and the Jaccard
+    # runs one-core
     docs = (
         load_table(spark, sf_dir, "documents", fan_out=True)
         .filter(F.size(F.split("text", " ")) >= 3)
@@ -299,14 +312,7 @@ def q21_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     a = docs.select(F.col("doc_id").alias("doc_a"), F.col("text").alias("text_a"))
     b = docs.select(F.col("doc_id").alias("doc_b"), F.col("text").alias("text_b"))
-    pairs = cand.join(a, "doc_a").join(b, "doc_b")
-
-    # Arrow-batched Jaccard (operators.text.jaccard_pairs_pandas):
-    # identical integers to list_intersect/list_distinct sizes, identical
-    # IEEE division, ~10x faster than the interpreted lambda chain.
-    from ..operators.text import jaccard_pairs_pandas
-
-    return jaccard_pairs_pandas(pairs).filter(F.col("jaccard") >= NEARDUP_JACCARD)
+    return jaccard_pairs(cand.join(a, "doc_a").join(b, "doc_b"))
 
 
 @register(
@@ -314,7 +320,7 @@ def q21_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH RECURSIVE {_DUCK_CAND_CTE},
     d AS (
-      SELECT doc_id, {token_ngrams_expr("text", 3)[1]} AS tg
+      SELECT doc_id, {token_ngrams_duck("text", 3)} AS tg
       FROM documents
       WHERE len(string_split(text, ' ')) >= 3
     ),
@@ -370,7 +376,7 @@ DECON_MIN_SHARED = 2
 
 # Spark runs the Arrow shingle twin (token_shingles_pandas); the oracle
 # unnests this SQL form — identical strings by construction.
-_TG5_DUCK = token_ngrams_expr("text", DECON_SHINGLE_N)[1]
+_TG5_DUCK = token_ngrams_duck("text", DECON_SHINGLE_N)
 
 
 @register(
@@ -912,7 +918,7 @@ def q84_simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 PASSAGE_N = 8  # 8-token shingles ~ a short "line" in the token-stream corpus
 
-_P8_DUCK = token_ngrams_expr("text", PASSAGE_N)[1]
+_P8_DUCK = token_ngrams_duck("text", PASSAGE_N)
 
 
 @register(
@@ -1019,7 +1025,7 @@ _MH_DUCK_COMPONENTS = minhash_sig_expr("text", 5)[1]
     tags=("dedup", "lsh", "estimation"),
 )
 def q86_minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.text import jaccard_pairs_pandas, minhash_components_pandas
+    from ..operators.text import jaccard_pairs, minhash_components_pandas
 
     docs = load_table(spark, sf_dir, "documents", fan_out=True)
     # two consumers below (the estimate join and the exact-audit join)
@@ -1055,7 +1061,7 @@ def q86_minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ta = texts.select(F.col("doc_id").alias("doc_a"), F.col("text").alias("text_a"))
     tb = texts.select(F.col("doc_id").alias("doc_b"), F.col("text").alias("text_b"))
-    exact = jaccard_pairs_pandas(
+    exact = jaccard_pairs(
         cand.join(ta, "doc_a").join(tb, "doc_b")
     )
     return est.join(exact, ["doc_a", "doc_b"])
@@ -1267,7 +1273,7 @@ def q117_component_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame
     oracle=f"""
     WITH {_DUCK_CAND_CTE},
     d AS (
-      SELECT doc_id, {token_ngrams_expr("text", 3)[1]} AS tg
+      SELECT doc_id, {token_ngrams_duck("text", 3)} AS tg
       FROM documents
       WHERE len(string_split(text, ' ')) >= 3
     ),
@@ -1295,18 +1301,7 @@ def q117_component_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame
     tags=("dedup", "eval", "profiling"),
 )
 def q122_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.text import jaccard_pairs_pandas
-
-    cand = _spark_candidates(spark, sf_dir).select("doc_a", "doc_b")
-    docs = (
-        load_table(spark, sf_dir, "documents", fan_out=True)
-        .filter(F.size(F.split("text", " ")) >= 3)
-        .select("doc_id", "text")
-    )
-    a = docs.select(F.col("doc_id").alias("doc_a"), F.col("text").alias("text_a"))
-    b = docs.select(F.col("doc_id").alias("doc_b"), F.col("text").alias("text_b"))
-    scored = jaccard_pairs_pandas(cand.join(a, "doc_a").join(b, "doc_b"))
-    swept = scored.select(
+    swept = _scored_candidates(spark, sf_dir).select(
         F.explode(F.expr("sequence(1, 9)")).alias("k"), "jaccard"
     )
     return swept.groupBy(F.col("k").cast("int").alias("threshold_tenths")).agg(
@@ -1326,7 +1321,7 @@ CONTAINMENT_MIN = 0.5
     oracle=f"""
     WITH {_DUCK_CAND_CTE},
     d AS (
-      SELECT doc_id, {token_ngrams_expr("text", 3)[1]} AS tg
+      SELECT doc_id, {token_ngrams_duck("text", 3)} AS tg
       FROM documents
       WHERE len(string_split(text, ' ')) >= 3
     )
@@ -1358,17 +1353,9 @@ def q126_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "documents", fan_out=True)
         .filter(F.size(F.split("text", " ")) >= 3)
         # split once into an array column, THEN build shingles over it:
-        # token_ngrams_expr's inline form re-splits the text per array
-        # element (the q121 lesson) — projecting toks first lets codegen
-        # materialize the split once per row
+        # an inline split re-runs per array element (the q121 lesson)
         .select("doc_id", F.split("text", " ").alias("toks"))
-        .select(
-            "doc_id",
-            F.expr(
-                "array_distinct(transform(sequence(1, size(toks) - 2), "
-                "i -> concat_ws(' ', toks[i-1], toks[i], toks[i+1])))"
-            ).alias("tg"),
-        )
+        .select("doc_id", F.expr(token_ngrams_ws_expr("toks", 3)).alias("tg"))
     )
     a = docs.select(F.col("doc_id").alias("doc_a"), F.col("tg").alias("tg_a"))
     b = docs.select(F.col("doc_id").alias("doc_b"), F.col("tg").alias("tg_b"))
@@ -1486,7 +1473,7 @@ def _q58_oracle() -> str:
     oracle=f"""
     WITH {_DUCK_CAND_CTE},
     d AS (
-      SELECT doc_id, {token_ngrams_expr("text", 3)[1]} AS tg
+      SELECT doc_id, {token_ngrams_duck("text", 3)} AS tg
       FROM documents
       WHERE len(string_split(text, ' ')) >= 3
     ),
@@ -1519,24 +1506,9 @@ def _q58_oracle() -> str:
     tags=("dedup", "eval", "governance"),
 )
 def q139_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .registry import QUERIES
     from .text_queries import q58_stratified_sample_split
 
-    cand = _spark_candidates(spark, sf_dir).select("doc_a", "doc_b")
-    docs = (
-        load_table(spark, sf_dir, "documents", fan_out=True)
-        .filter(F.size(F.split("text", " ")) >= 3)
-        .select("doc_id", "text")
-    )
-    a = docs.select(F.col("doc_id").alias("doc_a"), F.col("text").alias("text_a"))
-    b = docs.select(F.col("doc_id").alias("doc_b"), F.col("text").alias("text_b"))
-    from ..operators.text import jaccard_pairs_pandas
-
-    verified = (
-        jaccard_pairs_pandas(cand.join(a, "doc_a").join(b, "doc_b"))
-        .filter(F.col("jaccard") >= NEARDUP_JACCARD)
-        .select("doc_a", "doc_b")
-    )
+    verified = q21_ngram_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b")
     splits = q58_stratified_sample_split(spark, sf_dir).select("doc_id", "split")
     sa = splits.select(
         F.col("doc_id").alias("doc_a"), F.col("split").alias("split_a")
@@ -1781,16 +1753,19 @@ def _incremental_components(
     contraction joins -> corpus-sized distinct -> merge-CC -> final
     join. Union-by-min roots make every label the component's min id,
     exactly the star fixpoint's labels, so the result is row-identical
-    — pinned by test. Above the bound the distributed path below runs,
-    with the same bound passed to both CC calls."""
+    — pinned by test. One collect of at most bound + 1 pairs both sizes
+    and fetches the graph. Above the bound the distributed path below
+    runs, with the same bound passed to both CC calls."""
     from ..operators import graph
 
     bound = graph.CC_SMALL_GRAPH_MAX_EDGES
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    if 0 < bound >= pairs.count():  # 0 disables the cutover
-        return graph.driver_labels_frame(
-            docs, "doc_id", _incremental_labels(pairs.collect())
-        )
+    if bound > 0:  # 0 disables the cutover
+        rows = pairs.limit(bound + 1).collect()
+        if len(rows) <= bound:
+            return graph.driver_labels_frame(
+                docs, "doc_id", _incremental_labels(rows)
+            )
     touches_new = (F.col("doc_a") % INCR_CC_MOD == INCR_CC_REM) | (
         F.col("doc_b") % INCR_CC_MOD == INCR_CC_REM
     )
@@ -2109,7 +2084,7 @@ SPAN_TF_CAP = 32  # positions kept per (doc, token): bounds match fan-out
     tags=("dedup", "join", "window"),
 )
 def q162_longest_common_span(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Arrow per-pair form (the q21 jaccard shape): span work stays local
+    # Arrow per-pair form (one row per candidate pair): span work stays local
     # compute inside the batch. The relational diagonal-islands twin (the
     # oracle) is exact but shuffles the full match relation — candidates
     # x shared-token positions — for its windows; EXECUTED at gen100x
@@ -2256,7 +2231,7 @@ def _pagerank_duck_iter(prev: str, out: str) -> str:
     oracle=f"""
     WITH {_DUCK_CAND_CTE},
     d AS (
-      SELECT doc_id, {token_ngrams_expr("text", 3)[1]} AS tg
+      SELECT doc_id, {token_ngrams_duck("text", 3)} AS tg
       FROM documents
       WHERE len(string_split(text, ' ')) >= 3
     ),
@@ -2360,7 +2335,7 @@ def pagerank_from_pairs(pairs: DataFrame) -> DataFrame:
     oracle=f"""
     WITH {_DUCK_CAND_CTE},
     d AS (
-      SELECT doc_id, {token_ngrams_expr("text", 3)[1]} AS tg
+      SELECT doc_id, {token_ngrams_duck("text", 3)} AS tg
       FROM documents
       WHERE len(string_split(text, ' ')) >= 3
     ),
@@ -2507,7 +2482,7 @@ CHAIN_MAX_HOPS = 8
     FROM chain GROUP BY doc_id
     """.format(
         cand=_DUCK_CAND_CTE,
-        tg=token_ngrams_expr("text", 3)[1],
+        tg=token_ngrams_duck("text", 3),
         jac=NEARDUP_JACCARD,
     ),
     doc="Duplication chain depth via a level-synchronous aggregated "
@@ -2866,7 +2841,7 @@ PF_JACCARD_NUM, PF_JACCARD_DEN = 3, 10
     "q205_prefix_filter_pairs",
     oracle=f"""
     WITH dtok AS (
-      SELECT doc_id, unnest({token_ngrams_expr("text", 3)[1]}) AS tok
+      SELECT doc_id, unnest({token_ngrams_duck("text", 3)}) AS tok
       FROM documents
       WHERE len(string_split(text, ' ')) >= 3
     ),
@@ -2890,7 +2865,7 @@ PF_JACCARD_NUM, PF_JACCARD_DEN = 3, 10
       FROM pfx a JOIN pfx b ON a.tok = b.tok AND a.doc_id < b.doc_id
     ),
     tgs AS (
-      SELECT doc_id, {token_ngrams_expr("text", 3)[1]} AS tg
+      SELECT doc_id, {token_ngrams_duck("text", 3)} AS tg
       FROM documents
       WHERE len(string_split(text, ' ')) >= 3
     ),
@@ -2970,10 +2945,17 @@ def _pf_pairs_plan(spark: SparkSession, sf_dir: str, cap: int | None) -> DataFra
     because lineage truncation keeps only one large shuffle live
     (BENCH_SCALE_R11D.json). One plan at every scale; the index build is
     shared with every other prefix-family consumer in the session.
-    n_docs for the broadcast cutovers is one row-count over the
-    one-row-per-doc tg table (columnar count, no corpus re-scan)."""
-    pfx, tgs = _materialized_pf_index(spark, sf_dir)
-    return _pf_pairs_from(pfx, tgs, tgs.count() <= PF_BROADCAST_MAX_DOCS, cap)
+    n_docs for the broadcast cutovers is the tg row count the index
+    build recorded, so planning over a built index runs no Spark job.
+
+    The index tables are NOT persisted even though the plan reads pfx
+    three times and tg twice: an A/B (round 12) measured the persisted
+    form SLOWER (q263 read-side 4.5 -> 6.3 s) because the in-memory
+    relation loses the bucketed scan's exchange-free sort-merge layout —
+    the whole point of the checkpoint's bucketBy."""
+    ix = materialize_prefix_index(spark, sf_dir)
+    small = ix.n_docs <= PF_BROADCAST_MAX_DOCS
+    return _pf_pairs_from(spark.table(ix.pfx), spark.table(ix.tg), small, cap)
 
 
 # Trigram ids in the prefix index: a trigram's id is its first-occurrence
@@ -3195,7 +3177,7 @@ def _pf_pairs_from(
 
 _DUCK_VERIFIED_PRELUDE = f"""{_DUCK_CAND_CTE},
     d AS (
-      SELECT doc_id, {token_ngrams_expr("text", 3)[1]} AS tg
+      SELECT doc_id, {token_ngrams_duck("text", 3)} AS tg
       FROM documents
       WHERE len(string_split(text, ' ')) >= 3
     ),
@@ -3379,7 +3361,7 @@ def q209_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH {_DUCK_CAND_CTE},
     d AS (
-      SELECT doc_id, {token_ngrams_expr("text", 3)[1]} AS tg
+      SELECT doc_id, {token_ngrams_duck("text", 3)} AS tg
       FROM documents
       WHERE len(string_split(text, ' ')) >= 3
     ),
@@ -4353,7 +4335,7 @@ PF_MAX_POSTING = 64
 PF_BROADCAST_MAX_DOCS = 100_000  # verify-array broadcast cutover (see _pf_pairs_from)
 
 _PF_DUCK_CTES = f"""dtok AS (
-      SELECT doc_id, unnest({token_ngrams_expr("text", 3)[1]}) AS tok
+      SELECT doc_id, unnest({token_ngrams_duck("text", 3)}) AS tok
       FROM documents
       WHERE len(string_split(text, ' ')) >= 3
     ),
@@ -4390,7 +4372,7 @@ _PF_DUCK_CTES = f"""dtok AS (
       FROM pfx2 a JOIN pfx2 b ON a.tok = b.tok AND a.doc_id < b.doc_id
     ),
     tgs AS (
-      SELECT doc_id, {token_ngrams_expr("text", 3)[1]} AS tg
+      SELECT doc_id, {token_ngrams_duck("text", 3)} AS tg
       FROM documents
       WHERE len(string_split(text, ' ')) >= 3
     ),
@@ -4544,14 +4526,23 @@ def _pf_index_buckets(sf_dir: str) -> int:
     return b
 
 
-def materialize_prefix_index(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
+class PrefixIndex(NamedTuple):
+    """A built prefix index: its two tables and tg's row count (n_docs)."""
+
+    pfx: str
+    tg: str
+    n_docs: int
+
+
+def materialize_prefix_index(spark: SparkSession, sf_dir: str) -> PrefixIndex:
     """Build the UNCAPPED prefix index once per (session, corpus) and
     write it as two BUCKETED external catalog tables under the
     checkpoint directory: ``pfx`` (doc_id, tok, r, m — the ranked
     Bayardo prefix entries) bucketed+sorted by ``tok``, and ``tg``
     (doc_id, tg — the sorted verify arrays) bucketed+sorted by
-    ``doc_id``. Returns the two table names; later calls in the same
-    session return them while both tables exist (the
+    ``doc_id``. Returns the two table names and the tg row count, which
+    an Observation on the tg write records (no count job); later calls
+    in the same session return them while both tables exist (the
     checkpoint.materialize_once rule).
 
     Every trigram is stored as its 64-bit id, doc_id * 2^32 + pos of
@@ -4589,16 +4580,19 @@ def materialize_prefix_index(spark: SparkSession, sf_dir: str) -> tuple[str, str
     ).hexdigest()[:16]
     names = (f"pf_idx_pfx_{tag}", f"pf_idx_tg_{tag}")
 
-    def build(ckpt: str) -> tuple[str, str]:
+    def build(ckpt: str) -> PrefixIndex:
         # one tokenize -> df -> rank pass feeds both bucketed writes
         ranked = _pf_ranked(spark, sf_dir).persist()
+        n_docs = Observation()
         try:
             n_buckets = _pf_index_buckets(sf_dir)
             # a cached frame reports no partitioning, so tg groups AFTER
             # its bucket repartition: one exchange per table
             frames = (
                 _pf_prefix(ranked).repartition(n_buckets, "tok"),
-                _pf_tg(ranked.repartition(n_buckets, "doc_id")),
+                _pf_tg(ranked.repartition(n_buckets, "doc_id")).observe(
+                    n_docs, F.count(F.lit(1)).alias("n")
+                ),
             )
             for df, col, name in zip(frames, ("tok", "doc_id"), names):
                 (
@@ -4612,28 +4606,12 @@ def materialize_prefix_index(spark: SparkSession, sf_dir: str) -> tuple[str, str
         finally:
             # everything downstream reads the bucketed checkpoint
             ranked.unpersist()
-        return names
+        return PrefixIndex(*names, n_docs.get["n"])
 
     return materialize_once(
         spark, sf_dir, "pf_idx", build,
-        lambda ts: all(spark.catalog.tableExists(t) for t in ts),
+        lambda ix: all(spark.catalog.tableExists(t) for t in (ix.pfx, ix.tg)),
     )
-
-
-def _materialized_pf_index(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    """(pfx, tg) read back from the bucketed checkpoint tables; a reuse
-    runs no Spark job."""
-    t_pfx, t_tg = materialize_prefix_index(spark, sf_dir)
-    pfx = spark.table(t_pfx)
-    tgs = spark.table(t_tg)
-    # NOT persisted even though the downstream plan reads pfx three
-    # times and tg twice: an A/B (round 12) measured the persisted form
-    # SLOWER (q263 read-side 4.5 -> 6.3 s) because the in-memory
-    # relation loses the bucketed scan's exchange-free sort-merge
-    # layout — the whole point of the checkpoint's bucketBy.
-    return pfx, tgs
 
 
 @register(
@@ -4676,9 +4654,9 @@ def q262_incremental_components_materialized(
     "the PF_MAX_POSTING hot-token cap, and runs the PPJoin candidate + "
     "exact-verify plan. q205, q259 and q263 all run this one plan "
     "(_pf_pairs_plan) over the one checkpoint; n_docs for the broadcast "
-    "cutovers is a columnar count of the one-row-per-doc tg table, not "
-    "a corpus re-scan. Oracle: q259's spliced verbatim — hash match == "
-    "twin identity. Scale shape: index build amortized across the "
+    "cutovers is the tg row count the index build recorded, so planning "
+    "over a built index runs no Spark job. Oracle: q259's spliced "
+    "verbatim — hash match == twin identity. Scale shape: index build amortized across the "
     "prefix family; consume cost is the cap-bounded candidate join "
     "only.",
     tags=("dedup", "join", "capped", "composition"),
@@ -4702,5 +4680,4 @@ def q263_prefix_pairs_materialized(
 def q264_prefix_report_materialized(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    pfx, _ = _materialized_pf_index(spark, sf_dir)
-    return _pf_report_from(pfx)
+    return _pf_report_from(spark.table(materialize_prefix_index(spark, sf_dir).pfx))

@@ -11,13 +11,12 @@ from __future__ import annotations
 import time
 from decimal import Decimal
 
-import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import DateType, StructType, TimestampType
 
 from ..schemas import PIPELINE_RUNS_SCHEMA, STAGE_ATTEMPTS_SCHEMA, STAGE_METRICS_SCHEMA
+from ..schemas import rows_frame
 from ..sources import fs
 
 
@@ -26,15 +25,14 @@ def append_log(spark: SparkSession, path: str, rows: list[dict], schema: StructT
     parquet file under ``path``. A log's date and timestamp columns are its
     write time (the reference's CURRENT_DATE/CURRENT_TIMESTAMP defaults, C7).
 
-    The frame is built from an Arrow table, so it reaches the JVM with no
-    Python-worker round trip, whatever the session's Arrow conf says.
+    The frame is built from an Arrow table (``schemas.rows_frame``), so it
+    reaches the JVM with no Python-worker round trip.
     """
     if not rows:
         return
     now = {DateType: F.current_date(), TimestampType: F.current_timestamp()}
     stamps = {f.name: now[type(f.dataType)] for f in schema if type(f.dataType) in now}
-    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
-    df = spark.createDataFrame(table, schema=schema).withColumns(stamps)
+    df = rows_frame(spark, rows, schema).withColumns(stamps)
     df.coalesce(1).write.mode("append").parquet(path)
 
 

@@ -633,10 +633,10 @@ def q91_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from ..operators.text import token_ngrams_expr  # noqa: E402
+from ..operators.text import token_ngrams_duck  # noqa: E402
 
 NOVELTY_N = 5
-_NOV_SPARK, _NOV_DUCK = token_ngrams_expr("text", NOVELTY_N)
+_NOV_DUCK = token_ngrams_duck("text", NOVELTY_N)
 
 
 @register(

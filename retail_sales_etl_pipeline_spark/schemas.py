@@ -11,6 +11,9 @@ sums must be exact), surrogate keys are int/long, natural keys string.
 
 from __future__ import annotations
 
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     DateType,
     DecimalType,
@@ -164,3 +167,11 @@ STAGE_ATTEMPTS_SCHEMA = StructType(
         _f("execution_timestamp", TimestampType()),
     ]
 )
+
+
+def rows_frame(spark: SparkSession, rows: list[dict], schema: StructType) -> DataFrame:
+    """``rows`` (dicts keyed by field name) as a frame of ``schema``, via an
+    Arrow table: a LocalTableScan with no Python-worker job, whatever the
+    Arrow conf (``createDataFrame(list)`` plans a PythonRDD scan)."""
+    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema=schema)

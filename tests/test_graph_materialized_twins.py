@@ -56,7 +56,7 @@ def test_prefix_index_materialize_once_per_session(spark):
     t1 = dq.materialize_prefix_index(spark, SF)
     t2 = dq.materialize_prefix_index(spark, SF)
     assert t1 == t2
-    t_pfx, t_tg = t1
+    t_pfx, t_tg, n_docs = t1
     # the checkpoint holds exactly the self-contained index frames
     ranked = dq._pf_ranked(spark, SF)
     assert _rows(spark.table(t_pfx)) == _rows(dq._pf_prefix(ranked))
@@ -80,7 +80,7 @@ def test_prefix_index_materialize_once_per_session(spark):
     n_strings = len({t for tg in strs.values() for t in tg})
     tg_tbl = spark.table(t_tg)
     assert tg_tbl.select(F.explode("tg")).distinct().count() == n_strings
-    assert tg_tbl.count() == len(strs)
+    assert tg_tbl.count() == len(strs) == n_docs
     for doc_id, ids in got_tg:
         decoded = [strs[i >> 32][i & 0xFFFFFFFF] for i in ids]
         assert sorted(decoded) == sorted(strs[doc_id]), doc_id
@@ -112,18 +112,31 @@ def test_prefix_index_rejects_doc_ids_past_the_id_range(spark, tmp_path):
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
-def test_reused_prefix_report_plans_without_jobs(spark):
-    """q264 reads only pfx: planning it over a reused index launches no
-    Spark job (the tg row count belongs to the pair plan alone)."""
+def _plan_jobs_over_reused_index(spark, query) -> list:
+    """Spark job ids launched while planning ``query`` over a prefix index
+    that already exists."""
     dq.materialize_prefix_index(spark, SF)
     sc = spark.sparkContext
-    group = "reused-q264-plan"
-    sc.setJobGroup(group, "plan q264 over a reused prefix index")
+    group = f"reused-index-plan-{query.__name__}"
+    sc.setJobGroup(group, "plan a query over a reused prefix index")
     try:
-        dq.q264_prefix_report_materialized(spark, SF)
+        query(spark, SF)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_reused_prefix_report_plans_without_jobs(spark):
+    """q264 reads only pfx: planning it over a reused index launches no
+    Spark job."""
+    assert _plan_jobs_over_reused_index(spark, dq.q264_prefix_report_materialized) == []
+
+
+def test_reused_prefix_pairs_plan_without_jobs(spark):
+    """q263's broadcast cutover reads the doc count the index build
+    recorded while writing tg: planning it over a reused index launches
+    no Spark job (no tg count)."""
+    assert _plan_jobs_over_reused_index(spark, dq.q263_prefix_pairs_materialized) == []
 
 
 def test_prefix_report_leaves_no_cached_frame(spark):
@@ -191,7 +204,7 @@ def test_prefix_index_survives_stale_warehouse_location(spark):
     import re
 
     checkpoint._CHECKPOINTS.clear()
-    t_pfx, t_tg = dq.materialize_prefix_index(spark, SF)
+    t_pfx, t_tg, _ = dq.materialize_prefix_index(spark, SF)
     want = _rows(spark.table(t_pfx))
 
     # Recreate the fresh-process state: catalog entry gone, orphan
@@ -206,7 +219,7 @@ def test_prefix_index_survives_stale_warehouse_location(spark):
     checkpoint._CHECKPOINTS.clear()
 
     got_t = dq.materialize_prefix_index(spark, SF)
-    assert got_t == (t_pfx, t_tg)
+    assert got_t[:2] == (t_pfx, t_tg)
     assert _rows(spark.table(t_pfx)) == want
 
 
@@ -236,6 +249,6 @@ def test_prefix_index_writes_nothing_to_warehouse(spark):
 
     before = pf_dirs()
     checkpoint._CHECKPOINTS.clear()
-    for t in dq.materialize_prefix_index(spark, SF):
+    for t in dq.materialize_prefix_index(spark, SF)[:2]:
         assert spark.catalog.getTable(t).tableType == "EXTERNAL", t
     assert pf_dirs() == before

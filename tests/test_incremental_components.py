@@ -6,6 +6,8 @@ not a full re-iteration.
 
 from __future__ import annotations
 
+import pytest
+
 from retail_sales_etl_pipeline_spark.plans.dedup_queries import (
     INCR_CC_MOD,
     INCR_CC_REM,
@@ -78,3 +80,34 @@ def test_driver_cutover_equals_distributed_path(spark, monkeypatch):
 
     # the Spark-remainder helper matches SQL % for negative ids too
     assert dq._py_rem(-10, 7) == -3 and dq._py_rem(10, 7) == 3
+
+
+@pytest.mark.parametrize("slack", [0, -1])
+def test_driver_cutover_at_the_pair_count(spark, monkeypatch, slack):
+    """One bounded collect decides the cutover: a bound of exactly the
+    verified-pair count runs the driver path, one less runs the
+    distributed one, and both are row-identical to the fully distributed
+    path (bound 0)."""
+    from retail_sales_etl_pipeline_spark.operators import graph
+    from retail_sales_etl_pipeline_spark.plans import dedup_queries as dq
+
+    def components():
+        return {
+            (r.doc_id, r.component_id)
+            for r in q157_incremental_components(spark, SF_SMALL).collect()
+        }
+
+    monkeypatch.setattr(graph, "CC_SMALL_GRAPH_MAX_EDGES", 0)
+    distributed = components()
+    n_pairs = dq.q21_ngram_jaccard_pairs(spark, SF_SMALL).count()
+    assert n_pairs > 1
+
+    driver_calls = []
+    labels = dq._incremental_labels
+    monkeypatch.setattr(
+        dq, "_incremental_labels",
+        lambda rows: driver_calls.append(len(rows)) or labels(rows),
+    )
+    monkeypatch.setattr(graph, "CC_SMALL_GRAPH_MAX_EDGES", n_pairs + slack)
+    assert components() == distributed
+    assert driver_calls == ([n_pairs] if slack == 0 else [])

@@ -864,3 +864,48 @@ def test_scan_fanout_is_gated_and_keyed(spark, monkeypatch):
         load_table(spark, SMOKE_SF_DIR, "documents", fan_out=True)
     )
     assert _op_count(plan_unknown, "Exchange") == 0
+
+
+def test_q21_verify_runs_without_python_workers(spark):
+    """q21's trigram-Jaccard verify is native expressions: above the
+    candidate x text joins there are only Projects, the one-row Generate
+    that carries the score and the threshold Filter — no MapInPandas hop.
+    The plan's one Python-worker node is the MinHash signature pass of
+    the candidate stage."""
+    plan = _formatted_plan(
+        REGISTRY["q21_ngram_jaccard_pairs"].spark_fn(spark, SMOKE_SF_DIR)
+    )
+    assert _op_count(plan, "MapInPandas") == 1
+    assert _op_count(plan, "PythonMapInArrow") == 0
+    tree = plan.split("\n\n")[0]
+    above_join = re.split(r"\w*Join\b", tree)[0]
+    nodes = set(re.findall(r"(\w+) \(\d+\)", above_join))
+    assert nodes <= {"AdaptiveSparkPlan", "Project", "Generate", "Filter"}, nodes
+    # the threshold stays above the score: pushed into the join, Catalyst
+    # would inline the n-gram arrays into the join condition
+    conds = re.findall(r"^Join condition: (.*)$", plan, flags=re.MULTILINE)
+    assert not any("split(" in c for c in conds), conds
+
+
+@pytest.mark.parametrize(
+    "id_type, labels",
+    [("string", {"b": "a", "c": "a"}), ("long", {2: 1, 3: 1}), ("long", {})],
+)
+def test_driver_labels_frame_is_a_local_scan(spark, id_type, labels):
+    """The driver's label map reaches the JVM as an Arrow-built local
+    relation: a LocalTableScan, never a Python-worker (ExistingRDD) scan.
+    An empty map is folded away, leaving no join at all."""
+    from retail_sales_etl_pipeline_spark.operators.graph import driver_labels_frame
+
+    ids = spark.range(1, 5)
+    if id_type == "string":
+        ids = ids.select(F.expr("char(96 + id)").alias("id"))
+    df = driver_labels_frame(ids, "id", labels)
+    plan = _formatted_plan(df)
+    assert "ExistingRDD" not in plan
+    if labels:
+        assert _op_count(plan, "LocalTableScan") == 1
+    else:
+        assert "Join" not in plan
+    got = {r.id: r.component_id for r in df.collect()}
+    assert got == {i: labels.get(i, i) for i in got} and len(got) == 4

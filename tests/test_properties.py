@@ -198,3 +198,57 @@ def test_poly_hash_cross_dialect_equality(spark, duck, texts):
     for t in texts:
         assert got_spark[t] == expect[t], repr(t)
         assert got_duck[t] == expect[t], repr(t)
+
+
+# ---------------------------------------------------------------------------
+# jaccard_pairs: the native trigram-Jaccard verify must score every pair
+# bit-identically to the per-row Python set logic of the Arrow kernel it
+# replaced (kept here as the reference).
+# ---------------------------------------------------------------------------
+
+
+def _py_jaccard(ta: str, tb: str, n: int = 3) -> float:
+    def ngrams(text: str) -> set:
+        toks = text.split(" ")
+        return {" ".join(toks[i : i + n]) for i in range(len(toks) - (n - 1))}
+
+    sa, sb = ngrams(ta), ngrams(tb)
+    union = len(sa | sb)
+    return len(sa & sb) / union if union else 0.0
+
+
+# A tiny vocabulary makes trigrams repeat within and across texts; the
+# empty word makes double, leading and trailing spaces; the rest is
+# non-ASCII. Lists of 0-14 words cover texts under, at and over 3 tokens.
+_jaccard_text = st.lists(
+    st.sampled_from(["a", "b", "c", "", "ab", "é", "日本", "😀"]),
+    min_size=0,
+    max_size=14,
+).map(" ".join)
+
+
+@settings(max_examples=15, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(pairs=st.lists(st.tuples(_jaccard_text, _jaccard_text), min_size=1, max_size=20))
+@example(pairs=[
+    ("a b c", "a b c"),        # exactly n tokens, identical
+    ("a b c", "a b c a"),      # exactly n tokens vs n + 1
+    ("a b", "a b"),            # under n tokens on both sides -> 0.0
+    ("", "a b c"),             # one side empty
+    ("a  b c", "a b c"),       # double space: an empty token
+    ("a b c a b c", "c a b c"),  # repeated trigrams count once
+    ("日本 é 😀 é", "日本 é 😀"),
+])
+def test_jaccard_pairs_bit_identical_to_set_reference(spark, pairs):
+    from retail_sales_etl_pipeline_spark.operators.text import jaccard_pairs
+
+    df = spark.createDataFrame(
+        [(i, -i, ta, tb) for i, (ta, tb) in enumerate(pairs)],
+        "doc_a long, doc_b long, text_a string, text_b string",
+    )
+    got = {r.doc_a: (r.doc_b, r.jaccard) for r in jaccard_pairs(df).collect()}
+    assert sorted(got) == list(range(len(pairs)))
+    for i, (ta, tb) in enumerate(pairs):
+        doc_b, score = got[i]
+        assert doc_b == -i
+        assert score.hex() == _py_jaccard(ta, tb).hex(), (ta, tb)

@@ -239,16 +239,16 @@ def test_novelty_of_duplicated_doc_is_zero(spark):
     doc_id, every one of its shingles has df >= 2 -> novelty 0. Build the
     duplicated corpus in-memory and run the same plan."""
     from pyspark.sql import functions as F
-    from retail_sales_etl_pipeline_spark.plans.text_queries import (  # noqa: F401
-        NOVELTY_N,
-        _NOV_SPARK,
-    )
+    from retail_sales_etl_pipeline_spark.operators.text import token_ngrams_ws_expr
+    from retail_sales_etl_pipeline_spark.plans.text_queries import NOVELTY_N
 
     rows = [(1, "a b c d e f g h"), (2, "a b c d e f g h"), (3, "x y z w v u t s")]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    shingles = docs.filter(
-        F.size(F.split("text", " ")) >= NOVELTY_N
-    ).select("doc_id", F.explode(F.expr(_NOV_SPARK)).alias("g"))
+    shingles = (
+        docs.filter(F.size(F.split("text", " ")) >= NOVELTY_N)
+        .select("doc_id", F.split("text", " ").alias("ws"))
+        .select("doc_id", F.explode(F.expr(token_ngrams_ws_expr("ws", NOVELTY_N))).alias("g"))
+    )
     df = shingles.groupBy("g").agg(F.count(F.lit(1)).alias("df"))
     nov = (
         shingles.join(df, "g")

@@ -58,13 +58,13 @@ def test_cross_bin_candidates_found(spark):
 def test_jaccard_pairs_empty_ngram_sets_score_zero(spark):
     """Pairs whose texts both have fewer than n tokens score 0.0 instead
     of dividing by an empty union."""
-    from retail_sales_etl_pipeline_spark.operators.text import jaccard_pairs_pandas
+    from retail_sales_etl_pipeline_spark.operators.text import jaccard_pairs
 
     pairs = spark.createDataFrame(
         [(1, 2, "one two", "uno dos"), (3, 4, "a b c d", "a b c d")],
         "doc_a long, doc_b long, text_a string, text_b string",
     )
-    out = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in jaccard_pairs_pandas(pairs).collect()}
+    out = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in jaccard_pairs(pairs).collect()}
     assert out[(1, 2)] == 0.0
     assert out[(3, 4)] == 1.0
 
