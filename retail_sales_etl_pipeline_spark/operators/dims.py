@@ -22,10 +22,11 @@ dimension-sized delta — not a fact-table shuffle.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import pg_dayofweek
+from ..schemas import rows_frame
 
 UNKNOWN_CUSTOMER = "UNKNOWN"
 
@@ -54,10 +55,8 @@ def build_dim_customer_attrs(staging: DataFrame) -> DataFrame:
         .groupBy("customer_id")
         .agg(F.max("country").alias("country"))
     )
-    spark = staging.sparkSession
-    sentinel = spark.createDataFrame(
-        [(UNKNOWN_CUSTOMER, UNKNOWN_CUSTOMER)], schema="customer_id STRING, country STRING"
-    ).coalesce(1)
+    unknown = {"customer_id": UNKNOWN_CUSTOMER, "country": UNKNOWN_CUSTOMER}
+    sentinel = rows_frame(staging.sparkSession, [unknown], real.schema)
     # M2 precedence: the sentinel must never overwrite a real 'UNKNOWN'
     # customer id (cannot occur in practice, but precedence is explicit).
     return real.unionByName(sentinel.join(real, "customer_id", "left_anti"))

@@ -2339,7 +2339,7 @@ def q198_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     "is DECIMAL(38,0): price-cents < ~1.05e7 makes y*y ~ 1e14 PER ROW, "
     "which crosses int64 at a mere ~10^5 worst-case rows — exactly the "
     "ARITHMETIC_OVERFLOW that killed the round-6 bench at sf0.1 "
-    "(BENCH_r06.json). DECIMAL(38,0) holds y*y sums to ~10^24 rows; "
+    "(commit 700a95f). DECIMAL(38,0) holds y*y sums to ~10^24 rows; "
     "both dialects build the identical decimal expression tree, so the "
     "sums still hash equal. Then the centered 2x2 system is solved by "
     "Cramer's rule as a pure expression of those integers. This is the "

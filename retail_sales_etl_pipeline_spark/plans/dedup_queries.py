@@ -2154,20 +2154,15 @@ EDIT_SIM_MIN_PPM = 500_000
     tags=("dedup", "join"),
 )
 def q163_edit_distance_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return edit_distance_verify(spark, sf_dir, EDIT_PREFIX)
-
-
-def edit_distance_verify(
-    spark: SparkSession, sf_dir: str, prefix: int
-) -> DataFrame:
-    """q163 parameterized by prefix length — the cost knob is the DP area
-    (cells ∝ prefix²); tools/sweep_edit_prefix.py measures the wall-time /
-    recall trade at gen scale (the round-6 directive #4 evidence)."""
+    # The prefix is the cost knob: DP cells grow as EDIT_PREFIX². A sweep
+    # at gen100x (commit 1e9ee96) measured 256 -> 128 as 234.5 -> 122.7 s
+    # for ~1% pair churn each way, and 64 as a flood of spurious pairs
+    # (+76%); 256 stays the exact default.
     cand = _spark_candidates(spark, sf_dir).select("doc_a", "doc_b")
     # fan_out: the banded-DP levenshtein over the joined pairs is the
     # dominant per-row compute; an un-fanned side leaves it one-core
     d = load_table(spark, sf_dir, "documents", fan_out=True).select(
-        "doc_id", F.substring("text", 1, prefix).alias("pfx")
+        "doc_id", F.substring("text", 1, EDIT_PREFIX).alias("pfx")
     )
     a = d.select(F.col("doc_id").alias("doc_a"), F.col("pfx").alias("pfx_a"))
     b = d.select(F.col("doc_id").alias("doc_b"), F.col("pfx").alias("pfx_b"))
@@ -2183,7 +2178,7 @@ def edit_distance_verify(
         .select(
             "doc_a",
             "doc_b",
-            F.levenshtein("pfx_a", "pfx_b", prefix // 2)
+            F.levenshtein("pfx_a", "pfx_b", EDIT_PREFIX // 2)
             .cast("long").alias("lev_dist"),
             F.greatest(
                 F.length("pfx_a"), F.length("pfx_b"), F.lit(1)
@@ -2499,8 +2494,8 @@ CHAIN_MAX_HOPS = 8
     "distributed hash join + hash aggregate over a frontier bounded "
     "by |docs| rows — the per-PATH row explosion that killed the "
     "earlier WITH RECURSIVE form on replica-heavy corpora "
-    "(STRESS_r8 q188/q201: RECURSION_ROW_LIMIT_EXCEEDED on 32-way "
-    "duplication cliques) is aggregated away before it exists. "
+    "(q188/q201 hit RECURSION_ROW_LIMIT_EXCEEDED on 32-way "
+    "duplication cliques, commit ebe0df8) is aggregated away before it exists. "
     "Oracle: DuckDB WITH RECURSIVE path enumeration — the hash match "
     "proves the aggregated counts equal the enumerated rows.",
     tags=("dedup", "graph", "iterative"),
@@ -2515,7 +2510,7 @@ def chain_depth_from_pairs(spark: SparkSession, pairs: DataFrame) -> DataFrame:
     verified pair frame — shared by the self-contained q188 and its
     from-materialized twin q201.
 
-    This replaced the WITH RECURSIVE form after STRESS_r8: the recursion
+    This replaced the WITH RECURSIVE form (commit ebe0df8): the recursion
     materializes ONE ROW PER PATH, and on a replica-heavy corpus (the
     32-way-duplicated stress corpus turns each near-dup pair into a
     32-clique) path multiplicity explodes combinatorially —
@@ -2915,8 +2910,8 @@ PF_JACCARD_NUM, PF_JACCARD_DEN = 3, 10
     "LSH's capped buckets do not. Exactness has a price; the recorded "
     "1x/10x walls ARE that price, and the capped LSH ladder is the "
     "documented 100 TB path. ROUND-10 DEMOTION: this exact form is now "
-    "the JUDGE only — tagged 'exact-judge', skipped by the default "
-    "bench path, still oracle-checked by the correctness gate; "
+    "the JUDGE only — tagged 'exact-judge', still oracle-checked by "
+    "the correctness gate; "
     "q259_prefix_pairs_capped (identical schema, posting-capped index) "
     "is the registered default, with the cap's loss observable in "
     "q260's posting report and reconciled exactly in the wave test. "
@@ -2943,7 +2938,7 @@ def _pf_pairs_plan(spark: SparkSession, sf_dir: str, cap: int | None) -> DataFra
     concurrently — 'No space left on device' at 5.21M docs/62 min),
     while the checkpointed form finished the same decade in 1603 s
     because lineage truncation keeps only one large shuffle live
-    (BENCH_SCALE_R11D.json). One plan at every scale; the index build is
+    (commit ffd2be5). One plan at every scale; the index build is
     shared with every other prefix-family consumer in the session.
     n_docs for the broadcast cutovers is the tg row count the index
     build recorded, so planning over a built index runs no Spark job.
@@ -3124,7 +3119,7 @@ def _pf_pairs_from(
     # collapsed to one at runtime — AQE's canonicalized stage cache sees
     # through the per-side column aliases and the executed final plan
     # carries exactly one tg BroadcastQueryStage + one ReusedExchange
-    # (plans/r13/q263_*_before_final.txt). An alias-preserving
+    # (plan dump in commit c702992). An alias-preserving
     # restructure intended to enable that reuse was A/B'd and reverted
     # as a runtime no-op: only ONE tg scan + broadcast build is paid
     # today, at any scale where AQE runs.
@@ -4316,7 +4311,7 @@ def q247_lsh_param_tuner(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Capped prefix-filter all-pairs (q259) + posting report (q260) — the
 # round-10 resolution of q205's documented weak status. q205 stays in
 # the registry as the EXACT-RECALL JUDGE (oracle-checked at sf0.01,
-# tagged 'exact-judge' and skipped by the default bench path); q259 is
+# tagged 'exact-judge'); q259 is
 # the drop-in default: identical output schema, identical algorithm,
 # but prefix posting lists longer than PF_MAX_POSTING are dropped from
 # the inverted index before candidate generation — the same hot-bucket

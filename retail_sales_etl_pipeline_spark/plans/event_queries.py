@@ -261,7 +261,7 @@ def binned_attribution_counts(
     "twins: q83 (batched mapInPandas, the scalable shape when per-group "
     "Python is genuinely needed) and q154 (per-group applyInPandas, the "
     "slow-twin demo of why one Python call per small group does not "
-    "scale — excluded from the bench total). Median of an even count is "
+    "scale). Median of an even count is "
     "the midpoint mean in Spark, numpy and DuckDB, and gaps are exact "
     "integer micros, so parity is exact.",
     tags=("events", "window"),
@@ -431,9 +431,8 @@ def q83_user_gap_stats_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY user_id
     """,
     doc="q55's semantics through per-group applyInPandas — kept as the "
-    "SLOW TWIN and deliberately excluded from the bench total (tag "
-    "'slow-twin'): one Python roundtrip per user means per-call "
-    "overhead dominates when groups are small and numerous (10x slower "
+    "SLOW TWIN (tag 'slow-twin'): one Python roundtrip per user means "
+    "per-call overhead dominates when groups are small and numerous (10x slower "
     "than q83's batched form at sf0.1, and the gap widens with user "
     "count). It exists to pin the hash-identity of the three shapes "
     "(q55 all-JVM, q83 batched, q154 grouped) and to document WHEN the "

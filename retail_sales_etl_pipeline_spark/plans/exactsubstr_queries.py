@@ -105,7 +105,7 @@ def _esub_grams_hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
     The Spark side is the Arrow/numpy operator (the q22 convention): the
     SQL higher-order-function form runs INTERPRETED — per-character
     lambda chains — and was measured 1.5x slower than shuffling the raw
-    gram strings at gen100x (204 s vs 139 s, BENCH_SCALE_R12B.json),
+    gram strings at gen100x (204 s vs 139 s, commit 7cd061b),
     defeating the twin's purpose; the numpy form computes the same
     integers vectorized and the DuckDB oracle keeps the SQL form, so
     the hash match proves the two paths agree."""

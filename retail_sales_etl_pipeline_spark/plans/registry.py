@@ -86,10 +86,9 @@ def load_all() -> dict[str, Query]:
     still lazy when the query function returns, so the query cannot
     know when its consumer is done. A long-lived session running many
     registry queries should call ``spark.catalog.clearCache()`` between
-    queries (bench.py and the test fixtures do exactly this, outside
-    any timed window); a one-job-per-application deployment needs
-    nothing. Every such persist is single-query-scoped: nothing is
-    keyed to survive into another query's plan.
+    queries (the test fixtures do exactly this); a one-job-per-application
+    deployment needs nothing. Every such persist is single-query-scoped:
+    nothing is keyed to survive into another query's plan.
     """
     failures: list[tuple[str, Exception]] = []
     for mod in QUERY_MODULES:

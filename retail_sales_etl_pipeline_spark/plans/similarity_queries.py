@@ -2383,7 +2383,7 @@ def q246_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # salt bucket, so rank within (query, salt) first and carry at most
     # 32*K rows per query into the exact final window. The single
     # per-query sort task over all N scored rows was the registry's one
-    # super-linear decade point (r1000 = 22.6, BENCH_SCALE_R10B.json);
+    # super-linear decade point (r1000 = 22.6, commit 568dc88);
     # the salt is a deterministic function of neighbor_id, so the final
     # (adc_dist, neighbor_id) order — and every output value — is
     # unchanged.

@@ -89,8 +89,8 @@ _FANOUT_TABLES = {
 # 4 MB/core): the 1000x corpus is a single 605 MB file of ~6 row
 # groups — above the old gate, so the opt-in sites never fanned out
 # and the index build's interpreted trigram stage ran ~35 min on 5
-# straggler tasks with 27 cores idle (thread-dump evidence in
-# OPTIMIZATION_r13.md). At production scale (multi-TB directories of
+# straggler tasks with 27 cores idle (thread-dump evidence in commit
+# c702992). At production scale (multi-TB directories of
 # many files) bytes >> cores x split size and the plan is untouched —
 # the rule adapts to scale instead of tuning for local[32].
 _FANOUT_FALLBACK_SPLIT_BYTES = 128 * 1024 * 1024

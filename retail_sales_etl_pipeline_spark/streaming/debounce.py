@@ -31,7 +31,7 @@ within one debounce window of the watermark, not users ever seen.
 Pair with the RocksDB state store provider
 (``spark.sql.streaming.stateStore.providerClass = ...RocksDBStateStoreProvider``)
 so even the bounded working set lives off-heap with incremental
-checkpoints (tools/bench_streaming.py --rocksdb wires it).
+checkpoints (commit effc0e0's streaming bench wired it with --rocksdb).
 """
 
 from __future__ import annotations

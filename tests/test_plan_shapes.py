@@ -25,8 +25,8 @@ REGISTRY = load_all()
 @pytest.fixture(autouse=True)
 def _clear_cached_frames(spark):
     """Plan-shape assertions read explain() output, and a frame left
-    persisted by an earlier test (the intra-query persists are
-    unpersisted by the bench harness, not by tests) rewrites unrelated
+    persisted by an earlier test (the intra-query persists outlive
+    their query, see ``registry.load_all``) rewrites unrelated
     plans as InMemoryTableScan subtrees — measured as order-dependent
     flakiness in the full suite (q162's window count vs q22's).
     clearCache() alone suffices: every intra-query persist in the
@@ -592,8 +592,8 @@ def test_cusum_plans_as_windows_not_iteration(spark):
 def test_chain_depth_walk_is_aggregated_not_recursive(spark):
     """q188's chain walk must be the LEVEL-SYNCHRONOUS aggregated form:
     no recursive-CTE execution node anywhere (the WITH RECURSIVE form
-    enumerated one row per PATH and died on replica-heavy corpora —
-    STRESS_r8 RECURSION_ROW_LIMIT_EXCEEDED), every frontier a
+    enumerated one row per PATH and died on replica-heavy corpora with
+    RECURSION_ROW_LIMIT_EXCEEDED, commit ebe0df8), every frontier a
     checkpointed bounded frame, and the final rollup one hash
     aggregate over the unioned levels."""
     plan = _formatted_plan(
@@ -909,3 +909,25 @@ def test_driver_labels_frame_is_a_local_scan(spark, id_type, labels):
         assert "Join" not in plan
     got = {r.id: r.component_id for r in df.collect()}
     assert got == {i: labels.get(i, i) for i in got} and len(got) == 4
+
+
+def test_customer_attrs_sentinel_is_a_local_scan(spark):
+    """dim_customer's UNKNOWN sentinel reaches the JVM as an Arrow-built
+    local relation, so the ETL's dim build plans no Python-worker
+    (ExistingRDD) scan."""
+    from retail_sales_etl_pipeline_spark.operators.dims import (
+        UNKNOWN_CUSTOMER,
+        build_dim_customer_attrs,
+    )
+
+    staging = spark.range(3).select(
+        F.col("id").cast("string").alias("customer_id"),
+        F.lit("UK").alias("country"),
+    )
+    df = build_dim_customer_attrs(staging)
+    plan = _formatted_plan(df)
+    assert "ExistingRDD" not in plan
+    assert _op_count(plan, "LocalTableScan") >= 1
+    got = {r.customer_id: r.country for r in df.collect()}
+    assert got == {"0": "UK", "1": "UK", "2": "UK",
+                   UNKNOWN_CUSTOMER: UNKNOWN_CUSTOMER}
