@@ -26,8 +26,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 # Columns that must be present for a row to survive F1 (reference
-# dag2_clean_validate.py:28-34). CustomerID/Description/Country may be NULL.
+# dag2_clean_validate.py:28-34). CustomerID/Description/Country may be NULL;
+# their null counts feed data_quality_log.
 REQUIRED_COLUMNS = ("invoice_no", "stock_code", "quantity", "invoice_date", "unit_price")
+NULLABLE_COLUMNS = ("customer_id", "description", "country")
 
 # W1 dedup key (reference dag2_clean_validate.py:52-58): Description and
 # Country are deliberately EXCLUDED — the survivor contributes its own
@@ -78,6 +80,7 @@ class CleanResult:
     df: DataFrame
     metrics: list[StageMetric]
     tagged: DataFrame  # the cached flagged frame ``df`` filters
+    null_counts: dict[str, int]  # NULLs per NULLABLE_COLUMNS column, before F1
 
     @property
     def rows_after(self) -> int:
@@ -93,8 +96,9 @@ class CleanResult:
 def clean_staging(df: DataFrame) -> CleanResult:
     """All four cleaning stages, in reference order, in one Spark action.
 
-    Caches the flagged frame and reads every ``StageMetric`` from one
-    aggregate; the result's ``df`` is the rows that keep their last flag.
+    Caches the flagged frame and reads every ``StageMetric``, and the
+    input's NULLs per ``NULLABLE_COLUMNS`` column, from one aggregate; the
+    result's ``df`` is the rows that keep their last flag.
     """
     stages = _stage_predicates()
     flags = [f"_keep{i}" for i in range(len(stages))]
@@ -104,8 +108,11 @@ def clean_staging(df: DataFrame) -> CleanResult:
         keep = F.col(flag)
     tagged = tagged.cache()
     row = tagged.agg(
-        F.count(F.lit(1)).alias("rows"), *[F.count_if(F.col(f)).alias(f) for f in flags]
+        F.count(F.lit(1)).alias("rows"),
+        *[F.count_if(F.col(f)).alias(f) for f in flags],
+        *[F.count_if(F.col(c).isNull()).alias(f"_null_{c}") for c in NULLABLE_COLUMNS],
     ).collect()[0]
     counts = [row["rows"], *(row[f] for f in flags)]
     metrics = [StageMetric(name, b, a) for (name, _), b, a in zip(stages, counts, counts[1:])]
-    return CleanResult(tagged.filter(F.col(flags[-1])).drop(*flags), metrics, tagged)
+    nulls = {c: row[f"_null_{c}"] for c in NULLABLE_COLUMNS}
+    return CleanResult(tagged.filter(F.col(flags[-1])).drop(*flags), metrics, tagged, nulls)

@@ -1,29 +1,36 @@
-"""Dimension builds + upsert/merge library (reference dag3 + SURVEY §2.11).
+"""Dimension builds and the one surrogate-key merge (reference dag3 +
+SURVEY §2.11).
 
 Spark/Parquet has no in-place UPDATE and no SERIAL, so the reference's
-UPSERTs become recompute-and-merge patterns and surrogate keys become our
-own deterministic assignment:
+three ``INSERT ... ON CONFLICT`` loads become one recompute-and-merge plan
+per dimension, ``assign_surrogate_keys``, the same for a first load and an
+upsert:
 
-- M1 ``upsert_new_wins`` — INSERT ... ON CONFLICT DO UPDATE (dim_product,
-  dim_customer; reference dag3_transform_warehouse.py:47-48, 75-76).
-- M2 ``upsert_old_wins`` — ON CONFLICT DO NOTHING (dim_date, sentinel seed;
-  reference dag3_transform_warehouse.py:66, 102).
+- M1 new-wins on payload, as ON CONFLICT DO UPDATE does for dim_product
+  and dim_customer (reference dag3_transform_warehouse.py:47-48, 75-76).
+  dim_date's DO NOTHING (reference line 102) gives the same rows: its
+  payload is a function of the date, so new and old values agree.
+- M3 sentinel: the UNKNOWN customer enters inside dim_customer's one
+  aggregate, and a real 'UNKNOWN' customer id wins over it (reference
+  lines 63-67).
 - Surrogate keys: existing rows KEEP their keys across runs (what SERIAL
   gave the reference); only genuinely-new natural keys get fresh keys,
-  numbered max(existing)+row_number(new). Key *values* may differ from the
-  reference's insertion-order keys — correctness tests join on natural keys
-  (SURVEY §7.4.1).
+  numbered max(existing) plus their rank in natural-key order. Key
+  *values* may differ from the reference's insertion-order keys;
+  correctness tests join on natural keys (SURVEY §7.4.1).
 
 Scale: dims are small by definition (thousands to low millions of rows at
-100 TB fact scale), so the merge anti-joins broadcast the *delta* side and
-the row_number over new keys is a single-partition window over a
-dimension-sized delta — not a fact-table shuffle.
+100 TB fact scale), so the merge's full outer join and its
+single-partition key window see dimension-sized rows, never the fact
+table. Building a dim plan runs no Spark job: the old key maximum is a
+window over the merged rows, not a driver round trip.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from ..functions import pg_dayofweek
 from ..schemas import rows_frame
@@ -49,17 +56,22 @@ def build_dim_product_attrs(staging: DataFrame) -> DataFrame:
 def build_dim_customer_attrs(staging: DataFrame) -> DataFrame:
     """A2 + M3: one row per customer_id with MAX(country), plus the
     sentinel UNKNOWN row for NULL-customer facts (reference
-    dag3_transform_warehouse.py:63-77)."""
-    real = (
-        staging.filter(F.col("customer_id").isNotNull())
-        .groupBy("customer_id")
-        .agg(F.max("country").alias("country"))
+    dag3_transform_warehouse.py:63-77), in one aggregate.
+
+    The sentinel is unioned with the real rows before the group-by,
+    flagged ``_real`` false. The max of (``_real``, country) is the real rows'
+    MAX(country) whenever the id has a real row, NULLs sorting first, so
+    a real 'UNKNOWN' customer wins over the sentinel (M2 precedence)."""
+    real = staging.filter(F.col("customer_id").isNotNull()).select(
+        "customer_id", "country", F.lit(True).alias("_real")
     )
-    unknown = {"customer_id": UNKNOWN_CUSTOMER, "country": UNKNOWN_CUSTOMER}
+    unknown = {"customer_id": UNKNOWN_CUSTOMER, "country": UNKNOWN_CUSTOMER, "_real": False}
     sentinel = rows_frame(staging.sparkSession, [unknown], real.schema)
-    # M2 precedence: the sentinel must never overwrite a real 'UNKNOWN'
-    # customer id (cannot occur in practice, but precedence is explicit).
-    return real.unionByName(sentinel.join(real, "customer_id", "left_anti"))
+    return (
+        real.unionByName(sentinel)
+        .groupBy("customer_id")
+        .agg(F.max(F.struct("_real", "country"))["country"].alias("country"))
+    )
 
 
 def build_dim_date_attrs(staging: DataFrame) -> DataFrame:
@@ -82,7 +94,7 @@ def build_dim_date_attrs(staging: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# surrogate keys + merge patterns
+# surrogate keys + merge
 # ---------------------------------------------------------------------------
 
 
@@ -91,62 +103,37 @@ def assign_surrogate_keys(
     existing: DataFrame | None,
     natural_key: str,
     key_col: str,
-    key_type: str = "int",
 ) -> DataFrame:
-    """Merge new attribute rows into an existing dimension, preserving the
-    surrogate keys of already-known natural keys (M1 new-wins on payload).
+    """Merge new attribute rows into a dimension in one plan: a full outer
+    join on the natural key, then one natural-key-ordered window.
 
-    New natural keys are numbered max(existing_key) + row_number ordered by
-    the natural key — deterministic and collision-free. The window is
-    unpartitioned by design: it only ever sees the *new-keys delta*, which
-    is dimension-scale tiny; the fact table never passes through here.
+    A natural key already in ``existing`` keeps its surrogate key. A new
+    one gets max(existing key) plus the running count of new keys in
+    natural-key order, so a first load numbers 1..n. Payload is M1
+    new-wins: a row present in ``new_attrs`` takes its values there, NULLs
+    included. An absent dimension (``existing`` None) is an empty local
+    relation, which the optimizer prunes from the join. The window is
+    unpartitioned by design: it only ever sees dimension-sized rows; the
+    fact table never passes through here.
     """
     attr_cols = [c for c in new_attrs.columns if c != natural_key]
+    if existing is None:
+        schema = StructType([StructField(key_col, IntegerType()), *new_attrs.schema.fields])
+        existing = rows_frame(new_attrs.sparkSession, [], schema)
 
-    if existing is None or not existing.columns:
-        w = Window.orderBy(natural_key)
-        return new_attrs.select(
-            F.row_number().over(w).cast(key_type).alias(key_col),
-            natural_key,
-            *attr_cols,
-        )
-
-    # Existing rows: keep key; take new payload when present (M1 new-wins).
-    upd = existing.alias("old").join(
-        F.broadcast(new_attrs.alias("new")), on=natural_key, how="left"
-    )
-    kept = upd.select(
-        F.col(f"old.{key_col}").alias(key_col),
-        F.col(natural_key),
-        *[
-            F.when(
-                F.col(f"new.{natural_key}").isNotNull(), F.col(f"new.{c}")
-            ).otherwise(F.col(f"old.{c}")).alias(c)
-            for c in attr_cols
-        ],
-    )
-
-    fresh = new_attrs.join(F.broadcast(existing.select(natural_key)), natural_key, "left_anti")
-    base = existing.agg(F.max(key_col)).collect()[0][0] or 0
+    old_key = F.col(f"old.{key_col}")
+    in_new = F.col(f"new.{natural_key}").isNotNull()
     w = Window.orderBy(natural_key)
-    fresh_keyed = fresh.select(
-        (F.row_number().over(w) + F.lit(base)).cast(key_type).alias(key_col),
-        natural_key,
-        *attr_cols,
+    base = F.max(old_key).over(w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
+    rank = F.count(F.when(old_key.isNull(), 1)).over(
+        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    return kept.unionByName(fresh_keyed)
-
-
-def upsert_new_wins(old: DataFrame, new: DataFrame, key: str | list[str]) -> DataFrame:
-    """M1: new rows win on conflict; absent old rows preserved."""
-    keys = [key] if isinstance(key, str) else list(key)
-    return new.unionByName(old.join(new.select(*keys), keys, "left_anti"))
-
-
-def upsert_old_wins(old: DataFrame, new: DataFrame, key: str | list[str]) -> DataFrame:
-    """M2: old rows win on conflict; only genuinely-new rows inserted."""
-    keys = [key] if isinstance(key, str) else list(key)
-    return old.unionByName(new.join(old.select(*keys), keys, "left_anti"))
+    return existing.alias("old").join(new_attrs.alias("new"), natural_key, "full_outer").select(
+        F.coalesce(old_key, F.coalesce(base, F.lit(0)) + rank).cast("int").alias(key_col),
+        natural_key,
+        *[F.when(in_new, F.col(f"new.{c}")).otherwise(F.col(f"old.{c}")).alias(c)
+          for c in attr_cols],
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -167,8 +154,6 @@ def load_dim_customer(staging: DataFrame, existing: DataFrame | None = None) -> 
 
 
 def load_dim_date(staging: DataFrame, existing: DataFrame | None = None) -> DataFrame:
-    """dim_date uses M2 semantics (DO NOTHING) — a date's derived parts
-    never change, so old rows are simply kept (they're identical)."""
     return assign_surrogate_keys(
         build_dim_date_attrs(staging), existing, "date", "date_key"
     )

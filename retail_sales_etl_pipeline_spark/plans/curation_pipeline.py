@@ -21,8 +21,10 @@ from __future__ import annotations
 
 import time
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from ..operators.clean import StageMetric
 from ..sources import fs, load_table
@@ -81,8 +83,6 @@ def run(
         )
         metadata.log_stage_attempts(spark, attempts_path, run_id, attempts)
 
-    raw_docs = load_table(spark, sf_dir, "documents").count()
-
     # curate() writes survivors + candidates parquet under stages_dir and
     # returns the final frame reading FROM those stage files.
     def _curate_stage() -> None:
@@ -95,17 +95,6 @@ def run(
     except Exception as e:  # noqa: BLE001
         _fail(e)
         raise
-
-    survivors = spark.read.parquet(fs.join(stages_dir, "survivors"))
-    candidates = spark.read.parquet(fs.join(stages_dir, "candidates"))
-    corpus = spark.read.parquet(corpus_path)
-    exact_survivors = survivors.count()
-    lsh_candidates = candidates.count()
-    final_docs = corpus.count()
-    # near-drop = survivors that did not reach the final corpus (the
-    # verified near-dup drop set): derivable from materialized stages, no
-    # re-execution of the verify join.
-    near_drop = exact_survivors - final_docs
 
     # Components materialized ONCE as a numbered stage (the q155 shape):
     # every downstream consumer — size histogram, component-keyed split,
@@ -136,8 +125,31 @@ def run(
     except Exception as e:  # noqa: BLE001
         _fail(e)
         raise
-    n_comp_docs = comp.count()
-    n_components = comp.select("component_id").distinct().count()
+    # One action reads back every stage's size: the input docs, the three
+    # materialized stages, and the components' docs and distinct labels.
+    stages = {
+        "raw_docs": load_table(spark, sf_dir, "documents"),
+        "survivors": spark.read.parquet(fs.join(stages_dir, "survivors")),
+        "candidates": spark.read.parquet(fs.join(stages_dir, "candidates")),
+        "corpus": spark.read.parquet(corpus_path),
+        "comp_docs": comp,
+    }
+    no_label = F.lit(None).cast("long").alias("component_id")
+    sizes = reduce(DataFrame.union, [
+        df.select(F.lit(name).alias("t"), "component_id" if df is comp else no_label)
+        for name, df in stages.items()
+    ]).agg(
+        *[F.count_if(F.col("t") == name).alias(name) for name in stages],
+        F.count_distinct("component_id").alias("components"),
+    ).collect()[0]
+    raw_docs, exact_survivors, lsh_candidates, final_docs, n_comp_docs = (
+        sizes[name] for name in stages
+    )
+    n_components = sizes["components"]
+    # near-drop = survivors that did not reach the final corpus (the
+    # verified near-dup drop set): derivable from materialized stages, no
+    # re-execution of the verify join.
+    near_drop = exact_survivors - final_docs
 
     metrics = [
         StageMetric("quality_exact_dedup", raw_docs, exact_survivors),
@@ -186,8 +198,6 @@ def export_training_shards(
     one distributed write; the manifest is a shard-count-sized aggregate
     computed FROM the written files, so it attests what is actually on
     disk, not what the plan intended."""
-    from pyspark.sql import functions as F
-
     from .mixing_queries import N_SHARDS, SHARD_A, SHARD_B  # noqa: F401
 
     corpus = spark.read.parquet(corpus_path)
@@ -272,7 +282,6 @@ def dsir_selection_stage(
     docs that is a ~16 GB sort of ids and weights, not of content),
     which is exactly what a production selection run pays."""
     from pyspark.sql import Window
-    from pyspark.sql import functions as F
 
     from .mixing_queries import DSIR_TARGET, dsir_scores
 

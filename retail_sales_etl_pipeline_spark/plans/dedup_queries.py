@@ -1694,13 +1694,7 @@ def q157_incremental_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # band index would; verification is per-pair, so q21's verified set
     # split by the batch predicate is exactly the old-old and
     # touches-new sets verified separately (filter and verify commute).
-    # The persist stops the distributed path's two filter branches
-    # re-running the ladder (guide §2.4).
-    pairs = (
-        q21_ngram_jaccard_pairs(spark, sf_dir)
-        .select("doc_a", "doc_b")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    pairs = q21_ngram_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b")
     return _incremental_components(spark, sf_dir, pairs)
 
 
@@ -1769,6 +1763,9 @@ def _incremental_components(
     touches_new = (F.col("doc_a") % INCR_CC_MOD == INCR_CC_REM) | (
         F.col("doc_b") % INCR_CC_MOD == INCR_CC_REM
     )
+    # the two filter branches read the pairs twice; the persist stops
+    # q157's second read re-running the LSH -> verify ladder (guide §2.4)
+    pairs = pairs.persist(StorageLevel.MEMORY_AND_DISK)
     old_pairs, new_pairs = pairs.filter(~touches_new), pairs.filter(touches_new)
     is_new = (F.col("doc_id") % INCR_CC_MOD) == INCR_CC_REM
     old_docs = docs.filter(~is_new)

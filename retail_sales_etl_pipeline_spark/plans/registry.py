@@ -81,8 +81,9 @@ def load_all() -> dict[str, Query]:
 
     CACHE CONTRACT (round-12 ADVICE): several queries persist()
     multi-consumer frames INSIDE their own DAG (q29/q140 survivors,
-    q165 items/supp, q86 cand, q157 pairs, q204 fp, q260's prefix-index
-    doc frame) and deliberately do not unpersist them — the DataFrame is
+    q165 items/supp, q86 cand, q157/q262 pairs above the small-graph
+    bound, q204 fp, q260's prefix-index doc frame) and deliberately do
+    not unpersist them — the DataFrame is
     still lazy when the query function returns, so the query cannot
     know when its consumer is done. A long-lived session running many
     registry queries should call ``spark.catalog.clearCache()`` between

@@ -62,7 +62,6 @@ def run(
     csv_path: str,
     warehouse_dir: str,
     min_rows: int = DEFAULT_MIN_ROWS,
-    timestamp_format: str | None = None,
     policy: StagePolicy = StagePolicy(),
 ) -> PipelineResult:
     # Every heavyweight stage runs under ``policy`` — the reference's
@@ -95,7 +94,7 @@ def run(
 
     # -- ingest (dag1): guard → distributed CSV scan → staging parquet ------
     check_csv_exists(spark, csv_path)
-    staged = read_retail_csv(spark, csv_path, timestamp_format)
+    staged = read_retail_csv(spark, csv_path)
     run_stage(
         spark,
         "ingest_csv",
@@ -172,14 +171,13 @@ def run(
         F.sum("total_amount").cast("decimal(38,2)").cast("string").alias("revenue"),
     ).collect()[0]
 
-    nulls = quality.null_counts(staging, ["customer_id", "description", "country"])
     quality.write_quality_log(
         spark,
         quality.quality_log_rows(
             run_id=f"run_{int(t_start)}",
             table_name="staging_online_retail",
             total_rows=cleaned_rows,
-            rows_with_nulls=max(nulls.values()),
+            rows_with_nulls=max(cleaned_res.null_counts.values()),
             rows_removed=raw_rows - cleaned_rows,
             min_rows=min_rows,
         ),

@@ -30,9 +30,7 @@ from pyspark.sql import functions as F
 from ..schemas import RETAIL_CSV_SCHEMA
 
 
-def read_retail_csv(
-    spark: SparkSession, path: str, timestamp_format: str | None = None
-) -> DataFrame:
+def read_retail_csv(spark: SparkSession, path: str) -> DataFrame:
     """CSV → typed staging DataFrame (schema per STAGING_SCHEMA)."""
     raw = (
         spark.read.schema(RETAIL_CSV_SCHEMA)
@@ -46,11 +44,7 @@ def read_retail_csv(
     # plain cast/to_timestamp THROWS on malformed input. pandas
     # errors='coerce' semantics (reference dag1_ingest_csv.py:72) = NULL on
     # failure = try_to_timestamp / try_cast.
-    ts = (
-        F.try_to_timestamp("InvoiceDate", F.lit(timestamp_format))
-        if timestamp_format
-        else F.try_to_timestamp("InvoiceDate")
-    )
+    ts = F.try_to_timestamp("InvoiceDate")
 
     # pandas float64 round-trip: "17850" → 17850.0 → "17850.0"; missing /
     # unparseable / literal-nan → NULL.

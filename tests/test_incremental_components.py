@@ -111,3 +111,14 @@ def test_driver_cutover_at_the_pair_count(spark, monkeypatch, slack):
     monkeypatch.setattr(graph, "CC_SMALL_GRAPH_MAX_EDGES", n_pairs + slack)
     assert components() == distributed
     assert driver_calls == ([n_pairs] if slack == 0 else [])
+
+
+def test_small_graph_path_persists_nothing(spark):
+    """Below the small-graph bound q157 reads its pairs once, through one
+    bounded collect, so a collect leaves no persisted frame behind; only
+    the distributed branch, which reads the pairs twice, persists them."""
+    spark.catalog.clearCache()
+    for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
+        rdd.unpersist()
+    assert q157_incremental_components(spark, SF).collect()
+    assert spark.sparkContext._jsc.getPersistentRDDs().isEmpty()

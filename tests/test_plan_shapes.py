@@ -931,3 +931,54 @@ def test_customer_attrs_sentinel_is_a_local_scan(spark):
     got = {r.customer_id: r.country for r in df.collect()}
     assert got == {"0": "UK", "1": "UK", "2": "UK",
                    UNKNOWN_CUSTOMER: UNKNOWN_CUSTOMER}
+
+
+def _staging_rows(spark):
+    from datetime import datetime
+    from decimal import Decimal
+
+    from retail_sales_etl_pipeline_spark.schemas import STAGING_SCHEMA
+
+    rows = [
+        ("1", "P1", "A", 1, datetime(2011, 3, 1, 10), Decimal("1.00"), "17850.0", "UK", 0),
+        ("2", "P2", None, 2, datetime(2011, 3, 2, 10), Decimal("2.00"), None, None, 1),
+        ("3", "P1", "B", 3, datetime(2011, 3, 2, 11), Decimal("3.00"), "UNKNOWN", None, 2),
+    ]
+    return spark.createDataFrame(rows, STAGING_SCHEMA)
+
+
+@pytest.mark.parametrize("loader", ["load_dim_product", "load_dim_customer", "load_dim_date"])
+def test_dim_load_over_existing_dim_plans_without_jobs(spark, tmp_path, loader):
+    """A dim upsert is one lazy plan: building it over an existing dim
+    launches no Spark job (the old key maximum is a window in the plan,
+    not a driver collect), so the dims stage runs one write action per
+    dim."""
+    from retail_sales_etl_pipeline_spark.operators import dims
+
+    load = getattr(dims, loader)
+    staging = _staging_rows(spark)
+    path = str(tmp_path / loader)
+    load(staging).write.parquet(path)
+    existing = spark.read.parquet(path)
+    sc = spark.sparkContext
+    group = f"dim-plan-{loader}"
+    sc.setJobGroup(group, "plan a dim upsert over an existing dim")
+    try:
+        merged = load(staging, existing)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    # the rerun over its own output keeps every key
+    assert sorted(merged.collect()) == sorted(existing.collect())
+
+
+def test_customer_attrs_sentinel_needs_no_join(spark):
+    """The UNKNOWN sentinel enters dim_customer's one aggregate, with no
+    join; a real 'UNKNOWN' customer wins over it, NULL country included,
+    and no customer id repeats."""
+    from retail_sales_etl_pipeline_spark.operators.dims import build_dim_customer_attrs
+
+    df = build_dim_customer_attrs(_staging_rows(spark))
+    assert "Join" not in _formatted_plan(df)
+    got = [(r.customer_id, r.country) for r in df.collect()]
+    assert sorted(got, key=str) == sorted([("17850.0", "UK"), ("UNKNOWN", None)], key=str)

@@ -13,11 +13,8 @@ from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from retail_sales_etl_pipeline_spark.operators.clean import clean_staging
-from retail_sales_etl_pipeline_spark.operators.dims import (
-    upsert_new_wins,
-    upsert_old_wins,
-)
+from retail_sales_etl_pipeline_spark.operators.clean import NULLABLE_COLUMNS, clean_staging
+from retail_sales_etl_pipeline_spark.operators.dims import assign_surrogate_keys
 
 # Small row universe: overlapping keys are what exercise dedup/upserts.
 _invoice = st.sampled_from(["A1", "A2", "A3", None])
@@ -87,6 +84,10 @@ def test_clean_invariants(spark, dummy, rows):
     want_metrics, want_rows = _sequential_clean(rows)
     assert [(m.stage_name, m.rows_before, m.rows_after) for m in res.metrics] == want_metrics
     assert Counter(tuple(r[c] for c in _COLUMNS) for r in out) == Counter(want_rows)
+    # the same aggregate counts the input's NULLs per nullable column
+    assert res.null_counts == {
+        c: sum(r[_COLUMNS.index(c)] is None for r in rows) for c in NULLABLE_COLUMNS
+    }
     # no NULLs in required columns, no zero qty, no non-positive price
     for r in out:
         assert r["invoice_no"] is not None and r["stock_code"] is not None
@@ -107,35 +108,50 @@ def test_clean_invariants(spark, dummy, rows):
     res.unpersist()
 
 
-_dim_rows = st.lists(
-    st.tuples(st.sampled_from(["K1", "K2", "K3", "K4"]), st.integers(0, 9)),
-    min_size=0,
-    max_size=8,
+# An existing dim: unique natural keys AND unique surrogate keys, with gaps
+# (keys need not be 1..n after earlier loads); payloads may be NULL.
+_old_dim = st.none() | st.lists(
+    st.tuples(st.integers(1, 12), st.sampled_from(["K1", "K2", "K3", "K4", "K5"]),
+              st.none() | st.integers(0, 9)),
+    max_size=5,
+    unique_by=(lambda t: t[0], lambda t: t[1]),
+)
+_new_attrs = st.lists(
+    st.tuples(st.sampled_from(["K1", "K2", "K3", "K4", "K5", "K6"]), st.none() | st.integers(0, 9)),
+    max_size=6,
     unique_by=lambda t: t[0],
 )
 
 
+def _reference_merge(old, new) -> dict:
+    """SERIAL-style upsert by hand: a known natural key keeps its key and
+    takes the new payload when the new load has the key (M1 new-wins, NULL
+    included); a new natural key gets max(old key) + its rank among the
+    new keys in natural-key order."""
+    old = old or []
+    out = {nk: (k, v) for k, nk, v in old}
+    base = max((k for k, _, _ in old), default=0)
+    new_d = dict(new)
+    for nk, v in new_d.items():
+        if nk in out:
+            out[nk] = (out[nk][0], v)
+    fresh = sorted(nk for nk in new_d if nk not in out)
+    for rank, nk in enumerate(fresh, 1):
+        out[nk] = (base + rank, new_d[nk])
+    return out
+
+
 @pytest.mark.parametrize("dummy", [0])
 @settings(max_examples=12, deadline=None, suppress_health_check=list(HealthCheck))
-@given(old=_dim_rows, new=_dim_rows)
-def test_upsert_properties(spark, dummy, old, new):
-    o = spark.createDataFrame(old, "k string, v int")
-    n = spark.createDataFrame(new, "k string, v int")
-    nw = {r["k"]: r["v"] for r in upsert_new_wins(o, n, "k").collect()}
-    ow = {r["k"]: r["v"] for r in upsert_old_wins(o, n, "k").collect()}
-    od, nd = dict(old), dict(new)
-    # M1 new-wins: union of keys, new value on conflict
-    assert nw == {**od, **nd}
-    # M2 old-wins: union of keys, old value on conflict
-    assert ow == {**nd, **od}
-    # idempotence: applying the same new twice changes nothing
-    twice = {
-        r["k"]: r["v"]
-        for r in upsert_new_wins(
-            upsert_new_wins(o, n, "k"), n, "k"
-        ).collect()
-    }
-    assert twice == nw
+@given(old=_old_dim, new=_new_attrs)
+@example(old=None, new=[("K2", 1), ("K1", None)])
+@example(old=[(7, "K3", 4), (2, "K1", 5)], new=[("K3", None), ("K2", 8), ("K4", 0)])
+def test_surrogate_key_merge_matches_reference(spark, dummy, old, new):
+    existing = None if old is None else spark.createDataFrame(old, "k int, nk string, v int")
+    n = spark.createDataFrame(new, "nk string, v int")
+    got = {r["nk"]: (r["k"], r["v"]) for r in assign_surrogate_keys(n, existing, "nk", "k").collect()}
+    assert got == _reference_merge(old, new)
+    assert len({k for k, _ in got.values()}) == len(got)
 
 
 # ---------------------------------------------------------------------------

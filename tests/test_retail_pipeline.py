@@ -115,6 +115,73 @@ def test_idempotent_rerun_preserves_surrogate_keys(spark, tmp_path):
     assert r1.total_revenue == r2.total_revenue
 
 
+def test_quality_log_counts_staging_nulls(pipeline_run):
+    """data_quality_log.rows_with_nulls is the largest per-column NULL count
+    over the nullable staging columns: 8 NULL customers (5 blank baseline
+    rows, the two 300001 duplicates, the 'nan' row); no description or
+    country is NULL."""
+    spark, _, wh, exp, res = pipeline_run
+    (row,) = spark.read.parquet(f"{wh}/data_quality_log").collect()
+    assert (row.total_rows, row.rows_with_nulls, row.rows_removed) == (
+        res.cleaned_rows, 8, exp.raw_rows - exp.after_price,
+    )
+
+
+def _write_second_load(path: str) -> None:
+    """A later extract: known products, customers and dates next to new
+    ones (P900/P901, 99999/11111, 2011-08-xx), one known product with a
+    changed description."""
+    import csv
+
+    from .retail_fixture import HEADER
+
+    rows = [
+        ["700000", "P000", "PRODUCT 0 RENAMED", "2", "2011-03-01 10:00:00", "1.50", "17850", "UK"],
+        ["700001", "P901", "NEW B", "1", "2011-08-02 10:00:00", "2.00", "99999", "Peru"],
+        ["700002", "P900", "NEW A", "3", "2011-08-01 10:00:00", "2.50", "11111", "Chile"],
+        ["700003", "P101", "OLD", "1", "2011-04-01 13:00:00", "4.00", "", "UK"],
+    ]
+    with open(path, "w", newline="") as f:
+        w = csv.writer(f)
+        w.writerow(HEADER)
+        w.writerows(rows)
+
+
+def test_upsert_keeps_keys_and_numbers_new_ones_above_max(spark, tmp_path):
+    """The paper's steady state: a second extract into the same warehouse.
+    Known natural keys keep their surrogate keys (payload new-wins), new
+    ones are numbered contiguously above the old maximum in natural-key
+    order, and every fact row of the second load joins each dim."""
+    csv1, _ = fixture_path(str(tmp_path))
+    csv2 = str(tmp_path / "second.csv")
+    _write_second_load(csv2)
+    wh = str(tmp_path / "wh")
+    dims = (("dim_product", "stock_code", "product_key"),
+            ("dim_customer", "customer_id", "customer_key"),
+            ("dim_date", "date", "date_key"))
+
+    def keys(dim, nk, key):
+        return {r[nk]: r[key] for r in spark.read.parquet(f"{wh}/{dim}").collect()}
+
+    retail_pipeline.run(spark, csv1, wh, min_rows=1)
+    before = {dim: keys(dim, nk, key) for dim, nk, key in dims}
+    res = retail_pipeline.run(spark, csv2, wh, min_rows=1)
+    fact = spark.read.parquet(f"{wh}/fact_sales")
+    assert res.fact_rows == 4
+    for dim, nk, key in dims:
+        old, new = before[dim], keys(dim, nk, key)
+        assert {k: new[k] for k in old} == old, dim
+        fresh = sorted(k for k in new if k not in old)
+        top = max(old.values())
+        assert [new[k] for k in fresh] == list(range(top + 1, top + 1 + len(fresh))), dim
+        assert ri_violations(fact, spark.read.parquet(f"{wh}/{dim}"), key) == 0
+    assert len(before["dim_product"]) + 2 == res.dim_product_rows
+    assert len(before["dim_customer"]) + 2 == res.dim_customer_rows
+    assert len(before["dim_date"]) + 2 == res.dim_date_rows
+    renamed = spark.read.parquet(f"{wh}/dim_product").filter(F.col("stock_code") == "P000")
+    assert renamed.collect()[0]["description"] == "PRODUCT 0 RENAMED"
+
+
 def test_quality_gate_raises(spark, tmp_path):
     csv_path, _ = fixture_path(str(tmp_path))
     with pytest.raises(DataQualityError):
