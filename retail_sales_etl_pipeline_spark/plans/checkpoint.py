@@ -17,7 +17,9 @@ verified embedding pairs):
 
 ``materialize_parquet`` is the rule for the common case, one frame
 written as parquet (verified text pairs, verified embedding pairs, q155's
-components).
+components); ``read_checkpoint`` reads such a checkpoint back with the
+schema it was written with. ``write_parquet`` is the same write-then-read
+for a stage a driver writes to a path of its own.
 """
 
 from __future__ import annotations
@@ -28,12 +30,15 @@ from collections.abc import Callable
 from typing import TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from ..sources import fs
 
 T = TypeVar("T")
 
 _CHECKPOINTS: dict[tuple[str, str, str], object] = {}
+# the schema each materialize_parquet checkpoint was written with, by path
+_SCHEMAS: dict[str, StructType] = {}
 
 
 def materialize_once(
@@ -64,7 +69,21 @@ def materialize_parquet(
 
     def build(ckpt: str) -> str:
         path = fs.join(ckpt, kind)
-        frame().write.mode("overwrite").parquet(path)
+        _SCHEMAS[path] = write_parquet(frame(), path).schema
         return path
 
     return materialize_once(spark, sf_dir, kind, build)
+
+
+def read_checkpoint(spark: SparkSession, path: str) -> DataFrame:
+    """The ``materialize_parquet`` checkpoint at ``path``, read with the
+    schema it was written with, so reading it runs no Spark job."""
+    return spark.read.schema(_SCHEMAS[path]).parquet(path)
+
+
+def write_parquet(df: DataFrame, path: str) -> DataFrame:
+    """Overwrite ``path`` with ``df`` and return what was written, read
+    back with ``df``'s schema: a bare ``spark.read.parquet`` runs a Spark
+    job to infer the schema from the parquet footers."""
+    df.write.mode("overwrite").parquet(path)
+    return df.sparkSession.read.schema(df.schema).parquet(path)

@@ -19,7 +19,6 @@ Run from the CLI:
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 from functools import reduce
 
@@ -29,6 +28,7 @@ from pyspark.sql import functions as F
 from ..operators.clean import StageMetric
 from ..sources import fs, load_table
 from . import metadata
+from .checkpoint import write_parquet
 from .curation_queries import curate
 from .stage_policy import StageAttempt, StagePolicy, run_stage
 
@@ -38,7 +38,6 @@ __all__ = ["CurationResult", "run", "export_training_shards"]
 @dataclass
 class CurationResult:
     raw_docs: int
-    quality_survivors: int
     exact_survivors: int
     lsh_candidates: int
     near_drop: int
@@ -62,57 +61,34 @@ def run(
     via plans.stage_policy.run_stage — a hung stage is cancelled through
     its Spark job group, a transient failure is retried, and every
     attempt lands in the ``stage_attempts`` log. Stage thunks are
-    overwrite-mode writes, so replays are idempotent. If a stage
-    exhausts its attempts, the failed run (with its attempt history) is
-    still recorded before StageFailure propagates."""
-    t_start = time.time()
-    fs.mkdirs(spark, out_dir)
-    stages_dir = fs.join(out_dir, "stages")
-    corpus_path = fs.join(out_dir, "corpus")
-    runs_path = fs.join(out_dir, "pipeline_runs")
-    metrics_path = fs.join(out_dir, "stage_metrics")
-    attempts_path = fs.join(out_dir, "stage_attempts")
-    attempts: list[StageAttempt] = []
+    overwrite-mode writes, so replays are idempotent. A failed run, with
+    its attempt history, is recorded before its error propagates."""
+    with metadata.recorded_run(spark, out_dir, "corpus_curation") as rec:
+        rec.notes = f"sf_dir={sf_dir}"
+        stages_dir = fs.join(out_dir, "stages")
 
-    def _fail(exc: Exception) -> None:
-        run_id = metadata.log_pipeline_run(
-            spark, runs_path, pipeline_name="corpus_curation",
-            status="failed", total_rows_processed=0, total_rows_loaded=0,
-            duration_minutes=(time.time() - t_start) / 60.0,
-            notes=f"sf_dir={sf_dir}; {exc}"[:500],
+        # curate() writes survivors + candidates parquet under stages_dir and
+        # returns the final frame reading FROM those stage files.
+        corpus = run_stage(
+            spark, "curate_materialize",
+            lambda: write_parquet(curate(spark, sf_dir, materialize_dir=stages_dir),
+                                  fs.join(out_dir, "corpus")),
+            policy, attempts_out=rec.attempts,
         )
-        metadata.log_stage_attempts(spark, attempts_path, run_id, attempts)
 
-    # curate() writes survivors + candidates parquet under stages_dir and
-    # returns the final frame reading FROM those stage files.
-    def _curate_stage() -> None:
-        final = curate(spark, sf_dir, materialize_dir=stages_dir)
-        final.write.mode("overwrite").parquet(corpus_path)
+        # Components materialized ONCE as a numbered stage (the q155 shape):
+        # every downstream consumer — size histogram, component-keyed split,
+        # leakage audit, drop lists — reads this parquet instead of re-running
+        # the LSH -> verify -> CC ladder. The split frame is written next to
+        # the corpus so trainers consume it directly.
+        from .dedup_queries import component_rollup, q60_neardup_components
 
-    try:
-        run_stage(spark, "curate_materialize", _curate_stage, policy,
-                  attempts_out=attempts)
-    except Exception as e:  # noqa: BLE001
-        _fail(e)
-        raise
-
-    # Components materialized ONCE as a numbered stage (the q155 shape):
-    # every downstream consumer — size histogram, component-keyed split,
-    # leakage audit, drop lists — reads this parquet instead of re-running
-    # the LSH -> verify -> CC ladder. The split frame is written next to
-    # the corpus so trainers consume it directly.
-    from .dedup_queries import component_rollup, q60_neardup_components
-
-    def _components_stage() -> str:
-        path = fs.join(stages_dir, "components")
-        q60_neardup_components(spark, sf_dir).write.mode("overwrite").parquet(path)
-        return path
-
-    try:
-        comp_path = run_stage(spark, "neardup_components",
-                              _components_stage, policy,
-                              attempts_out=attempts)
-        comp = spark.read.parquet(comp_path)
+        comp = run_stage(
+            spark, "neardup_components",
+            lambda: write_parquet(q60_neardup_components(spark, sf_dir),
+                                  fs.join(stages_dir, "components")),
+            policy, attempts_out=rec.attempts,
+        )
         run_stage(
             spark,
             "component_split_write",
@@ -120,66 +96,48 @@ def run(
             .write.mode("overwrite")
             .parquet(fs.join(out_dir, "splits")),
             policy,
-            attempts_out=attempts,
+            attempts_out=rec.attempts,
         )
-    except Exception as e:  # noqa: BLE001
-        _fail(e)
-        raise
-    # One action reads back every stage's size: the input docs, the three
-    # materialized stages, and the components' docs and distinct labels.
-    stages = {
-        "raw_docs": load_table(spark, sf_dir, "documents"),
-        "survivors": spark.read.parquet(fs.join(stages_dir, "survivors")),
-        "candidates": spark.read.parquet(fs.join(stages_dir, "candidates")),
-        "corpus": spark.read.parquet(corpus_path),
-        "comp_docs": comp,
-    }
-    no_label = F.lit(None).cast("long").alias("component_id")
-    sizes = reduce(DataFrame.union, [
-        df.select(F.lit(name).alias("t"), "component_id" if df is comp else no_label)
-        for name, df in stages.items()
-    ]).agg(
-        *[F.count_if(F.col("t") == name).alias(name) for name in stages],
-        F.count_distinct("component_id").alias("components"),
-    ).collect()[0]
-    raw_docs, exact_survivors, lsh_candidates, final_docs, n_comp_docs = (
-        sizes[name] for name in stages
-    )
-    n_components = sizes["components"]
-    # near-drop = survivors that did not reach the final corpus (the
-    # verified near-dup drop set): derivable from materialized stages, no
-    # re-execution of the verify join.
-    near_drop = exact_survivors - final_docs
-
-    metrics = [
-        StageMetric("quality_exact_dedup", raw_docs, exact_survivors),
-        StageMetric("lsh_candidates", exact_survivors, lsh_candidates),
-        StageMetric("neardup_verify_drop", exact_survivors, final_docs),
-        StageMetric("neardup_components", n_comp_docs, n_components),
-    ]
-    run_id = metadata.log_pipeline_run(
-        spark,
-        runs_path,
-        pipeline_name="corpus_curation",
-        status="success",
-        total_rows_processed=raw_docs,
-        total_rows_loaded=final_docs,
-        duration_minutes=(time.time() - t_start) / 60.0,
-        notes=f"sf_dir={sf_dir}",
-    )
-    metadata.log_stage_metrics(spark, metrics_path, run_id, metrics)
-    metadata.log_stage_attempts(spark, attempts_path, run_id, attempts)
+        # One action reads back every stage's size: the input docs, the three
+        # materialized stages, and the components' docs and distinct labels.
+        stages = {
+            "raw_docs": load_table(spark, sf_dir, "documents"),
+            "survivors": spark.read.parquet(fs.join(stages_dir, "survivors")),
+            "candidates": spark.read.parquet(fs.join(stages_dir, "candidates")),
+            "corpus": corpus,
+            "comp_docs": comp,
+        }
+        no_label = F.lit(None).cast("long").alias("component_id")
+        sizes = reduce(DataFrame.union, [
+            df.select(F.lit(name).alias("t"), "component_id" if df is comp else no_label)
+            for name, df in stages.items()
+        ]).agg(
+            *[F.count_if(F.col("t") == name).alias(name) for name in stages],
+            F.count_distinct("component_id").alias("components"),
+        ).collect()[0]
+        raw_docs, exact_survivors, lsh_candidates, final_docs, n_comp_docs = (
+            sizes[name] for name in stages
+        )
+        rec.rows_processed, rec.rows_loaded = raw_docs, final_docs
+        rec.metrics = [
+            StageMetric("quality_exact_dedup", raw_docs, exact_survivors),
+            StageMetric("lsh_candidates", exact_survivors, lsh_candidates),
+            StageMetric("neardup_verify_drop", exact_survivors, final_docs),
+            StageMetric("neardup_components", n_comp_docs, sizes["components"]),
+        ]
 
     return CurationResult(
         raw_docs=raw_docs,
-        quality_survivors=exact_survivors,
         exact_survivors=exact_survivors,
         lsh_candidates=lsh_candidates,
-        near_drop=near_drop,
+        # near-drop = survivors that did not reach the final corpus (the
+        # verified near-dup drop set): derivable from materialized stages, no
+        # re-execution of the verify join.
+        near_drop=exact_survivors - final_docs,
         final_docs=final_docs,
-        run_id=run_id,
-        stage_metrics=metrics,
-        stage_attempts=attempts,
+        run_id=rec.run_id,
+        stage_metrics=rec.metrics,
+        stage_attempts=rec.attempts,
     )
 
 
@@ -234,27 +192,6 @@ def export_training_shards(
     return spark.read.parquet(manifest_path)
 
 
-def _main() -> None:
-    import sys
-
-    from ..session import get_spark
-
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    out_dir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/curation_warehouse"
-    spark = get_spark("curation-pipeline")
-    res = run(spark, sf_dir, out_dir)
-    print(
-        f"curation: {res.raw_docs} docs -> {res.exact_survivors} after "
-        f"quality+exact dedup -> {res.final_docs} final "
-        f"({res.near_drop} near-dups dropped from {res.lsh_candidates} "
-        f"LSH candidates); run_id={res.run_id} out={out_dir}"
-    )
-
-
-if __name__ == "__main__":
-    _main()
-
-
 def dsir_selection_stage(
     spark: SparkSession,
     sf_dir: str,
@@ -289,8 +226,9 @@ def dsir_selection_stage(
     docs = load_table(spark, sf_dir, "documents")
     scores = dsir_scores(docs)
     cand = corpus_ids.join(scores, "doc_id")
-    n_corpus = corpus_ids.count()
-    n_cand = cand.count()
+    n_corpus, n_cand = corpus_ids.join(
+        scores.select("doc_id", F.lit(1).alias("scored")), "doc_id", "left"
+    ).agg(F.count(F.lit(1)), F.count("scored")).collect()[0]
     k = n_cand * keep_ppm // 1_000_000
     w = Window.orderBy(F.col("logw_micronat").desc(), "doc_id")
     kept_cand = (
@@ -304,13 +242,35 @@ def dsir_selection_stage(
             "doc_id",
         ).select("doc_id", F.lit(None).cast("long").alias("logw_micronat"))
     )
-    kept_cand.unionByName(target_kept).write.mode("overwrite").parquet(out_path)
-    written = spark.read.parquet(out_path)
-    n_target = written.filter(F.col("logw_micronat").isNull()).count()
+    written = write_parquet(kept_cand.unionByName(target_kept), out_path)
+    n_written, n_target = written.agg(
+        F.count(F.lit(1)), F.count_if(F.col("logw_micronat").isNull())
+    ).collect()[0]
     return {
         "n_corpus": n_corpus,
         "n_candidates": n_cand,
         "k_selected": k,
         "n_target_kept": n_target,
-        "n_written": written.count(),
+        "n_written": n_written,
     }
+
+
+def _main() -> None:
+    import sys
+
+    from ..session import get_spark
+
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    out_dir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/curation_warehouse"
+    spark = get_spark("curation-pipeline")
+    res = run(spark, sf_dir, out_dir)
+    print(
+        f"curation: {res.raw_docs} docs -> {res.exact_survivors} after "
+        f"quality+exact dedup -> {res.final_docs} final "
+        f"({res.near_drop} near-dups dropped from {res.lsh_candidates} "
+        f"LSH candidates); run_id={res.run_id} out={out_dir}"
+    )
+
+
+if __name__ == "__main__":
+    _main()

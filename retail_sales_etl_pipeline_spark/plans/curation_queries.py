@@ -25,6 +25,7 @@ from ..operators.text import (
     token_ngrams_duck,
 )
 from ..sources import load_table
+from .checkpoint import write_parquet
 from .dedup_queries import _DUCK_CAND_CTE, minhash_candidates
 from .registry import register
 from .text_queries import _DUCK_SCORES, _predict_expr, _SPARK_SCORES
@@ -204,16 +205,14 @@ def curate(
             "doc_id", "predicted_lang", "content_fp"
         )
 
-    surv_path = materialize_dir.rstrip("/") + "/survivors"
-    cand_path = materialize_dir.rstrip("/") + "/candidates"
-    _featurized_survivors(docs, row_counter=row_counter).write.mode(
-        "overwrite"
-    ).parquet(surv_path)
-    survivors = spark.read.parquet(surv_path)
-    _survivor_candidates(docs, survivors, row_counter=row_counter).write.mode(
-        "overwrite"
-    ).parquet(cand_path)
-    cand = spark.read.parquet(cand_path)
+    stage = materialize_dir.rstrip("/")
+    survivors = write_parquet(
+        _featurized_survivors(docs, row_counter=row_counter), stage + "/survivors"
+    )
+    cand = write_parquet(
+        _survivor_candidates(docs, survivors, row_counter=row_counter),
+        stage + "/candidates",
+    )
     near_drop = _verified_near_drop(cand, docs)
     return survivors.join(near_drop, "doc_id", "left_anti").select(
         "doc_id", "predicted_lang", "content_fp"

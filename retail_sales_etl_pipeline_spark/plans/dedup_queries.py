@@ -40,7 +40,7 @@ from ..operators.text import (
     token_ngrams_ws_expr,
 )
 from ..sources import load_table
-from .checkpoint import materialize_once, materialize_parquet
+from .checkpoint import materialize_once, materialize_parquet, read_checkpoint
 from .registry import register
 
 NEARDUP_JACCARD = 0.3
@@ -301,15 +301,13 @@ def _scored_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     list_intersect/list_distinct sizes, identical IEEE division."""
     from ..operators.text import jaccard_pairs
 
-    cand = _spark_candidates(spark, sf_dir).select("doc_a", "doc_b")
-    # fan_out on the verify side: without it the joined pair stream
-    # inherits AQE's coalesced (often single) partition and the Jaccard
-    # runs one-core
-    docs = (
-        load_table(spark, sf_dir, "documents", fan_out=True)
-        .filter(F.size(F.split("text", " ")) >= 3)
-        .select("doc_id", "text")
-    )
+    # one fanned-out read feeds both sides (each read of the corpus infers
+    # its schema in a Spark job). fan_out on the verify side: without it
+    # the joined pair stream inherits AQE's coalesced (often single)
+    # partition and the Jaccard runs one-core
+    corpus = load_table(spark, sf_dir, "documents", fan_out=True)
+    cand = minhash_candidates(corpus).select("doc_a", "doc_b")
+    docs = corpus.filter(F.size(F.split("text", " ")) >= 3).select("doc_id", "text")
     a = docs.select(F.col("doc_id").alias("doc_a"), F.col("text").alias("text_a"))
     b = docs.select(F.col("doc_id").alias("doc_b"), F.col("text").alias("text_b"))
     return jaccard_pairs(cand.join(a, "doc_a").join(b, "doc_b"))
@@ -1644,7 +1642,7 @@ def q155_component_reuse_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "components",
         lambda: q60_neardup_components(spark, sf_dir),
     )
-    return component_rollup(spark.read.parquet(path))
+    return component_rollup(read_checkpoint(spark, path))
 
 
 # Incremental CC: which doc_ids count as "the new batch" (every 7th doc,
@@ -2591,7 +2589,7 @@ def materialize_verified_pairs(spark: SparkSession, sf_dir: str) -> str:
 
 
 def _materialized_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(materialize_verified_pairs(spark, sf_dir))
+    return read_checkpoint(spark, materialize_verified_pairs(spark, sf_dir))
 
 
 @register(

@@ -1,14 +1,19 @@
 """Run metadata: pipeline_runs / stage_metrics / recent_pipeline_runs
 (reference scripts/metadata_tracker.py + schema/metadata_schema.sql).
 
-Append-only parquet logs (M6). ``recent_pipeline_runs`` (the reference's
-only VIEW, metadata_schema.sql:23-34) is the O1 top-k pattern:
-ORDER BY ... DESC LIMIT 10 → Spark plans TakeOrderedAndProject.
+Append-only parquet logs (M6). ``recorded_run`` is the one rule both
+pipeline drivers record a run through, failed runs included.
+``recent_pipeline_runs`` (the reference's only VIEW,
+metadata_schema.sql:23-34) is the O1 top-k pattern: ORDER BY ... DESC
+LIMIT 10 → Spark plans TakeOrderedAndProject.
 """
 
 from __future__ import annotations
 
 import time
+from collections.abc import Iterator
+from contextlib import contextmanager
+from dataclasses import asdict, dataclass, field
 from decimal import Decimal
 
 from pyspark.sql import DataFrame, SparkSession
@@ -69,16 +74,7 @@ def log_stage_metrics(
 ) -> None:
     """Append stage_metrics rows (reference metadata_tracker.py:92-135);
     accepts operators.clean.StageMetric instances."""
-    rows = [
-        {
-            "run_id": run_id,
-            "stage_name": m.stage_name,
-            "rows_before": m.rows_before,
-            "rows_after": m.rows_after,
-            "rows_removed": m.rows_removed,
-        }
-        for m in metrics
-    ]
+    rows = [{"run_id": run_id, **asdict(m), "rows_removed": m.rows_removed} for m in metrics]
     append_log(spark, path, rows, STAGE_METRICS_SCHEMA)
 
 
@@ -101,15 +97,49 @@ def log_stage_attempts(
     """Append stage-attempt rows (the timeout/retry policy's audit trail —
     reference dag1_ingest_csv.py:20-22 execution_timeout/retries made
     observable). Accepts plans.stage_policy.StageAttempt instances."""
-    rows = [
-        {
-            "run_id": run_id,
-            "stage_name": a.stage_name,
-            "attempt": a.attempt,
-            "status": a.status,
-            "seconds": float(a.seconds),
-            "error": a.error,
-        }
-        for a in attempts
-    ]
+    rows = [{"run_id": run_id, **asdict(a)} for a in attempts]
     append_log(spark, path, rows, STAGE_ATTEMPTS_SCHEMA)
+
+
+@dataclass
+class RunRecord:
+    """A run as ``recorded_run`` logs it: the driver passes ``attempts`` to
+    ``run_stage`` and fills in the counts, notes and metrics it knows."""
+
+    started: float = field(default_factory=time.time)
+    attempts: list = field(default_factory=list)
+    metrics: list = field(default_factory=list)
+    rows_processed: int = 0
+    rows_loaded: int = 0
+    notes: str = ""
+    run_id: int = 0
+
+
+@contextmanager
+def recorded_run(
+    spark: SparkSession, out_dir: str, pipeline_name: str
+) -> Iterator[RunRecord]:
+    """Log the body's run under ``out_dir``: on exit one ``pipeline_runs``
+    row and the run's ``stage_attempts``, plus its ``stage_metrics`` on
+    success. An exception is logged as a ``failed`` row with the error in
+    its notes (500 characters at most), then re-raised."""
+    fs.mkdirs(spark, out_dir)
+    run = RunRecord()
+
+    def write(status: str) -> None:
+        run.run_id = log_pipeline_run(
+            spark, fs.join(out_dir, "pipeline_runs"), pipeline_name, status,
+            run.rows_processed, run.rows_loaded,
+            (time.time() - run.started) / 60.0, run.notes,
+        )
+        if status == "success":
+            log_stage_metrics(spark, fs.join(out_dir, "stage_metrics"), run.run_id, run.metrics)
+        log_stage_attempts(spark, fs.join(out_dir, "stage_attempts"), run.run_id, run.attempts)
+
+    try:
+        yield run
+    except Exception as exc:
+        run.notes = "; ".join(filter(None, (run.notes, f"{type(exc).__name__}: {exc}")))[:500]
+        write("failed")
+        raise
+    write("success")

@@ -20,7 +20,7 @@ from ..operators.similarity import (
     rp_buckets_pandas,
 )
 from ..sources import load_table
-from .checkpoint import materialize_parquet
+from .checkpoint import materialize_parquet, read_checkpoint
 from .registry import register
 
 N_QUERIES = 5  # query set = vec_id < 5
@@ -3109,5 +3109,5 @@ def q271_embedding_components_materialized(
 ) -> DataFrame:
     return embedding_components(
         load_table(spark, sf_dir, "embeddings"),
-        spark.read.parquet(materialize_embedding_pairs(spark, sf_dir)),
+        read_checkpoint(spark, materialize_embedding_pairs(spark, sf_dir)),
     )

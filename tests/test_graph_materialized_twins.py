@@ -4,6 +4,8 @@ checkpoint must be paid once per (session, corpus)."""
 
 from __future__ import annotations
 
+import pytest
+
 from retail_sales_etl_pipeline_spark.plans import checkpoint
 from retail_sales_etl_pipeline_spark.plans import dedup_queries as dq
 
@@ -124,6 +126,37 @@ def _plan_jobs_over_reused_index(spark, query) -> list:
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _text_pairs(spark):
+    path = dq.materialize_verified_pairs(spark, SF)
+    return path, lambda: dq._materialized_pairs(spark, SF)
+
+
+def _embedding_pairs(spark):
+    from retail_sales_etl_pipeline_spark.plans import similarity_queries as sq
+
+    path = sq.materialize_embedding_pairs(spark, SF)
+    return path, lambda: checkpoint.read_checkpoint(spark, path)
+
+
+@pytest.mark.parametrize("built", [_text_pairs, _embedding_pairs])
+def test_built_pair_checkpoint_reads_without_jobs(spark, built):
+    """A built pair checkpoint is read back with the schema it was written
+    with: reading it launches no Spark job (no footer-inference job), and
+    it reads the same schema and rows as an inferring read."""
+    path, read = built(spark)
+    sc = spark.sparkContext
+    group = f"read-built-checkpoint-{built.__name__}"
+    sc.setJobGroup(group, "read a built pair checkpoint")
+    try:
+        pairs = read()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    inferred = spark.read.parquet(path)
+    assert pairs.schema == inferred.schema
+    assert _rows(pairs) == _rows(inferred)
 
 
 def test_reused_prefix_report_plans_without_jobs(spark):

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from retail_sales_etl_pipeline_spark.operators.clean import clean_staging
 from retail_sales_etl_pipeline_spark.operators.fact import ri_violations
-from retail_sales_etl_pipeline_spark.plans import retail_pipeline
+from retail_sales_etl_pipeline_spark.plans import metadata, retail_pipeline
 from retail_sales_etl_pipeline_spark.plans.quality import DataQualityError
 from retail_sales_etl_pipeline_spark.sources.retail_csv import read_retail_csv
 
@@ -182,15 +182,36 @@ def test_upsert_keeps_keys_and_numbers_new_ones_above_max(spark, tmp_path):
     assert renamed.collect()[0]["description"] == "PRODUCT 0 RENAMED"
 
 
+def _failed_run(spark, wh: str, error) -> int:
+    """The warehouse's one run row: ``failed``, with ``error`` in its
+    notes (read through the recent_pipeline_runs view). Returns its
+    run_id."""
+    (row,) = metadata.recent_pipeline_runs(spark, f"{wh}/pipeline_runs").collect()
+    assert row.status == "failed"
+    assert row.pipeline_name == "retail_sales_etl"
+    assert str(error) in row.notes
+    return row.run_id
+
+
 def test_quality_gate_raises(spark, tmp_path):
+    """A run that fails the row gate still leaves its record: one failed
+    run row, and the ingest attempt it made under that run_id."""
     csv_path, _ = fixture_path(str(tmp_path))
-    with pytest.raises(DataQualityError):
-        retail_pipeline.run(spark, csv_path, str(tmp_path / "wh2"), min_rows=400_000)
+    wh = str(tmp_path / "wh2")
+    with pytest.raises(DataQualityError) as ei:
+        retail_pipeline.run(spark, csv_path, wh, min_rows=400_000)
+    run_id = _failed_run(spark, wh, ei.value)
+    attempts = spark.read.parquet(f"{wh}/stage_attempts").collect()
+    assert [(r.run_id, r.stage_name, r.status) for r in attempts] == [
+        (run_id, "ingest_csv", "success")
+    ]
 
 
 def test_missing_csv_raises(spark, tmp_path):
-    with pytest.raises(FileNotFoundError):
-        retail_pipeline.run(spark, str(tmp_path / "nope.csv"), str(tmp_path / "wh3"))
+    wh = str(tmp_path / "wh3")
+    with pytest.raises(FileNotFoundError) as ei:
+        retail_pipeline.run(spark, str(tmp_path / "nope.csv"), wh)
+    _failed_run(spark, wh, ei.value)
 
 
 def test_clean_idempotent(spark, tmp_path):
@@ -218,3 +239,6 @@ def test_retail_driver_records_stage_attempts(pipeline_run):
     assert {(r.stage_name, r.attempt, r.status) for r in logged} >= {
         (a.stage_name, a.attempt, a.status) for a in res.stage_attempts
     }
+    (run,) = spark.read.parquet(f"{wh}/pipeline_runs").collect()
+    assert (run.run_id, run.status) == (res.run_id, "success")
+    assert run.notes == f"revenue={res.total_revenue}"

@@ -109,6 +109,13 @@ def test_timeout_cancels_pool_thread_spark_job(spark, tmp_path, monkeypatch):
     assert [a.status for a in dims] == ["timeout"]
     # the pool thread's 60s sleep was cancelled, not waited out
     assert dims[0].seconds < 45
+    # the failed run is recorded with its timed-out attempt
+    (run,) = spark.read.parquet(str(tmp_path / "wh" / "pipeline_runs")).collect()
+    assert run.status == "failed" and "dim_upserts" in run.notes
+    logged = spark.read.parquet(str(tmp_path / "wh" / "stage_attempts")).collect()
+    assert (run.run_id, "dim_upserts", "timeout") in {
+        (r.run_id, r.stage_name, r.status) for r in logged
+    }
 
 
 def test_curation_driver_logs_attempts(spark, tmp_path):
@@ -126,3 +133,26 @@ def test_curation_driver_logs_attempts(spark, tmp_path):
         (a.stage_name, a.attempt, a.status) for a in res.stage_attempts
     }
     assert all(r.run_id == res.run_id for r in logged)
+
+
+def test_curation_failure_outside_a_stage_is_recorded(spark, tmp_path, monkeypatch):
+    """A curation run that fails after its stages, in the stage-size
+    read-back, still leaves one failed run row carrying the error, and the
+    attempts of the stages it ran under that run_id."""
+    from retail_sales_etl_pipeline_spark.plans import curation_pipeline
+
+    def broken_read(*args, **kwargs):
+        raise OSError("documents unreadable")
+
+    monkeypatch.setattr(curation_pipeline, "load_table", broken_read)
+    out = str(tmp_path / "wh")
+    with pytest.raises(OSError, match="documents unreadable"):
+        curation_pipeline.run(spark, SF, out)
+    (run,) = spark.read.parquet(f"{out}/pipeline_runs").collect()
+    assert run.status == "failed"
+    assert run.notes == f"sf_dir={SF}; OSError: documents unreadable"
+    logged = spark.read.parquet(f"{out}/stage_attempts").collect()
+    assert {(r.run_id, r.stage_name, r.status) for r in logged} == {
+        (run.run_id, stage, "success")
+        for stage in ("curate_materialize", "neardup_components", "component_split_write")
+    }
