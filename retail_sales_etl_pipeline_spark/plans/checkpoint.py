@@ -17,9 +17,9 @@ verified embedding pairs):
 
 ``materialize_parquet`` is the rule for the common case, one frame
 written as parquet (verified text pairs, verified embedding pairs, q155's
-components); ``read_checkpoint`` reads such a checkpoint back with the
-schema it was written with. ``write_parquet`` is the same write-then-read
-for a stage a driver writes to a path of its own.
+components). ``write_parquet`` writes and reads back every such frame,
+and every stage a driver writes to a path of its own; ``read_checkpoint``
+reads what it wrote back with the schema it was written with.
 """
 
 from __future__ import annotations
@@ -37,7 +37,7 @@ from ..sources import fs
 T = TypeVar("T")
 
 _CHECKPOINTS: dict[tuple[str, str, str], object] = {}
-# the schema each materialize_parquet checkpoint was written with, by path
+# the schema each write_parquet output was written with, by path
 _SCHEMAS: dict[str, StructType] = {}
 
 
@@ -69,15 +69,16 @@ def materialize_parquet(
 
     def build(ckpt: str) -> str:
         path = fs.join(ckpt, kind)
-        _SCHEMAS[path] = write_parquet(frame(), path).schema
+        write_parquet(frame(), path)
         return path
 
     return materialize_once(spark, sf_dir, kind, build)
 
 
 def read_checkpoint(spark: SparkSession, path: str) -> DataFrame:
-    """The ``materialize_parquet`` checkpoint at ``path``, read with the
-    schema it was written with, so reading it runs no Spark job."""
+    """The parquet ``write_parquet`` wrote at ``path`` in this process,
+    read with the schema it was written with, so reading it runs no Spark
+    job."""
     return spark.read.schema(_SCHEMAS[path]).parquet(path)
 
 
@@ -86,4 +87,5 @@ def write_parquet(df: DataFrame, path: str) -> DataFrame:
     back with ``df``'s schema: a bare ``spark.read.parquet`` runs a Spark
     job to infer the schema from the parquet footers."""
     df.write.mode("overwrite").parquet(path)
-    return df.sparkSession.read.schema(df.schema).parquet(path)
+    _SCHEMAS[path] = df.schema
+    return read_checkpoint(df.sparkSession, path)

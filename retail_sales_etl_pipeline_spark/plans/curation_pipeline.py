@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from ..operators.clean import StageMetric
 from ..sources import fs, load_table
 from . import metadata
-from .checkpoint import write_parquet
+from .checkpoint import read_checkpoint, write_parquet
 from .curation_queries import curate
 from .stage_policy import StageAttempt, StagePolicy, run_stage
 
@@ -102,8 +102,8 @@ def run(
         # materialized stages, and the components' docs and distinct labels.
         stages = {
             "raw_docs": load_table(spark, sf_dir, "documents"),
-            "survivors": spark.read.parquet(fs.join(stages_dir, "survivors")),
-            "candidates": spark.read.parquet(fs.join(stages_dir, "candidates")),
+            "survivors": read_checkpoint(spark, fs.join(stages_dir, "survivors")),
+            "candidates": read_checkpoint(spark, fs.join(stages_dir, "candidates")),
             "corpus": corpus,
             "comp_docs": comp,
         }

@@ -24,10 +24,10 @@ from ..operators.text import (
     poly_hash_pair,
     token_ngrams_duck,
 )
-from ..sources import load_table
+from ..sources import fs, load_table
 from .checkpoint import write_parquet
-from .dedup_queries import _DUCK_CAND_CTE, minhash_candidates
-from .registry import register
+from .dedup_queries import _DUCK_CAND_CTE, minhash_candidates, pair_sides
+from .registry import oracle_of, register
 from .text_queries import _DUCK_SCORES, _predict_expr, _SPARK_SCORES
 
 CURATION_JACCARD = 0.3
@@ -141,15 +141,8 @@ def _survivor_candidates(
 def _verified_pairs(cand: DataFrame, docs: DataFrame) -> DataFrame:
     """Stage E: trigram-Jaccard verification of the candidate pairs."""
     texts = docs.filter(F.size(F.split("text", " ")) >= 3)
-    pairs = cand.join(
-        texts.select(F.col("doc_id").alias("doc_a"), F.col("text").alias("text_a")),
-        "doc_a",
-    ).join(
-        texts.select(F.col("doc_id").alias("doc_b"), F.col("text").alias("text_b")),
-        "doc_b",
-    )
     return (
-        jaccard_pairs(pairs)
+        jaccard_pairs(pair_sides(cand, texts, "text"))
         .filter(F.col("jaccard") >= CURATION_JACCARD)
         .select("doc_a", "doc_b")
     )
@@ -205,13 +198,13 @@ def curate(
             "doc_id", "predicted_lang", "content_fp"
         )
 
-    stage = materialize_dir.rstrip("/")
     survivors = write_parquet(
-        _featurized_survivors(docs, row_counter=row_counter), stage + "/survivors"
+        _featurized_survivors(docs, row_counter=row_counter),
+        fs.join(materialize_dir, "survivors"),
     )
     cand = write_parquet(
         _survivor_candidates(docs, survivors, row_counter=row_counter),
-        stage + "/candidates",
+        fs.join(materialize_dir, "candidates"),
     )
     near_drop = _verified_near_drop(cand, docs)
     return survivors.join(near_drop, "doc_id", "left_anti").select(
@@ -343,18 +336,12 @@ def q93_source_doc_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q29_oracle() -> str:
-    from .registry import QUERIES
-
-    return QUERIES["q29_corpus_curation"].oracle
-
-
 @register(
     "q140_curation_mix_shift",
     # q29's full oracle is spliced in as the survivor set — the mix report
     # audits the exact curation it ships with, not a re-derivation.
     oracle=f"""
-    WITH survivors AS ({_q29_oracle()}),
+    WITH survivors AS ({oracle_of("q29_corpus_curation")}),
     before AS (
       SELECT source, CAST(COUNT(*) AS BIGINT) AS n_before
       FROM documents GROUP BY source

@@ -41,7 +41,7 @@ from ..operators.text import (
 )
 from ..sources import load_table
 from .checkpoint import materialize_once, materialize_parquet, read_checkpoint
-from .registry import register
+from .registry import oracle_of, register
 
 NEARDUP_JACCARD = 0.3
 
@@ -157,6 +157,23 @@ _DUCK_CAND_CTE = f"""
     )
 """
 
+# The verified-pair relation (q21's pairs, without the score) as CTEs
+# ``cand``, ``d`` and ``verified``: every oracle over the verified near-dup
+# graph starts ``WITH [RECURSIVE] {_DUCK_VERIFIED_PRELUDE},``.
+_DUCK_VERIFIED_PRELUDE = f"""{_DUCK_CAND_CTE},
+    d AS (
+      SELECT doc_id, {token_ngrams_duck("text", 3)} AS tg
+      FROM documents
+      WHERE len(string_split(text, ' ')) >= 3
+    ),
+    verified AS (
+      SELECT c.doc_a, c.doc_b
+      FROM cand c JOIN d a ON a.doc_id = c.doc_a JOIN d b ON b.doc_id = c.doc_b
+      WHERE CAST(len(list_intersect(a.tg, b.tg)) AS DOUBLE)
+              / CAST(len(list_distinct(a.tg || b.tg)) AS DOUBLE)
+            >= {NEARDUP_JACCARD}
+    )"""
+
 
 def minhash_band_rows(docs: DataFrame, row_counter=None) -> DataFrame:
     """(doc_id, band_idx, sig): one row per document per LSH band.
@@ -219,10 +236,28 @@ def minhash_candidates(
     )
 
 
-def _spark_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # fan_out: the Arrow signature computation + banding is real per-doc
-    # compute — measured 2x on the whole candidate ladder (q21 2.1→1.5)
-    return minhash_candidates(load_table(spark, sf_dir, "documents", fan_out=True))
+def pair_sides(pairs: DataFrame, docs: DataFrame, *cols: str) -> DataFrame:
+    """``pairs`` with each of ``docs``' ``cols`` joined onto both ends of
+    the pair, as ``<col>_a`` (of ``doc_a``) and ``<col>_b`` (of ``doc_b``).
+    Rungs that score candidates pass the corpus frame their candidates
+    came from, so the ladder reads the corpus once."""
+    a = docs.select(
+        F.col("doc_id").alias("doc_a"), *[F.col(c).alias(f"{c}_a") for c in cols]
+    )
+    b = docs.select(
+        F.col("doc_id").alias("doc_b"), *[F.col(c).alias(f"{c}_b") for c in cols]
+    )
+    return pairs.join(a, "doc_a").join(b, "doc_b")
+
+
+def _ladder_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The one read of ``documents`` that a ladder query's candidates and
+    pair sides share (each read of the corpus infers its schema in a Spark
+    job). fan_out: the Arrow signature pass is real per-doc compute —
+    measured 2x on the whole candidate ladder (q21 2.1→1.5) — and without
+    it the joined pair stream inherits AQE's coalesced (often single)
+    partition, so the verify runs one-core."""
+    return load_table(spark, sf_dir, "documents", fan_out=True)
 
 
 @register(
@@ -243,7 +278,7 @@ def _spark_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dedup", "lsh", "pandas-udf"),
 )
 def q22_minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _spark_candidates(spark, sf_dir)
+    return minhash_candidates(_ladder_corpus(spark, sf_dir))
 
 
 _TG_DUCK = token_ngrams_duck("text", 3)
@@ -289,46 +324,30 @@ def _tg_docs(docs: DataFrame) -> DataFrame:
     tags=("dedup", "join"),
 )
 def q21_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _scored_candidates(spark, sf_dir).filter(
-        F.col("jaccard") >= NEARDUP_JACCARD
-    )
+    return _verified(_ladder_corpus(spark, sf_dir))
 
 
-def _scored_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _scored_candidates(corpus: DataFrame) -> DataFrame:
     """(doc_a, doc_b, jaccard): the exact trigram Jaccard of every LSH
-    candidate pair whose docs both have >= 3 words — native expressions
-    (operators.text.jaccard_pairs): identical integers to the oracle's
-    list_intersect/list_distinct sizes, identical IEEE division."""
+    candidate pair of ``corpus`` whose docs both have >= 3 words — native
+    expressions (operators.text.jaccard_pairs): identical integers to the
+    oracle's list_intersect/list_distinct sizes, identical IEEE division."""
     from ..operators.text import jaccard_pairs
 
-    # one fanned-out read feeds both sides (each read of the corpus infers
-    # its schema in a Spark job). fan_out on the verify side: without it
-    # the joined pair stream inherits AQE's coalesced (often single)
-    # partition and the Jaccard runs one-core
-    corpus = load_table(spark, sf_dir, "documents", fan_out=True)
     cand = minhash_candidates(corpus).select("doc_a", "doc_b")
     docs = corpus.filter(F.size(F.split("text", " ")) >= 3).select("doc_id", "text")
-    a = docs.select(F.col("doc_id").alias("doc_a"), F.col("text").alias("text_a"))
-    b = docs.select(F.col("doc_id").alias("doc_b"), F.col("text").alias("text_b"))
-    return jaccard_pairs(cand.join(a, "doc_a").join(b, "doc_b"))
+    return jaccard_pairs(pair_sides(cand, docs, "text"))
+
+
+def _verified(corpus: DataFrame) -> DataFrame:
+    """q21's verified pairs of ``corpus``: (doc_a, doc_b, jaccard)."""
+    return _scored_candidates(corpus).filter(F.col("jaccard") >= NEARDUP_JACCARD)
 
 
 @register(
     "q60_neardup_components",
     oracle=f"""
-    WITH RECURSIVE {_DUCK_CAND_CTE},
-    d AS (
-      SELECT doc_id, {token_ngrams_duck("text", 3)} AS tg
-      FROM documents
-      WHERE len(string_split(text, ' ')) >= 3
-    ),
-    verified AS (
-      SELECT c.doc_a, c.doc_b
-      FROM cand c JOIN d a ON a.doc_id = c.doc_a JOIN d b ON b.doc_id = c.doc_b
-      WHERE CAST(len(list_intersect(a.tg, b.tg)) AS DOUBLE)
-              / CAST(len(list_distinct(a.tg || b.tg)) AS DOUBLE)
-            >= {NEARDUP_JACCARD}
-    ),
+    WITH RECURSIVE {_DUCK_VERIFIED_PRELUDE},
     edges AS (
       SELECT doc_a AS src, doc_b AS dst FROM verified
       UNION ALL
@@ -627,19 +646,7 @@ def q23_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q79_cross_source_contamination",
     oracle=f"""
-    WITH {_DUCK_CAND_CTE},
-    d AS (
-      SELECT doc_id, {_TG_DUCK} AS tg
-      FROM documents
-      WHERE len(string_split(text, ' ')) >= 3
-    ),
-    verified AS (
-      SELECT c.doc_a, c.doc_b
-      FROM cand c JOIN d a ON a.doc_id = c.doc_a JOIN d b ON b.doc_id = c.doc_b
-      WHERE CAST(len(list_intersect(a.tg, b.tg)) AS DOUBLE)
-              / CAST(len(list_distinct(a.tg || b.tg)) AS DOUBLE)
-            >= {NEARDUP_JACCARD}
-    )
+    WITH {_DUCK_VERIFIED_PRELUDE}
     SELECT least(sa.source, sb.source) AS source_x,
            greatest(sa.source, sb.source) AS source_y,
            CAST(COUNT(*) AS BIGINT) AS n_pairs,
@@ -662,16 +669,13 @@ def q23_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dedup", "profiling"),
 )
 def q79_cross_source_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = q21_ngram_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    src = load_table(spark, sf_dir, "documents").select("doc_id", "source")
-    sa = src.select(F.col("doc_id").alias("doc_a"), F.col("source").alias("src_a"))
-    sb = src.select(F.col("doc_id").alias("doc_b"), F.col("source").alias("src_b"))
+    corpus = _ladder_corpus(spark, sf_dir)
+    pairs = _verified(corpus).select("doc_a", "doc_b")
     return (
-        pairs.join(sa, "doc_a")
-        .join(sb, "doc_b")
+        pair_sides(pairs, corpus, "source")
         .groupBy(
-            F.least("src_a", "src_b").alias("source_x"),
-            F.greatest("src_a", "src_b").alias("source_y"),
+            F.least("source_a", "source_b").alias("source_x"),
+            F.greatest("source_a", "source_b").alias("source_y"),
         )
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_pairs"),
@@ -1025,43 +1029,26 @@ _MH_DUCK_COMPONENTS = minhash_sig_expr("text", 5)[1]
 def q86_minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.text import jaccard_pairs, minhash_components_pandas
 
-    docs = load_table(spark, sf_dir, "documents", fan_out=True)
+    docs = _ladder_corpus(spark, sf_dir)
     # two consumers below (the estimate join and the exact-audit join)
     # would otherwise each re-run the LSH candidate subtree
     cand = (
-        _spark_candidates(spark, sf_dir)
+        minhash_candidates(docs)
         .select("doc_a", "doc_b")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    comps = minhash_components_pandas(docs)
     n_perms = len(MINHASH_PERMS)
-    ca = comps.select(
-        F.col("doc_id").alias("doc_a"),
-        *[F.col(f"m{i}").alias(f"a{i}") for i in range(n_perms)],
-    )
-    cb = comps.select(
-        F.col("doc_id").alias("doc_b"),
-        *[F.col(f"m{i}").alias(f"b{i}") for i in range(n_perms)],
-    )
+    m = [f"m{i}" for i in range(n_perms)]
     agree = sum(
-        F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
-        for i in range(n_perms)
+        F.when(F.col(f"{c}_a") == F.col(f"{c}_b"), 1).otherwise(0) for c in m
     )
-    est = cand.join(ca, "doc_a").join(cb, "doc_b").select(
+    est = pair_sides(cand, minhash_components_pandas(docs), *m).select(
         "doc_a",
         "doc_b",
         (agree.cast("double") / float(n_perms)).alias("est_jaccard"),
     )
-    texts = (
-        load_table(spark, sf_dir, "documents")
-        .filter(F.size(F.split("text", " ")) >= 3)
-        .select("doc_id", "text")
-    )
-    ta = texts.select(F.col("doc_id").alias("doc_a"), F.col("text").alias("text_a"))
-    tb = texts.select(F.col("doc_id").alias("doc_b"), F.col("text").alias("text_b"))
-    exact = jaccard_pairs(
-        cand.join(ta, "doc_a").join(tb, "doc_b")
-    )
+    texts = docs.filter(F.size(F.split("text", " ")) >= 3).select("doc_id", "text")
+    exact = jaccard_pairs(pair_sides(cand, texts, "text"))
     return est.join(exact, ["doc_a", "doc_b"])
 
 
@@ -1222,19 +1209,13 @@ def q112_lsh_recall_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _registered_oracle(name: str) -> str:
-    from .registry import QUERIES
-
-    return QUERIES[name].oracle
-
-
 @register(
     "q117_component_size_histogram",
     # Splice q60's full oracle (its WITH RECURSIVE reachability twin) as
     # the component relation — the histogram can't drift from the
     # clustering it summarizes.
     oracle=f"""
-    WITH comp AS ({_registered_oracle("q60_neardup_components")}),
+    WITH comp AS ({oracle_of("q60_neardup_components")}),
     sizes AS (
       SELECT component_id, CAST(COUNT(*) AS BIGINT) AS cluster_size
       FROM comp GROUP BY component_id
@@ -1299,7 +1280,7 @@ def q117_component_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame
     tags=("dedup", "eval", "profiling"),
 )
 def q122_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    swept = _scored_candidates(spark, sf_dir).select(
+    swept = _scored_candidates(_ladder_corpus(spark, sf_dir)).select(
         F.explode(F.expr("sequence(1, 9)")).alias("k"), "jaccard"
     )
     return swept.groupBy(F.col("k").cast("int").alias("threshold_tenths")).agg(
@@ -1346,18 +1327,10 @@ CONTAINMENT_MIN = 0.5
     tags=("dedup", "join"),
 )
 def q126_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cand = _spark_candidates(spark, sf_dir).select("doc_a", "doc_b")
-    docs = (
-        load_table(spark, sf_dir, "documents", fan_out=True)
-        .filter(F.size(F.split("text", " ")) >= 3)
-        # split once into an array column, THEN build shingles over it:
-        # an inline split re-runs per array element (the q121 lesson)
-        .select("doc_id", F.split("text", " ").alias("toks"))
-        .select("doc_id", F.expr(token_ngrams_ws_expr("toks", 3)).alias("tg"))
-    )
-    a = docs.select(F.col("doc_id").alias("doc_a"), F.col("tg").alias("tg_a"))
-    b = docs.select(F.col("doc_id").alias("doc_b"), F.col("tg").alias("tg_b"))
-    pairs = cand.join(a, "doc_a").join(b, "doc_b")
+    corpus = _ladder_corpus(spark, sf_dir)
+    cand = minhash_candidates(corpus).select("doc_a", "doc_b")
+    docs = _tg_docs(corpus.filter(F.size(F.split("text", " ")) >= 3))
+    pairs = pair_sides(cand, docs, "tg")
     n_common = F.size(F.array_intersect("tg_a", "tg_b")).cast("long")
     containment = n_common.cast("double") / F.least(
         F.size("tg_a"), F.size("tg_b")
@@ -1457,32 +1430,14 @@ def q131_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 from . import text_queries as _text_queries  # noqa: E402,F401
 
 
-def _q58_oracle() -> str:
-    from .registry import QUERIES
-
-    return QUERIES["q58_stratified_sample_split"].oracle
-
-
 @register(
     "q139_split_leakage_audit",
     # The split side is q58's registered oracle verbatim; the pair side is
     # the q21 verified-near-dup pipeline — the audit composes the two
     # production artifacts it audits.
     oracle=f"""
-    WITH {_DUCK_CAND_CTE},
-    d AS (
-      SELECT doc_id, {token_ngrams_duck("text", 3)} AS tg
-      FROM documents
-      WHERE len(string_split(text, ' ')) >= 3
-    ),
-    verified AS (
-      SELECT c.doc_a, c.doc_b
-      FROM cand c JOIN d a ON a.doc_id = c.doc_a JOIN d b ON b.doc_id = c.doc_b
-      WHERE CAST(len(list_intersect(a.tg, b.tg)) AS DOUBLE)
-              / CAST(len(list_distinct(a.tg || b.tg)) AS DOUBLE)
-            >= {NEARDUP_JACCARD}
-    ),
-    splits AS ({_q58_oracle()})
+    WITH {_DUCK_VERIFIED_PRELUDE},
+    splits AS ({oracle_of("q58_stratified_sample_split")})
     SELECT sa.split AS split_a, sb.split AS split_b,
            CAST(COUNT(*) AS BIGINT) AS n_pairs
     FROM verified v
@@ -1508,15 +1463,8 @@ def q139_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     verified = q21_ngram_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b")
     splits = q58_stratified_sample_split(spark, sf_dir).select("doc_id", "split")
-    sa = splits.select(
-        F.col("doc_id").alias("doc_a"), F.col("split").alias("split_a")
-    )
-    sb = splits.select(
-        F.col("doc_id").alias("doc_b"), F.col("split").alias("split_b")
-    )
     return (
-        verified.join(sa, "doc_a")
-        .join(sb, "doc_b")
+        pair_sides(verified, splits, "split")
         .groupBy("split_a", "split_b")
         .agg(F.count(F.lit(1)).cast("long").alias("n_pairs"))
     )
@@ -1532,7 +1480,7 @@ CSPLIT_A, CSPLIT_B = 439_759_219, 886_731_089
     # q117/q139): the split is keyed on exactly the clustering it must
     # respect.
     oracle=f"""
-    WITH comp AS ({_registered_oracle("q60_neardup_components")})
+    WITH comp AS ({oracle_of("q60_neardup_components")})
     SELECT doc_id, component_id,
            CASE WHEN ({CSPLIT_A} * (component_id % 1000000007) + {CSPLIT_B}) % 100
                      < {80} THEN 'train'
@@ -1605,7 +1553,7 @@ def component_rollup(comp: DataFrame) -> DataFrame:
 @register(
     "q155_component_reuse_rollup",
     oracle=f"""
-    WITH comp AS ({_registered_oracle("q60_neardup_components")})
+    WITH comp AS ({oracle_of("q60_neardup_components")})
     SELECT doc_id, component_id,
            CAST(COUNT(*) OVER (PARTITION BY component_id) AS BIGINT)
                AS cluster_size,
@@ -1656,7 +1604,7 @@ INCR_CC_MOD, INCR_CC_REM = 7, 3
     # component state must equal a full recompute over corpus+batch —
     # q60's recursive reachability twin, spliced verbatim.
     oracle=f"""
-    WITH comp AS ({_registered_oracle("q60_neardup_components")})
+    WITH comp AS ({oracle_of("q60_neardup_components")})
     SELECT doc_id, component_id FROM comp
     """,
     doc="INCREMENTAL connected components — the 'new shard arrives' path "
@@ -1780,11 +1728,8 @@ def _incremental_components(
     rep = base.select("doc_id", F.col("label").alias("rep")).unionByName(
         new_docs.select("doc_id", F.col("doc_id").alias("rep"))
     )
-    ra = rep.select(F.col("doc_id").alias("doc_a"), F.col("rep").alias("rep_a"))
-    rb = rep.select(F.col("doc_id").alias("doc_b"), F.col("rep").alias("rep_b"))
     contracted_edges = (
-        new_pairs.join(ra, "doc_a")
-        .join(rb, "doc_b")
+        pair_sides(new_pairs, rep, "rep")
         .filter(F.col("rep_a") != F.col("rep_b"))
         .select(F.col("rep_a").alias("doc_a"), F.col("rep_b").alias("doc_b"))
         .distinct()
@@ -2087,12 +2032,9 @@ def q162_longest_common_span(spark: SparkSession, sf_dir: str) -> DataFrame:
     # form ships only the candidate pairs with their two texts.
     from ..operators.text import common_span_pandas
 
-    cand = _spark_candidates(spark, sf_dir).select("doc_a", "doc_b")
-    docs = load_table(spark, sf_dir, "documents", fan_out=True).select("doc_id", "text")
-    a = docs.select(F.col("doc_id").alias("doc_a"), F.col("text").alias("text_a"))
-    b = docs.select(F.col("doc_id").alias("doc_b"), F.col("text").alias("text_b"))
-    pairs = cand.join(a, "doc_a").join(b, "doc_b")
-    return common_span_pandas(pairs, SPAN_TF_CAP)
+    corpus = _ladder_corpus(spark, sf_dir)
+    cand = minhash_candidates(corpus).select("doc_a", "doc_b")
+    return common_span_pandas(pair_sides(cand, corpus, "text"), SPAN_TF_CAP)
 
 
 # ---------------------------------------------------------------------------
@@ -2153,14 +2095,9 @@ def q163_edit_distance_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     # at gen100x (commit 1e9ee96) measured 256 -> 128 as 234.5 -> 122.7 s
     # for ~1% pair churn each way, and 64 as a flood of spurious pairs
     # (+76%); 256 stays the exact default.
-    cand = _spark_candidates(spark, sf_dir).select("doc_a", "doc_b")
-    # fan_out: the banded-DP levenshtein over the joined pairs is the
-    # dominant per-row compute; an un-fanned side leaves it one-core
-    d = load_table(spark, sf_dir, "documents", fan_out=True).select(
-        "doc_id", F.substring("text", 1, EDIT_PREFIX).alias("pfx")
-    )
-    a = d.select(F.col("doc_id").alias("doc_a"), F.col("pfx").alias("pfx_a"))
-    b = d.select(F.col("doc_id").alias("doc_b"), F.col("pfx").alias("pfx_b"))
+    corpus = _ladder_corpus(spark, sf_dir)
+    cand = minhash_candidates(corpus).select("doc_a", "doc_b")
+    d = corpus.select("doc_id", F.substring("text", 1, EDIT_PREFIX).alias("pfx"))
     # Banded DP: any pair the sim gate keeps has lev <= max_len/2 <=
     # EDIT_PREFIX/2, so running levenshtein with that threshold (Spark's
     # 3-arg form returns -1 past it) is RESULT-IDENTICAL while the DP
@@ -2168,8 +2105,7 @@ def q163_edit_distance_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     # of organic candidates — measured 268s -> (see BASELINE.md) at the
     # gen100x scale run for the plain O(L^2) form.
     scored = (
-        cand.join(a, "doc_a")
-        .join(b, "doc_b")
+        pair_sides(cand, d, "pfx")
         .select(
             "doc_a",
             "doc_b",
@@ -2219,19 +2155,7 @@ def _pagerank_duck_iter(prev: str, out: str) -> str:
 @register(
     "q164_pagerank_neardup",
     oracle=f"""
-    WITH {_DUCK_CAND_CTE},
-    d AS (
-      SELECT doc_id, {token_ngrams_duck("text", 3)} AS tg
-      FROM documents
-      WHERE len(string_split(text, ' ')) >= 3
-    ),
-    verified AS (
-      SELECT c.doc_a, c.doc_b
-      FROM cand c JOIN d a ON a.doc_id = c.doc_a JOIN d b ON b.doc_id = c.doc_b
-      WHERE CAST(len(list_intersect(a.tg, b.tg)) AS DOUBLE)
-              / CAST(len(list_distinct(a.tg || b.tg)) AS DOUBLE)
-            >= {NEARDUP_JACCARD}
-    ),
+    WITH {_DUCK_VERIFIED_PRELUDE},
     edges AS (
       SELECT doc_a AS src, doc_b AS dst FROM verified
       UNION ALL
@@ -2323,19 +2247,7 @@ def pagerank_from_pairs(pairs: DataFrame) -> DataFrame:
 @register(
     "q172_triangle_count",
     oracle=f"""
-    WITH {_DUCK_CAND_CTE},
-    d AS (
-      SELECT doc_id, {token_ngrams_duck("text", 3)} AS tg
-      FROM documents
-      WHERE len(string_split(text, ' ')) >= 3
-    ),
-    verified AS (
-      SELECT c.doc_a, c.doc_b
-      FROM cand c JOIN d a ON a.doc_id = c.doc_a JOIN d b ON b.doc_id = c.doc_b
-      WHERE CAST(len(list_intersect(a.tg, b.tg)) AS DOUBLE)
-              / CAST(len(list_distinct(a.tg || b.tg)) AS DOUBLE)
-            >= {NEARDUP_JACCARD}
-    ),
+    WITH {_DUCK_VERIFIED_PRELUDE},
     tri AS (
       SELECT e1.doc_a AS a, e1.doc_b AS b, e2.doc_b AS c
       FROM verified e1
@@ -2439,19 +2351,7 @@ CHAIN_MAX_HOPS = 8
 @register(
     "q188_neardup_chain_depth",
     oracle=f"""
-    WITH RECURSIVE {{cand}},
-    d AS (
-      SELECT doc_id, {{tg}} AS tg
-      FROM documents
-      WHERE len(string_split(text, ' ')) >= 3
-    ),
-    verified AS (
-      SELECT c.doc_a, c.doc_b
-      FROM cand c JOIN d a ON a.doc_id = c.doc_a JOIN d b ON b.doc_id = c.doc_b
-      WHERE CAST(len(list_intersect(a.tg, b.tg)) AS DOUBLE)
-              / CAST(len(list_distinct(a.tg || b.tg)) AS DOUBLE)
-            >= {{jac}}
-    ),
+    WITH RECURSIVE {_DUCK_VERIFIED_PRELUDE},
     roots AS (
       SELECT DISTINCT doc_a AS doc_id FROM verified v
       WHERE NOT EXISTS (
@@ -2470,11 +2370,7 @@ CHAIN_MAX_HOPS = 8
            CAST(MAX(depth) AS BIGINT) AS max_depth,
            CAST(COUNT(*) AS BIGINT) AS n_paths
     FROM chain GROUP BY doc_id
-    """.format(
-        cand=_DUCK_CAND_CTE,
-        tg=token_ngrams_duck("text", 3),
-        jac=NEARDUP_JACCARD,
-    ),
+    """,
     doc="Duplication chain depth via a level-synchronous aggregated "
     "walk: from the near-dup DAG's roots (docs never appearing as the "
     "larger member of a verified pair), walk the canonical ascending "
@@ -2594,7 +2490,7 @@ def _materialized_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q199_pagerank_materialized",
-    oracle=_registered_oracle("q164_pagerank_neardup"),
+    oracle=oracle_of("q164_pagerank_neardup"),
     doc="q164's integer PageRank computed FROM THE MATERIALIZED verified "
     "pair checkpoint (materialize_verified_pairs): the ladder is paid "
     "once per session/corpus, the Pregel-by-joins iterations read a "
@@ -2611,7 +2507,7 @@ def q199_pagerank_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q200_triangles_materialized",
-    oracle=_registered_oracle("q172_triangle_count"),
+    oracle=oracle_of("q172_triangle_count"),
     doc="q172's triangle participation / clustering coefficient computed "
     "from the materialized verified pair checkpoint — ordered-triple "
     "join over a parquet scan instead of three LSH-ladder executions. "
@@ -2624,7 +2520,7 @@ def q200_triangles_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q201_chain_depth_materialized",
-    oracle=_registered_oracle("q188_neardup_chain_depth"),
+    oracle=oracle_of("q188_neardup_chain_depth"),
     doc="q188's level-synchronous chain-depth walk computed from the "
     "materialized verified pair checkpoint — the per-hop joins re-read "
     "a two-column parquet instead of re-deriving the pair list. Oracle "
@@ -2786,11 +2682,8 @@ def q204_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
         .filter(F.col("n_shared") >= WINNOW_MIN_SHARED)
     )
-    na = nfp.select(F.col("doc_id").alias("doc_a"), F.col("n_fp").alias("n_fp_a"))
-    nb = nfp.select(F.col("doc_id").alias("doc_b"), F.col("n_fp").alias("n_fp_b"))
     return (
-        pairs.join(na, "doc_a")
-        .join(nb, "doc_b")
+        pair_sides(pairs, nfp, "n_fp")
         .select(
             "doc_a", "doc_b", "n_shared", "n_fp_a", "n_fp_b",
             F.expr(
@@ -3165,20 +3058,6 @@ def _pf_pairs_from(
 # page with many variants).
 # ---------------------------------------------------------------------------
 
-_DUCK_VERIFIED_PRELUDE = f"""{_DUCK_CAND_CTE},
-    d AS (
-      SELECT doc_id, {token_ngrams_duck("text", 3)} AS tg
-      FROM documents
-      WHERE len(string_split(text, ' ')) >= 3
-    ),
-    verified AS (
-      SELECT c.doc_a, c.doc_b
-      FROM cand c JOIN d a ON a.doc_id = c.doc_a JOIN d b ON b.doc_id = c.doc_b
-      WHERE CAST(len(list_intersect(a.tg, b.tg)) AS DOUBLE)
-              / CAST(len(list_distinct(a.tg || b.tg)) AS DOUBLE)
-            >= {NEARDUP_JACCARD}
-    )"""
-
 KCORE_K = 2
 KCORE_ROUNDS = 4
 
@@ -3349,19 +3228,7 @@ def q209_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q211_adamic_adar_linkpred",
     oracle=f"""
-    WITH {_DUCK_CAND_CTE},
-    d AS (
-      SELECT doc_id, {token_ngrams_duck("text", 3)} AS tg
-      FROM documents
-      WHERE len(string_split(text, ' ')) >= 3
-    ),
-    verified AS (
-      SELECT c.doc_a, c.doc_b
-      FROM cand c JOIN d a ON a.doc_id = c.doc_a JOIN d b ON b.doc_id = c.doc_b
-      WHERE CAST(len(list_intersect(a.tg, b.tg)) AS DOUBLE)
-              / CAST(len(list_distinct(a.tg || b.tg)) AS DOUBLE)
-            >= {NEARDUP_JACCARD}
-    ),
+    WITH {_DUCK_VERIFIED_PRELUDE},
     adj AS (
       SELECT doc_a AS u, doc_b AS z FROM verified
       UNION ALL SELECT doc_b AS u, doc_a AS z FROM verified
@@ -3792,7 +3659,7 @@ def q224_survivor_policy_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Edge relation spliced from q21's registered oracle: the step can
     # never drift from the verified pair graph it propagates over.
     oracle=f"""
-    WITH pairs AS ({_registered_oracle("q21_ngram_jaccard_pairs")}),
+    WITH pairs AS ({oracle_of("q21_ngram_jaccard_pairs")}),
     edges AS (
       SELECT doc_a AS src, doc_b AS dst FROM pairs
       UNION ALL
@@ -3884,7 +3751,7 @@ def q230_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q234_modularity_score",
     oracle=f"""
-    WITH pairs AS ({_registered_oracle("q21_ngram_jaccard_pairs")}),
+    WITH pairs AS ({oracle_of("q21_ngram_jaccard_pairs")}),
     lab AS (SELECT doc_id, lang FROM documents),
     e AS (
       SELECT la.lang AS lang_a, lb.lang AS lang_b
@@ -3930,21 +3797,9 @@ def q230_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dedup", "graph", "eval"),
 )
 def q234_modularity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = q21_ngram_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    lab = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
-    e = (
-        pairs.join(
-            lab.select(
-                F.col("doc_id").alias("doc_a"), F.col("lang").alias("lang_a")
-            ),
-            "doc_a",
-        ).join(
-            lab.select(
-                F.col("doc_id").alias("doc_b"), F.col("lang").alias("lang_b")
-            ),
-            "doc_b",
-        )
-    ).select("lang_a", "lang_b")
+    corpus = _ladder_corpus(spark, sf_dir)
+    pairs = _verified(corpus).select("doc_a", "doc_b")
+    e = pair_sides(pairs, corpus, "lang").select("lang_a", "lang_b")
     m = e.agg(F.count(F.lit(1)).cast("long").alias("m"))
     within = (
         e.filter("lang_a = lang_b")
@@ -4238,21 +4093,15 @@ def _tuner_oracle() -> str:
     tags=("dedup", "lsh"),
 )
 def q247_lsh_param_tuner(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cand = _spark_candidates(spark, sf_dir).select("doc_a", "doc_b")
-    docs = _tg_docs(
-        load_table(spark, sf_dir, "documents", fan_out=True).filter(
-            F.size(F.split("text", " ")) >= 3
-        )
-    )
-    a = docs.select(F.col("doc_id").alias("doc_a"), F.col("tg").alias("tg_a"))
-    b = docs.select(F.col("doc_id").alias("doc_b"), F.col("tg").alias("tg_b"))
+    corpus = _ladder_corpus(spark, sf_dir)
+    cand = minhash_candidates(corpus).select("doc_a", "doc_b")
+    docs = _tg_docs(corpus.filter(F.size(F.split("text", " ")) >= 3))
     s1 = (
         "(1000000 * CAST(size(array_intersect(tg_a, tg_b)) AS BIGINT))"
         " div CAST(size(array_distinct(concat(tg_a, tg_b))) AS BIGINT)"
     )
     scored = (
-        cand.join(a, "doc_a")
-        .join(b, "doc_b")
+        pair_sides(cand, docs, "tg")
         .select(
             F.expr(s1).alias("s1"),
             F.expr(f"CASE WHEN {s1} >= {_TUNE_DUP_PPM} THEN 1 ELSE 0 END").alias("dup"),
@@ -4606,7 +4455,7 @@ def materialize_prefix_index(spark: SparkSession, sf_dir: str) -> PrefixIndex:
 
 @register(
     "q262_incremental_components_materialized",
-    oracle=_registered_oracle("q157_incremental_components"),
+    oracle=oracle_of("q157_incremental_components"),
     doc="q157's incremental connected components computed FROM THE "
     "MATERIALIZED verified-pair checkpoint (materialize_verified_pairs "
     "— the same parquet q199-q201 read): because verification is "
@@ -4634,7 +4483,7 @@ def q262_incremental_components_materialized(
 
 @register(
     "q263_prefix_pairs_materialized",
-    oracle=_registered_oracle("q259_prefix_pairs_capped"),
+    oracle=oracle_of("q259_prefix_pairs_capped"),
     doc="q259's capped prefix-filter all-pairs join computed FROM THE "
     "MATERIALIZED prefix index (materialize_prefix_index): the "
     "tokenize -> df -> rank -> prefix-cut build is paid once per "
@@ -4659,7 +4508,7 @@ def q263_prefix_pairs_materialized(
 
 @register(
     "q264_prefix_report_materialized",
-    oracle=_registered_oracle("q260_prefix_posting_report"),
+    oracle=oracle_of("q260_prefix_posting_report"),
     doc="q260's posting-length spectrum report computed from the "
     "materialized prefix index — one token-keyed count over the pfx "
     "parquet instead of a full index rebuild (q260's 12.8 s in the "

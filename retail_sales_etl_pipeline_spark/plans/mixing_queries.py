@@ -23,7 +23,9 @@ from pyspark.sql import functions as F
 from ..operators.similarity import dot_pair, norm_pair
 from ..operators.text import poly_hash_pair
 from ..sources import load_table
-from .registry import register
+# q235 splices q88's registered oracle; import the module that registers it
+from . import text_queries as _text_queries  # noqa: F401
+from .registry import oracle_of, register
 
 # SemDeDup (Abbas et al. 2023, arXiv:2303.09540): k-means-cluster the
 # embedding space, then search for near-duplicates ONLY within a cluster —
@@ -1168,18 +1170,12 @@ def _curr_hash_duck() -> str:
     return poly_hash_pair("text", "text")[1]
 
 
-def _mix_registered_oracle(name: str) -> str:
-    from .registry import QUERIES
-
-    return QUERIES[name].oracle
-
-
 @register(
     "q235_curriculum_buckets",
     # Difficulty model spliced from q88's registered oracle (the q111/
     # q117 convention): curriculum and score cannot drift apart.
     oracle=f"""
-    WITH diff AS ({_mix_registered_oracle("q88_unigram_surprisal")}),
+    WITH diff AS ({oracle_of("q88_unigram_surprisal")}),
     b AS (
       SELECT doc_id,
              mean_surprisal_micronat,

@@ -71,6 +71,14 @@ QUERY_MODULES = (
 )
 
 
+def oracle_of(name: str) -> str:
+    """The registered oracle of ``name``, for splicing verbatim into
+    another query's oracle. The module that registers ``name`` must be
+    imported first: a module that splices another module's oracle
+    imports that module itself."""
+    return QUERIES[name].oracle
+
+
 def load_all() -> dict[str, Query]:
     """Import every query-defining module, then return the registry.
 
@@ -79,17 +87,19 @@ def load_all() -> dict[str, Query]:
     signal. All failures are collected so one broken module doesn't mask
     another, then raised together.
 
-    CACHE CONTRACT (round-12 ADVICE): several queries persist()
-    multi-consumer frames INSIDE their own DAG (q29/q140 survivors,
-    q165 items/supp, q86 cand, q157/q262 pairs above the small-graph
-    bound, q204 fp, q260's prefix-index doc frame) and deliberately do
-    not unpersist them — the DataFrame is
-    still lazy when the query function returns, so the query cannot
-    know when its consumer is done. A long-lived session running many
-    registry queries should call ``spark.catalog.clearCache()`` between
-    queries (the test fixtures do exactly this); a one-job-per-application
-    deployment needs nothing. Every such persist is single-query-scoped:
-    nothing is keyed to survive into another query's plan.
+    CACHE CONTRACT: four queries persist() a multi-consumer frame INSIDE
+    their own DAG and deliberately do not unpersist it — q86's
+    candidates, q157/q262's pairs in the distributed branch (above the
+    small-graph bound), q165's items/supp and q204's fingerprints. The
+    DataFrame is still lazy when the query function returns, so the
+    query cannot know when its consumer is done. A long-lived session
+    running many registry queries should call
+    ``spark.catalog.clearCache()`` between queries (the test fixtures do
+    exactly this); a one-job-per-application deployment needs nothing.
+    Every such persist is single-query-scoped: nothing is keyed to
+    survive into another query's plan. The two other persists release
+    their own: the connected-components operator's edge list
+    (operators.graph) and the prefix-index build's ranked frame.
     """
     failures: list[tuple[str, Exception]] = []
     for mod in QUERY_MODULES:

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources import load_table
-from .registry import register
+from .registry import oracle_of, register
 
 TOP_TERMS_PER_DOC = 3
 BM25_TERMS = ("join", "merge", "vector")
@@ -980,11 +980,8 @@ RERANK_QUERY_DOC = HYBRID_QUERY_VEC  # doc_id == vec_id identity (q89)
 
 
 def _rerank_oracle() -> str:
-    from .registry import QUERIES
-
-    fused = QUERIES["q89_hybrid_rrf_retrieval"].oracle
     return f"""
-    WITH fused AS ({fused}),
+    WITH fused AS ({oracle_of("q89_hybrid_rrf_retrieval")}),
     fr AS (
       SELECT doc_id,
              CAST(row_number() OVER (ORDER BY rrf DESC, doc_id) AS BIGINT)

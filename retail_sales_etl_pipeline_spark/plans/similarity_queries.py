@@ -21,7 +21,7 @@ from ..operators.similarity import (
 )
 from ..sources import load_table
 from .checkpoint import materialize_parquet, read_checkpoint
-from .registry import register
+from .registry import oracle_of, register
 
 N_QUERIES = 5  # query set = vec_id < 5
 TOP_K = 10
@@ -1106,20 +1106,14 @@ def q103_embedding_standardize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _registered_oracle(name: str) -> str:
-    from .registry import QUERIES
-
-    return QUERIES[name].oracle
-
-
 @register(
     "q111_ann_recall_eval",
     # The ground-truth and candidate sides are the ALREADY-REGISTERED
     # oracle SQL of q30/q31, spliced in verbatim — the eval can never
     # drift from the queries it evaluates.
     oracle=f"""
-    WITH exact AS ({_registered_oracle("q30_ann_bruteforce")}),
-    approx AS ({_registered_oracle("q31_ann_ivf")})
+    WITH exact AS ({oracle_of("q30_ann_bruteforce")}),
+    approx AS ({oracle_of("q31_ann_ivf")})
     SELECT e.query_id,
            CAST(COUNT(a.neighbor_id) AS BIGINT) AS n_hits,
            CAST({TOP_K} AS BIGINT) AS k,
@@ -1884,8 +1878,8 @@ _REL_CASE = (
     # oracles (the q111 convention): the eval can never drift from the
     # retrievals it grades.
     oracle=f"""
-    WITH exact AS ({_registered_oracle("q30_ann_bruteforce")}),
-    approx AS ({_registered_oracle("q31_ann_ivf")}),
+    WITH exact AS ({oracle_of("q30_ann_bruteforce")}),
+    approx AS ({oracle_of("q31_ann_ivf")}),
     graded AS (
       SELECT a.query_id, a.rank AS a_rank,
              {_REL_CASE.format(gt="e.rank")} AS rel
@@ -2009,7 +2003,7 @@ def q210_ann_rank_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q217_embedding_effective_rank",
     oracle=f"""
-    WITH gram AS ({_registered_oracle("q202_embedding_gram")}),
+    WITH gram AS ({oracle_of("q202_embedding_gram")}),
     cells AS (
       SELECT i, j,
              cov_num // (n_vecs * n_vecs) AS c,
@@ -3087,7 +3081,7 @@ def materialize_embedding_pairs(spark: SparkSession, sf_dir: str) -> str:
 
 @register(
     "q271_embedding_components_materialized",
-    oracle=_registered_oracle("q66_embedding_neardup_components"),
+    oracle=oracle_of("q66_embedding_neardup_components"),
     doc="q66's embedding near-dup connected components computed FROM THE "
     "MATERIALIZED verified cosine-pair checkpoint "
     "(materialize_embedding_pairs): the capped RP-LSH bucket self-join "

@@ -53,8 +53,19 @@ def test_curation_pipeline_driver(spark, tmp_path):
     observability contract as the retail ETL driver."""
     from retail_sales_etl_pipeline_spark.plans import curation_pipeline
 
+    tracker = spark.sparkContext.statusTracker()
+
+    def unstaged_jobs() -> set:
+        # jobs outside run_stage's job groups
+        return set(tracker.getJobIdsForGroup("")) | set(tracker.getJobIdsForGroup(None))
+
+    before = unstaged_jobs()
     out = str(tmp_path / "curation_wh")
     res = curation_pipeline.run(spark, SF, out)
+    # outside its stages a run infers the corpus' schema (1 job), runs the
+    # one stage-size aggregate (3 jobs under AQE) and appends its 3 logs;
+    # the stages it reads back carry the schemas they were written with
+    assert len(unstaged_jobs() - before) == 7
 
     corpus = {tuple(r) for r in spark.read.parquet(f"{out}/corpus").collect()}
     lazy = {tuple(r) for r in curate(spark, SF).collect()}

@@ -235,6 +235,7 @@ def test_prefix_index_survives_stale_warehouse_location(spark):
     first post-build fresh-session q263 run)."""
     import os
     import re
+    import shutil
 
     checkpoint._CHECKPOINTS.clear()
     t_pfx, t_tg, _ = dq.materialize_prefix_index(spark, SF)
@@ -244,16 +245,21 @@ def test_prefix_index_survives_stale_warehouse_location(spark):
     # directory at the managed location.
     wh = spark.conf.get("spark.sql.warehouse.dir")
     local = re.match(r"^file:/{0,2}(/.*)$", wh).group(1)
-    for t in (t_pfx, t_tg):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        os.makedirs(os.path.join(local, t), exist_ok=True)
-        with open(os.path.join(local, t, "stale-part"), "w") as f:
-            f.write("leftover from a previous process")
-    checkpoint._CHECKPOINTS.clear()
+    planted = [os.path.join(local, t) for t in (t_pfx, t_tg)]
+    try:
+        for t, d in zip((t_pfx, t_tg), planted):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+            os.makedirs(d, exist_ok=True)
+            with open(os.path.join(d, "stale-part"), "w") as f:
+                f.write("leftover from a previous process")
+        checkpoint._CHECKPOINTS.clear()
 
-    got_t = dq.materialize_prefix_index(spark, SF)
-    assert got_t[:2] == (t_pfx, t_tg)
-    assert _rows(spark.table(t_pfx)) == want
+        got_t = dq.materialize_prefix_index(spark, SF)
+        assert got_t[:2] == (t_pfx, t_tg)
+        assert _rows(spark.table(t_pfx)) == want
+    finally:
+        for d in planted:
+            shutil.rmtree(d, ignore_errors=True)
 
 
 def test_prefix_report_survives_dropped_tables(spark):

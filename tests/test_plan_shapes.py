@@ -888,6 +888,32 @@ def test_q21_verify_runs_without_python_workers(spark):
 
 
 @pytest.mark.parametrize(
+    "name",
+    [
+        "q79_cross_source_contamination",
+        "q86_minhash_jaccard_estimate",
+        "q126_containment_pairs",
+        "q162_longest_common_span",
+        "q163_edit_distance_verify",
+        "q234_modularity_score",
+        "q247_lsh_param_tuner",
+    ],
+)
+def test_ladder_rung_reads_the_corpus_once(spark, name):
+    """A near-dup ladder rung takes its candidates and its pair sides
+    (``dedup_queries.pair_sides``) from one read of ``documents``:
+    planning it runs exactly one Spark job, the read's schema inference."""
+    sc = spark.sparkContext
+    group = f"ladder-plan-{name}"
+    sc.setJobGroup(group, "plan a near-dup ladder rung")
+    try:
+        REGISTRY[name].spark_fn(spark, SMOKE_SF_DIR)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(list(sc.statusTracker().getJobIdsForGroup(group))) == 1
+
+
+@pytest.mark.parametrize(
     "id_type, labels",
     [("string", {"b": "a", "c": "a"}), ("long", {2: 1, 3: 1}), ("long", {})],
 )

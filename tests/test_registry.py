@@ -3,6 +3,10 @@ silently shrink the query surface (VERDICT r1 'What's wrong' #2)."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+
 import pytest
 
 from retail_sales_etl_pipeline_spark.plans import registry
@@ -37,6 +41,20 @@ def test_catalog_tool_lists_all_and_filters():
     assert all("dedup" in r["tags"] for r in dedup)
     oracle_status = {r["oracle"] for r in rows}
     assert oracle_status == {"hash-checked", "rows-only"}
+
+
+@pytest.mark.parametrize("mod", registry.QUERY_MODULES)
+def test_query_module_imports_on_its_own(mod):
+    """Each query module imports first thing in a fresh interpreter: a
+    module that splices another module's oracle (``registry.oracle_of``)
+    imports that module itself, so a test file run alone cannot fail on
+    the registry lookup."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", f"import {registry.__package__}.{mod}"],
+        cwd=repo, capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
 
 
 def test_broken_module_fails_loudly(monkeypatch):
