@@ -17,6 +17,19 @@ Layout
 - ``plans``      — end-to-end pipeline drivers + the query registry used by
                    ``__spark_entry__``.
 - ``streaming``  — Structured Streaming counterparts over the events table.
+
+Python workers may be unable to import this package (they inherit the
+driver's cwd and environment, not its ``sys.path``), so the whole package
+is registered with cloudpickle to ship BY VALUE: a batch function can call
+any module-level function here and the worker gets that function's code
+with it. Kernels import what they call by name, never a package module
+object, which would ship the whole module.
 """
 
+import sys
+
+from pyspark import cloudpickle
+
 __version__ = "0.1.0"
+
+cloudpickle.register_pickle_by_value(sys.modules[__name__])

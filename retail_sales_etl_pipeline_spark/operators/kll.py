@@ -41,15 +41,23 @@ exactly what q241 proves in-query against exact ranks).
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 __all__ = [
     "build_sketch",
+    "centi_shards",
     "merge_sketches",
+    "rows_to_sketches",
+    "shard_sketch_rows",
     "sketch_rank",
     "sketch_quantile",
     "sketch_items",
     "total_weight",
 ]
+
+SKETCH_ROWS_SCHEMA = "shard string, level int, val long, budget long"
 
 
 def _compact(levels: list[np.ndarray], k: int) -> int:
@@ -154,3 +162,61 @@ def sketch_quantile(levels: list[np.ndarray], ppm: int) -> int:
     thresh = -((-ppm * n) // 1_000_000)
     idx = int(np.searchsorted(cum, thresh, side="left"))
     return int(items[min(idx, len(items) - 1)])
+
+
+# --- distributed build ---------------------------------------------------
+# Shard sketches are built on the executors (one Arrow grouped-map pass,
+# one pandas group per shard) and travel to the driver as one row per
+# retained item; the driver folds the rows back into sketches and merges.
+
+
+def centi_shards(events: DataFrame, buckets: int) -> DataFrame:
+    """The sketch input projection over events with a value: (shard, c)
+    with shard = event_type x event_id mod ``buckets`` and c the value on
+    the centi-unit grid."""
+    return events.filter(F.col("value").isNotNull()).select(
+        F.expr(
+            f"concat(event_type, '#', CAST(event_id % {buckets} AS STRING))"
+        ).alias("shard"),
+        F.expr("CAST(FLOOR(value * 100.0) AS BIGINT)").alias("c"),
+    )
+
+
+def shard_sketch_rows(centi: DataFrame, k: int) -> DataFrame:
+    """``build_sketch`` per shard of a (shard, c) frame: one row per
+    retained item (shard, level, val, budget)."""
+
+    def build(pdf):
+        levels, budget = build_sketch(pdf["c"].to_numpy(np.int64), k)
+        shard = pdf["shard"].iloc[0]
+        return pd.DataFrame(
+            [
+                (shard, h, int(v), budget)
+                for h, lvl in enumerate(levels)
+                for v in lvl
+            ],
+            columns=["shard", "level", "val", "budget"],
+        )
+
+    return centi.groupBy("shard").applyInPandas(build, SKETCH_ROWS_SCHEMA)
+
+
+def rows_to_sketches(rows) -> list[tuple[list[np.ndarray], int]]:
+    """Collected sketch rows -> [(levels, budget)], shard-name ordered
+    (merge_sketches is list-order invariant; sorting just makes the
+    intermediate structure reproducible for debugging)."""
+    by_shard: dict[str, dict] = {}
+    for r in rows:
+        s = by_shard.setdefault(r["shard"], {"levels": {}, "budget": 0})
+        s["levels"].setdefault(r["level"], []).append(r["val"])
+        s["budget"] = r["budget"]
+    sketches = []
+    for name in sorted(by_shard):
+        s = by_shard[name]
+        n_lv = max(s["levels"]) + 1 if s["levels"] else 0
+        levels = [
+            np.sort(np.asarray(s["levels"].get(h, []), dtype=np.int64))
+            for h in range(n_lv)
+        ]
+        sketches.append((levels, s["budget"]))
+    return sketches

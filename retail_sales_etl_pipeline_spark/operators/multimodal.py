@@ -24,8 +24,14 @@ narrow map — no shuffle.
 
 from __future__ import annotations
 
+import io
+import math
+import struct
+import wave
+import zlib
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -57,9 +63,6 @@ def decode_wav(payload: bytes) -> tuple[int, list[int]]:
     Only uncompressed PCM is supported — exactly what the stdlib parser
     handles; compressed codecs stay behind ``decode_media``'s
     NotImplementedError."""
-    import io
-    import struct
-    import wave
 
     with wave.open(io.BytesIO(payload), "rb") as w:
         if w.getsampwidth() != 2 or w.getnchannels() != 1:
@@ -79,7 +82,6 @@ def decode_bmp(payload: bytes) -> tuple[int, int, bytes]:
     This undoes genuine container structure (padding + row inversion);
     a decoder that just sliced the payload would produce wrong bytes for
     any width not divisible by 4."""
-    import struct
 
     if payload[:2] != b"BM":
         raise ValueError("not a BMP payload")
@@ -119,8 +121,6 @@ def decode_png(payload: bytes) -> tuple[int, int, int, bytes]:
     Supports the mainstream still-image profile: 8-bit depth, grayscale
     (color type 0) or truecolor RGB (type 2), non-interlaced. Anything
     else raises ValueError — a wrong answer is worse than no answer."""
-    import struct
-    import zlib
 
     if payload[:8] != b"\x89PNG\r\n\x1a\n":
         raise ValueError("not a PNG payload")
@@ -197,8 +197,6 @@ def encode_png(
     type chosen by ``filter_for_row`` — the synthetic corpus cycles all
     five types, so decode round-trip proofs exercise Sub/Up/Average/Paeth
     unfiltering, not just the trivial None path."""
-    import struct
-    import zlib
 
     bpp = 3 if color == 2 else 1
     stride = width * bpp
@@ -291,6 +289,7 @@ JPEG_STD_AC_VALS = [
 # the q272 formula oracle relies on. AC = 16 is an ordinary lossy step.
 JPEG_Q_DC = 8
 JPEG_Q_AC = 16
+JPEG_QTAB = [JPEG_Q_DC] + [JPEG_Q_AC] * 63  # natural order
 
 
 def _jpeg_canonical_codes(bits: list[int], vals: list[int]) -> dict:
@@ -306,8 +305,6 @@ def _jpeg_canonical_codes(bits: list[int], vals: list[int]) -> dict:
 
 
 def _jpeg_cos_tables() -> tuple[list[list[float]], list[float]]:
-    import math
-
     cos = [
         [math.cos((2 * x + 1) * u * math.pi / 16) for x in range(8)]
         for u in range(8)
@@ -316,29 +313,37 @@ def _jpeg_cos_tables() -> tuple[list[list[float]], list[float]]:
     return cos, cu
 
 
-def encode_jpeg_baseline(
-    width: int, height: int, planes: list[bytes]
+def _jpeg_encode_stream(
+    width: int, height: int, n_comp: int, blocks: Iterator[list[int]]
 ) -> bytes:
-    """Genuine baseline sequential JPEG encoder, pure stdlib: per-block
-    level shift -> float forward DCT -> quantize (flat table, DC step
-    {JPEG_Q_DC} / AC step {JPEG_Q_AC}) -> zigzag -> differential-DC +
-    run-length AC -> Huffman (T.81 Annex K standard tables) with byte
-    stuffing. ``planes``: [gray] or [Y, Cb, Cr] (4:4:4), each
-    width*height bytes; edge blocks replicate the last row/column. The
-    tables are written into DQT/DHT, so any conforming decoder reads
-    them from the stream."""
-    import math
-    import struct
+    """The baseline JPEG file for quantized coefficients: headers (JFIF,
+    DQT, SOF0, the Annex K DHTs, SOS), then differential-DC + run-length
+    AC Huffman coding with byte stuffing, then EOI. ``blocks`` yields
+    each 8x8 block's 64 quantized coefficients in zigzag order, blocks
+    in raster order with the components interleaved per block."""
+    hdr = bytearray(b"\xff\xd8")  # SOI
+    # APP0/JFIF: version 1.1, no density units, 1x1 density, no thumbnail
+    hdr += b"\xff\xe0" + struct.pack(">H", 16) \
+        + b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"
+    zz_q = bytes(JPEG_QTAB[JPEG_ZIGZAG[i]] for i in range(64))
+    hdr += b"\xff\xdb" + struct.pack(">H", 67) + b"\x00" + zz_q
+    hdr += b"\xff\xc0" + struct.pack(">HB", 8 + 3 * n_comp, 8)
+    hdr += struct.pack(">HH", height, width) + bytes([n_comp])
+    for c in range(n_comp):
+        hdr += bytes([c + 1, 0x11, 0])  # id, 1x1 sampling, qtable 0
+    for cls, bits, vals in (
+        (0, JPEG_STD_DC_BITS, JPEG_STD_DC_VALS),
+        (1, JPEG_STD_AC_BITS, JPEG_STD_AC_VALS),
+    ):
+        hdr += b"\xff\xc4" + struct.pack(">H", 19 + len(vals))
+        hdr += bytes([cls << 4]) + bytes(bits) + bytes(vals)
+    hdr += b"\xff\xda" + struct.pack(">H", 6 + 2 * n_comp) + bytes([n_comp])
+    for c in range(n_comp):
+        hdr += bytes([c + 1, 0x00])  # DC table 0, AC table 0
+    hdr += b"\x00\x3f\x00"  # Ss=0 Se=63 AhAl=0
 
-    n_comp = len(planes)
-    if n_comp not in (1, 3):
-        raise ValueError("encoder supports 1 (gray) or 3 (YCbCr) planes")
-    cos, cu = _jpeg_cos_tables()
-    qtab = [JPEG_Q_AC] * 64
-    qtab[0] = JPEG_Q_DC
     dc_codes = _jpeg_canonical_codes(JPEG_STD_DC_BITS, JPEG_STD_DC_VALS)
     ac_codes = _jpeg_canonical_codes(JPEG_STD_AC_BITS, JPEG_STD_AC_VALS)
-
     out = bytearray()
     bitbuf, bitcnt = 0, 0
 
@@ -364,6 +369,56 @@ def encode_jpeg_baseline(
             s += 1
         return s, (v if v >= 0 else v + (1 << s) - 1)
 
+    pred = [0] * n_comp
+    for n, zz in enumerate(blocks):
+        c = n % n_comp
+        diff = zz[0] - pred[c]
+        pred[c] = zz[0]
+        s, vb = magnitude(diff)
+        code, ln = dc_codes[s]
+        put_bits(code, ln)
+        if s:
+            put_bits(vb, s)
+        run = 0
+        last_nz = max((i for i in range(1, 64) if zz[i]), default=0)
+        for i in range(1, 64):
+            if i > last_nz:
+                code, ln = ac_codes[0x00]  # EOB
+                put_bits(code, ln)
+                break
+            if zz[i] == 0:
+                run += 1
+                continue
+            while run > 15:
+                code, ln = ac_codes[0xF0]  # ZRL
+                put_bits(code, ln)
+                run -= 16
+            s, vb = magnitude(zz[i])
+            code, ln = ac_codes[(run << 4) | s]
+            put_bits(code, ln)
+            put_bits(vb, s)
+            run = 0
+    if bitcnt:
+        put_bits((1 << (8 - bitcnt)) - 1, 8 - bitcnt)  # pad with 1s
+    return bytes(hdr) + bytes(out) + b"\xff\xd9"  # EOI
+
+
+def encode_jpeg_baseline(
+    width: int, height: int, planes: list[bytes]
+) -> bytes:
+    """Genuine baseline sequential JPEG encoder, pure stdlib: per-block
+    level shift -> float forward DCT -> quantize (flat table, DC step
+    {JPEG_Q_DC} / AC step {JPEG_Q_AC}) -> zigzag -> differential-DC +
+    run-length AC -> Huffman (T.81 Annex K standard tables) with byte
+    stuffing. ``planes``: [gray] or [Y, Cb, Cr] (4:4:4), each
+    width*height bytes; edge blocks replicate the last row/column. The
+    tables are written into DQT/DHT, so any conforming decoder reads
+    them from the stream."""
+    n_comp = len(planes)
+    if n_comp not in (1, 3):
+        raise ValueError("encoder supports 1 (gray) or 3 (YCbCr) planes")
+    cos, cu = _jpeg_cos_tables()
+
     def block_at(plane: bytes, bx: int, by: int) -> list[int]:
         b = []
         for y in range(8):
@@ -373,84 +428,65 @@ def encode_jpeg_baseline(
                 b.append(plane[sy * width + sx])
         return b
 
-    # headers
-    hdr = bytearray(b"\xff\xd8")  # SOI
-    # APP0/JFIF: version 1.1, no density units, 1x1 density, no thumbnail
-    hdr += b"\xff\xe0" + struct.pack(">H", 16) \
-        + b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"
-    zz_q = bytes(qtab[JPEG_ZIGZAG[i]] for i in range(64))
-    hdr += b"\xff\xdb" + struct.pack(">H", 67) + b"\x00" + zz_q
-    hdr += b"\xff\xc0" + struct.pack(">HB", 8 + 3 * n_comp, 8)
-    hdr += struct.pack(">HH", height, width) + bytes([n_comp])
-    for c in range(n_comp):
-        hdr += bytes([c + 1, 0x11, 0])  # id, 1x1 sampling, qtable 0
-    for cls, bits, vals in (
-        (0, JPEG_STD_DC_BITS, JPEG_STD_DC_VALS),
-        (1, JPEG_STD_AC_BITS, JPEG_STD_AC_VALS),
-    ):
-        hdr += b"\xff\xc4" + struct.pack(">H", 19 + len(vals))
-        hdr += bytes([cls << 4]) + bytes(bits) + bytes(vals)
-    hdr += b"\xff\xda" + struct.pack(">H", 6 + 2 * n_comp) + bytes([n_comp])
-    for c in range(n_comp):
-        hdr += bytes([c + 1, 0x00])  # DC table 0, AC table 0
-    hdr += b"\x00\x3f\x00"  # Ss=0 Se=63 AhAl=0
+    def blocks() -> Iterator[list[int]]:
+        for by in range((height + 7) // 8):
+            for bx in range((width + 7) // 8):
+                for c in range(n_comp):
+                    blk = block_at(planes[c], bx, by)
+                    # forward DCT + quantize, zigzag order
+                    coefs = [0] * 64
+                    for v in range(8):
+                        for u in range(8):
+                            s = 0.0
+                            for y in range(8):
+                                for x in range(8):
+                                    s += (blk[y * 8 + x] - 128) \
+                                        * cos[u][x] * cos[v][y]
+                            s *= 0.25 * cu[u] * cu[v]
+                            coefs[v * 8 + u] = int(
+                                math.floor(s / JPEG_QTAB[v * 8 + u] + 0.5)
+                            )
+                    yield [coefs[JPEG_ZIGZAG[i]] for i in range(64)]
 
-    bw = (width + 7) // 8
-    bh = (height + 7) // 8
-    pred = [0] * n_comp
-    for by in range(bh):
-        for bx in range(bw):
-            for c in range(n_comp):
-                blk = block_at(planes[c], bx, by)
-                # forward DCT + quantize, zigzag order
-                coefs = [0] * 64
-                for v in range(8):
-                    for u in range(8):
-                        s = 0.0
-                        for y in range(8):
-                            for x in range(8):
-                                s += (blk[y * 8 + x] - 128) \
-                                    * cos[u][x] * cos[v][y]
-                        s *= 0.25 * cu[u] * cu[v]
-                        coefs[v * 8 + u] = int(
-                            math.floor(s / qtab[v * 8 + u] + 0.5)
-                        )
-                zz = [coefs[JPEG_ZIGZAG[i]] for i in range(64)]
-                diff = zz[0] - pred[c]
-                pred[c] = zz[0]
-                s, vb = magnitude(diff)
-                code, ln = dc_codes[s]
-                put_bits(code, ln)
-                if s:
-                    put_bits(vb, s)
-                run = 0
-                last_nz = max(
-                    (i for i in range(1, 64) if zz[i]), default=0
-                )
-                for i in range(1, 64):
-                    if i > last_nz:
-                        code, ln = ac_codes[0x00]  # EOB
-                        put_bits(code, ln)
-                        break
-                    if zz[i] == 0:
-                        run += 1
-                        continue
-                    while run > 15:
-                        code, ln = ac_codes[0xF0]  # ZRL
-                        put_bits(code, ln)
-                        run -= 16
-                    s, vb = magnitude(zz[i])
-                    code, ln = ac_codes[(run << 4) | s]
-                    put_bits(code, ln)
-                    put_bits(vb, s)
-                    run = 0
-    if bitcnt:
-        put_bits((1 << (8 - bitcnt)) - 1, 8 - bitcnt)  # pad with 1s
-    return bytes(hdr) + bytes(out) + b"\xff\xd9"  # EOI
+    return _jpeg_encode_stream(width, height, n_comp, blocks())
 
 
-def _jpeg_parser():
-    """Build the one baseline JPEG header + entropy parser: payload ->
+def encode_jpeg_numpy(
+    width: int, height: int, planes: list[bytes]
+) -> bytes:
+    """``encode_jpeg_baseline`` with the forward DCT as two 8x8 numpy
+    matmuls per block (S = 0.25 M B M^T, M[u][x] = C(u) cos((2x+1)u
+    pi/16)). The q272 synthetic corpus encodes byte-identically on both
+    (tests pin it); matmul order may flip a rounding boundary elsewhere."""
+    n_comp = len(planes)
+    if n_comp not in (1, 3):
+        raise ValueError("encoder supports 1 (gray) or 3 (YCbCr) planes")
+    cos, cu = _jpeg_cos_tables()
+    mx = np.array(cu)[:, None] * np.array(cos)
+    qtab = np.array(JPEG_QTAB, dtype=np.float64)
+    arrs = [
+        np.frombuffer(p, dtype=np.uint8).reshape(height, width)
+        for p in planes
+    ]
+
+    def blocks() -> Iterator[list[int]]:
+        for by in range((height + 7) // 8):
+            ys = np.minimum(np.arange(by * 8, by * 8 + 8), height - 1)
+            for bx in range((width + 7) // 8):
+                xs = np.minimum(np.arange(bx * 8, bx * 8 + 8), width - 1)
+                for c in range(n_comp):
+                    blk = arrs[c][np.ix_(ys, xs)].astype(np.float64) - 128.0
+                    s = 0.25 * (mx @ blk @ mx.T)
+                    coefs = np.floor(s.reshape(64) / qtab + 0.5).astype(
+                        np.int64
+                    )
+                    yield [int(coefs[JPEG_ZIGZAG[i]]) for i in range(64)]
+
+    return _jpeg_encode_stream(width, height, n_comp, blocks())
+
+
+def _parse_jpeg(payload: bytes):
+    """The one baseline JPEG header + entropy parser: payload ->
     (width, height, qts, comp_zz) with qts[c] component c's quant table
     in natural order and comp_zz[c] its blocks' zigzag coefficient
     vectors (DC prediction applied) in block raster order. Marker walk
@@ -460,188 +496,177 @@ def _jpeg_parser():
     Supported profile: SOF0 baseline sequential, 8-bit, 1 or 3
     components with 1x1 sampling (4:4:4), 8-bit quant tables, no
     restart intervals, one scan covering every component. Anything else
-    raises ValueError.
-
-    A factory so the Arrow UDF can ship the parser by value: a nested
-    function pickles with its closure, a module-level one is re-imported
-    by the worker, which may not be able to import this package."""
-    zigzag = list(JPEG_ZIGZAG)
-
-    def parse(payload: bytes):
-        import struct
-
-        if payload[:2] != b"\xff\xd8":
-            raise ValueError("not a JPEG payload (missing SOI)")
-        pos = 2
-        qtabs: dict[int, list[int]] = {}
-        htabs: dict[tuple[int, int], dict] = {}
-        width = height = None
-        comps: list[tuple[int, int, int]] = []  # (id, sampling, qtab id)
-        scan_comps: list[tuple[int, int, int]] = []  # (comp idx, dc, ac)
-        data_start = None
-        while pos + 4 <= len(payload):
-            if payload[pos] != 0xFF:
-                raise ValueError("bad marker alignment")
-            marker = payload[pos + 1]
-            (seglen,) = struct.unpack_from(">H", payload, pos + 2)
-            if pos + 2 + seglen > len(payload):
-                raise ValueError("truncated JPEG segment")
-            seg = payload[pos + 4 : pos + 2 + seglen]
-            if marker == 0xDB:  # DQT
-                p = 0
-                while p < len(seg):
-                    pq, tq = seg[p] >> 4, seg[p] & 0x0F
-                    if pq != 0:
-                        raise ValueError("16-bit quant tables unsupported")
-                    zz = seg[p + 1 : p + 65]
-                    tab = [0] * 64
-                    for i in range(64):
-                        tab[zigzag[i]] = zz[i]
-                    qtabs[tq] = tab
-                    p += 65
-            elif marker == 0xC4:  # DHT
-                p = 0
-                while p < len(seg):
-                    cls, tid = seg[p] >> 4, seg[p] & 0x0F
-                    bits = list(seg[p + 1 : p + 17])
-                    n = sum(bits)
-                    vals = list(seg[p + 17 : p + 17 + n])
-                    dec, code, k = {}, 0, 0
-                    for ln in range(1, 17):
-                        for _ in range(bits[ln - 1]):
-                            dec[(ln, code)] = vals[k]
-                            code += 1
-                            k += 1
-                        code <<= 1
-                    htabs[(cls, tid)] = dec
-                    p += 17 + n
-            elif marker == 0xC0:  # SOF0 baseline
-                if seg[0] != 8:
-                    raise ValueError("only 8-bit precision supported")
-                height, width = struct.unpack_from(">HH", seg, 1)
-                nc = seg[5]
-                if nc not in (1, 3):
-                    raise ValueError("only 1- or 3-component JPEG supported")
-                for c in range(nc):
-                    cid, samp, tq = seg[6 + 3 * c : 9 + 3 * c]
-                    if samp != 0x11:
-                        raise ValueError(
-                            "chroma subsampling unsupported (4:4:4 only)"
-                        )
-                    comps.append((cid, samp, tq))
-            elif marker in (0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA,
-                            0xCB, 0xCD, 0xCE, 0xCF):
-                raise ValueError("only baseline sequential (SOF0) supported")
-            elif marker == 0xDD:  # DRI
-                (ri,) = struct.unpack_from(">H", seg, 0)
-                if ri != 0:
-                    raise ValueError("restart intervals unsupported")
-            elif marker == 0xDA:  # SOS
-                ns = seg[0]
-                for c in range(ns):
-                    cs, tt = seg[1 + 2 * c], seg[2 + 2 * c]
-                    idx = next(
-                        (i for i, (cid, _, _) in enumerate(comps) if cid == cs),
-                        None,
+    raises ValueError."""
+    if payload[:2] != b"\xff\xd8":
+        raise ValueError("not a JPEG payload (missing SOI)")
+    pos = 2
+    qtabs: dict[int, list[int]] = {}
+    htabs: dict[tuple[int, int], dict] = {}
+    width = height = None
+    comps: list[tuple[int, int, int]] = []  # (id, sampling, qtab id)
+    scan_comps: list[tuple[int, int, int]] = []  # (comp idx, dc, ac)
+    data_start = None
+    while pos + 4 <= len(payload):
+        if payload[pos] != 0xFF:
+            raise ValueError("bad marker alignment")
+        marker = payload[pos + 1]
+        (seglen,) = struct.unpack_from(">H", payload, pos + 2)
+        if pos + 2 + seglen > len(payload):
+            raise ValueError("truncated JPEG segment")
+        seg = payload[pos + 4 : pos + 2 + seglen]
+        if marker == 0xDB:  # DQT
+            p = 0
+            while p < len(seg):
+                pq, tq = seg[p] >> 4, seg[p] & 0x0F
+                if pq != 0:
+                    raise ValueError("16-bit quant tables unsupported")
+                zz = seg[p + 1 : p + 65]
+                tab = [0] * 64
+                for i in range(64):
+                    tab[JPEG_ZIGZAG[i]] = zz[i]
+                qtabs[tq] = tab
+                p += 65
+        elif marker == 0xC4:  # DHT
+            p = 0
+            while p < len(seg):
+                cls, tid = seg[p] >> 4, seg[p] & 0x0F
+                bits = list(seg[p + 1 : p + 17])
+                n = sum(bits)
+                vals = list(seg[p + 17 : p + 17 + n])
+                dec, code, k = {}, 0, 0
+                for ln in range(1, 17):
+                    for _ in range(bits[ln - 1]):
+                        dec[(ln, code)] = vals[k]
+                        code += 1
+                        k += 1
+                    code <<= 1
+                htabs[(cls, tid)] = dec
+                p += 17 + n
+        elif marker == 0xC0:  # SOF0 baseline
+            if seg[0] != 8:
+                raise ValueError("only 8-bit precision supported")
+            height, width = struct.unpack_from(">HH", seg, 1)
+            nc = seg[5]
+            if nc not in (1, 3):
+                raise ValueError("only 1- or 3-component JPEG supported")
+            for c in range(nc):
+                cid, samp, tq = seg[6 + 3 * c : 9 + 3 * c]
+                if samp != 0x11:
+                    raise ValueError(
+                        "chroma subsampling unsupported (4:4:4 only)"
                     )
-                    if idx is None:
-                        raise ValueError("SOS names an undeclared component")
-                    scan_comps.append((idx, tt >> 4, tt & 0x0F))
-                data_start = pos + 2 + seglen
-                break
-            pos += 2 + seglen
-        if width is None or data_start is None:
-            raise ValueError("JPEG missing SOF0/SOS")
-        nc = len(comps)
-        # a legal multi-scan file codes some components in later scans;
-        # only a single scan over every component is decoded
-        if sorted(ci for ci, _, _ in scan_comps) != list(range(nc)):
-            raise ValueError("multi-scan JPEG unsupported")
-        tables = []
-        for ci, dc_id, ac_id in scan_comps:
-            dct = htabs.get((0, dc_id))
-            act = htabs.get((1, ac_id))
-            if dct is None or act is None or qtabs.get(comps[ci][2]) is None:
-                raise ValueError("JPEG missing Huffman/quant table")
-            tables.append((ci, dct, act))
+                comps.append((cid, samp, tq))
+        elif marker in (0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA,
+                        0xCB, 0xCD, 0xCE, 0xCF):
+            raise ValueError("only baseline sequential (SOF0) supported")
+        elif marker == 0xDD:  # DRI
+            (ri,) = struct.unpack_from(">H", seg, 0)
+            if ri != 0:
+                raise ValueError("restart intervals unsupported")
+        elif marker == 0xDA:  # SOS
+            ns = seg[0]
+            for c in range(ns):
+                cs, tt = seg[1 + 2 * c], seg[2 + 2 * c]
+                idx = next(
+                    (i for i, (cid, _, _) in enumerate(comps) if cid == cs),
+                    None,
+                )
+                if idx is None:
+                    raise ValueError("SOS names an undeclared component")
+                scan_comps.append((idx, tt >> 4, tt & 0x0F))
+            data_start = pos + 2 + seglen
+            break
+        pos += 2 + seglen
+    if width is None or data_start is None:
+        raise ValueError("JPEG missing SOF0/SOS")
+    nc = len(comps)
+    # a legal multi-scan file codes some components in later scans;
+    # only a single scan over every component is decoded
+    if sorted(ci for ci, _, _ in scan_comps) != list(range(nc)):
+        raise ValueError("multi-scan JPEG unsupported")
+    tables = []
+    for ci, dc_id, ac_id in scan_comps:
+        dct = htabs.get((0, dc_id))
+        act = htabs.get((1, ac_id))
+        if dct is None or act is None or qtabs.get(comps[ci][2]) is None:
+            raise ValueError("JPEG missing Huffman/quant table")
+        tables.append((ci, dct, act))
 
-        # bit reader over entropy-coded data with 0xFF00 unstuffing
-        bpos, bitcnt, bitbuf = data_start, 0, 0
+    # bit reader over entropy-coded data with 0xFF00 unstuffing
+    bpos, bitcnt, bitbuf = data_start, 0, 0
 
-        def read_bit() -> int:
-            nonlocal bpos, bitcnt, bitbuf
-            if bitcnt == 0:
+    def read_bit() -> int:
+        nonlocal bpos, bitcnt, bitbuf
+        if bitcnt == 0:
+            if bpos >= len(payload):
+                raise ValueError("truncated entropy data")
+            byte = payload[bpos]
+            bpos += 1
+            if byte == 0xFF:
                 if bpos >= len(payload):
                     raise ValueError("truncated entropy data")
-                byte = payload[bpos]
-                bpos += 1
-                if byte == 0xFF:
-                    if bpos >= len(payload):
-                        raise ValueError("truncated entropy data")
-                    if payload[bpos] == 0x00:
-                        bpos += 1
-                    else:
-                        raise ValueError("unexpected marker in entropy data")
-                bitbuf, bitcnt = byte, 8
-            bitcnt -= 1
-            return (bitbuf >> bitcnt) & 1
+                if payload[bpos] == 0x00:
+                    bpos += 1
+                else:
+                    raise ValueError("unexpected marker in entropy data")
+            bitbuf, bitcnt = byte, 8
+        bitcnt -= 1
+        return (bitbuf >> bitcnt) & 1
 
-        def huff_decode(tab: dict) -> int:
-            code = 0
-            for ln in range(1, 17):
-                code = (code << 1) | read_bit()
-                sym = tab.get((ln, code))
-                if sym is not None:
-                    return sym
-            raise ValueError("invalid Huffman code")
+    def huff_decode(tab: dict) -> int:
+        code = 0
+        for ln in range(1, 17):
+            code = (code << 1) | read_bit()
+            sym = tab.get((ln, code))
+            if sym is not None:
+                return sym
+        raise ValueError("invalid Huffman code")
 
-        def receive_extend(s: int) -> int:
-            if s == 0:
-                return 0
-            v = 0
-            for _ in range(s):
-                v = (v << 1) | read_bit()
-            return v if v >= (1 << (s - 1)) else v - (1 << s) + 1
+    def receive_extend(s: int) -> int:
+        if s == 0:
+            return 0
+        v = 0
+        for _ in range(s):
+            v = (v << 1) | read_bit()
+        return v if v >= (1 << (s - 1)) else v - (1 << s) + 1
 
-        n_blocks = ((width + 7) // 8) * ((height + 7) // 8)
-        comp_zz: list[list[list[int]]] = [[] for _ in range(nc)]
-        pred = [0] * nc
-        for _ in range(n_blocks):
-            for ci, dct, act in tables:
-                zz = [0] * 64
-                s = huff_decode(dct)
-                pred[ci] += receive_extend(s)
-                zz[0] = pred[ci]
-                i = 1
-                while i < 64:
-                    rs = huff_decode(act)
-                    run, size = rs >> 4, rs & 0x0F
-                    if size == 0:
-                        if run == 15:  # ZRL
-                            i += 16
-                            continue
-                        break  # EOB
-                    i += run
-                    if i > 63:
-                        raise ValueError("AC coefficient index overflow")
-                    zz[i] = receive_extend(size)
-                    i += 1
-                comp_zz[ci].append(zz)
-        qts = [qtabs[tq] for _, _, tq in comps]
-        return width, height, qts, comp_zz
-
-    return parse
+    n_blocks = ((width + 7) // 8) * ((height + 7) // 8)
+    comp_zz: list[list[list[int]]] = [[] for _ in range(nc)]
+    pred = [0] * nc
+    for _ in range(n_blocks):
+        for ci, dct, act in tables:
+            zz = [0] * 64
+            s = huff_decode(dct)
+            pred[ci] += receive_extend(s)
+            zz[0] = pred[ci]
+            i = 1
+            while i < 64:
+                rs = huff_decode(act)
+                run, size = rs >> 4, rs & 0x0F
+                if size == 0:
+                    if run == 15:  # ZRL
+                        i += 16
+                        continue
+                    break  # EOB
+                i += run
+                if i > 63:
+                    raise ValueError("AC coefficient index overflow")
+                zz[i] = receive_extend(size)
+                i += 1
+            comp_zz[ci].append(zz)
+    qts = [qtabs[tq] for _, _, tq in comps]
+    return width, height, qts, comp_zz
 
 
 def decode_jpeg(payload: bytes) -> tuple[int, int, int, bytes]:
     """REAL baseline JPEG decode, pure stdlib: the shared parser
-    (``_jpeg_parser``), then dequantize, inverse zigzag, scalar float
+    (``_parse_jpeg``), then dequantize, inverse zigzag, scalar float
     IDCT, level shift + clamp, and for 3-component scans the JFIF
     YCbCr->RGB transform. Returns (width, height, n_components,
     pixels) — gray bytes or interleaved RGB, top-down row-major,
     edge-padded MCUs cropped to the declared size. Unsupported or
     corrupt input raises ValueError."""
-    width, height, qts, comp_zz = _jpeg_parser()(payload)
+    width, height, qts, comp_zz = _parse_jpeg(payload)
     cos, cu = _jpeg_cos_tables()
     nc = len(qts)
     bw, bh = (width + 7) // 8, (height + 7) // 8
@@ -691,6 +716,83 @@ def decode_jpeg(payload: bytes) -> tuple[int, int, int, bytes]:
             out[o + 1] = 0 if g < 0 else 255 if g > 255 else g
             out[o + 2] = 0 if b < 0 else 255 if b > 255 else b
     return width, height, 3, bytes(out)
+
+
+def decode_jpeg_numpy(payload: bytes) -> tuple[int, int, int, bytes]:
+    """``decode_jpeg`` with dequantize, inverse zigzag, IDCT and
+    YCbCr->RGB vectorized over all blocks of a component in numpy. The
+    output is bit-identical to the scalar decoder's (tests pin the two
+    equal)."""
+    # Entropy decode stays sequential Python (a Huffman bitstream
+    # has no batch form) and only COLLECTS the zigzag coefficient
+    # vectors; dequant + inverse zigzag + IDCT + level shift run
+    # vectorized over ALL blocks of a component below (the per-pixel
+    # Python quadruple loop was 4096 truthiness checks per block and
+    # the dominant decode cost). Bit-exactness: every numpy step
+    # mirrors the scalar code's operation order — see the IDCT comment.
+    width, height, qts, comp_zz = _parse_jpeg(payload)
+    nc = len(qts)
+    cos, cu = _jpeg_cos_tables()
+    bw, bh = (width + 7) // 8, (height + 7) // 8
+    zz_nat = np.array(JPEG_ZIGZAG, dtype=np.int64)  # zigzag -> natural
+    cu_np = np.array(cu)
+    cos_np = np.array(cos)  # cos_np[u, x], doubles identical
+    planes = []
+    for ci in range(nc):
+        qt = qts[ci]
+        zz_arr = np.array(comp_zz[ci], dtype=np.int64).reshape(-1, 64)
+        n_blk = zz_arr.shape[0]
+        # coefs[ZZ[i]] = zz[i] * qt[ZZ[i]] — integer, exact
+        qt_nat = np.array(qt, dtype=np.int64)
+        coefs = np.zeros((n_blk, 64), dtype=np.float64)
+        coefs[:, zz_nat] = (zz_arr * qt_nat[zz_nat][None, :]).astype(
+            np.float64
+        )
+        # IDCT, bit-identical to the scalar loop: accumulate over
+        # the 64 (v, u) positions IN THE SAME ORDER with
+        # element-wise ops only (each partial product keeps the
+        # scalar code's left association; element-wise IEEE adds
+        # in a fixed order are exactly the scalar sums; an
+        # all-zero position contributes exactly +-0.0 and is
+        # skipped, which cannot change any partial sum — no
+        # matmul/einsum, whose reassociation could flip a
+        # floor(x + 0.5) boundary pixel).
+        acc = np.zeros((n_blk, 8, 8), dtype=np.float64)
+        for idx in np.flatnonzero(coefs.any(axis=0)):
+            v, u = divmod(int(idx), 8)
+            t = (cu_np[u] * cu_np[v]) * coefs[:, idx]
+            t = t[:, None, None] * cos_np[u][None, None, :]
+            t = t * cos_np[v][None, :, None]
+            acc += t
+        valp = np.floor((0.25 * acc) + 0.5 + 1024.0).astype(
+            np.int64
+        ) - 1024 + 128
+        # (scalar int() truncates toward zero where floor rounds
+        # down, but they differ only for negative arguments,
+        # which clamp to 0 under both conventions)
+        blocks = np.clip(valp, 0, 255).astype(np.uint8)
+        planes.append(
+            blocks.reshape(bh, bw, 8, 8)
+            .transpose(0, 2, 1, 3)
+            .reshape(bh * 8, bw * 8)
+        )
+    if nc == 1:
+        px = planes[0][:height, :width]
+        return width, height, 1, px.tobytes()
+    # YCbCr -> RGB with the scalar code's exact association:
+    # ((yy + (k * c)) + 0.5) + 1024, floor, clamp — element-wise
+    yy = planes[0][:height, :width].astype(np.float64)
+    cb = planes[1][:height, :width].astype(np.float64) - 128.0
+    cr = planes[2][:height, :width].astype(np.float64) - 128.0
+    r = np.floor((yy + (1.402 * cr)) + 0.5 + 1024.0) - 1024.0
+    g = np.floor(
+        ((yy - (0.344136 * cb)) - (0.714136 * cr)) + 0.5 + 1024.0
+    ) - 1024.0
+    b = np.floor((yy + (1.772 * cb)) + 0.5 + 1024.0) - 1024.0
+    rgb = np.clip(
+        np.stack((r, g, b), axis=-1), 0.0, 255.0
+    ).astype(np.uint8)
+    return width, height, 3, rgb.tobytes()
 
 
 def decode_media(payload: bytes, mime: str):
@@ -783,26 +885,13 @@ def frame_sample(
 
 
 def extract_features(with_payload: DataFrame) -> DataFrame:
-    """Arrow-batched feature extraction over binary payloads.
-
-    The batch function is fully self-contained (no references to this
-    module's globals): cloudpickle ships nested functions by value, so
-    worker Python processes need no import of this package — required
-    when the driver runs from an arbitrary working directory.
-    """
+    """Arrow-batched feature extraction over binary payloads."""
 
     def per_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def fake_decode(payload: bytes) -> dict:
-            return {
-                "n_bytes": len(payload),
-                "header_hex": payload[:4].hex().upper(),
-                "fake_tokens": len(payload) // 4,
-            }
-
         for pdf in batches:
             if pdf.empty:
                 continue
-            feats = [fake_decode(bytes(p)) for p in pdf["payload"]]
+            feats = [_fake_decode(bytes(p)) for p in pdf["payload"]]
             out = pd.DataFrame(feats)
             out.insert(0, "doc_id", pdf["doc_id"].to_numpy())
             out.insert(1, "mime", pdf["mime"].to_numpy())
@@ -877,65 +966,65 @@ MEDIA_P1, MEDIA_P2 = 100_003, 104_729
 WAV_RATE = 8_000
 
 
+def media_val(doc_id: int, i: int, mod: int) -> int:
+    """The synthetic media value formula: sample/pixel-byte ``i`` of
+    ``doc_id``'s payload, reduced mod ``mod``."""
+    return (
+        MEDIA_LCG_A * ((doc_id * MEDIA_P1 + i * MEDIA_P2) % MEDIA_LCG_M)
+        + MEDIA_LCG_B
+    ) % mod
+
+
+def encode_bmp(width: int, height: int, logical: bytes) -> bytes:
+    """24-bit BI_RGB BMP container for top-down row-major RGB bytes:
+    rows stored bottom-up, each padded to 4 bytes (what ``decode_bmp``
+    undoes)."""
+    row_size = (width * 3 + 3) // 4 * 4
+    pad = b"\x00" * (row_size - width * 3)
+    body = b"".join(
+        logical[y * width * 3 : (y + 1) * width * 3] + pad
+        for y in range(height - 1, -1, -1)
+    )
+    return (
+        b"BM" + struct.pack("<IHHI", 54 + len(body), 0, 0, 54)
+        + struct.pack("<IiiHHIIiiII", 40, width, height, 1, 24, 0,
+                      len(body), 2835, 2835, 0, 0)
+        + body
+    )
+
+
 def synth_media_payloads(docs: DataFrame) -> DataFrame:
     """Deterministic media ingestion source: even doc_ids get a PCM16
     mono WAV (200 + doc_id%57 samples), odd doc_ids a 24-bit BMP
     ((8 + doc_id%9) x (6 + doc_id%7)) — real container bytes built with
-    struct, not placeholders. Self-contained batch fn (cwd-independent
-    workers)."""
+    struct, not placeholders."""
 
     def per_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-
-        A, B, M = 1_103_515_245, 12_345, 1_000_003
-        P1, P2 = 100_003, 104_729
-
-        def val(doc_id: int, i: int, mod: int) -> int:
-            return (A * ((doc_id * P1 + i * P2) % M) + B) % mod
-
-        def wav_bytes(doc_id: int) -> bytes:
+        def payload(doc_id: int) -> tuple[str, bytes]:
+            if doc_id % 2:
+                w, h = 8 + doc_id % 9, 6 + doc_id % 7
+                logical = bytes(
+                    media_val(doc_id, i, 256) for i in range(w * h * 3)
+                )
+                return "image/bmp", encode_bmp(w, h, logical)
             n = 200 + doc_id % 57
-            samples = [val(doc_id, k, 65536) - 32768 for k in range(n)]
+            samples = [media_val(doc_id, k, 65536) - 32768 for k in range(n)]
             data = struct.pack(f"<{n}h", *samples)
             hdr = (
                 b"RIFF" + struct.pack("<I", 36 + len(data)) + b"WAVE"
-                + b"fmt " + struct.pack("<IHHIIHH", 16, 1, 1, 8000,
-                                        16000, 2, 16)
+                + b"fmt " + struct.pack("<IHHIIHH", 16, 1, 1, WAV_RATE,
+                                        2 * WAV_RATE, 2, 16)
                 + b"data" + struct.pack("<I", len(data))
             )
-            return hdr + data
-
-        def bmp_bytes(doc_id: int) -> bytes:
-            w, h = 8 + doc_id % 9, 6 + doc_id % 7
-            logical = bytes(
-                val(doc_id, i, 256) for i in range(w * h * 3)
-            )
-            row_size = (w * 3 + 3) // 4 * 4
-            pad = b"\x00" * (row_size - w * 3)
-            # stored bottom-up, each row padded to 4 bytes
-            body = b"".join(
-                logical[y * w * 3 : (y + 1) * w * 3] + pad
-                for y in range(h - 1, -1, -1)
-            )
-            hdr = (
-                b"BM" + struct.pack("<IHHI", 54 + len(body), 0, 0, 54)
-                + struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0,
-                              len(body), 2835, 2835, 0, 0)
-            )
-            return hdr + body
+            return "audio/wav", hdr + data
 
         for pdf in batches:
             if pdf.empty:
                 continue
             rows = []
             for did in pdf["doc_id"]:
-                did = int(did)
-                if did % 2 == 0:
-                    rows.append({"doc_id": did, "mime": "audio/wav",
-                                 "payload": wav_bytes(did)})
-                else:
-                    rows.append({"doc_id": did, "mime": "image/bmp",
-                                 "payload": bmp_bytes(did)})
+                mime, data = payload(int(did))
+                rows.append({"doc_id": int(did), "mime": mime, "payload": data})
             yield pd.DataFrame(rows)
 
     return docs.select("doc_id").mapInPandas(
@@ -948,40 +1037,9 @@ def media_decode_features(with_payload: DataFrame) -> DataFrame:
     RIFF parser, BMP via struct DIB parsing (padding + bottom-up undo) —
     then integer-exact features over the decoded units: unit count
     (samples / pixels), value sum (sum |sample| / sum of channel bytes),
-    value max. Self-contained batch fn (inline copies of the module's
-    decode_wav/decode_bmp — workers must not need this package on their
-    import path; unit tests pin the copies equal)."""
+    value max."""
 
     def per_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-        import struct
-        import wave
-
-        def dec_wav(payload: bytes) -> tuple[int, list[int]]:
-            with wave.open(io.BytesIO(payload), "rb") as w:
-                if w.getsampwidth() != 2 or w.getnchannels() != 1:
-                    raise ValueError("only PCM16 mono supported")
-                n = w.getnframes()
-                rate = w.getframerate()
-                frames = w.readframes(n)
-            return rate, list(struct.unpack(f"<{n}h", frames))
-
-        def dec_bmp(payload: bytes) -> tuple[int, int, bytes]:
-            if payload[:2] != b"BM":
-                raise ValueError("not a BMP payload")
-            (offset,) = struct.unpack_from("<I", payload, 10)
-            width, height = struct.unpack_from("<ii", payload, 18)
-            (bpp,) = struct.unpack_from("<H", payload, 28)
-            (compression,) = struct.unpack_from("<I", payload, 30)
-            if bpp != 24 or compression != 0 or height <= 0:
-                raise ValueError("unsupported BMP variant")
-            row_size = (width * 3 + 3) // 4 * 4
-            out = bytearray()
-            for y in range(height):
-                start = offset + (height - 1 - y) * row_size
-                out += payload[start : start + width * 3]
-            return width, height, bytes(out)
-
         for pdf in batches:
             if pdf.empty:
                 continue
@@ -991,7 +1049,7 @@ def media_decode_features(with_payload: DataFrame) -> DataFrame:
             ):
                 data = bytes(payload)
                 if mime == "audio/wav":
-                    rate, samples = dec_wav(data)
+                    rate, samples = decode_wav(data)
                     rows.append({
                         "doc_id": int(did), "mime": mime,
                         "n_units": len(samples),
@@ -1000,7 +1058,7 @@ def media_decode_features(with_payload: DataFrame) -> DataFrame:
                         "rate_or_width": rate,
                     })
                 else:
-                    w, h, px = dec_bmp(data)
+                    w, h, px = decode_bmp(data)
                     rows.append({
                         "doc_id": int(did), "mime": mime,
                         "n_units": w * h,
@@ -1037,43 +1095,10 @@ def perceptual_hashes(with_payload: DataFrame) -> DataFrame:
     """(doc_id, width, height, dhash, dhash_twin, dhash_twin_match,
     byte_twin_match) per image payload. Real decode -> integer grid
     resample -> 56-bit dHash, plus the brightness twin's full
-    encode->decode round trip. Self-contained batch fn (inline decoder /
-    encoder copies — workers must not need this package importable;
-    tests pin the copies equal)."""
+    encode->decode round trip."""
 
     def per_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import hashlib
-        import struct
-
-        def dec_bmp(payload: bytes) -> tuple[int, int, bytes]:
-            if payload[:2] != b"BM":
-                raise ValueError("not a BMP payload")
-            (offset,) = struct.unpack_from("<I", payload, 10)
-            width, height = struct.unpack_from("<ii", payload, 18)
-            (bpp,) = struct.unpack_from("<H", payload, 28)
-            (compression,) = struct.unpack_from("<I", payload, 30)
-            if bpp != 24 or compression != 0 or height <= 0:
-                raise ValueError("unsupported BMP variant")
-            row_size = (width * 3 + 3) // 4 * 4
-            out = bytearray()
-            for y in range(height):
-                start = offset + (height - 1 - y) * row_size
-                out += payload[start : start + width * 3]
-            return width, height, bytes(out)
-
-        def enc_bmp(w: int, h: int, logical: bytes) -> bytes:
-            row_size = (w * 3 + 3) // 4 * 4
-            pad = b"\x00" * (row_size - w * 3)
-            body = b"".join(
-                logical[y * w * 3 : (y + 1) * w * 3] + pad
-                for y in range(h - 1, -1, -1)
-            )
-            return (
-                b"BM" + struct.pack("<IHHI", 54 + len(body), 0, 0, 54)
-                + struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0,
-                              len(body), 2835, 2835, 0, 0)
-                + body
-            )
 
         def grid_grays(w: int, h: int, px: bytes) -> list[list[int]]:
             g = [[0] * PHASH_GX for _ in range(PHASH_GY)]
@@ -1099,10 +1124,10 @@ def perceptual_hashes(with_payload: DataFrame) -> DataFrame:
             rows = []
             for did, payload in zip(pdf["doc_id"], pdf["payload"]):
                 data = bytes(payload)
-                w, h, px = dec_bmp(data)
+                w, h, px = decode_bmp(data)
                 twin_logical = bytes(min(255, b + PHASH_SHIFT) for b in px)
-                twin_payload = enc_bmp(w, h, twin_logical)
-                w2, h2, px2 = dec_bmp(twin_payload)
+                twin_payload = encode_bmp(w, h, twin_logical)
+                w2, h2, px2 = decode_bmp(twin_payload)
                 d0 = dhash(grid_grays(w, h, px))
                 d1 = dhash(grid_grays(w2, h2, px2))
                 rows.append({
@@ -1139,71 +1164,9 @@ def synth_png_payloads(docs: DataFrame) -> DataFrame:
     """Deterministic PNG ingestion source: even doc_ids get an 8-bit
     GRAYSCALE PNG (color type 0), odd doc_ids an 8-bit RGB PNG (color
     type 2), both (8 + doc_id%9) x (6 + doc_id%7), pixel stream
-    val(doc_id, i, 256), per-row filter (doc_id + y) % 5. Self-contained
-    batch fn (inline encoder copy — workers must not need this package
-    importable; tests pin the copy equal to encode_png)."""
+    media_val(doc_id, i, 256), per-row filter (doc_id + y) % 5."""
 
     def per_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-        import zlib
-
-        A, B, M = 1_103_515_245, 12_345, 1_000_003
-        P1, P2 = 100_003, 104_729
-
-        def val(doc_id: int, i: int) -> int:
-            return (A * ((doc_id * P1 + i * P2) % M) + B) % 256
-
-        def paeth(a: int, b: int, c: int) -> int:
-            p = a + b - c
-            pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-            if pa <= pb and pa <= pc:
-                return a
-            if pb <= pc:
-                return b
-            return c
-
-        def enc(width, height, color, logical, doc_id):
-            bpp = 3 if color == 2 else 1
-            stride = width * bpp
-
-            def chunk(ctype, data):
-                return (
-                    struct.pack(">I", len(data)) + ctype + data
-                    + struct.pack(
-                        ">I", zlib.crc32(ctype + data) & 0xFFFFFFFF
-                    )
-                )
-
-            scan = bytearray()
-            prior = bytes(stride)
-            for y in range(height):
-                row = logical[y * stride : (y + 1) * stride]
-                ftype = (doc_id + y) % 5
-                scan.append(ftype)
-                for i in range(stride):
-                    left = row[i - bpp] if i >= bpp else 0
-                    up = prior[i]
-                    ul = prior[i - bpp] if i >= bpp else 0
-                    if ftype == 0:
-                        pred = 0
-                    elif ftype == 1:
-                        pred = left
-                    elif ftype == 2:
-                        pred = up
-                    elif ftype == 3:
-                        pred = (left + up) // 2
-                    else:
-                        pred = paeth(left, up, ul)
-                    scan.append((row[i] - pred) & 0xFF)
-                prior = row
-            ihdr = struct.pack(">IIBBBBB", width, height, 8, color, 0, 0, 0)
-            return (
-                b"\x89PNG\r\n\x1a\n"
-                + chunk(b"IHDR", ihdr)
-                + chunk(b"IDAT", zlib.compress(bytes(scan)))
-                + chunk(b"IEND", b"")
-            )
-
         for pdf in batches:
             if pdf.empty:
                 continue
@@ -1213,11 +1176,14 @@ def synth_png_payloads(docs: DataFrame) -> DataFrame:
                 w, h = 8 + did % 9, 6 + did % 7
                 color = 0 if did % 2 == 0 else 2
                 n = w * h * (3 if color == 2 else 1)
-                logical = bytes(val(did, i) for i in range(n))
+                logical = bytes(media_val(did, i, 256) for i in range(n))
                 rows.append({
                     "doc_id": did, "mime": "image/png",
                     "color_type": color,
-                    "payload": enc(w, h, color, logical, did),
+                    "payload": encode_png(
+                        w, h, color, logical,
+                        lambda y, d=did: (d + y) % PNG_FILTER_MOD,
+                    ),
                 })
             yield pd.DataFrame(rows)
 
@@ -1231,88 +1197,15 @@ def png_decode_features(with_payload: DataFrame) -> DataFrame:
     """REAL PNG decode inside the Arrow UDF — chunk walk with CRC
     verification, zlib inflate, five-filter unfiltering — then
     integer-exact features over the decoded pixel stream: pixel count,
-    channel-byte sum, channel-byte max, width. Self-contained batch fn
-    (inline decoder copy; tests pin it equal to decode_png)."""
+    channel-byte sum, channel-byte max, width."""
 
     def per_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-        import zlib
-
-        def paeth(a: int, b: int, c: int) -> int:
-            p = a + b - c
-            pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-            if pa <= pb and pa <= pc:
-                return a
-            if pb <= pc:
-                return b
-            return c
-
-        def dec(payload: bytes):
-            if payload[:8] != b"\x89PNG\r\n\x1a\n":
-                raise ValueError("not a PNG payload")
-            pos, width = 8, None
-            idat = bytearray()
-            while pos + 8 <= len(payload):
-                (length,) = struct.unpack_from(">I", payload, pos)
-                if pos + 12 + length > len(payload):
-                    raise ValueError("truncated PNG chunk")
-                ctype = payload[pos + 4 : pos + 8]
-                data = payload[pos + 8 : pos + 8 + length]
-                (crc,) = struct.unpack_from(">I", payload, pos + 8 + length)
-                if zlib.crc32(ctype + data) & 0xFFFFFFFF != crc:
-                    raise ValueError(f"PNG chunk {ctype!r} CRC mismatch")
-                if ctype == b"IHDR":
-                    width, height, depth, color, comp, filt, inter = (
-                        struct.unpack(">IIBBBBB", data)
-                    )
-                    if depth != 8 or color not in (0, 2) or inter != 0 \
-                            or comp != 0 or filt != 0:
-                        raise ValueError("unsupported PNG profile")
-                elif ctype == b"IDAT":
-                    idat += data
-                elif ctype == b"IEND":
-                    break
-                pos += 12 + length
-            if width is None:
-                raise ValueError("PNG missing IHDR")
-            bpp = 3 if color == 2 else 1
-            stride = width * bpp
-            raw = zlib.decompress(bytes(idat))
-            if len(raw) != (stride + 1) * height:
-                raise ValueError("PNG scanline data has wrong length")
-            out = bytearray()
-            prior = bytes(stride)
-            for y in range(height):
-                ftype = raw[y * (stride + 1)]
-                filt = raw[y * (stride + 1) + 1 : (y + 1) * (stride + 1)]
-                recon = bytearray(stride)
-                for i in range(stride):
-                    left = recon[i - bpp] if i >= bpp else 0
-                    up = prior[i]
-                    ul = prior[i - bpp] if i >= bpp else 0
-                    if ftype == 0:
-                        pred = 0
-                    elif ftype == 1:
-                        pred = left
-                    elif ftype == 2:
-                        pred = up
-                    elif ftype == 3:
-                        pred = (left + up) // 2
-                    elif ftype == 4:
-                        pred = paeth(left, up, ul)
-                    else:
-                        raise ValueError(f"unknown PNG filter {ftype}")
-                    recon[i] = (filt[i] + pred) & 0xFF
-                out += recon
-                prior = recon
-            return width, height, color, bytes(out)
-
         for pdf in batches:
             if pdf.empty:
                 continue
             rows = []
             for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, color, px = dec(bytes(payload))
+                w, h, color, px = decode_png(bytes(payload))
                 rows.append({
                     "doc_id": int(did),
                     "color_type": color,
@@ -1351,178 +1244,10 @@ def synth_jpeg_payloads(docs: DataFrame) -> DataFrame:
     """Deterministic JPEG ingestion source: even doc_ids get a grayscale
     baseline JPEG, odd doc_ids a YCbCr 4:4:4 color one (chroma constant
     128, so decoded RGB == Y exactly); dimensions 8*(1 + doc_id%3) x
-    8*(1 + doc_id%2); 8x8 block b is constant val(doc_id, b, 256).
-    Self-contained batch fn (inline encoder copy, numpy-vectorized DCT;
-    tests pin payloads byte-identical to encode_jpeg_baseline)."""
+    8*(1 + doc_id%2); 8x8 block b is constant media_val(doc_id, b, 256).
+    Encoded with ``encode_jpeg_numpy``."""
 
     def per_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import math
-        import struct
-
-        import numpy as np
-
-        A, B, M = 1_103_515_245, 12_345, 1_000_003
-        P1, P2 = 100_003, 104_729
-
-        def val(doc_id: int, i: int) -> int:
-            return (A * ((doc_id * P1 + i * P2) % M) + B) % 256
-
-        ZZ = [
-            0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
-            12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13, 6, 7, 14, 21, 28,
-            35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
-            58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63,
-        ]
-        DC_BITS = [0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0]
-        DC_VALS = list(range(12))
-        AC_BITS = [0, 2, 1, 3, 3, 2, 4, 3, 5, 5, 4, 4, 0, 0, 1, 0x7D]
-        AC_VALS = [
-            0x01, 0x02, 0x03, 0x00, 0x04, 0x11, 0x05, 0x12, 0x21, 0x31,
-            0x41, 0x06, 0x13, 0x51, 0x61, 0x07, 0x22, 0x71, 0x14, 0x32,
-            0x81, 0x91, 0xA1, 0x08, 0x23, 0x42, 0xB1, 0xC1, 0x15, 0x52,
-            0xD1, 0xF0, 0x24, 0x33, 0x62, 0x72, 0x82, 0x09, 0x0A, 0x16,
-            0x17, 0x18, 0x19, 0x1A, 0x25, 0x26, 0x27, 0x28, 0x29, 0x2A,
-            0x34, 0x35, 0x36, 0x37, 0x38, 0x39, 0x3A, 0x43, 0x44, 0x45,
-            0x46, 0x47, 0x48, 0x49, 0x4A, 0x53, 0x54, 0x55, 0x56, 0x57,
-            0x58, 0x59, 0x5A, 0x63, 0x64, 0x65, 0x66, 0x67, 0x68, 0x69,
-            0x6A, 0x73, 0x74, 0x75, 0x76, 0x77, 0x78, 0x79, 0x7A, 0x83,
-            0x84, 0x85, 0x86, 0x87, 0x88, 0x89, 0x8A, 0x92, 0x93, 0x94,
-            0x95, 0x96, 0x97, 0x98, 0x99, 0x9A, 0xA2, 0xA3, 0xA4, 0xA5,
-            0xA6, 0xA7, 0xA8, 0xA9, 0xAA, 0xB2, 0xB3, 0xB4, 0xB5, 0xB6,
-            0xB7, 0xB8, 0xB9, 0xBA, 0xC2, 0xC3, 0xC4, 0xC5, 0xC6, 0xC7,
-            0xC8, 0xC9, 0xCA, 0xD2, 0xD3, 0xD4, 0xD5, 0xD6, 0xD7, 0xD8,
-            0xD9, 0xDA, 0xE1, 0xE2, 0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8,
-            0xE9, 0xEA, 0xF1, 0xF2, 0xF3, 0xF4, 0xF5, 0xF6, 0xF7, 0xF8,
-            0xF9, 0xFA,
-        ]
-        Q_DC, Q_AC = 8, 16
-
-        def canonical(bits, vals):
-            out, code, k = {}, 0, 0
-            for ln in range(1, 17):
-                for _ in range(bits[ln - 1]):
-                    out[vals[k]] = (code, ln)
-                    code += 1
-                    k += 1
-                code <<= 1
-            return out
-
-        dc_codes = canonical(DC_BITS, DC_VALS)
-        ac_codes = canonical(AC_BITS, AC_VALS)
-        # DCT basis M[u][x] = C(u) cos((2x+1)u pi/16); S = 0.25 M B M^T
-        Mx = np.array(
-            [
-                [
-                    (1 / math.sqrt(2) if u == 0 else 1.0)
-                    * math.cos((2 * x + 1) * u * math.pi / 16)
-                    for x in range(8)
-                ]
-                for u in range(8)
-            ]
-        )
-        qtab = np.full(64, Q_AC, dtype=np.float64)
-        qtab[0] = Q_DC
-
-        def enc(width, height, planes):
-            n_comp = len(planes)
-            out = bytearray()
-            state = {"buf": 0, "cnt": 0}
-
-            def put_bits(code, ln):
-                state["buf"] = (state["buf"] << ln) | (code & ((1 << ln) - 1))
-                state["cnt"] += ln
-                while state["cnt"] >= 8:
-                    byte = (state["buf"] >> (state["cnt"] - 8)) & 0xFF
-                    out.append(byte)
-                    if byte == 0xFF:
-                        out.append(0x00)
-                    state["cnt"] -= 8
-                state["buf"] &= (1 << state["cnt"]) - 1
-
-            def magnitude(v):
-                if v == 0:
-                    return 0, 0
-                a, s = abs(v), 0
-                while a:
-                    a >>= 1
-                    s += 1
-                return s, (v if v >= 0 else v + (1 << s) - 1)
-
-            hdr = bytearray(b"\xff\xd8")
-            hdr += b"\xff\xe0" + struct.pack(">H", 16) \
-                + b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"
-            zz_q = bytes(int(qtab[ZZ[i]]) for i in range(64))
-            hdr += b"\xff\xdb" + struct.pack(">H", 67) + b"\x00" + zz_q
-            hdr += b"\xff\xc0" + struct.pack(">HB", 8 + 3 * n_comp, 8)
-            hdr += struct.pack(">HH", height, width) + bytes([n_comp])
-            for c in range(n_comp):
-                hdr += bytes([c + 1, 0x11, 0])
-            for cls, bits, vals in (
-                (0, DC_BITS, DC_VALS), (1, AC_BITS, AC_VALS)
-            ):
-                hdr += b"\xff\xc4" + struct.pack(">H", 19 + len(vals))
-                hdr += bytes([cls << 4]) + bytes(bits) + bytes(vals)
-            hdr += b"\xff\xda" + struct.pack(">H", 6 + 2 * n_comp) \
-                + bytes([n_comp])
-            for c in range(n_comp):
-                hdr += bytes([c + 1, 0x00])
-            hdr += b"\x00\x3f\x00"
-
-            bw, bh = (width + 7) // 8, (height + 7) // 8
-            pred = [0] * n_comp
-            arrs = [
-                np.frombuffer(p, dtype=np.uint8).reshape(height, width)
-                for p in planes
-            ]
-            for by in range(bh):
-                for bx in range(bw):
-                    for c in range(n_comp):
-                        ys = np.minimum(
-                            np.arange(by * 8, by * 8 + 8), height - 1
-                        )
-                        xs = np.minimum(
-                            np.arange(bx * 8, bx * 8 + 8), width - 1
-                        )
-                        blk = arrs[c][np.ix_(ys, xs)].astype(
-                            np.float64
-                        ) - 128.0
-                        S = 0.25 * (Mx @ blk @ Mx.T)
-                        coefs = np.floor(
-                            S.reshape(64) / qtab + 0.5
-                        ).astype(np.int64)
-                        zz = [int(coefs[ZZ[i]]) for i in range(64)]
-                        diff = zz[0] - pred[c]
-                        pred[c] = zz[0]
-                        s, vb = magnitude(diff)
-                        code, ln = dc_codes[s]
-                        put_bits(code, ln)
-                        if s:
-                            put_bits(vb, s)
-                        run = 0
-                        last_nz = max(
-                            (i for i in range(1, 64) if zz[i]), default=0
-                        )
-                        for i in range(1, 64):
-                            if i > last_nz:
-                                code, ln = ac_codes[0x00]
-                                put_bits(code, ln)
-                                break
-                            if zz[i] == 0:
-                                run += 1
-                                continue
-                            while run > 15:
-                                code, ln = ac_codes[0xF0]
-                                put_bits(code, ln)
-                                run -= 16
-                            s, vb = magnitude(zz[i])
-                            code, ln = ac_codes[(run << 4) | s]
-                            put_bits(code, ln)
-                            put_bits(vb, s)
-                            run = 0
-            if state["cnt"]:
-                put_bits((1 << (8 - state["cnt"])) - 1, 8 - state["cnt"])
-            return bytes(hdr) + bytes(out) + b"\xff\xd9"
-
         for pdf in batches:
             if pdf.empty:
                 continue
@@ -1533,7 +1258,7 @@ def synth_jpeg_payloads(docs: DataFrame) -> DataFrame:
                 bw, bh = w // 8, h // 8
                 plane = bytearray(w * h)
                 for b in range(bw * bh):
-                    v = val(did, b)
+                    v = media_val(did, b, 256)
                     by, bx = divmod(b, bw)
                     for y in range(8):
                         o = (by * 8 + y) * w + bx * 8
@@ -1544,7 +1269,8 @@ def synth_jpeg_payloads(docs: DataFrame) -> DataFrame:
                     planes += [bytes([128] * (w * h))] * 2
                 rows.append({
                     "doc_id": did, "mime": "image/jpeg",
-                    "n_comp": n_comp, "payload": enc(w, h, planes),
+                    "n_comp": n_comp,
+                    "payload": encode_jpeg_numpy(w, h, planes),
                 })
             yield pd.DataFrame(rows)
 
@@ -1562,98 +1288,17 @@ def synth_jpeg_payloads(docs: DataFrame) -> DataFrame:
 
 
 def jpeg_decode_features(with_payload: DataFrame) -> DataFrame:
-    """REAL baseline JPEG decode inside the Arrow UDF — the shared
-    parser (``_jpeg_parser``: marker walk, DQT/DHT parsing, Huffman
-    entropy decode with unstuffing, DC prediction), then dequantize,
-    inverse zigzag, IDCT and YCbCr->RGB vectorized over all blocks of a
-    component in numpy — then integer-exact features over the decoded
-    pixel stream. The numpy IDCT is bit-identical to ``decode_jpeg``'s
-    scalar one (tests pin the two equal)."""
-    parse = _jpeg_parser()
-    zigzag = list(JPEG_ZIGZAG)
-    cos, cu = _jpeg_cos_tables()
+    """REAL baseline JPEG decode inside the Arrow UDF
+    (``decode_jpeg_numpy``) — then integer-exact features over the
+    decoded pixel stream."""
 
     def per_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        def dec(payload):
-            # Entropy decode stays sequential Python (a Huffman bitstream
-            # has no batch form) and only COLLECTS the zigzag coefficient
-            # vectors; dequant + inverse zigzag + IDCT + level shift run
-            # vectorized over ALL blocks of a component below (round-12
-            # verdict item 3: the per-pixel Python quadruple loop was
-            # 4096 truthiness checks per block and the dominant decode
-            # cost). Bit-exactness: every numpy step mirrors the scalar
-            # code's operation order — see the IDCT comment below.
-            width, height, qts, comp_zz = parse(payload)
-            nc = len(qts)
-            bw, bh = (width + 7) // 8, (height + 7) // 8
-            zz_nat = np.array(zigzag, dtype=np.int64)  # zigzag -> natural
-            cu_np = np.array(cu)
-            cos_np = np.array(cos)  # cos_np[u, x], doubles identical
-            planes = []
-            for ci in range(nc):
-                qt = qts[ci]
-                zz_arr = np.array(comp_zz[ci], dtype=np.int64).reshape(-1, 64)
-                n_blk = zz_arr.shape[0]
-                # coefs[ZZ[i]] = zz[i] * qt[ZZ[i]] — integer, exact
-                qt_nat = np.array(qt, dtype=np.int64)
-                coefs = np.zeros((n_blk, 64), dtype=np.float64)
-                coefs[:, zz_nat] = (zz_arr * qt_nat[zz_nat][None, :]).astype(
-                    np.float64
-                )
-                # IDCT, bit-identical to the scalar loop: accumulate over
-                # the 64 (v, u) positions IN THE SAME ORDER with
-                # element-wise ops only (each partial product keeps the
-                # scalar code's left association; element-wise IEEE adds
-                # in a fixed order are exactly the scalar sums; an
-                # all-zero position contributes exactly +-0.0 and is
-                # skipped, which cannot change any partial sum — no
-                # matmul/einsum, whose reassociation could flip a
-                # floor(x + 0.5) boundary pixel).
-                acc = np.zeros((n_blk, 8, 8), dtype=np.float64)
-                for idx in np.flatnonzero(coefs.any(axis=0)):
-                    v, u = divmod(int(idx), 8)
-                    t = (cu_np[u] * cu_np[v]) * coefs[:, idx]
-                    t = t[:, None, None] * cos_np[u][None, None, :]
-                    t = t * cos_np[v][None, :, None]
-                    acc += t
-                valp = np.floor((0.25 * acc) + 0.5 + 1024.0).astype(
-                    np.int64
-                ) - 1024 + 128
-                # (scalar int() truncates toward zero where floor rounds
-                # down, but they differ only for negative arguments,
-                # which clamp to 0 under both conventions)
-                blocks = np.clip(valp, 0, 255).astype(np.uint8)
-                planes.append(
-                    blocks.reshape(bh, bw, 8, 8)
-                    .transpose(0, 2, 1, 3)
-                    .reshape(bh * 8, bw * 8)
-                )
-            if nc == 1:
-                px = planes[0][:height, :width]
-                return width, height, 1, px.tobytes()
-            # YCbCr -> RGB with the scalar code's exact association:
-            # ((yy + (k * c)) + 0.5) + 1024, floor, clamp — element-wise
-            yy = planes[0][:height, :width].astype(np.float64)
-            cb = planes[1][:height, :width].astype(np.float64) - 128.0
-            cr = planes[2][:height, :width].astype(np.float64) - 128.0
-            r = np.floor((yy + (1.402 * cr)) + 0.5 + 1024.0) - 1024.0
-            g = np.floor(
-                ((yy - (0.344136 * cb)) - (0.714136 * cr)) + 0.5 + 1024.0
-            ) - 1024.0
-            b = np.floor((yy + (1.772 * cb)) + 0.5 + 1024.0) - 1024.0
-            rgb = np.clip(
-                np.stack((r, g, b), axis=-1), 0.0, 255.0
-            ).astype(np.uint8)
-            return width, height, 3, rgb.tobytes()
-
         for pdf in batches:
             if pdf.empty:
                 continue
             rows = []
             for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, nc, px = dec(bytes(payload))
+                w, h, nc, px = decode_jpeg_numpy(bytes(payload))
                 rows.append({
                     "doc_id": int(did),
                     "n_comp": nc,

@@ -134,43 +134,28 @@ def simhash_expr(col: str = "text", bits: int = 16) -> tuple[str, str]:
 # parity verified per-row by the correctness gate itself.
 
 
-def _minhash_minima_kernel():
-    """Build the per-document kernel: text -> the 16 MinHash minima (one
-    per affine permutation over the char-5-shingle polynomial hashes),
-    identical integers to ``minhash_sig_expr``'s SQL list.
+def minhash_minima(text: str) -> list[int]:
+    """text -> the 16 MinHash minima (one per affine permutation over the
+    char-5-shingle polynomial hashes), identical integers to
+    ``minhash_sig_expr``'s SQL list."""
+    import numpy as np
 
-    A factory, not a module-level function: a Python worker may not be
-    able to import this package (it inherits the driver's cwd), and
-    cloudpickle ships a nested function by value with its closure, while
-    a module-level one is shipped by reference and re-imported."""
-    perms = list(MINHASH_PERMS)
     mod, base, k = POLY_MOD, POLY_BASE, 5
-
-    def minima(text: str) -> list[int]:
-        import numpy as np
-
-        codes = np.fromiter(map(ord, text), dtype=np.int64, count=len(text))
-        n = len(codes)
-        m = max(n - (k - 1), 1)
-        h = np.zeros(m, dtype=np.int64)
-        for j in range(min(k, n)):
-            h = (h * base + codes[j : j + m]) % mod
-        return [int(((a * h + b) % mod).min()) for a, b in perms]
-
-    return minima
+    codes = np.fromiter(map(ord, text), dtype=np.int64, count=len(text))
+    n = len(codes)
+    m = max(n - (k - 1), 1)
+    h = np.zeros(m, dtype=np.int64)
+    for j in range(min(k, n)):
+        h = (h * base + codes[j : j + m]) % mod
+    return [int(((a * h + b) % mod).min()) for a, b in MINHASH_PERMS]
 
 
-def minhash_bands_pandas(df, text_col: str = "text", id_col: str = "doc_id", row_counter=None):
+def minhash_bands_pandas(df, text_col: str = "text", id_col: str = "doc_id"):
     """(id, band0..bandN) MinHash band signatures, numpy-vectorized.
 
     Matches minhash_sig_expr exactly: char-5-shingle polynomial hashes,
     16 affine permutations, 4 bands of 4 joined with '-'.
-
-    ``row_counter``: optional Spark accumulator incremented per processed
-    input row — an execution probe, used by tests to PROVE this stage runs
-    once (not once per lazy consumer) under stage materialization.
     """
-    minima = _minhash_minima_kernel()
     bands = MINHASH_BANDS
     rows_per_band = len(MINHASH_PERMS) // bands
     schema = f"{id_col} long, " + ", ".join(f"band{b} string" for b in range(bands))
@@ -181,11 +166,9 @@ def minhash_bands_pandas(df, text_col: str = "text", id_col: str = "doc_id", row
         for pdf in batches:
             if pdf.empty:
                 continue
-            if row_counter is not None:
-                row_counter.add(len(pdf))
             out_rows = []
             for did, text in zip(pdf[id_col], pdf[text_col]):
-                sigs = minima(text)
+                sigs = minhash_minima(text)
                 row = {id_col: did}
                 for b in range(bands):
                     chunk = sigs[b * rows_per_band : (b + 1) * rows_per_band]
@@ -203,7 +186,6 @@ def minhash_components_pandas(df, text_col: str = "text", id_col: str = "doc_id"
     (est_jaccard = matching-component fraction), which compares
     permutations one by one rather than banded groups. Same kernel,
     identical integers to ``minhash_sig_expr``'s SQL list."""
-    minima = _minhash_minima_kernel()
     n_perms = len(MINHASH_PERMS)
     schema = f"{id_col} long, " + ", ".join(f"m{i} long" for i in range(n_perms))
 
@@ -216,7 +198,7 @@ def minhash_components_pandas(df, text_col: str = "text", id_col: str = "doc_id"
             out_rows = []
             for did, text in zip(pdf[id_col], pdf[text_col]):
                 row = {id_col: did}
-                for i, v in enumerate(minima(text)):
+                for i, v in enumerate(minhash_minima(text)):
                     row[f"m{i}"] = v
                 out_rows.append(row)
             yield pd.DataFrame(out_rows)
@@ -224,49 +206,44 @@ def minhash_components_pandas(df, text_col: str = "text", id_col: str = "doc_id"
     return df.select(id_col, text_col).mapInPandas(per_batch, schema)
 
 
-def fingerprint_pandas(df, text_col: str = "text", id_col: str = "doc_id", row_counter=None):
-    """(id, content_fp, min_shingle_fp) — numpy-vectorized twin of the
-    poly_hash_pair / char_shingle_hashes_pair(k=8) SQL forms.
+def text_fingerprint(text: str) -> tuple[int, int]:
+    """text -> (content_fp, min_shingle_fp): the polynomial hash of the
+    whole text and the least char-8-shingle hash, identical integers to
+    the poly_hash_pair / char_shingle_hashes_pair(k=8) SQL forms."""
+    import numpy as np
 
-    ``row_counter``: optional Spark accumulator incremented per processed
-    input row (execution probe; see minhash_bands_pandas)."""
-    mod, base = POLY_MOD, POLY_BASE
+    mod, base, k = POLY_MOD, POLY_BASE, 8
+    codes = np.fromiter(map(ord, text), dtype=np.int64, count=len(text))
+    full = 0
+    for c in codes.tolist():
+        full = (full * base + c) % mod
+    n = len(codes)
+    m = max(n - (k - 1), 1)
+    h = np.zeros(m, dtype=np.int64)
+    for j in range(min(k, n)):
+        h = (h * base + codes[j : j + m]) % mod
+    return full, int(h.min())
+
+
+def fingerprint_pandas(df, text_col: str = "text", id_col: str = "doc_id"):
+    """(id, content_fp, min_shingle_fp) — numpy-vectorized twin of the
+    poly_hash_pair / char_shingle_hashes_pair(k=8) SQL forms."""
     schema = f"{id_col} long, content_fp long, min_shingle_fp long"
 
     def per_batch(batches):
-        import numpy as np
         import pandas as pd
-
-        k = 8
-
-        def full_hash(codes: "np.ndarray") -> int:
-            h = 0
-            for c in codes.tolist():
-                h = (h * base + c) % mod
-            return h
-
-        def min_shingle(codes: "np.ndarray") -> int:
-            n = len(codes)
-            m = max(n - (k - 1), 1)
-            width = min(k, n)
-            h = np.zeros(m, dtype=np.int64)
-            for j in range(width):
-                h = (h * base + codes[j : j + m]) % mod
-            return int(h.min())
 
         for pdf in batches:
             if pdf.empty:
                 continue
-            if row_counter is not None:
-                row_counter.add(len(pdf))
             rows = []
             for did, text in zip(pdf[id_col], pdf[text_col]):
-                codes = np.fromiter(map(ord, text), dtype=np.int64, count=len(text))
+                content_fp, min_shingle_fp = text_fingerprint(text)
                 rows.append(
                     {
                         id_col: did,
-                        "content_fp": full_hash(codes),
-                        "min_shingle_fp": min_shingle(codes),
+                        "content_fp": content_fp,
+                        "min_shingle_fp": min_shingle_fp,
                     }
                 )
             yield pd.DataFrame(rows)

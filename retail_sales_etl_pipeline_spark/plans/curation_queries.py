@@ -99,7 +99,7 @@ def q29_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- stage builders shared by the lazy and materialized forms --------------
 
 
-def _featurized_survivors(docs: DataFrame, row_counter=None) -> DataFrame:
+def _featurized_survivors(docs: DataFrame) -> DataFrame:
     """Stages A-C: quality gate → language tag → exact dedup (min-doc_id
     survivor per content fingerprint)."""
     n_tokens = F.size(F.split("text", " ")).cast("long")
@@ -112,10 +112,7 @@ def _featurized_survivors(docs: DataFrame, row_counter=None) -> DataFrame:
         F.expr(_predict_expr(_SPARK_SCORES)).alias("predicted_lang"),
     )
     feat = ok.join(
-        fingerprint_pandas(docs, row_counter=row_counter).select(
-            "doc_id", "content_fp"
-        ),
-        "doc_id",
+        fingerprint_pandas(docs).select("doc_id", "content_fp"), "doc_id"
     )
     w = Window.partitionBy("content_fp").orderBy("doc_id")
     return (
@@ -125,13 +122,11 @@ def _featurized_survivors(docs: DataFrame, row_counter=None) -> DataFrame:
     )
 
 
-def _survivor_candidates(
-    docs: DataFrame, survivors: DataFrame, row_counter=None
-) -> DataFrame:
+def _survivor_candidates(docs: DataFrame, survivors: DataFrame) -> DataFrame:
     """Stage D: MinHash band candidates restricted to surviving docs."""
     surv_ids = survivors.select("doc_id")
     return (
-        minhash_candidates(docs, row_counter=row_counter)
+        minhash_candidates(docs)
         .select("doc_a", "doc_b")
         .join(surv_ids.withColumnRenamed("doc_id", "doc_a"), "doc_a", "left_semi")
         .join(surv_ids.withColumnRenamed("doc_id", "doc_b"), "doc_b", "left_semi")
@@ -159,7 +154,6 @@ def curate(
     spark: SparkSession,
     sf_dir: str,
     materialize_dir: str | None = None,
-    row_counter=None,
 ) -> DataFrame:
     """Corpus curation, lazily composed or stage-materialized.
 
@@ -174,9 +168,9 @@ def curate(
     parquet ONCE and re-read by its consumers — the stage-boundary
     materialization the retail pipeline driver does, which also
     checkpoints lineage (an executor loss replays a parquet read, not the
-    signature computation). Tests prove single execution via a row
-    accumulator on the MinHash stage and result equality with the lazy
-    form.
+    signature computation). Tests prove single execution by counting
+    calls of the per-document signature kernels, and result equality
+    with the lazy form.
     """
     docs = load_table(spark, sf_dir, "documents")
     if materialize_dir is None:
@@ -191,19 +185,19 @@ def curate(
         # re-executions of the cheap subtree. The 100 TB answer remains
         # ``materialize_dir`` (each stage written once to parquet),
         # which q29's registered twin covers.
-        survivors = _featurized_survivors(docs, row_counter=row_counter)
-        cand = _survivor_candidates(docs, survivors, row_counter=row_counter)
+        survivors = _featurized_survivors(docs)
+        cand = _survivor_candidates(docs, survivors)
         near_drop = _verified_near_drop(cand, docs)
         return survivors.join(near_drop, "doc_id", "left_anti").select(
             "doc_id", "predicted_lang", "content_fp"
         )
 
     survivors = write_parquet(
-        _featurized_survivors(docs, row_counter=row_counter),
+        _featurized_survivors(docs),
         fs.join(materialize_dir, "survivors"),
     )
     cand = write_parquet(
-        _survivor_candidates(docs, survivors, row_counter=row_counter),
+        _survivor_candidates(docs, survivors),
         fs.join(materialize_dir, "candidates"),
     )
     near_drop = _verified_near_drop(cand, docs)

@@ -175,11 +175,11 @@ _DUCK_VERIFIED_PRELUDE = f"""{_DUCK_CAND_CTE},
     )"""
 
 
-def minhash_band_rows(docs: DataFrame, row_counter=None) -> DataFrame:
+def minhash_band_rows(docs: DataFrame) -> DataFrame:
     """(doc_id, band_idx, sig): one row per document per LSH band.
     Signatures computed by the Arrow/numpy operator — identical integers
     to the SQL form the oracle runs."""
-    sigs = minhash_bands_pandas(docs, row_counter=row_counter)
+    sigs = minhash_bands_pandas(docs)
     return sigs.selectExpr(
         "doc_id",
         f"stack({MINHASH_BANDS}, "
@@ -189,7 +189,7 @@ def minhash_band_rows(docs: DataFrame, row_counter=None) -> DataFrame:
 
 
 def minhash_candidates(
-    docs: DataFrame, max_bucket: int = LSH_MAX_BUCKET, row_counter=None
+    docs: DataFrame, max_bucket: int = LSH_MAX_BUCKET
 ) -> DataFrame:
     """(doc_a, doc_b, n_shared_bands) candidate pairs from band-bucket
     equality, with hot buckets (> ``max_bucket`` members) dropped BEFORE
@@ -197,7 +197,7 @@ def minhash_candidates(
     key the self-join shuffles on, so sizing adds one co-partitioned pass,
     not a second execution of the signature subtree. Candidate work per
     bucket is bounded by cap^2 regardless of corpus degeneracy."""
-    bands = minhash_band_rows(docs, row_counter=row_counter)
+    bands = minhash_band_rows(docs)
     w = Window.partitionBy("band_idx", "sig")
     ok = (
         bands.withColumn("bucket_n", F.count(F.lit(1)).over(w))
@@ -375,10 +375,11 @@ def _verified(corpus: DataFrame) -> DataFrame:
 def q60_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import connected_components
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    pairs = q21_ngram_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b")
+    corpus = _ladder_corpus(spark, sf_dir)
+    pairs = _verified(corpus).select("doc_a", "doc_b")
     return connected_components(
-        docs, pairs, id_col="doc_id", src_col="doc_a", dst_col="doc_b"
+        corpus.select("doc_id"), pairs,
+        id_col="doc_id", src_col="doc_a", dst_col="doc_b",
     ).select(F.col("id").alias("doc_id"), "component_id")
 
 
@@ -1459,10 +1460,11 @@ from . import text_queries as _text_queries  # noqa: E402,F401
     tags=("dedup", "eval", "governance"),
 )
 def q139_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .text_queries import q58_stratified_sample_split
+    from .text_queries import stratified_sample_split
 
-    verified = q21_ngram_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    splits = q58_stratified_sample_split(spark, sf_dir).select("doc_id", "split")
+    corpus = _ladder_corpus(spark, sf_dir)
+    verified = _verified(corpus).select("doc_a", "doc_b")
+    splits = stratified_sample_split(corpus).select("doc_id", "split")
     return (
         pair_sides(verified, splits, "split")
         .groupBy("split_a", "split_b")
@@ -1640,8 +1642,9 @@ def q157_incremental_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # band index would; verification is per-pair, so q21's verified set
     # split by the batch predicate is exactly the old-old and
     # touches-new sets verified separately (filter and verify commute).
-    pairs = q21_ngram_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    return _incremental_components(spark, sf_dir, pairs)
+    corpus = _ladder_corpus(spark, sf_dir)
+    pairs = _verified(corpus).select("doc_a", "doc_b")
+    return _incremental_components(corpus.select("doc_id"), pairs)
 
 
 def _py_rem(d: int, mod: int) -> int:
@@ -1677,13 +1680,11 @@ def _incremental_labels(pairs) -> dict:
     return {d: merged.get(rep(d), rep(d)) for ab in pairs for d in ab}
 
 
-def _incremental_components(
-    spark: SparkSession, sf_dir: str, pairs: DataFrame
-) -> DataFrame:
-    """Contract-and-merge incremental CC over the verified (doc_a, doc_b)
-    pairs, split into old-old and touches-new by the batch predicate —
-    the one plan of q157 (q21's verified pairs) and q262 (the
-    verified-pair checkpoint).
+def _incremental_components(docs: DataFrame, pairs: DataFrame) -> DataFrame:
+    """Contract-and-merge incremental CC over the (doc_id) node frame
+    ``docs`` and the verified (doc_a, doc_b) pairs, split into old-old
+    and touches-new by the batch predicate — the one plan of q157 (q21's
+    verified pairs) and q262 (the verified-pair checkpoint).
 
     Below the graph operator's small-graph bound (round-12 verdict item
     5) BOTH CC invocations would collect their edge lists to the driver
@@ -1699,7 +1700,6 @@ def _incremental_components(
     from ..operators import graph
 
     bound = graph.CC_SMALL_GRAPH_MAX_EDGES
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
     if bound > 0:  # 0 disables the cutover
         rows = pairs.limit(bound + 1).collect()
         if len(rows) <= bound:
@@ -4477,7 +4477,8 @@ def q262_incremental_components_materialized(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     return _incremental_components(
-        spark, sf_dir, _materialized_pairs(spark, sf_dir)
+        load_table(spark, sf_dir, "documents").select("doc_id"),
+        _materialized_pairs(spark, sf_dir),
     )
 
 

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..schemas import rows_frame
 from ..sources import load_table
 from .registry import register
 
@@ -3593,92 +3594,26 @@ def q241_kll_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
     from ..operators.kll import (
+        centi_shards,
         merge_sketches,
+        rows_to_sketches,
+        shard_sketch_rows,
         sketch_items,
         sketch_quantile,
         sketch_rank,
         total_weight,
     )
 
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("value").isNotNull()
-    )
-    centi = ev.select(
-        F.expr(
-            f"concat(event_type, '#', CAST(event_id % {KLL_SHARD_BUCKETS}"
-            " AS STRING))"
-        ).alias("shard"),
-        F.expr("CAST(FLOOR(value * 100.0) AS BIGINT)").alias("c"),
-    )
-
-    k = KLL_K
-
-    def shard_sketch(pdf):
-        # worker-side build: self-contained (nested, no module globals —
-        # the driver-sim runs with a non-repo cwd); the algorithm is the
-        # exact batch build of operators/kll.py::build_sketch, asserted
-        # identical in tests/test_kll.py.
-        import numpy as np
-        import pandas as pd
-
-        levels = [np.sort(pdf["c"].to_numpy(np.int64))]
-        budget = 0
-        h = 0
-        while h < len(levels):
-            buf = levels[h]
-            if len(buf) <= k:
-                h += 1
-                continue
-            m = len(buf) // 2
-            survivors = buf[1 : 2 * m : 2]
-            levels[h] = buf[2 * m :]
-            if h + 1 == len(levels):
-                levels.append(np.empty(0, dtype=np.int64))
-            levels[h + 1] = np.sort(
-                np.concatenate([levels[h + 1], survivors])
-            )
-            budget += 1 << h
-            h += 1
-        rows = [
-            {
-                "shard": pdf["shard"].iloc[0],
-                "level": lh,
-                "val": int(v),
-                "budget": budget,
-            }
-            for lh, lvl in enumerate(levels)
-            for v in lvl
-        ]
-        return pd.DataFrame(
-            rows, columns=["shard", "level", "val", "budget"]
-        )
-
-    sk_rows = (
-        centi.groupBy("shard")
-        .applyInPandas(
-            shard_sketch, "shard string, level int, val long, budget long"
-        )
-        .collect()
-    )
-    by_shard: dict[str, dict] = {}
-    for r in sk_rows:
-        s = by_shard.setdefault(r["shard"], {"levels": {}, "budget": 0})
-        s["levels"].setdefault(r["level"], []).append(r["val"])
-        s["budget"] = r["budget"]
-    sketches = []
-    for name in sorted(by_shard):
-        s = by_shard[name]
-        n_lv = max(s["levels"]) + 1 if s["levels"] else 0
-        levels = [
-            np.sort(np.asarray(s["levels"].get(h, []), dtype=np.int64))
-            for h in range(n_lv)
-        ]
-        sketches.append((levels, s["budget"]))
-    merged, budget = merge_sketches(sketches, k)
+    events = load_table(spark, sf_dir, "events")
+    sk_rows = shard_sketch_rows(
+        centi_shards(events, KLL_SHARD_BUCKETS), KLL_K
+    ).collect()
+    merged, budget = merge_sketches(rows_to_sketches(sk_rows), KLL_K)
 
     # exact side (proof harness only): the bounded centi-bucket histogram
     hist = (
-        ev.groupBy(
+        events.filter(F.col("value").isNotNull())
+        .groupBy(
             F.expr("CAST(FLOOR(value * 100.0) AS BIGINT)").alias("b")
         )
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
@@ -3699,7 +3634,7 @@ def q241_kll_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         # groups exist, so there is no sketch and no quantiles — an
         # empty result with the declared schema, like every aggregate
         # over nothing.
-        return spark.createDataFrame([], schema)
+        return rows_frame(spark, [], schema)
 
     out = []
     for ppm in QTL_PPM:

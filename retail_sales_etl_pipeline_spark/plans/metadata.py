@@ -83,9 +83,9 @@ def recent_pipeline_runs(spark: SparkSession, path: str, n: int = 10) -> DataFra
     O1 ORDER BY run_date DESC, run_timestamp DESC LIMIT n — planned as
     TakeOrderedAndProject (per-partition top-k, no full sort)."""
     if not fs.exists(spark, path):
-        return spark.createDataFrame([], schema=PIPELINE_RUNS_SCHEMA)
+        return rows_frame(spark, [], PIPELINE_RUNS_SCHEMA)
     return (
-        spark.read.parquet(path)
+        spark.read.schema(PIPELINE_RUNS_SCHEMA).parquet(path)
         .orderBy(F.desc("run_date"), F.desc("run_timestamp"))
         .limit(n)
     )

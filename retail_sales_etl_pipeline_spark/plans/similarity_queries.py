@@ -19,6 +19,7 @@ from ..operators.similarity import (
     rp_bucket_pair,
     rp_buckets_pandas,
 )
+from ..schemas import rows_frame
 from ..sources import load_table
 from .checkpoint import materialize_parquet, read_checkpoint
 from .registry import oracle_of, register
@@ -2499,7 +2500,7 @@ def q252_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     seed = v.orderBy("vec_id").limit(1).collect()
     if not seed:
-        return spark.createDataFrame([], out_schema)
+        return rows_frame(spark, [], out_schema)
     chosen = [int(seed[0].vec_id)]
     centers = [list(seed[0].emb)]
     results: list[tuple] = [(0, chosen[0], 0.0)]

@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.text import LANG_STOPWORDS, char_shingle_hashes_pair, poly_hash_pair
+from ..schemas import rows_frame
 from ..sources import load_table
 from .registry import register
 
@@ -207,9 +208,13 @@ def _keep_pct_expr() -> str:
     tags=("text", "sampling"),
 )
 def q58_stratified_sample_split(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return stratified_sample_split(load_table(spark, sf_dir, "documents"))
+
+
+def stratified_sample_split(docs: DataFrame) -> DataFrame:
+    """q58's (doc_id, lang, split) over a documents frame."""
     from ..operators.text import fingerprint_pandas
 
-    docs = load_table(spark, sf_dir, "documents")
     keyed = docs.select("doc_id", "lang").join(
         fingerprint_pandas(docs).select("doc_id", F.col("content_fp").alias("key_hash")),
         "doc_id",
@@ -1929,7 +1934,7 @@ def q251_misra_gries_heavy_hitters(
         "token string, exact_count long, n_tokens long, share_ppm long"
     )
     if not rows:
-        return spark.createDataFrame([], out_schema)
+        return rows_frame(spark, [], out_schema)
     n = sum(r.cnt for r in rows if r.token is None)
     cand = sorted({r.token for r in rows if r.token is not None})
     cand_df = F.broadcast(

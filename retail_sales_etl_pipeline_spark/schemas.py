@@ -169,9 +169,14 @@ STAGE_ATTEMPTS_SCHEMA = StructType(
 )
 
 
-def rows_frame(spark: SparkSession, rows: list[dict], schema: StructType) -> DataFrame:
-    """``rows`` (dicts keyed by field name) as a frame of ``schema``, via an
-    Arrow table: a LocalTableScan with no Python-worker job, whatever the
-    Arrow conf (``createDataFrame(list)`` plans a PythonRDD scan)."""
+def rows_frame(
+    spark: SparkSession, rows: list[dict], schema: StructType | str
+) -> DataFrame:
+    """``rows`` (dicts keyed by field name) as a frame of ``schema`` (a
+    StructType or a DDL string), via an Arrow table: a LocalTableScan with
+    no Python-worker job, whatever the Arrow conf (``createDataFrame(list)``
+    plans a PythonRDD scan)."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
     table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
     return spark.createDataFrame(table, schema=schema)

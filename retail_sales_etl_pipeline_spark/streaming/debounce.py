@@ -75,16 +75,12 @@ def debounce_events(
         events = events.withWatermark("ts", watermark_delay)
 
     def update(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        # self-contained: no module globals (workers may run with a
-        # different cwd — see the verify skill's closure gotcha)
-        import pandas as _pd
-
         if expire and state.hasTimedOut:
             # watermark passed last_kept + gap: state can no longer
             # change any decision (every non-late future event clears
             # the gap on its own) — drop it.
             state.remove()
-            yield _pd.DataFrame(
+            yield pd.DataFrame(
                 {"event_id": [], "user_id": [], "ts_us": []}
             ).astype({"event_id": "int64", "user_id": "int64",
                       "ts_us": "int64"})
@@ -94,7 +90,7 @@ def debounce_events(
         parts = [p for p in pdfs if len(p)]
         rows: list[tuple[int, int, int]] = []
         if parts:
-            pdf = _pd.concat(parts, ignore_index=True).sort_values(
+            pdf = pd.concat(parts, ignore_index=True).sort_values(
                 ["ts", "event_id"]
             )
             us = (pdf["ts"].astype("int64") // 1000).to_numpy()
@@ -122,7 +118,7 @@ def debounce_events(
                 state.setTimeoutTimestamp(
                     max(last // 1000 + gap_ms + 1, wm_ms + 1)
                 )
-        yield _pd.DataFrame(rows, columns=["event_id", "user_id", "ts_us"])
+        yield pd.DataFrame(rows, columns=["event_id", "user_id", "ts_us"])
 
     return events.groupBy("user_id").applyInPandasWithState(
         update,

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from ..operators.text import misra_gries_shard_summaries
 from ..plans.text_queries import MG_K, MG_SHARDS
+from ..schemas import rows_frame
 
 DOCS_STREAM_SCHEMA = (
     "doc_id long, text string, lang string, source string, n_chars long"
@@ -123,7 +124,7 @@ def verified_heavy_hitters(
     cand = rollup.candidates()
     n = rollup.n_tokens
     if not cand or n == 0:
-        return spark.createDataFrame([], out_schema)
+        return rows_frame(spark, [], out_schema)
     cand_df = F.broadcast(
         spark.createDataFrame([(t,) for t in cand], "token string")
     )

@@ -43,95 +43,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.kll import (
+    centi_shards,
     merge_sketches,
+    rows_to_sketches,
+    shard_sketch_rows,
     sketch_quantile,
     sketch_rank,
     total_weight,
 )
 from ..plans.event_queries import KLL_K, KLL_SHARD_BUCKETS, QTL_PPM
-
-SKETCH_ROWS_SCHEMA = "shard string, level int, val long, budget long"
-
-
-def centi_shards(events: DataFrame) -> DataFrame:
-    """q241's sketch input projection: (shard, c) with the same shard key
-    (event_type x event_id mod buckets) and centi-unit value grid."""
-    return events.filter(F.col("value").isNotNull()).select(
-        F.expr(
-            f"concat(event_type, '#', CAST(event_id % {KLL_SHARD_BUCKETS}"
-            " AS STRING))"
-        ).alias("shard"),
-        F.expr("CAST(FLOOR(value * 100.0) AS BIGINT)").alias("c"),
-    )
-
-
-def shard_sketch_rows(centi: DataFrame, k: int = KLL_K) -> DataFrame:
-    """Distributed per-shard sketch build over a (shard, c) frame — the
-    q241 grouped-map build, shared by the streaming sink and its replay
-    twin. Returns one row per retained item (shard, level, val, budget)."""
-
-    def build(pdf):
-        # self-contained worker fn (nested, no module globals — the
-        # driver-sim runs with a non-repo cwd); exact batch build of
-        # operators/kll.py::build_sketch, identity-tested in
-        # tests/test_kll.py for the q241 copy of this function.
-        import numpy as np
-        import pandas as pd
-
-        levels = [np.sort(pdf["c"].to_numpy(np.int64))]
-        budget = 0
-        h = 0
-        while h < len(levels):
-            buf = levels[h]
-            if len(buf) <= k:
-                h += 1
-                continue
-            m = len(buf) // 2
-            survivors = buf[1 : 2 * m : 2]
-            levels[h] = buf[2 * m :]
-            if h + 1 == len(levels):
-                levels.append(np.empty(0, dtype=np.int64))
-            levels[h + 1] = np.sort(
-                np.concatenate([levels[h + 1], survivors])
-            )
-            budget += 1 << h
-            h += 1
-        rows = [
-            {
-                "shard": pdf["shard"].iloc[0],
-                "level": lh,
-                "val": int(v),
-                "budget": budget,
-            }
-            for lh, lvl in enumerate(levels)
-            for v in lvl
-        ]
-        return pd.DataFrame(
-            rows, columns=["shard", "level", "val", "budget"]
-        )
-
-    return centi.groupBy("shard").applyInPandas(build, SKETCH_ROWS_SCHEMA)
-
-
-def rows_to_sketches(rows) -> list[tuple[list[np.ndarray], int]]:
-    """Collected sketch rows -> [(levels, budget)], shard-name ordered
-    (merge_sketches is list-order invariant; sorting just makes the
-    intermediate structure reproducible for debugging)."""
-    by_shard: dict[str, dict] = {}
-    for r in rows:
-        s = by_shard.setdefault(r["shard"], {"levels": {}, "budget": 0})
-        s["levels"].setdefault(r["level"], []).append(r["val"])
-        s["budget"] = r["budget"]
-    sketches = []
-    for name in sorted(by_shard):
-        s = by_shard[name]
-        n_lv = max(s["levels"]) + 1 if s["levels"] else 0
-        levels = [
-            np.sort(np.asarray(s["levels"].get(h, []), dtype=np.int64))
-            for h in range(n_lv)
-        ]
-        sketches.append((levels, s["budget"]))
-    return sketches
 
 
 class KllRollup:
@@ -146,7 +66,9 @@ class KllRollup:
         self.n_batches = 0
 
     def fold_batch(self, batch_df: DataFrame) -> None:
-        rows = shard_sketch_rows(centi_shards(batch_df), self.k).collect()
+        rows = shard_sketch_rows(
+            centi_shards(batch_df, KLL_SHARD_BUCKETS), self.k
+        ).collect()
         self.n_batches += 1
         if not rows:
             return
@@ -166,7 +88,7 @@ def one_shot_sketch(
 ) -> tuple[list[np.ndarray], int]:
     """The q241-shaped batch twin: every shard sketch of the FULL data
     merged once."""
-    rows = shard_sketch_rows(centi_shards(events), k).collect()
+    rows = shard_sketch_rows(centi_shards(events, KLL_SHARD_BUCKETS), k).collect()
     return merge_sketches(rows_to_sketches(rows), k)
 
 

@@ -50,8 +50,8 @@ def dsir_score_stream(
     """Score a (possibly streaming) document frame against an exported
     DSIR model: (doc_id, source, n_tokens, logw_micronat). Stateless
     map-only plan — valid on batch and streaming DataFrames alike.
-    Self-contained batch fn (workers need neither this package nor the
-    model tables — the model rides in the closure)."""
+    The model rides in the batch function's closure, so workers read no
+    model tables."""
     mod, base = POLY_MOD, POLY_BASE
     model_items = dict(model)  # defensive copy into the closure
     const = int(c_micro)

@@ -1,11 +1,12 @@
 """Stage-materialized curation: result equality with the lazy plan, and
-PROOF (via a row accumulator on the MinHash Arrow pass) that
+PROOF (by counting calls of the per-document signature kernels) that
 materialization executes the signature stage exactly once, where the lazy
 multi-consumer plan re-executes it.
 """
 
 from __future__ import annotations
 
+from retail_sales_etl_pipeline_spark.operators import text
 from retail_sales_etl_pipeline_spark.plans.curation_queries import curate
 
 SF = "/root/testdata/sf0.001"
@@ -25,7 +26,9 @@ def test_materialized_equals_lazy(spark, tmp_path):
     assert len(mat) > 0
 
 
-def test_signature_stages_execute_once_when_materialized(spark, tmp_path):
+def test_signature_stages_execute_once_when_materialized(
+    spark, tmp_path, monkeypatch
+):
     """The counter probes BOTH Arrow signature passes (fingerprint inside
     the survivors stage, MinHash inside the candidates stage). Materialized
     curation must run each exactly once: 2n rows total. The lazy plan's
@@ -37,13 +40,24 @@ def test_signature_stages_execute_once_when_materialized(spark, tmp_path):
     scale — see curate()'s comment.)"""
     n = _n_docs(spark)
 
-    acc = spark.sparkContext.accumulator(0)
-    curate(spark, SF, materialize_dir=str(tmp_path / "s2"), row_counter=acc).collect()
-    assert acc.value == 2 * n  # each stage saw each document exactly once
+    def kernel_calls(**curate_kw) -> int:
+        # The batch functions ship the text module's kernels by value, so
+        # a counting wrapper patched in before the plan is built runs on
+        # the workers.
+        acc = spark.sparkContext.accumulator(0)
+        with monkeypatch.context() as m:
+            for name in ("text_fingerprint", "minhash_minima"):
+                def counted(doc_text, _kernel=getattr(text, name)):
+                    acc.add(1)
+                    return _kernel(doc_text)
 
-    acc2 = spark.sparkContext.accumulator(0)
-    curate(spark, SF, row_counter=acc2).collect()
-    assert acc2.value > 2 * n  # lazy re-execution is real
+                m.setattr(text, name, counted)
+            curate(spark, SF, **curate_kw).collect()
+        return acc.value
+
+    # each stage saw each document exactly once
+    assert kernel_calls(materialize_dir=str(tmp_path / "s2")) == 2 * n
+    assert kernel_calls() > 2 * n  # lazy re-execution is real
 
 
 def test_curation_pipeline_driver(spark, tmp_path):

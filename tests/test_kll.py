@@ -144,7 +144,8 @@ def test_build_deterministic_in_multiset():
 
 def test_q241_in_query_proof_columns(spark):
     """The registered query's certification must hold on real data, and
-    its worker-side nested build must agree with operators/kll.py."""
+    its distributed shard build + driver fold must agree with
+    operators/kll.py run on the driver."""
     from pyspark.sql import functions as F
 
     from retail_sales_etl_pipeline_spark.plans.event_queries import (
@@ -168,7 +169,7 @@ def test_q241_in_query_proof_columns(spark):
         # fraction of the stream
         assert r["budget"] * KLL_K <= 4 * r["n_total"] + KLL_K * 4
 
-    # worker-nested build == reference build, shard by shard
+    # distributed build == driver-side reference build, shard by shard
     ev = load_table(spark, SMOKE_SF_DIR, "events").filter(
         F.col("value").isNotNull()
     )

@@ -105,8 +105,8 @@ def test_decoders_reject_malformed():
 
 def test_q156_features_match_local_decode(spark):
     """The registered query's features equal a driver-side recompute that
-    decodes the same synthetic payloads with the module-level parsers —
-    pinning the nested UDF copies to the public decoders."""
+    decodes payloads built by this file's own encoders with the public
+    decoders."""
     from retail_sales_etl_pipeline_spark.plans.multimodal_queries import (
         q156_media_decode_features,
     )
@@ -142,7 +142,7 @@ def test_q156_features_match_local_decode(spark):
 # ---------------------------------------------------------------------------
 # PNG path (round 11): encode -> decode round trip across ALL FIVE filter
 # types, dispatch, honest refusal narrowed to jpeg/mp3/mp4, and the
-# registered query's UDF copies pinned to the module-level codec.
+# registered query checked against a driver-side encode + decode.
 # ---------------------------------------------------------------------------
 
 from retail_sales_etl_pipeline_spark.operators.multimodal import (  # noqa: E402
@@ -213,8 +213,7 @@ def test_png_rejects_corruption_and_unsupported():
 
 def test_q265_features_match_local_decode(spark):
     """The registered query's features equal a driver-side recompute with
-    the module-level codec — pinning the nested UDF copies (encoder in
-    synth, decoder in features) to the public encode_png/decode_png."""
+    the public encode_png/decode_png."""
     from retail_sales_etl_pipeline_spark.plans.multimodal_queries import (
         q265_png_decode_features,
     )
@@ -251,6 +250,7 @@ from retail_sales_etl_pipeline_spark.operators.multimodal import (  # noqa: E402
     JPEG_Q_DC,
     JPEG_ZIGZAG,
     decode_jpeg,
+    decode_jpeg_numpy,
     encode_jpeg_baseline,
 )
 
@@ -328,6 +328,12 @@ def test_jpeg_arbitrary_image_matches_numpy_reference():
             ).astype(np.int64)
     got = np.frombuffer(out, dtype=np.uint8).reshape(h, w).astype(np.int64)
     assert np.array_equal(got, want)
+    # the vectorized IDCT the Arrow UDF runs is bit-identical, AC path
+    # and YCbCr->RGB included
+    assert decode_jpeg_numpy(payload) == (W, H, nc, out)
+    color = encode_jpeg_baseline(w, h, [img.tobytes(), img[::-1].tobytes(),
+                                        img[:, ::-1].tobytes()])
+    assert decode_jpeg_numpy(color) == decode_jpeg(color)
     # the stream genuinely contains AC codes: a DC-only payload of the
     # same dims is much smaller
     dc_only = encode_jpeg_baseline(
@@ -373,9 +379,8 @@ def test_jpeg_zigzag_is_the_standard_order():
 
 
 def test_q272_features_match_local_decode(spark):
-    """The registered query's features equal a driver-side recompute with
-    the module-level codec — pinning the nested UDF copies (numpy-DCT
-    encoder in synth, decoder in features) to the public
+    """The registered query's features (numpy-DCT encoder in synth, numpy
+    IDCT in features) equal a driver-side recompute with the scalar
     encode_jpeg_baseline/decode_jpeg."""
     from retail_sales_etl_pipeline_spark.operators.multimodal import (
         synth_jpeg_payloads,
@@ -403,8 +408,8 @@ def test_q272_features_match_local_decode(spark):
     for did, payload in payloads.items():
         w, h, nc, px = decode_jpeg(payload)
         assert got[did] == (nc, w, h, w * h, sum(px), max(px))
-        # and the worker-side encoder copy is byte-identical to the
-        # module encoder on the same planes
+        # and the numpy-DCT encoder is byte-identical to the scalar one
+        # on the same planes
         bw, bh = w // 8, h // 8
         A, B, Mm = 1_103_515_245, 12_345, 1_000_003
         P1, P2 = 100_003, 104_729

@@ -172,11 +172,13 @@ def test_month_partition_filter_prunes_at_source(spark, tmp_path):
     assert "isnotnull(sale_month" in plan or "sale_month" in plan.split("PartitionFilters", 1)[1].split("\n", 1)[0]
 
 
-def test_lsh_cap_does_not_reexecute_signature_pass(spark):
+def test_lsh_cap_does_not_reexecute_signature_pass(spark, monkeypatch):
     """q22's hot-bucket cap must not re-execute the MinHash subtree. The
     static plan prints both self-join branches, but at runtime AQE reuses
-    the single (band_idx, sig) exchange — proven with a row accumulator
-    on the Arrow signature pass: each document is hashed exactly once."""
+    the single (band_idx, sig) exchange — proven by counting calls of the
+    per-document MinHash kernel, which the Arrow signature pass ships by
+    value: each document is hashed exactly once."""
+    from retail_sales_etl_pipeline_spark.operators import text
     from retail_sales_etl_pipeline_spark.plans.dedup_queries import (
         minhash_candidates,
     )
@@ -184,9 +186,15 @@ def test_lsh_cap_does_not_reexecute_signature_pass(spark):
     docs = load_table(spark, SMOKE_SF_DIR, "documents")
     n = docs.count()
     acc = spark.sparkContext.accumulator(0)
-    minhash_candidates(docs, row_counter=acc).write.format("noop").mode(
-        "overwrite"
-    ).save()
+
+    def counted(doc_text, _kernel=text.minhash_minima):
+        acc.add(1)
+        return _kernel(doc_text)
+
+    with monkeypatch.context() as m:
+        m.setattr(text, "minhash_minima", counted)
+        cand = minhash_candidates(docs)
+    cand.write.format("noop").mode("overwrite").save()
     assert acc.value == n
 
 
@@ -673,30 +681,18 @@ def test_q241_sketch_build_is_one_grouped_map_pass(spark):
     over the shard key — no window over raw rows, no corpus-sized sort;
     the only aggregation besides the grouped map is the bounded exact-
     histogram proof side (hash aggregate on the centi bucket)."""
+    from retail_sales_etl_pipeline_spark.operators.kll import (
+        centi_shards,
+        shard_sketch_rows,
+    )
     from retail_sales_etl_pipeline_spark.plans.event_queries import (
+        KLL_K,
         KLL_SHARD_BUCKETS,
     )
     from retail_sales_etl_pipeline_spark.sources import load_table as _lt
 
-    ev = _lt(spark, SMOKE_SF_DIR, "events").filter(F.col("value").isNotNull())
-    centi = ev.select(
-        F.expr(
-            f"concat(event_type, '#', CAST(event_id % {KLL_SHARD_BUCKETS}"
-            " AS STRING))"
-        ).alias("shard"),
-        F.expr("CAST(FLOOR(value * 100.0) AS BIGINT)").alias("c"),
-    )
-
-    def noop(pdf):
-        import pandas as pd
-
-        return pd.DataFrame(
-            {"shard": [], "level": [], "val": [], "budget": []}
-        )
-
-    sk = centi.groupBy("shard").applyInPandas(
-        noop, "shard string, level int, val long, budget long"
-    )
+    ev = _lt(spark, SMOKE_SF_DIR, "events")
+    sk = shard_sketch_rows(centi_shards(ev, KLL_SHARD_BUCKETS), KLL_K)
     plan = _formatted_plan(sk)
     assert "FlatMapGroupsInPandas" in plan
     assert _op_count(plan, "Window") == 0
@@ -893,6 +889,7 @@ def test_q21_verify_runs_without_python_workers(spark):
         "q79_cross_source_contamination",
         "q86_minhash_jaccard_estimate",
         "q126_containment_pairs",
+        "q139_split_leakage_audit",
         "q162_longest_common_span",
         "q163_edit_distance_verify",
         "q234_modularity_score",
@@ -957,6 +954,27 @@ def test_customer_attrs_sentinel_is_a_local_scan(spark):
     got = {r.customer_id: r.country for r in df.collect()}
     assert got == {"0": "UK", "1": "UK", "2": "UK",
                    UNKNOWN_CUSTOMER: UNKNOWN_CUSTOMER}
+
+
+def test_recent_pipeline_runs_without_a_log_runs_no_job(spark, tmp_path):
+    """No pipeline_runs log yet: the empty view is an Arrow-built local
+    relation with the log's schema, and collecting it runs no Spark job."""
+    from retail_sales_etl_pipeline_spark.plans.metadata import (
+        recent_pipeline_runs,
+    )
+    from retail_sales_etl_pipeline_spark.schemas import PIPELINE_RUNS_SCHEMA
+
+    sc = spark.sparkContext
+    group = "recent-runs-without-log"
+    sc.setJobGroup(group, "read a missing run log")
+    try:
+        df = recent_pipeline_runs(spark, str(tmp_path / "pipeline_runs"))
+        assert df.collect() == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert "ExistingRDD" not in _formatted_plan(df)
+    assert df.schema == PIPELINE_RUNS_SCHEMA
+    assert not list(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _staging_rows(spark):

@@ -133,9 +133,8 @@ def test_phash_brightness_invariant_when_no_clipping(spark):
 
 
 def test_phash_inline_decoder_matches_module_decoder(spark):
-    # The worker batch fn carries an inline decoder copy; pin it against
-    # the module-level decode_bmp + pure-python grid math on real synth
-    # payloads (odd doc_ids are BMP).
+    # The dHash of real synth payloads (odd doc_ids are BMP) against
+    # decode_bmp + the pure-python grid math.
     docs = spark.range(1, 12).select(F.col("id").alias("doc_id"))
     imgs = synth_media_payloads(docs).filter(F.col("mime") == "image/bmp")
     payloads = {r["doc_id"]: bytes(r["payload"]) for r in imgs.collect()}
