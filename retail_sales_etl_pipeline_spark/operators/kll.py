@@ -40,14 +40,16 @@ exactly what q241 proves in-query against exact ranks).
 
 from __future__ import annotations
 
+from typing import TYPE_CHECKING
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame
 
 __all__ = [
     "build_sketch",
-    "centi_shards",
     "merge_sketches",
     "rows_to_sketches",
     "shard_sketch_rows",
@@ -168,18 +170,6 @@ def sketch_quantile(levels: list[np.ndarray], ppm: int) -> int:
 # Shard sketches are built on the executors (one Arrow grouped-map pass,
 # one pandas group per shard) and travel to the driver as one row per
 # retained item; the driver folds the rows back into sketches and merges.
-
-
-def centi_shards(events: DataFrame, buckets: int) -> DataFrame:
-    """The sketch input projection over events with a value: (shard, c)
-    with shard = event_type x event_id mod ``buckets`` and c the value on
-    the centi-unit grid."""
-    return events.filter(F.col("value").isNotNull()).select(
-        F.expr(
-            f"concat(event_type, '#', CAST(event_id % {buckets} AS STRING))"
-        ).alias("shard"),
-        F.expr("CAST(FLOOR(value * 100.0) AS BIGINT)").alias("c"),
-    )
 
 
 def shard_sketch_rows(centi: DataFrame, k: int) -> DataFrame:

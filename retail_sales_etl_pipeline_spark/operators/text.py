@@ -21,6 +21,10 @@ Operators:
 
 from __future__ import annotations
 
+from collections import Counter
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import functions as F
 
 from ..functions.scalar import POLY_BASE, POLY_MOD
@@ -138,8 +142,6 @@ def minhash_minima(text: str) -> list[int]:
     """text -> the 16 MinHash minima (one per affine permutation over the
     char-5-shingle polynomial hashes), identical integers to
     ``minhash_sig_expr``'s SQL list."""
-    import numpy as np
-
     mod, base, k = POLY_MOD, POLY_BASE, 5
     codes = np.fromiter(map(ord, text), dtype=np.int64, count=len(text))
     n = len(codes)
@@ -161,8 +163,6 @@ def minhash_bands_pandas(df, text_col: str = "text", id_col: str = "doc_id"):
     schema = f"{id_col} long, " + ", ".join(f"band{b} string" for b in range(bands))
 
     def per_batch(batches):
-        import pandas as pd
-
         for pdf in batches:
             if pdf.empty:
                 continue
@@ -190,8 +190,6 @@ def minhash_components_pandas(df, text_col: str = "text", id_col: str = "doc_id"
     schema = f"{id_col} long, " + ", ".join(f"m{i} long" for i in range(n_perms))
 
     def per_batch(batches):
-        import pandas as pd
-
         for pdf in batches:
             if pdf.empty:
                 continue
@@ -210,8 +208,6 @@ def text_fingerprint(text: str) -> tuple[int, int]:
     """text -> (content_fp, min_shingle_fp): the polynomial hash of the
     whole text and the least char-8-shingle hash, identical integers to
     the poly_hash_pair / char_shingle_hashes_pair(k=8) SQL forms."""
-    import numpy as np
-
     mod, base, k = POLY_MOD, POLY_BASE, 8
     codes = np.fromiter(map(ord, text), dtype=np.int64, count=len(text))
     full = 0
@@ -231,8 +227,6 @@ def fingerprint_pandas(df, text_col: str = "text", id_col: str = "doc_id"):
     schema = f"{id_col} long, content_fp long, min_shingle_fp long"
 
     def per_batch(batches):
-        import pandas as pd
-
         for pdf in batches:
             if pdf.empty:
                 continue
@@ -258,9 +252,6 @@ def simhash_pandas(df, text_col: str = "text", id_col: str = "doc_id", bits: int
     schema = f"{id_col} long, simhash long"
 
     def per_batch(batches):
-        import numpy as np
-        import pandas as pd
-
         def token_hash(tok: str) -> int:
             h = 0
             for c in tok:
@@ -359,8 +350,6 @@ def token_shingles_pandas(df, n: int, text_col: str = "text", id_col: str = "doc
     schema = f"{id_col} long, g string"
 
     def per_batch(batches):
-        import pandas as pd
-
         for pdf in batches:
             if pdf.empty:
                 continue
@@ -392,10 +381,6 @@ def repetition_scores_pandas(df, text_col: str = "text", id_col: str = "doc_id")
     )
 
     def per_batch(batches):
-        from collections import Counter
-
-        import pandas as pd
-
         for pdf in batches:
             if pdf.empty:
                 continue
@@ -442,10 +427,6 @@ def token_bucket_counts_pandas(
     mod, base = POLY_MOD, POLY_BASE
 
     def per_batch(batches):
-        from collections import Counter
-
-        import pandas as pd
-
         memo: dict[str, int] = {}
 
         def bucket(tok: str) -> int:
@@ -492,8 +473,6 @@ def common_span_pandas(pairs, tf_cap: int, text_a: str = "text_a", text_b: str =
     )
 
     def per_batch(batches):
-        import pandas as pd
-
         def span(ta: str, tb: str):
             toks_b = tb.split(" ")
             pb: dict[str, list[int]] = {}
@@ -571,8 +550,6 @@ def misra_gries_shard_summaries(
     residual cnt) row per retained counter — streaming consumers merge
     each shard's rows as ONE real summary rather than singletons.
     """
-    import pandas as pd
-
     chunk = 65536
 
     def summarize(key, pdf: "pd.DataFrame") -> "pd.DataFrame":
@@ -620,9 +597,6 @@ def esub_hashed_grams_pandas(
     (b1, m1), (b2, m2) = h1, h2
 
     def per_batch(batches):
-        import numpy as np
-        import pandas as pd
-
         POLY_B, POLY_M = 31, 1_000_000_007
 
         def tok_hash(t: str) -> int:

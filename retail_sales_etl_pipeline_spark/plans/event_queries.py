@@ -3565,6 +3565,19 @@ KLL_K = 256  # compactor capacity: worst-case rank error ~ 2e6/K ppm
 KLL_SHARD_BUCKETS = 16
 
 
+def centi_shards(events: DataFrame) -> DataFrame:
+    """The sketch input projection over events with a value: (shard, c)
+    with shard = event_type x event_id mod KLL_SHARD_BUCKETS and c the
+    value on the centi-unit grid."""
+    return events.filter(F.col("value").isNotNull()).select(
+        F.expr(
+            f"concat(event_type, '#', CAST(event_id % {KLL_SHARD_BUCKETS}"
+            " AS STRING))"
+        ).alias("shard"),
+        F.expr("CAST(FLOOR(value * 100.0) AS BIGINT)").alias("c"),
+    )
+
+
 @register(
     "q241_kll_quantile_sketch",
     oracle=None,  # compactor internals aren't SQL-expressible: declared
@@ -3594,7 +3607,6 @@ def q241_kll_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
     from ..operators.kll import (
-        centi_shards,
         merge_sketches,
         rows_to_sketches,
         shard_sketch_rows,
@@ -3605,9 +3617,7 @@ def q241_kll_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     events = load_table(spark, sf_dir, "events")
-    sk_rows = shard_sketch_rows(
-        centi_shards(events, KLL_SHARD_BUCKETS), KLL_K
-    ).collect()
+    sk_rows = shard_sketch_rows(centi_shards(events), KLL_K).collect()
     merged, budget = merge_sketches(rows_to_sketches(sk_rows), KLL_K)
 
     # exact side (proof harness only): the bounded centi-bucket histogram

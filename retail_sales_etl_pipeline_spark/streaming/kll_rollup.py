@@ -43,7 +43,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.kll import (
-    centi_shards,
     merge_sketches,
     rows_to_sketches,
     shard_sketch_rows,
@@ -51,7 +50,7 @@ from ..operators.kll import (
     sketch_rank,
     total_weight,
 )
-from ..plans.event_queries import KLL_K, KLL_SHARD_BUCKETS, QTL_PPM
+from ..plans.event_queries import KLL_K, QTL_PPM, centi_shards
 
 
 class KllRollup:
@@ -66,9 +65,7 @@ class KllRollup:
         self.n_batches = 0
 
     def fold_batch(self, batch_df: DataFrame) -> None:
-        rows = shard_sketch_rows(
-            centi_shards(batch_df, KLL_SHARD_BUCKETS), self.k
-        ).collect()
+        rows = shard_sketch_rows(centi_shards(batch_df), self.k).collect()
         self.n_batches += 1
         if not rows:
             return
@@ -88,7 +85,7 @@ def one_shot_sketch(
 ) -> tuple[list[np.ndarray], int]:
     """The q241-shaped batch twin: every shard sketch of the FULL data
     merged once."""
-    rows = shard_sketch_rows(centi_shards(events, KLL_SHARD_BUCKETS), k).collect()
+    rows = shard_sketch_rows(centi_shards(events), k).collect()
     return merge_sketches(rows_to_sketches(rows), k)
 
 

@@ -681,18 +681,15 @@ def test_q241_sketch_build_is_one_grouped_map_pass(spark):
     over the shard key — no window over raw rows, no corpus-sized sort;
     the only aggregation besides the grouped map is the bounded exact-
     histogram proof side (hash aggregate on the centi bucket)."""
-    from retail_sales_etl_pipeline_spark.operators.kll import (
-        centi_shards,
-        shard_sketch_rows,
-    )
+    from retail_sales_etl_pipeline_spark.operators.kll import shard_sketch_rows
     from retail_sales_etl_pipeline_spark.plans.event_queries import (
         KLL_K,
-        KLL_SHARD_BUCKETS,
+        centi_shards,
     )
     from retail_sales_etl_pipeline_spark.sources import load_table as _lt
 
     ev = _lt(spark, SMOKE_SF_DIR, "events")
-    sk = shard_sketch_rows(centi_shards(ev, KLL_SHARD_BUCKETS), KLL_K)
+    sk = shard_sketch_rows(centi_shards(ev), KLL_K)
     plan = _formatted_plan(sk)
     assert "FlatMapGroupsInPandas" in plan
     assert _op_count(plan, "Window") == 0

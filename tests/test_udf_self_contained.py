@@ -30,30 +30,33 @@ from retail_sales_etl_pipeline_spark.operators.multimodal import (
     media_val,
 )
 from retail_sales_etl_pipeline_spark.operators.text import minhash_minima
+from retail_sales_etl_pipeline_spark.plans.event_queries import KLL_SHARD_BUCKETS
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 DOCS = [(1, "the quick brown fox jumps"), (2, "a b"), (3, "")]
 MEDIA_IDS = [1, 2, 3, 4, 5, 6]
-# (event_type, event_id, value): shards are event_type x event_id % 2
+# (event_type, event_id, value): shards are event_type x event_id %
+# KLL_SHARD_BUCKETS; even the sparsest (click) shard holds more than
+# KLL_TEST_K values, so every shard build compacts
 EVENTS = [
     ("view" if i % 3 else "click", i, None if i % 7 == 0 else (i * 37 % 101) / 4)
-    for i in range(1, 60)
+    for i in range(1, 481)
 ]
-KLL_BUCKETS, KLL_TEST_K = 2, 4
+KLL_TEST_K = 4
 
 _SCRIPT = """
 import json, sys
 sys.path.insert(0, {repo!r})
 from pyspark.sql import SparkSession
-from retail_sales_etl_pipeline_spark.operators.kll import (
-    centi_shards, shard_sketch_rows)
+from retail_sales_etl_pipeline_spark.operators.kll import shard_sketch_rows
 from retail_sales_etl_pipeline_spark.operators.multimodal import (
     encode_jpeg_baseline, jpeg_decode_features, media_decode_features,
     perceptual_hashes, png_decode_features, synth_jpeg_payloads,
     synth_media_payloads, synth_png_payloads)
 from retail_sales_etl_pipeline_spark.operators.text import (
     minhash_bands_pandas, minhash_components_pandas)
+from retail_sales_etl_pipeline_spark.plans.event_queries import centi_shards
 
 spark = (SparkSession.builder.master("local[1]")
          .config("spark.ui.enabled", "false")
@@ -86,7 +89,7 @@ out = {{
     "png": rows(png_decode_features(png)),
     "jpeg_synth_payloads": rows(jpeg.select("doc_id", "n_comp", "payload")),
     "jpeg_synth": rows(jpeg_decode_features(jpeg)),
-    "kll": rows(shard_sketch_rows(centi_shards(events, {buckets}), {k})),
+    "kll": rows(shard_sketch_rows(centi_shards(events), {k})),
 }}
 spark.stop()
 print(json.dumps(out))
@@ -111,7 +114,7 @@ def _run_outside_the_repo(tmp_path) -> dict:
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     script = _SCRIPT.format(
         repo=REPO, docs=DOCS, media_ids=MEDIA_IDS, events=EVENTS,
-        buckets=KLL_BUCKETS, k=KLL_TEST_K,
+        k=KLL_TEST_K,
     )
     proc = subprocess.run(
         [sys.executable, "-c", script],
@@ -203,7 +206,7 @@ def test_pandas_udfs_run_outside_the_repo(tmp_path):
     shards: dict[str, list[int]] = {}
     for etype, eid, value in EVENTS:
         if value is not None:
-            key = f"{etype}#{eid % KLL_BUCKETS}"
+            key = f"{etype}#{eid % KLL_SHARD_BUCKETS}"
             shards.setdefault(key, []).append(int(np.floor(value * 100.0)))
     want_kll = []
     for shard, vals in shards.items():
