@@ -14,10 +14,17 @@ pruning for joins come free from Spark (SURVEY §4 P1). Full-refresh
 semantics (TRUNCATE+reload, reference dag3_transform_warehouse.py:117) is
 ``mode("overwrite")`` — one atomic truncate-and-load.
 
+Each month file is clustered by ``(invoice_date, invoice_no)``: the write
+sorts within the month partitions, so dates and invoice numbers run in
+order inside a file. The v2 pages of ``session.get_spark`` then
+delta-encode them to a few bits a row, and in a file of many row groups a
+date-range scan skips the others by their min/max stats.
+
 sale_key: the reference's BIGSERIAL is a per-row autoincrement; here it is
-``monotonically_increasing_id`` — unique and stable within a load, not
-dense, which is the scalable contract (a global dense sequence would need a
-total order over 100 TB).
+``monotonically_increasing_id`` numbered by the write after that sort, so
+within each month file it rises by 1 per row in file order. It is unique
+and stable within a load, not dense across files, which is the scalable
+contract (a global dense sequence would need a total order over 100 TB).
 """
 
 from __future__ import annotations
@@ -51,7 +58,6 @@ def build_fact_sales(
         .join(d, F.to_date(F.col("s.invoice_date")) == F.col("d.date"), "inner")
     )
     return joined.select(
-        F.monotonically_increasing_id().alias("sale_key"),
         F.col("s.invoice_no").alias("invoice_no"),
         F.col("p.product_key").alias("product_key"),
         F.col("c.customer_key").alias("customer_key"),
@@ -65,14 +71,23 @@ def build_fact_sales(
 
 
 def write_fact_sales(fact: DataFrame, path: str) -> None:
-    """P1: monthly-partitioned parquet, full-refresh overwrite (S5/M5).
+    """P1: monthly-partitioned parquet, full-refresh overwrite (S5/M5);
+    numbers ``sale_key``.
 
     Without the repartition, every upstream task writes its own file into
     every month directory (tasks x months small files). Clustering by the
-    partition column first gives exactly one file per month.
+    partition column first gives exactly one file per month. Within a
+    task the rows are sorted by ``(sale_month, invoice_date, invoice_no)``:
+    the writer's required ``sale_month`` ordering is a prefix of that sort,
+    so the plan keeps one Sort and the one exchange. ``sale_key`` is
+    numbered after the sort, so in each month file it is unique and
+    strictly increasing (by 1 per row) in file order.
     """
+    clustered = fact.repartition(F.col("sale_month")).sortWithinPartitions(
+        "sale_month", "invoice_date", "invoice_no"
+    )
     (
-        fact.repartition(F.col("sale_month"))
+        clustered.select(F.monotonically_increasing_id().alias("sale_key"), *fact.columns)
         .write.mode("overwrite")
         .partitionBy("sale_month")
         .parquet(path)

@@ -33,6 +33,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..schemas import rows_frame
+
 RP_TABLES = 4
 RP_BITS = 4
 _DIMS = 64
@@ -181,8 +183,8 @@ def brute_force_topk_pandas(
     )
     if not q_rows:
         # no matching query vectors: empty result, stable schema
-        return emb.sparkSession.createDataFrame(
-            [], schema="query_id long, neighbor_id long, cosine double, rank int"
+        return rows_frame(
+            emb.sparkSession, [], "query_id long, neighbor_id long, cosine double, rank int"
         )
     q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
     q_mat = np.stack([np.asarray(r[1], dtype=np.float64) for r in q_rows])

@@ -3703,13 +3703,14 @@ def q224_survivor_policy_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q230_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    pairs = q21_ngram_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b")
+    corpus = _ladder_corpus(spark, sf_dir)
+    pairs = _verified(corpus).select("doc_a", "doc_b")
     edges = pairs.select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     ).unionAll(
         pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
     )
-    labels = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
+    labels = corpus.select("doc_id", "lang")
     votes = (
         edges.join(
             labels.select(

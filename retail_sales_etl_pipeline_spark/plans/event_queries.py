@@ -3668,4 +3668,4 @@ def q241_kll_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
                 sketch_items(merged),
             )
         )
-    return spark.createDataFrame(out, schema)
+    return rows_frame(spark, out, schema)

@@ -388,8 +388,8 @@ def q38_kmeans_ivf_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         # empty profile with the trained schema, not a crash
         # (kmeans_fit itself still raises: training on zero rows is a
         # caller error; the QUERY degrades gracefully).
-        return spark.createDataFrame(
-            [], "centroid_id int, n_members long, avg_sq_dist double"
+        return rows_frame(
+            spark, [], "centroid_id int, n_members long, avg_sq_dist double"
         )
     centroids = kmeans_fit(emb, k=N_CENTROIDS, iters=5)
     return (
@@ -2530,7 +2530,7 @@ def q252_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()[0].m
     )
     results.append((KC_K, -1, float(cov)))
-    return spark.createDataFrame(results, out_schema)
+    return rows_frame(spark, results, out_schema)
 
 
 # ---------------------------------------------------------------------------

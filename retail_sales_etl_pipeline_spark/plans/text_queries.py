@@ -1937,9 +1937,7 @@ def q251_misra_gries_heavy_hitters(
         return rows_frame(spark, [], out_schema)
     n = sum(r.cnt for r in rows if r.token is None)
     cand = sorted({r.token for r in rows if r.token is not None})
-    cand_df = F.broadcast(
-        spark.createDataFrame([(t,) for t in cand], "token string")
-    )
+    cand_df = F.broadcast(rows_frame(spark, [(t,) for t in cand], "token string"))
     return (
         toks.join(cand_df, "token")
         .groupBy("token")

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..schemas import rows_frame
 from ..sources import load_table
 from .registry import register
 
@@ -1060,10 +1061,7 @@ def q225_vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("cnt").cast("long").alias("n_tokens"),
         F.count(F.lit(1)).cast("long").alias("n_vocab"),
     )
-    ks = F.broadcast(
-        SparkSession.getActiveSession()
-        .createDataFrame([(k,) for k in COVERAGE_KS], "k long")
-    )
+    ks = F.broadcast(rows_frame(spark, [(k,) for k in COVERAGE_KS], "k long"))
     return (
         ks.join(ranked, F.col("rnk") <= F.col("k"), "left")
         .crossJoin(F.broadcast(tot))
@@ -1356,7 +1354,8 @@ def _bpe_oracle() -> str:
 )
 def q256_bpe_merge_trainer(spark: SparkSession, sf_dir: str) -> DataFrame:
     merges, _ = _bpe_train(spark, sf_dir)
-    return spark.createDataFrame(
+    return rows_frame(
+        spark,
         merges,
         "round INT, left_sym STRING, right_sym STRING,"
         " merged STRING, pair_cnt BIGINT",

@@ -170,13 +170,15 @@ STAGE_ATTEMPTS_SCHEMA = StructType(
 
 
 def rows_frame(
-    spark: SparkSession, rows: list[dict], schema: StructType | str
+    spark: SparkSession, rows: list[dict] | list[tuple], schema: StructType | str
 ) -> DataFrame:
-    """``rows`` (dicts keyed by field name) as a frame of ``schema`` (a
-    StructType or a DDL string), via an Arrow table: a LocalTableScan with
-    no Python-worker job, whatever the Arrow conf (``createDataFrame(list)``
-    plans a PythonRDD scan)."""
+    """``rows`` (dicts keyed by field name, or tuples in field order) as a
+    frame of ``schema`` (a StructType or a DDL string), via an Arrow table:
+    a LocalTableScan with no Python-worker job, whatever the Arrow conf
+    (``createDataFrame`` of a Python list plans a PythonRDD scan). The
+    engine builds every frame of driver-side rows this way."""
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
+    rows = [r if isinstance(r, dict) else dict(zip(schema.names, r)) for r in rows]
     table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
     return spark.createDataFrame(table, schema=schema)

@@ -125,9 +125,7 @@ def verified_heavy_hitters(
     n = rollup.n_tokens
     if not cand or n == 0:
         return rows_frame(spark, [], out_schema)
-    cand_df = F.broadcast(
-        spark.createDataFrame([(t,) for t in cand], "token string")
-    )
+    cand_df = F.broadcast(rows_frame(spark, [(t,) for t in cand], "token string"))
     return (
         doc_token_shards(all_docs)
         .join(cand_df, "token")

@@ -18,6 +18,7 @@ from retail_sales_etl_pipeline_spark.sources import load_table
 import pytest
 
 from .conftest import SMOKE_SF_DIR
+from .oracle_util import assert_matches_oracle
 
 REGISTRY = load_all()
 
@@ -889,6 +890,7 @@ def test_q21_verify_runs_without_python_workers(spark):
         "q139_split_leakage_audit",
         "q162_longest_common_span",
         "q163_edit_distance_verify",
+        "q230_label_propagation",
         "q234_modularity_score",
         "q247_lsh_param_tuner",
     ],
@@ -1023,3 +1025,50 @@ def test_customer_attrs_sentinel_needs_no_join(spark):
     assert "Join" not in _formatted_plan(df)
     got = [(r.customer_id, r.country) for r in df.collect()]
     assert sorted(got, key=str) == sorted([("17850.0", "UK"), ("UNKNOWN", None)], key=str)
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "q225_vocab_coverage_curve",
+        "q241_kll_quantile_sketch",
+        "q251_misra_gries_heavy_hitters",
+        "q252_kcenter_coreset",
+        "q256_bpe_merge_trainer",
+    ],
+)
+def test_driver_rows_are_a_local_scan(spark, duck, name):
+    """A query that turns driver-side rows into a frame (its result rows,
+    a candidate or a K list) builds it with ``schemas.rows_frame``: a
+    LocalTableScan, never an ExistingRDD scan whose every action starts
+    Python workers. Its rows still hash-match the oracle (q241 is
+    rows-only by declaration; tests/test_kll.py value-checks it)."""
+    q = REGISTRY[name]
+    df = q.spark_fn(spark, SMOKE_SF_DIR)
+    assert "ExistingRDD" not in _formatted_plan(df)
+    if q.oracle is not None:
+        assert_matches_oracle(df, duck, q.oracle, name)
+
+
+def test_fact_write_is_one_sort_over_one_exchange(spark, tmp_path):
+    """``write_fact_sales`` clusters each month file by date: its one Sort
+    is on (sale_month, invoice_date, invoice_no), so the writer's required
+    sale_month ordering is a prefix and adds no second Sort, and the
+    month repartition stays the only exchange."""
+    from retail_sales_etl_pipeline_spark.operators.fact import write_fact_sales
+
+    ts = F.expr("timestamp_seconds(1290000000 + id * 86400)")
+    fact = spark.range(400).select(
+        F.col("id").cast("string").alias("invoice_no"),
+        ts.alias("invoice_date"),
+        F.date_format(ts, "yyyy-MM").alias("sale_month"),
+    )
+    write_fact_sales(fact, str(tmp_path / "fact_sales"))
+    runs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    plan = runs.apply(runs.size() - 1).physicalPlanDescription()
+    final = plan.split("== Initial Plan ==")[0]
+    assert len(re.findall(r"\bSort \(\d+\)", final)) == 1, final
+    assert len(re.findall(r"\bExchange \(\d+\)", final)) == 1, final
+    sorts = re.findall(r"^\(\d+\) Sort.*\n.*\nArguments: \[(.*)\], false", plan, re.M)
+    assert {tuple(re.findall(r"(\w+)#\d+", k)) for k in sorts} == {
+        ("sale_month", "invoice_date", "invoice_no")}
